@@ -40,6 +40,7 @@ from lantern_extras_spark.operators import sketches as SK
 from lantern_extras_spark.operators import sq as SQ
 from lantern_extras_spark.operators import temporal as TMP
 from lantern_extras_spark.operators import versioning as VER
+from lantern_extras_spark.session import local_frame
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -1170,7 +1171,7 @@ def q_pq_assign(spark: SparkSession, sf: str) -> DataFrame:
         v = list(map(float, r["embedding"]))
         for s, (lo, hi) in enumerate(bounds):
             rows.append((s, int(r["vec_id"]), v[lo:hi]))
-    cb = spark.createDataFrame(rows, "subvector_id int, centroid_id int, c array<float>")
+    cb = local_frame(spark, rows, "subvector_id int, centroid_id int, c array<float>")
     coded = PQ.quantize(emb, cb, vec_col="embedding", out_col="pqvec", dim=dim,
                         formulation="direct")
     return coded.select(
@@ -1325,7 +1326,7 @@ def q_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
         v = list(map(float, r["embedding"]))
         for s, (lo, hi) in enumerate(bounds):
             rows.append((s, int(r["vec_id"]), v[lo:hi]))
-    cb = spark.createDataFrame(rows, "subvector_id int, centroid_id int, c array<float>")
+    cb = local_frame(spark, rows, "subvector_id int, centroid_id int, c array<float>")
     coded = PQ.quantize(emb, cb, vec_col="embedding", dim=dim, formulation="direct")
     qv = _hash_embed_py(IVF_QUERY_TEXT, dim=dim)
     out = PQ.adc_topk(coded, cb, qv, k=10)
@@ -1603,7 +1604,7 @@ def q_ivf_pq_search(spark: SparkSession, sf: str) -> DataFrame:
             rv = [a - b for a, b in zip(v, coarse[best_i])]
             for s_i, (lo, hi) in enumerate(bounds):
                 rows.append((s_i, int(r["vec_id"]), rv[lo:hi]))
-    cb = spark.createDataFrame(rows, "subvector_id int, centroid_id int, c array<double>")
+    cb = local_frame(spark, rows, "subvector_id int, centroid_id int, c array<double>")
     coded = PQ.quantize(with_res, cb, vec_col="rv", dim=dim, formulation="direct")
     qv = _hash_embed_py(IVF_QUERY_TEXT, dim=dim)
     out = IVF.ivf_pq_topk(coded, coarse, cb, qv, k=10, nprobe=2, id_col="vec_id")
@@ -1643,9 +1644,8 @@ def q_hnsw_recall(spark: SparkSession, sf: str) -> DataFrame:
         "query_id", "vec_id", F.col("distance").alias("l2sq_distance"),
         F.col("rank").cast("bigint").alias("rnk"),
     )
-    overlap = os.environ.get("SPARK_GRAFT_HNSW_OVERLAP", "1") != "0"
     with ThreadPoolExecutor(max_workers=1) as pool:
-        f_exact = pool.submit(exact_sel.collect) if overlap else None
+        f_exact = pool.submit(exact_sel.collect)
 
         shards = H.build_hnsw_shards(
             data, vec_col="embedding", id_col="vec_id", n_shards=8, m=12,
@@ -1658,7 +1658,7 @@ def q_hnsw_recall(spark: SparkSession, sf: str) -> DataFrame:
         got: dict[int, set[int]] = {}
         for r in H.hnsw_topk_batch(shards, queries, k=10, ef=64, id_col="vec_id").collect():
             got.setdefault(int(r["query_id"]), set()).add(int(r["vec_id"]))
-        exact_rows = f_exact.result() if overlap else exact_sel.collect()
+        exact_rows = f_exact.result()
     truth: dict[int, set[int]] = {}
     for r in exact_rows:
         truth.setdefault(int(r["query_id"]), set()).add(int(r["vec_id"]))
@@ -1670,7 +1670,8 @@ def q_hnsw_recall(spark: SparkSession, sf: str) -> DataFrame:
         qid: round(len(truth[qid] & got.get(qid, set())) / len(truth[qid]), 2)
         for qid in truth
     }
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (r["query_id"], r["vec_id"], r["l2sq_distance"], r["rnk"], ok,
              per_q[int(r["query_id"])])
@@ -2179,7 +2180,7 @@ def q_compressed_tradeoff(spark: SparkSession, sf: str) -> DataFrame:
     exact0 = exact5.where(F.col("query_id") == 0).select("vec_id")
     emb = _t(spark, sf, "embeddings")
     qv = _hash_embed_py(IVF_QUERY_TEXT, dim=EMB_DIM)
-    qdf = spark.createDataFrame([(0, qv)], "query_id long, query_vec array<double>")
+    qdf = local_frame(spark, [(0, qv)], "query_id long, query_vec array<double>")
     exact_pq = K.knn_join(emb, qdf, k=10, metric="l2sq", strategy="crossjoin",
                           dist_scale=5).select("vec_id")
     # r14 REJECTED experiment: submitting the exact5-independent pq branch
@@ -2209,8 +2210,8 @@ def q_compressed_tradeoff(spark: SparkSession, sf: str) -> DataFrame:
         ("mrl", "prefix 16 of 64 + rerank", EMB_DIM, round(n_mrl / 10.0, 6)),
         ("pq_adc", "slice codebook 4x8", 4, round(n_pq / 10.0, 6)),
     ]
-    return spark.createDataFrame(
-        rows, "family string, config string, bytes_per_vec bigint, recall double"
+    return local_frame(
+        spark, rows, "family string, config string, bytes_per_vec bigint, recall double"
     )
 
 

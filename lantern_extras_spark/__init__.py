@@ -11,5 +11,8 @@ numpy kernels (PQ assignment, model inference).
 
 __version__ = "0.1.0"
 
-from lantern_extras_spark.session import get_spark, load_tables  # noqa: F401
+from lantern_extras_spark import worker as _worker
+from lantern_extras_spark.session import get_spark, load_tables, local_frame  # noqa: F401
 from lantern_extras_spark.collections import CollectionStore  # noqa: F401
+
+_worker.prepare()

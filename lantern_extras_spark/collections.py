@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from lantern_extras_spark.embeddings.pipeline import embed_column
 from lantern_extras_spark.operators.knn import distance_col
+from lantern_extras_spark.session import local_frame
 
 DEFAULT_SCHEMA = "id bigint, vector array<float>, data string, metadata string"
 
@@ -63,7 +64,7 @@ class CollectionStore:
         p = self._path(name)
         if os.path.exists(p):
             raise ValueError(f"collection {name!r} already exists")
-        df = self.spark.createDataFrame([], schema or DEFAULT_SCHEMA)
+        df = local_frame(self.spark, [], schema or DEFAULT_SCHEMA)
         df.write.parquet(p)
 
     # -- H1: list / get --------------------------------------------------
@@ -103,7 +104,7 @@ class CollectionStore:
             if isinstance(r.get("metadata"), (dict, list)):
                 r["metadata"] = json.dumps(r["metadata"])
             prepared.append(tuple(r.get(c) for c in cols))
-        new = self.spark.createDataFrame(prepared, cur.schema)
+        new = local_frame(self.spark, prepared, cur.schema)
         new.write.mode("append").parquet(self._path(name))
         return len(rows)
 
@@ -202,7 +203,7 @@ class CollectionStore:
         if (query_vec is None) == (query_text is None):
             raise ValueError("provide exactly one of query_vec / query_text")
         if query_text is not None:
-            qdf = self.spark.createDataFrame([(query_text,)], "q string")
+            qdf = local_frame(self.spark, [(query_text,)], "q string")
             qrow = embed_column(qdf, "q", "emb", query_model, query_runtime).first()
             query_vec = [float(x) for x in qrow["emb"]]
         df = self.read(name)

@@ -25,6 +25,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lantern_extras_spark.session import local_frame
+
 JOB_SCHEMA = (
     "id long, table_name string, pk string, label string, runtime string, "
     "runtime_params string, src_column string, dst_column string, embedding_model string, "
@@ -69,7 +71,7 @@ class JobStore:
 
     def _read(self, p: str, schema: str) -> DataFrame:
         if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(p)
 
     def _overwrite(self, df: DataFrame, p: str) -> None:
@@ -110,7 +112,7 @@ class JobStore:
             next_id, table_name, pk, label, runtime, runtime_params, src_column,
             dst_column, embedding_model, _now(), _now(), None, None, None, None, None, 0,
         )]
-        self._overwrite(cur.unionByName(self.spark.createDataFrame(row, JOB_SCHEMA)), self.jobs_path)
+        self._overwrite(cur.unionByName(local_frame(self.spark, row, JOB_SCHEMA)), self.jobs_path)
         return next_id
 
     def get_embedding_job_status(self, job_id: int) -> dict[str, Any] | None:
@@ -175,4 +177,4 @@ class JobStore:
         cur = self.usage()
         next_id = (cur.agg(F.max("id")).first()[0] or 0) + 1
         row = [(next_id, job_id, rows, tokens, failed, _now())]
-        self._overwrite(cur.unionByName(self.spark.createDataFrame(row, USAGE_SCHEMA)), self.usage_path)
+        self._overwrite(cur.unionByName(local_frame(self.spark, row, USAGE_SCHEMA)), self.usage_path)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from lantern_extras_spark.operators import pq as PQ
 from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+from lantern_extras_spark.session import local_frame
 
 # Default PQ variant grid — mirrors the reference's fixed 6-variant grid idea
 # (index_autotune/mod.rs:329-360), coarse→fine.
@@ -113,7 +114,7 @@ class AutotuneResults:
     def load(self) -> DataFrame:
         p = os.path.join(self.path, "autotune_results")
         if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            return self.spark.createDataFrame([], RESULTS_SCHEMA)
+            return local_frame(self.spark, [], RESULTS_SCHEMA)
         return self.spark.read.schema(RESULTS_SCHEMA).parquet(p)
 
     def lookup(self, experiment_id: str, k: int, n_queries: int) -> list[VariantResult]:
@@ -136,7 +137,7 @@ class AutotuneResults:
             (experiment_id, r.splits, r.clusters, r.recall, r.latency, r.build_time, k, n_queries, now)
             for r in results
         ]
-        df = self.spark.createDataFrame(rows, RESULTS_SCHEMA)
+        df = local_frame(self.spark, rows, RESULTS_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(os.path.join(self.path, "autotune_results"))
 
     # -- IVF-PQ results: 4-parameter variants, own table, same N6 reuse rule --
@@ -144,7 +145,7 @@ class AutotuneResults:
     def load_ivf_pq(self) -> DataFrame:
         p = os.path.join(self.path, "autotune_results_ivf_pq")
         if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            return self.spark.createDataFrame([], IVF_PQ_RESULTS_SCHEMA)
+            return local_frame(self.spark, [], IVF_PQ_RESULTS_SCHEMA)
         return self.spark.read.schema(IVF_PQ_RESULTS_SCHEMA).parquet(p)
 
     def lookup_ivf_pq(self, experiment_id: str, k: int, n_queries: int) -> list[IvfPqVariant]:
@@ -171,7 +172,7 @@ class AutotuneResults:
              r.recall, r.latency, r.build_time, k, n_queries, now)
             for r in results
         ]
-        df = self.spark.createDataFrame(rows, IVF_PQ_RESULTS_SCHEMA)
+        df = local_frame(self.spark, rows, IVF_PQ_RESULTS_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(
             os.path.join(self.path, "autotune_results_ivf_pq")
         )
@@ -181,7 +182,7 @@ class AutotuneResults:
     def load_hnsw(self) -> DataFrame:
         p = os.path.join(self.path, "autotune_results_hnsw")
         if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            return self.spark.createDataFrame([], HNSW_RESULTS_SCHEMA)
+            return local_frame(self.spark, [], HNSW_RESULTS_SCHEMA)
         return self.spark.read.schema(HNSW_RESULTS_SCHEMA).parquet(p)
 
     def lookup_hnsw(self, experiment_id: str, k: int, n_queries: int) -> list[HnswVariant]:
@@ -208,7 +209,7 @@ class AutotuneResults:
              r.recall, r.latency, r.build_time, k, n_queries, now)
             for r in results
         ]
-        df = self.spark.createDataFrame(rows, HNSW_RESULTS_SCHEMA)
+        df = local_frame(self.spark, rows, HNSW_RESULTS_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(
             os.path.join(self.path, "autotune_results_hnsw")
         )
@@ -216,7 +217,7 @@ class AutotuneResults:
     def load_bq(self) -> DataFrame:
         p = os.path.join(self.path, "autotune_results_bq")
         if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            return self.spark.createDataFrame([], BQ_RESULTS_SCHEMA)
+            return local_frame(self.spark, [], BQ_RESULTS_SCHEMA)
         return self.spark.read.schema(BQ_RESULTS_SCHEMA).parquet(p)
 
     def lookup_bq(self, experiment_id: str, k: int, n_queries: int) -> list["BqVariant"]:
@@ -241,7 +242,7 @@ class AutotuneResults:
             (experiment_id, r.oversample, r.recall, r.latency, r.build_time, k, n_queries, now)
             for r in results
         ]
-        df = self.spark.createDataFrame(rows, BQ_RESULTS_SCHEMA)
+        df = local_frame(self.spark, rows, BQ_RESULTS_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(
             os.path.join(self.path, "autotune_results_bq")
         )
@@ -298,7 +299,8 @@ def autotune_pq(
         df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
     ).collect()
     spark = df.sparkSession
-    truth_df = spark.createDataFrame(
+    truth_df = local_frame(
+        spark,
         [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
         "id long, neighbors array<long>",
     )
@@ -378,7 +380,8 @@ def autotune_ivf(
         df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
     ).collect()
     spark = df.sparkSession
-    truth_df = spark.createDataFrame(
+    truth_df = local_frame(
+        spark,
         [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
         "id long, neighbors array<long>",
     )
@@ -466,7 +469,8 @@ def autotune_ivf_pq(
         df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
     ).collect()
     spark = df.sparkSession
-    truth_df = spark.createDataFrame(
+    truth_df = local_frame(
+        spark,
         [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
         "id long, neighbors array<long>",
     )
@@ -555,7 +559,8 @@ def autotune_hnsw(
         df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
     ).collect()
     spark = df.sparkSession
-    truth_df = spark.createDataFrame(
+    truth_df = local_frame(
+        spark,
         [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
         "id long, neighbors array<long>",
     )
@@ -624,11 +629,13 @@ def autotune_bq(
         df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
     ).collect()
     spark = df.sparkSession
-    truth_df = spark.createDataFrame(
+    truth_df = local_frame(
+        spark,
         [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
         "id long, neighbors array<long>",
     )
-    queries = spark.createDataFrame(
+    queries = local_frame(
+        spark,
         [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
         "query_id long, query_vec array<double>",
     )
@@ -688,11 +695,13 @@ def compare_compressed(
         df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
     ).collect()
     spark = df.sparkSession
-    truth_df = spark.createDataFrame(
+    truth_df = local_frame(
+        spark,
         [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
         "id long, neighbors array<long>",
     )
-    queries_df = spark.createDataFrame(
+    queries_df = local_frame(
+        spark,
         [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
         "query_id long, query_vec array<double>",
     )
@@ -758,7 +767,8 @@ def compare_compressed(
     pq_coded.unpersist()
     rows.append(("pq", f"adc {splits}x{clusters}", rec, lat, pq_build, splits))
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "family string, config string, recall double, latency_s double, "
         "build_s double, bytes_per_vec int",

@@ -61,6 +61,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lantern_extras_spark.functions.hashing import hash32
+from lantern_extras_spark.session import local_frame
 
 LITERAL_MAX_WORDS = 256    # above this (16 KiB of plan literal) use subquery
 SUBQUERY_MAX_WORDS = 131072  # above this (1 MiB rides each stage's task binary) use broadcast
@@ -243,7 +244,7 @@ def bloom_might_contain(
 
             sess = spark or SparkSession.getActiveSession()
             view = f"__bloom_words_{uuid.uuid4().hex}"
-            sess.createDataFrame([(bf.words,)], "w: array<bigint>").createOrReplaceTempView(view)
+            local_frame(sess, [(bf.words,)], "w: array<bigint>").createOrReplaceTempView(view)
             words_lit = F.expr(f"(select w from {view})")
         else:
             words_lit = F.lit(bf.words).cast("array<bigint>")

@@ -61,6 +61,8 @@ from lantern_extras_spark.functions.text import (
     word_ngrams,
     word_ngrams_of,
 )
+from lantern_extras_spark.session import local_frame
+from lantern_extras_spark.worker import prepare as prepare_worker
 
 # Universal-hash permutation family over the 32-bit hash space.
 # P is the smallest prime > 2^32; (a_i · h + b_i) mod P stays within int64.
@@ -148,6 +150,7 @@ def minhash_signatures(
     )
 
     def kernel(batches):
+        prepare_worker()  # the closure reaches no other package code
         for pdf in batches:
             sigs = []
             for shingles in pdf["shingles"]:
@@ -454,7 +457,7 @@ def _cc_driver(edges: DataFrame, cap: int) -> DataFrame | None:
     schema = f"id {id_t}, cluster_id {id_t}"
     pdf = pdf.dropna()
     if pdf.empty:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     codes, uniques = pd.factorize(
         pd.concat([pdf["a"], pdf["b"]], ignore_index=True)
     )
@@ -1499,8 +1502,8 @@ def decontaminate(
             keys = sorted({s for r in sh_rows for s in (r["sh"] or ())})
             if len(keys) <= DRIVER_BUILD_MAX_KEYS:
                 spark = docs.sparkSession
-                kdf = spark.createDataFrame(
-                    [(int(k),) for k in keys], "__sh bigint"
+                kdf = local_frame(
+                    spark, [(int(k),) for k in keys], "__sh bigint"
                 )
                 bf = bloom_build(
                     kdf, "__sh", bits_per_key=bloom_bits_per_key, n=len(keys)

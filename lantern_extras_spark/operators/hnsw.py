@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from lantern_extras_spark.session import local_frame
+
 _METRICS = ("cos", "l2sq", "dot", "hamming")
 
 
@@ -579,7 +581,8 @@ def hnsw_recall_vs_exact(
         hnsw_topk_batch(shards, queries, k=k, ef=ef, id_col=id_col),
         qid_col="query_id", id_col=id_col,
     )
-    truth_df = spark.createDataFrame(
+    truth_df = local_frame(
+        spark,
         [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
         "id long, neighbors array<long>",
     )

@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from lantern_extras_spark.operators.knn import distance_col
 from lantern_extras_spark.operators.pq import _kmeans_fit
+from lantern_extras_spark.session import local_frame
 
 
 def build_ivf(
@@ -623,7 +624,8 @@ def ivf_recall_vs_exact(
                        vec_col=vec_col, id_col=id_col),
         qid_col="query_id", id_col=id_col,
     )
-    truth_df = spark.createDataFrame(
+    truth_df = local_frame(
+        spark,
         [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth], "id long, neighbors array<long>"
     )
     rec = recall(truth_df, res_df, k)
@@ -637,7 +639,7 @@ def save_centroids(spark, centroids: list[list[float]], path: str) -> None:
     partition layout replace the reference's .usearch file for the offline
     search path."""
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    spark.createDataFrame(rows, "cell int, c array<double>").coalesce(1).write.mode(
+    local_frame(spark, rows, "cell int, c array<double>").coalesce(1).write.mode(
         "overwrite"
     ).parquet(path)
 

@@ -50,6 +50,7 @@ MAX_COLLECTED_QUERIES = 100_000
 # stays bounded no matter how large the broadcast query block is
 _Q_BLOCK_ELEMS = 4_000_000
 from lantern_extras_spark.functions.vector import cos_dist, hamming_dist, inner_product, l2sq_dist
+from lantern_extras_spark.session import local_frame
 
 METRICS = ("l2sq", "cos", "hamming", "dot")
 
@@ -246,7 +247,7 @@ def _knn_join_chunked(
         q_count = qnarrow.count()
         if q_count == 0:
             empty = out_schema.add(StructField("rank", IntegerType()))
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, [], empty)
         n_chunks = -(-q_count // chunk_size)  # ceil
         chunk_key = F.pmod(
             F.xxhash64(F.col(qid_col), F.lit("knn_chunk")), F.lit(n_chunks)
@@ -612,7 +613,7 @@ def _hard_negatives_chunked(
                     StructField("rank", IntegerType()),
                 ]
             )
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, [], empty)
         n_chunks = -(-q_count // chunk_size)
         chunk_key = F.pmod(
             F.xxhash64(F.col(qid_col), F.lit("knn_chunk")), F.lit(n_chunks)

@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from lantern_extras_spark.functions.portable import pround
 from lantern_extras_spark.functions.vector import l2sq_dist
+from lantern_extras_spark.session import local_frame
 
 
 def mrl_search(
@@ -132,7 +133,8 @@ def mrl_recall_vs_exact(
     truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
                          id_col=id_col, vec_col=vec_col, seed=seed).collect()
     spark = df.sparkSession
-    queries = spark.createDataFrame(
+    queries = local_frame(
+        spark,
         [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
         "query_id long, query_vec array<double>",
     )
@@ -142,7 +144,8 @@ def mrl_recall_vs_exact(
         .withColumnRenamed("rnk", "rank"),
         qid_col="query_id", id_col=id_col,
     )
-    truth_df = spark.createDataFrame(
+    truth_df = local_frame(
+        spark,
         [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
         "id long, neighbors array<long>",
     )

@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from lantern_extras_spark.session import local_frame
+from lantern_extras_spark.worker import prepare as prepare_worker
 
 
 def split_bounds(dim: int, splits: int) -> list[tuple[int, int]]:
@@ -134,7 +136,7 @@ def build_codebook(
             StructField("c", ArrayType(FloatType(), False), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 CODEBOOK_SCHEMA = "subvector_id int, centroid_id int, c array<float>"
@@ -208,6 +210,7 @@ def quantize(
     cols = [f.name for f in df.schema.fields]
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_worker()  # the closure reaches no other package code
         cb = b_mats.value
         for pdf in batches:
             if len(pdf) == 0:
@@ -404,7 +407,8 @@ def pq_recall_vs_exact(
     queries = [(int(r["id"]), list(map(float, r["v"]))) for r in tr]
     res_df = collect_neighbors(adc_topk_batch(coded, codebook, queries, k=k, id_col=id_col),
                                qid_col="query_id", id_col=id_col)
-    truth_df = df.sparkSession.createDataFrame(
+    truth_df = local_frame(
+        df.sparkSession,
         [(r["id"], [int(x) for x in r["neighbors"]]) for r in tr], "id long, neighbors array<long>"
     )
     return recall(truth_df, res_df, k)

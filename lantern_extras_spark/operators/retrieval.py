@@ -40,6 +40,7 @@ from pyspark.sql.window import Window
 from lantern_extras_spark.functions.portable import pround
 from lantern_extras_spark.functions.text import tokens
 from lantern_extras_spark.functions.vector import cos_sim
+from lantern_extras_spark.session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -514,8 +515,8 @@ def bm25_prf_topk(
     selection use exact integers + lexicographic ties; pass-two scores obey
     `bm25_scores_weighted`'s sorted-fold determinism."""
     spark = df.sparkSession
-    orig = spark.createDataFrame(
-        [(t, 1.0) for t in query_terms], "term string, weight double"
+    orig = local_frame(
+        spark, [(t, 1.0) for t in query_terms], "term string, weight double"
     )
     # one tokenization feeds pass one, expansion selection AND pass two
     # (heavy_hitters' single-scan contract); the cached projection is

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from lantern_extras_spark.functions.hashing import hash32
+from lantern_extras_spark.session import local_frame
 
 # hash32 is uniform over [0, 2^32); buckets of 1/10000 give 0.01% split grain
 SPLIT_BUCKETS = 10_000
@@ -385,8 +386,8 @@ def sampled_percentiles(
     w = Window.orderBy(F.col("__v").asc(), F.col("__id").asc())
     ranked = sample.withColumn("__rn", F.row_number().over(w))
     m = sample.agg(F.count("*").alias("__m"))
-    qdf = df.sparkSession.createDataFrame(
-        [(float(q),) for q in sorted(probs)], "prob double"
+    qdf = local_frame(
+        df.sparkSession, [(float(q),) for q in sorted(probs)], "prob double"
     )
     return (
         ranked.crossJoin(F.broadcast(m))

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from lantern_extras_spark.functions.hashing import hash32
 from lantern_extras_spark.functions.portable import pround
+from lantern_extras_spark.session import local_frame
 
 __all__ = [
     "cms_build",
@@ -314,8 +315,8 @@ def bottomk_percentiles(
         F.row_number().over(Window.orderBy(F.col("__v").asc(), F.col("__id").asc())),
     )
     m = ranked.agg(F.count("*").alias("__m"))
-    qdf = sample.sparkSession.createDataFrame(
-        [(float(q),) for q in sorted(probs)], "prob double"
+    qdf = local_frame(
+        sample.sparkSession, [(float(q),) for q in sorted(probs)], "prob double"
     )
     return (
         ranked.crossJoin(F.broadcast(m))

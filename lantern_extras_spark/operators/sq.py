@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from lantern_extras_spark.session import local_frame
+
 
 def sq8_train(df: DataFrame, vec_col: str = "embedding") -> tuple[list[float], list[float]]:
     """Exact per-dimension (min, max) bounds — the entire SQ8 'codebook'
@@ -195,7 +197,8 @@ def sq8_recall_vs_exact(
     truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
                          id_col=id_col, vec_col=vec_col, seed=seed).collect()
     spark = df.sparkSession
-    queries = spark.createDataFrame(
+    queries = local_frame(
+        spark,
         [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
         "query_id long, query_vec array<double>",
     )
@@ -203,7 +206,8 @@ def sq8_recall_vs_exact(
         sq8_knn_join(coded, queries, mins, maxs, k=k, id_col=id_col),
         qid_col="query_id", id_col=id_col,
     )
-    truth_df = spark.createDataFrame(
+    truth_df = local_frame(
+        spark,
         [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
         "id long, neighbors array<long>",
     )

@@ -29,6 +29,7 @@ from lantern_extras_spark.functions.text import (
     uniq_token_ratio_of,
     word_ngrams_of,
 )
+from lantern_extras_spark.session import local_frame
 
 # Tiny per-language stopword profiles — a deterministic n-gram/stopword heuristic
 # (not a model). Order matters: ties break toward the earlier language.
@@ -868,7 +869,7 @@ def perplexity_buckets(
     m = sample.groupBy(*gb).agg(F.count("*").alias("__m")) if gb else (
         sample.agg(F.count("*").alias("__m"))
     )
-    qdf = df.sparkSession.createDataFrame([(float(p),) for p in ps], "prob double")
+    qdf = local_frame(df.sparkSession, [(float(p),) for p in ps], "prob double")
     joined = ranked.join(F.broadcast(m), gb) if gb else ranked.crossJoin(F.broadcast(m))
     cutoffs = joined.join(
         F.broadcast(qdf),
@@ -1477,7 +1478,7 @@ def label_by_keywords(
             df, labels, text_col, id_col, default_label, round_dp
         )
 
-    kws = spark.createDataFrame(kw_rows, "label string, kw string")
+    kws = local_frame(spark, kw_rows, "label string, kw string")
     toks = df.select(
         F.col(id_col), F.explode(tokens(F.lower(F.col(text_col)))).alias("kw")
     )

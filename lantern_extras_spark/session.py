@@ -10,11 +10,42 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import zipfile
+from typing import Any, Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _write_package_zip(zpath: str) -> None:
+    """Zip `lantern_extras_spark/` to `zpath`, atomically: the archive is
+    written under a unique name in the same directory and `os.replace`d into
+    place, so a reader (another driver on this host sharing TMPDIR) sees
+    either the old complete archive or the new one, never a partial write."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    fd, tmp = tempfile.mkstemp(
+        prefix=os.path.basename(zpath) + ".", suffix=".tmp", dir=os.path.dirname(zpath)
+    )
+    try:
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+            for root, _dirs, files in os.walk(pkg_dir):
+                if "__pycache__" in root:
+                    continue
+                for f in files:
+                    # .txt rides along for data files the package loads at runtime
+                    # (e.g. functions/bpe_vocab.txt — executors resolve it relative
+                    # to the module path inside the shipped zip)
+                    if f.endswith((".py", ".txt")):
+                        full = os.path.join(root, f)
+                        rel = os.path.join("lantern_extras_spark", os.path.relpath(full, pkg_dir))
+                        zf.write(full, rel)
+        os.replace(tmp, zpath)
+    except BaseException:
+        os.unlink(tmp)
+        raise
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -26,22 +57,76 @@ def _ship_package(spark: SparkSession) -> None:
     in worker processes."""
     if getattr(spark, "_lantern_pkg_shipped", False):
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zpath = os.path.join(tempfile.gettempdir(), "lantern_extras_spark_pkg.zip")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for f in files:
-                # .txt rides along for data files the package loads at runtime
-                # (e.g. functions/bpe_vocab.txt — executors resolve it relative
-                # to the module path inside the shipped zip)
-                if f.endswith((".py", ".txt")):
-                    full = os.path.join(root, f)
-                    rel = os.path.join("lantern_extras_spark", os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
+    _write_package_zip(zpath)
     spark.sparkContext.addPyFile(zpath)
     spark._lantern_pkg_shipped = True
+
+
+_LOCAL_RELATION_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
+_local_frame_lock = threading.Lock()
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Any], schema: StructType | str) -> DataFrame:
+    """A DataFrame over rows held on the driver that runs no Python worker.
+
+    Drop-in for `spark.createDataFrame(rows, schema)` with the same values,
+    types, partition count and row-to-partition layout. That call pickles the
+    rows into a PythonRDD, and every action on the frame then forks one Python
+    worker per partition (defaultParallelism of them), which Spark does not
+    reuse. Here the rows become Arrow record batches, one per partition, that
+    the JVM decodes itself.
+
+    `schema` is a DDL string or a StructType. The batches are handed to the
+    JVM the way `createDataFrame(pyarrow.Table)` does it, minus two of its
+    choices: it drops empty batches (fewer partitions than the list path when
+    there are fewer rows than cores), and below
+    `spark.sql.execution.arrow.localRelationThreshold` it builds a
+    LocalRelation, with its own partition count and size statistics (which
+    change join planning). The
+    threshold is set to 0 for the call so the JVM always builds the
+    RDD-backed relation the list path gives."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _create_converter, _parse_datatype_string
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    # the list path's conversion: dict/Row → tuple, datetime → epoch micros
+    # (naive datetimes read in the process's local zone), date → epoch days
+    internal = [struct.toInternal(r) for r in map(_create_converter(struct), rows)]
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*internal)) if internal else [()] * len(struct.fields)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    # sc.parallelize's layout: rows go in chunks of `size`, and the chunks
+    # are split evenly over defaultParallelism slices (some may be empty)
+    n, slices = len(internal), spark.sparkContext.defaultParallelism
+    size = max(1, min(n // slices, 1024))
+    n_chunks = -(-n // size)
+    bounds = [min(n, i * n_chunks // slices * size) for i in range(slices + 1)]
+    batches = [batch.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])]
+
+    jvm = spark._jvm
+    with _local_frame_lock:
+        prev = spark.conf.get(_LOCAL_RELATION_THRESHOLD, None)
+        spark.conf.set(_LOCAL_RELATION_THRESHOLD, "0")
+        try:
+            jiter = spark.sparkContext._serialize_to_jvm(
+                batches,
+                ArrowStreamSerializer(),
+                jvm.PythonSQLUtils.readArrowStreamFromFile,
+                jvm.ArrowIteratorServer,
+            )
+            jdf = jvm.PythonSQLUtils.toDataFrame(jiter, struct.json(), spark._jsparkSession)
+        finally:
+            if prev is None:
+                spark.conf.unset(_LOCAL_RELATION_THRESHOLD)
+            else:
+                spark.conf.set(_LOCAL_RELATION_THRESHOLD, prev)
+    return DataFrame(jdf, spark)
 
 
 def get_spark(app_name: str = "lantern-extras-spark", shuffle_partitions: int | None = None) -> SparkSession:

@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from lantern_extras_spark.session import local_frame
+
 _ELEM = {
     "fvecs": (np.float32, FloatType()),
     "ivecs": (np.int32, IntegerType()),
@@ -179,8 +181,8 @@ def get_vectors(
             remaining -= len(vecs)
             if remaining <= 0:
                 break
-    return spark.createDataFrame(
-        rows, "member string, row_id long, vector array<float>"
+    return local_frame(
+        spark, rows, "member string, row_id long, vector array<float>"
     )
 
 

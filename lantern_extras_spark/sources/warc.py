@@ -67,6 +67,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from lantern_extras_spark.session import local_frame
+
 _CRLF = b"\r\n"
 
 
@@ -835,7 +837,7 @@ def _paths_df(spark: SparkSession, path) -> DataFrame:
     if any(_is_http(p) for p in paths):
         if not all(_is_http(p) for p in paths):
             raise ValueError("mixed http(s) and non-http paths in one read")
-        df = spark.createDataFrame([(p,) for p in paths], "path string")
+        df = local_frame(spark, [(p,) for p in paths], "path string")
         return df.repartition(len(paths))
     if len(paths) != 1:
         raise ValueError("pass multiple paths only as http(s) URLs; local "

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
+from lantern_extras_spark.session import local_frame
+
 
 def _read_store_or_none(sess, store_dir: str, columns: list[str] | None = None):
     """Read a cross-batch parquet store, returning None ONLY when the store
@@ -925,8 +927,8 @@ def bm25_search_store(
     stats = docs.agg(
         F.count("*").alias("__n"), F.sum("dl").alias("__sum_dl")
     )
-    tmap = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(query_terms)], "term string, __ti int"
+    tmap = local_frame(
+        spark, [(t, i) for i, t in enumerate(query_terms)], "term string, __ti int"
     )
     hits = posts.join(F.broadcast(tmap), "term")
     dfreq = hits.groupBy("term").agg(
