@@ -40,19 +40,15 @@ from lantern_extras_spark.operators import sketches as SK
 from lantern_extras_spark.operators import sq as SQ
 from lantern_extras_spark.operators import temporal as TMP
 from lantern_extras_spark.operators import versioning as VER
-from lantern_extras_spark.session import local_frame
+from lantern_extras_spark.session import events_ts, local_frame
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
 
-#: Spread is OPT-IN per query (measured r13): it wins only where ONE heavy
-#: map pass feeds ONE consumer (gopher_filter 0.54x, ngram_novelty 0.49x,
-#: language_id 0.85x, knn_cos 0.86x in paired A/B). Queries that reference
-#: the scan from several subplans (dsir 1.61x, bm25_prf 1.55x) or whose map
-#: work is trivial (clean_text 1.98x) pay the extra exchange with no gain.
-_SPREAD_TABLES: frozenset[str] = frozenset()
+#: Smallest input each spread partition targets (see `_spread`).
+SPREAD_TARGET_BYTES = 32 << 10
 
 
 def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -69,11 +65,15 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     an under-split input pays one round-robin exchange of the (pruned,
     pushed-down) scan output to recover the cluster's parallelism. Round-robin
     keeps results partition-independent (and Spark's sort-before-repartition
-    keeps retries deterministic)."""
-    import os as _os
+    keeps retries deterministic).
 
+    Spread is OPT-IN per query (measured r13): it wins only where ONE heavy
+    map pass feeds ONE consumer (gopher_filter 0.54x, ngram_novelty 0.49x,
+    language_id 0.85x, knn_cos 0.86x in paired A/B). Queries that reference
+    the scan from several subplans (dsir 1.61x, bm25_prf 1.55x) or whose map
+    work is trivial (clean_text 1.98x) pay the extra exchange with no gain."""
     try:
-        size = _os.path.getsize(path)
+        size = os.path.getsize(path)
     except OSError:
         return df  # non-local path: layout unknown, keep the plain scan
     cores = spark.sparkContext.defaultParallelism
@@ -88,16 +88,10 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     # bench SF — per-task scheduling + Arrow/python-worker overhead outweighed
     # the extra slots (interleaved paired A/B at c32: n=16 ran 0.75x vs n=32
     # on decontaminate AND decontaminate_bloom mins). Each spread partition
-    # now targets >= SPREAD_TARGET_BYTES of input (default 32 KiB), still
-    # clamped to [2, cores]; a 100 TB input never reaches this branch (the
-    # scan already splits), so the constant only shapes small under-split
-    # inputs. Hatch: SPARK_GRAFT_SPREAD_BYTES=0 restores repartition(cores).
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SPREAD_BYTES", "1") == "0":
-        return df.repartition(cores)
-    target = int(_os.environ.get("SPARK_GRAFT_SPREAD_TARGET_BYTES", str(32 << 10)))
-    return df.repartition(max(2, min(cores, size // max(1, target))))
+    # now targets >= SPREAD_TARGET_BYTES of input, still clamped to
+    # [2, cores]; a 100 TB input never reaches this branch (the scan already
+    # splits), so the constant only shapes small under-split inputs.
+    return df.repartition(max(2, min(cores, size // max(1, SPREAD_TARGET_BYTES))))
 
 
 #: Session-scoped scan-plan memo (r13, guide §6 file-listing caching / §1.2
@@ -108,26 +102,31 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
 #: (applicationId, path), exactly the metadata Spark itself caches per
 #: session in its file-source cache; every execution still reads the parquet
 #: bytes. A new session (fresh applicationId) re-reads all footers.
-_SCAN_MEMO: dict[tuple, DataFrame] = {}
+#: The value carries the file's mtime: a regenerated/rewritten parquet
+#: within one application gets a fresh scan that REPLACES the old entry
+#: (stale file listings otherwise surface as FileNotFoundException or
+#: silently-old data). Entries of other (stopped) applications are dropped
+#: on insert, so the memo holds at most one entry per path.
+_SCAN_MEMO: dict[tuple[str, str], tuple[float | None, DataFrame]] = {}
 
 
 def _read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
-    # r14 (ADVICE): key on the file mtime too, so a regenerated/rewritten
-    # parquet within one application gets a fresh scan (stale file listings
-    # otherwise surface as FileNotFoundException or silently-old data)
     try:
         mtime = os.path.getmtime(path)
     except OSError:
         mtime = None  # non-local path: immutability is the caller's contract
-    key = (spark.sparkContext.applicationId, path, mtime)
-    df = _SCAN_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _SCAN_MEMO[key] = df
+    app = spark.sparkContext.applicationId
+    hit = _SCAN_MEMO.get((app, path))
+    if hit is not None and hit[0] == mtime:
+        return hit[1]
+    df = spark.read.parquet(path)
+    for k in [k for k in _SCAN_MEMO if k[0] != app]:
+        del _SCAN_MEMO[k]
+    _SCAN_MEMO[(app, path)] = (mtime, df)
     return df
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None) -> DataFrame:
+def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
     # the driver supplies its own SparkSession; make sure executors can import
     # this package inside pandas-UDF queries regardless of driver cwd, and pin
     # UTC so timestamp rendering matches the (timezone-naive) DuckDB oracle
@@ -137,33 +136,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None) 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
     df = _read_parquet_memo(spark, path)
-    if spread is None:
-        spread = name in _SPREAD_TABLES
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":  # A/B + debugging hatch
-        spread = False
     return _spread(spark, df, path) if spread else df
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Some testdata generations store events.ts as TIMESTAMP(NANOS), which
-    Spark's vectorized reader rejects — read nanos as long and truncate to
-    microseconds (bit-identical to DuckDB's ns→us cast); newer generations
-    store plain micros TIMESTAMP, which passes through untouched."""
+    """events with `ts` as a microsecond TIMESTAMP (see `events_ts`)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # nanosAsLong is set before the first (memoized) read, so the cached scan
     # plan embeds the right schema for every later call too
-    ev = _read_parquet_memo(spark, f"{sf_dir}/events.parquet")
-    if dict(ev.dtypes)["ts"] in ("bigint", "long"):
-        ev = ev.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        # plain-micros generations read as TIMESTAMP_NTZ; every consumer uses
-        # unix_micros (TIMESTAMP only). Session tz is UTC, so NTZ→TZ cast is
-        # value-preserving.
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    return ev
+    return events_ts(_read_parquet_memo(spark, f"{sf_dir}/events.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -643,10 +625,7 @@ def q_hash_banded_join(spark: SparkSession, sf: str) -> DataFrame:
     # so filter BEFORE the kernel: the predicate lands in the parquet scan
     # (PushedFilters) and the kernel hashes 300 docs instead of the corpus.
     # Per-doc function => identical rows (filter-before == filter-after).
-    # Hatch: SPARK_GRAFT_HBJ_PREFILTER=0 restores the full-table kernel.
-    docs = _t(spark, sf, "documents")
-    if os.environ.get("SPARK_GRAFT_HBJ_PREFILTER", "1") != "0":
-        docs = docs.where(F.col("doc_id") < 300)
+    docs = _t(spark, sf, "documents").where(F.col("doc_id") < 300)
     sigs = D.simhash(docs)
     store = sigs.where(F.col("doc_id") < 150)
     batch = sigs.where((F.col("doc_id") >= 140) & (F.col("doc_id") < 300))
@@ -1264,8 +1243,8 @@ def q_duplication_share(spark: SparkSession, sf: str) -> DataFrame:
     ratio."""
     # r14: spread=True — re-measured under the cold-per-iteration cache
     # contract (the r13 rejection was measured with warm iterations hiding
-    # the single-task shingle pass): 0.73x monkeypatch-paired, 0.67x via the
-    # SPARK_GRAFT_SPREAD hatch A/B. The rest of the minhash/ngram family
+    # the single-task shingle pass): 0.73x monkeypatch-paired, 0.67x in a
+    # spread on/off A/B. The rest of the minhash/ngram family
     # re-measured neutral (0.99-1.03x) and stays unspread.
     docs = _t(spark, sf, "documents", spread=True)
     out = D.doc_duplication_share(docs)
@@ -1562,9 +1541,8 @@ def q_ivf_pq_search(spark: SparkSession, sf: str) -> DataFrame:
     # first-wins argmin, elementwise double subtraction — Python floats ARE
     # IEEE doubles, so the values are bit-identical (pinned by
     # tests/test_plans.py::test_ivf_pq_codebook_driver_replay).
-    one_collect = os.environ.get("SPARK_GRAFT_IVFPQ_ONECOLLECT", "1") != "0"
     rows8 = (
-        emb.where(F.col("vec_id") < (8 if one_collect else 4))
+        emb.where(F.col("vec_id") < 8)
         .orderBy("vec_id")
         .select("vec_id", "embedding")
         .collect()
@@ -1582,28 +1560,20 @@ def q_ivf_pq_search(spark: SparkSession, sf: str) -> DataFrame:
     )
     dim = len(coarse[0])
     bounds = PQ.split_bounds(dim, 4)
-    if not one_collect:  # A/B hatch: the pre-pass-5 second collect
-        cb_rows = with_res.where(F.col("vec_id") < 8).select("vec_id", "rv").collect()
-        rows = []
-        for r in sorted(cb_rows, key=lambda r: r["vec_id"]):
-            rv = [float(x) for x in r["rv"]]
-            for s, (lo, hi) in enumerate(bounds):
-                rows.append((s, int(r["vec_id"]), rv[lo:hi]))
-    else:
-        rows = []
-        for r in rows8:  # already vec_id-ascending
-            v = [float(x) for x in r["embedding"]]
-            best_d, best_i = float("inf"), -1
-            for i, c in enumerate(coarse):
-                s = 0.0
-                for a, b in zip(v, c):
-                    d = a - b
-                    s += d * d
-                if s < best_d:
-                    best_d, best_i = s, i
-            rv = [a - b for a, b in zip(v, coarse[best_i])]
-            for s_i, (lo, hi) in enumerate(bounds):
-                rows.append((s_i, int(r["vec_id"]), rv[lo:hi]))
+    rows = []
+    for r in rows8:  # already vec_id-ascending
+        v = [float(x) for x in r["embedding"]]
+        best_d, best_i = float("inf"), -1
+        for i, c in enumerate(coarse):
+            s = 0.0
+            for a, b in zip(v, c):
+                d = a - b
+                s += d * d
+            if s < best_d:
+                best_d, best_i = s, i
+        rv = [a - b for a, b in zip(v, coarse[best_i])]
+        for s_i, (lo, hi) in enumerate(bounds):
+            rows.append((s_i, int(r["vec_id"]), rv[lo:hi]))
     cb = local_frame(spark, rows, "subvector_id int, centroid_id int, c array<double>")
     coded = PQ.quantize(with_res, cb, vec_col="rv", dim=dim, formulation="direct")
     qv = _hash_embed_py(IVF_QUERY_TEXT, dim=dim)

@@ -102,16 +102,14 @@ def main() -> None:
     # The SQL cache is now cleared BEFORE each timed iteration (outside the
     # timed region), so every iteration computes cold from the parquet inputs.
     # This makes cache-carrying queries report honestly HIGHER medians than
-    # the r13 harness did; legacy behavior: SPARK_GRAFT_BENCH_CLEARCACHE=0.
-    clear_cache = os.environ.get("SPARK_GRAFT_BENCH_CLEARCACHE", "1") != "0"
+    # the r13 harness did.
 
     def timed(name: str, fn) -> None:
         # median-of-N so one GC pause / compile stall can't fake a regression;
         # min is reported too (steady-state capability)
         runs = []
         for _ in range(N_ITER):
-            if clear_cache:
-                spark.catalog.clearCache()
+            spark.catalog.clearCache()
             t0 = time.monotonic()
             fn()
             runs.append(time.monotonic() - t0)
@@ -124,17 +122,11 @@ def main() -> None:
     # the JVM and discards the result. The previous `.foreach(lambda r: None)`
     # additionally pickled every result row out to Python workers, charging
     # each query +0.14-0.31 s (measured A/B, ~28 s across the 137-query set)
-    # of pure harness overhead the real query does not have. Old-methodology
-    # numbers remain reproducible with SPARK_GRAFT_BENCH_ACTION=foreach; the
-    # r12 artifacts (BENCH_r12.json / bench_detail.json history) are the
+    # of pure harness overhead the real query does not have. The r12
+    # artifacts (BENCH_r12.json / bench_detail.json history) are the
     # foreach-based record.
-    action = os.environ.get("SPARK_GRAFT_BENCH_ACTION", "noop")
-
     def run_query(df) -> None:
-        if action == "foreach":
-            df.foreach(lambda r: None)
-        else:
-            df.write.format("noop").mode("overwrite").save()
+        df.write.format("noop").mode("overwrite").save()
 
     qs = E.queries()
     bench_set = [
@@ -341,10 +333,10 @@ def main() -> None:
         "queries_min": timings_min,
         "total_min": round(sum(timings_min.values()), 3),
         "bench_iters": N_ITER,
-        "timed_action": action,  # r13: "noop" sink per guide §1.4 (foreach = legacy)
+        "timed_action": "noop",  # r13: "noop" sink per guide §1.4 (foreach = legacy)
         # r14: SQL cache cleared before every timed iteration so per-iteration
-        # runs are cold (legacy warm-cache medians: SPARK_GRAFT_BENCH_CLEARCACHE=0)
-        "cache_cleared_between_iters": clear_cache,
+        # runs are cold
+        "cache_cleared_between_iters": True,
         "sf": sf_val,
         # Calibration (r9 #4, probes interleaved per r10 #3): fixed pure-JVM
         # work (200M xxhash-sum + 20M-row two-level agg) whose time moves

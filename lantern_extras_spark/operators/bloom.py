@@ -23,7 +23,9 @@ Two position-hash kinds:
   Python (`contains_py`) — the portable kind, for filters that must be
   rebuilt/reused across engines.
 
-Three membership paths, picked by filter size:
+Three membership paths. mode="auto" picks literal or broadcast by filter
+size; subquery is chosen explicitly (decontaminate uses it for mid-sized
+filters, whose probe runs inside a codegen pipeline):
 - literal (tiny filters, <= LITERAL_MAX_WORDS words): the word array rides in
   the plan as a (constant-folded) literal and the probes are pure Column
   arithmetic — whole-stage codegen, zero Python. The md5 kind probes inside
@@ -38,11 +40,11 @@ Three membership paths, picked by filter size:
   A literal this size is repeated once per probe in the plan (measured:
   bloom_semi_join's plan was 1.2 MB of text) and re-pays py4j transfer,
   analysis, optimizer traversal and codegen EVERY run; the subquery keeps
-  the plan O(1) while codegen still sees a constant bitmap. Auto-picked for
-  xxhash64 only (a subquery cannot appear inside the md5 fold's lambda).
-- broadcast (anything larger): h1/h2 are computed ENGINE-SIDE, and an
-  Arrow-batched pandas UDF does the k bitmap gathers fully vectorized in
-  numpy over the broadcast word array — no per-row Python hashing for
+  the plan O(1) while codegen still sees a constant bitmap. xxhash64 only
+  (a subquery cannot appear inside the md5 fold's lambda).
+- broadcast (auto above LITERAL_MAX_WORDS): h1/h2 are computed ENGINE-SIDE,
+  and an Arrow-batched pandas UDF does the k bitmap gathers fully vectorized
+  in numpy over the broadcast word array — no per-row Python hashing for
   either kind, and the bitmap ships once per executor instead of riding
   each stage's task binary.
 
@@ -63,8 +65,8 @@ from pyspark.sql import functions as F
 from lantern_extras_spark.functions.hashing import hash32
 from lantern_extras_spark.session import local_frame
 
-LITERAL_MAX_WORDS = 256    # above this (16 KiB of plan literal) use subquery
-SUBQUERY_MAX_WORDS = 131072  # above this (1 MiB rides each stage's task binary) use broadcast
+LITERAL_MAX_WORDS = 256    # above this (16 KiB of plan literal) auto uses broadcast
+SUBQUERY_MAX_WORDS = 131072  # largest filter decontaminate probes by subquery (1 MiB per task binary)
 DRIVER_BUILD_MAX_KEYS = 2_000_000  # driver-side build cap: 16 B/key collect (32 MB)
 HASH_KINDS = ("xxhash64", "md5")
 
@@ -205,28 +207,13 @@ def bloom_might_contain(
     module docstring for the literal/broadcast path trade-offs)."""
     col = (F.col(key) if isinstance(key, str) else key).cast("string")
     if mode == "auto":
-        import os as _os
-
-        if len(bf.words) <= LITERAL_MAX_WORDS:
-            mode = "literal"
-        elif (
-            bf.hash_kind == "xxhash64"
-            and len(bf.words) <= SUBQUERY_MAX_WORDS
-            and _os.environ.get("SPARK_GRAFT_BLOOM_MID", "broadcast") == "subquery"
-        ):
-            # md5 stays literal/broadcast: its fold form (hashes evaluated
-            # once per row) cannot host a subquery expression inside the
-            # higher-order lambda (analyzer restriction)
-            mode = "subquery"
-        else:
-            # r13 (guide §4.2): for mid/large bitmaps the vectorized numpy
-            # probe over an Arrow batch beats the per-row JVM expression
-            # chain (5x getbit/element_at per row) — measured 0.45x on the
-            # 600k-row prefilter scan with a 4096-word filter. h1/h2 are
-            # computed engine-side so only 16 B/row cross the Python
-            # boundary. Hatch: SPARK_GRAFT_BLOOM_MID=subquery restores the
-            # scalar-subquery probe for the <= SUBQUERY_MAX_WORDS band.
-            mode = "broadcast"
+        # r13 (guide §4.2): for mid/large bitmaps the vectorized numpy probe
+        # over an Arrow batch beats the per-row JVM expression chain (5x
+        # getbit/element_at per row) — measured 0.45x on the 600k-row
+        # prefilter scan with a 4096-word filter. h1/h2 are computed
+        # engine-side so only 16 B/row cross the Python boundary. The
+        # scalar-subquery probe stays selectable with mode="subquery".
+        mode = "literal" if len(bf.words) <= LITERAL_MAX_WORDS else "broadcast"
     if mode in ("literal", "subquery"):
         if mode == "subquery":
             # r13 optimization (guide §7.2/§1.2): a mid-sized bitmap as a plan

@@ -593,14 +593,10 @@ def dedup_clusters(
     # resolve as one bounded collect + driver union-find instead of 2-3
     # shuffle jobs per propagation/contraction round. Both strategies share
     # it (they promise the identical labeling); larger graphs fall through
-    # to the strategy's distributed loop. SPARK_GRAFT_DRIVER_CC=0 is the
-    # A/B + debugging hatch.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_DRIVER_CC", "1") != "0":
-        labels = _cc_driver(edges, DRIVER_CC_MAX_EDGES)
-        if labels is not None:
-            return labels
+    # to the strategy's distributed loop.
+    labels = _cc_driver(edges, DRIVER_CC_MAX_EDGES)
+    if labels is not None:
+        return labels
     if strategy == "star":
         labels, converged = _cc_star(edges, max_iter)
         if not converged:
@@ -1158,9 +1154,7 @@ def ngram_jaccard_join(
     )
     pa = sha.select("id_a", "n_a", F.explode("sh_a").alias("h"))
     pb = shb.select("id_b", "n_b", F.explode("sh_b").alias("h"))
-    import os as _os
-
-    if max_df is None and _os.environ.get("SPARK_GRAFT_NGJ_COUNT", "1") != "0":
+    if max_df is None:
         # r13 (guide §1.2 fewer passes / §2.4 remove shuffles): both shingle
         # sets are DISTINCT by construction (hashed_shingles applies
         # array_distinct), so |∩| is exactly the number of co-occurring
@@ -1188,13 +1182,12 @@ def ngram_jaccard_join(
             .where(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard")
         )
-    if max_df is not None:
-        df_counts = (
-            pa.select("h").unionAll(pb.select("h"))
-            .groupBy("h").count().where(F.col("count") > max_df).select("h")
-        )
-        pa = pa.join(F.broadcast(df_counts), "h", "left_anti")
-        pb = pb.join(F.broadcast(df_counts), "h", "left_anti")
+    df_counts = (
+        pa.select("h").unionAll(pb.select("h"))
+        .groupBy("h").count().where(F.col("count") > max_df).select("h")
+    )
+    pa = pa.join(F.broadcast(df_counts), "h", "left_anti")
+    pb = pb.join(F.broadcast(df_counts), "h", "left_anti")
     cands = (
         pa.join(pb, "h")
         .where(
@@ -1451,14 +1444,8 @@ def decontaminate(
     d_sh = hashed_shingles(d_src, text_col, id_col, shingle_n).select(
         F.col(id_col), F.explode("sh").alias("__sh")
     )
-    import os as _os
-
     b_base = hashed_shingles(b_src, bench_text_col, bench_id_col, shingle_n)
-    bench_ckpt = (
-        bloom_prefilter
-        and broadcast_benchmark
-        and _os.environ.get("SPARK_GRAFT_DECON_CKPT", "1") != "0"
-    )
+    bench_ckpt = bloom_prefilter and broadcast_benchmark
     if bench_ckpt:
         # r13 pass-6 (guide §7.2 duplicated subtrees): with the prefilter on,
         # the bench shingle pipeline feeds THREE consumers — the posting
@@ -1491,13 +1478,10 @@ def decontaminate(
         # Columns, same arithmetic). Bounded by the same small-eval-set
         # assumption as the broadcast + the driver-build key cap; above the
         # cap (or unchekpointed) the distributed distinct build remains.
-        # Hatch: SPARK_GRAFT_DECON_DRIVER_BLOOM=0.
         from lantern_extras_spark.operators.bloom import DRIVER_BUILD_MAX_KEYS
 
         bf = None
-        if bench_ckpt and _os.environ.get(
-            "SPARK_GRAFT_DECON_DRIVER_BLOOM", "1"
-        ) != "0":
+        if bench_ckpt:
             sh_rows = b_base.select("sh").collect()
             keys = sorted({s for r in sh_rows for s in (r["sh"] or ())})
             if len(keys) <= DRIVER_BUILD_MAX_KEYS:

@@ -529,12 +529,7 @@ def bm25_prf_topk(
         "bm25_prf_staged",
         df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks")),
     )
-    import os as _os
-
-    if (
-        _os.environ.get("SPARK_GRAFT_BM25_LIT_PASS1", "1") != "0"
-        and len(set(query_terms)) == len(query_terms)
-    ):
+    if len(set(query_terms)) == len(query_terms):
         # r13 (guide §1.2 fewer passes): pass one's terms are DRIVER-SIDE
         # LITERALS (unlike pass two's engine-resident expansion terms), so
         # its scores can come from one stats aggregate + one projection over

@@ -88,6 +88,12 @@ def hashed_ngram_buckets(
     return F.concat(uni, bi)
 
 
+#: Largest document count for which `dsir_log_weights`' target-filter path
+#: persists the tagged feature stream so one hash pass feeds both groupBys
+#: (the one-pass shape). Above it the two-pass recompute shape runs.
+DSIR_MAT_MAX_DOCS = 1_000_000
+
+
 #: r14 (ADVICE): the one-pass doc-count probe (`limit(cap+1).count()`) is a
 #: strategy DECISION over a frame that is immutable for the session (the
 #: bench/scan-memo contract) — repeated calls over the same plan re-paid a
@@ -95,23 +101,19 @@ def hashed_ngram_buckets(
 #: semanticHash): plan metadata, never data (the same discipline as the
 #: entry's _SCAN_MEMO). A hash collision could only flip the STRATEGY, and
 #: the one-pass/two-pass shapes are pinned bit-identical, so results are
-#: unaffected either way.
+#: unaffected either way. Entries of other (stopped) applications are
+#: dropped on insert, so the memo holds one application's probes at most.
 _PROBE_MEMO: dict[tuple, bool] = {}
 
 
 def _probe_under_cap(keys: DataFrame, cap: int) -> bool:
-    memo_key = (
-        keys.sparkSession.sparkContext.applicationId,
-        cap,
-        keys.semanticHash(),
-    )
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_DSIR_JOBCUT", "1") == "0":  # A/B hatch
-        return keys.limit(cap + 1).count() <= cap
+    app = keys.sparkSession.sparkContext.applicationId
+    memo_key = (app, cap, keys.semanticHash())
     hit = _PROBE_MEMO.get(memo_key)
     if hit is None:
         hit = keys.limit(cap + 1).count() <= cap
+        for k in [k for k in _PROBE_MEMO if k[0] != app]:
+            del _PROBE_MEMO[k]
         _PROBE_MEMO[memo_key] = hit
     return hit
 
@@ -279,18 +281,7 @@ def _per_doc_logw(
     `bucket_profile(df.where(pred))` produces. The single aggregation
     subtree is shared by the ratio table AND the totals row, so Spark's
     exchange reuse executes the tokenize+explode once instead of twice."""
-    import os as _os
-
     raw = df if raw is None else raw
-    if (
-        target_filter is not None
-        and raw_profile is None
-        and target_profile is None
-        and raw is df
-        and _os.environ.get("SPARK_GRAFT_DSIR_COMBINED", "1") == "0"
-    ):  # A/B hatch: the two-pass pre-pass-6 shape
-        target = df.where(target_filter)
-        target_filter = None
     # NOTE (r13, measured): do NOT cache the profile frames here. Each is
     # referenced twice (ratio table + totals row), but AQE's exchange reuse
     # already dedupes the identical aggregation subtree at runtime; adding a
@@ -311,18 +302,14 @@ def _per_doc_logw(
         # and the per-doc scoring stream are the SAME exploded md5-hashed
         # feature rows — without a materialization the explode+hash pass (the
         # dominant compute) ran twice, once per aggregation. For bounded
-        # inputs (<= SPARK_GRAFT_DSIR_MAT_MAX_DOCS documents, default 1M;
-        # probed with a cheap count-pushdown job) the tagged stream persists
-        # MEMORY_AND_DISK so one hash pass feeds both groupBys. Above the cap
-        # — the 100 TB deployment, where one would precompute profiles via
+        # inputs (<= DSIR_MAT_MAX_DOCS documents; probed with a cheap
+        # count-pushdown job) the tagged stream persists MEMORY_AND_DISK so
+        # one hash pass feeds both groupBys. Above the cap — the 100 TB
+        # deployment, where one would precompute profiles via
         # raw_profile/target_profile anyway — the two-pass recompute shape is
         # kept (persisting O(corpus-token) rows trades storage it may not
-        # have). Hatch: SPARK_GRAFT_DSIR_ONEPASS=0.
-        cap = int(_os.environ.get("SPARK_GRAFT_DSIR_MAT_MAX_DOCS", "1000000"))
-        if (
-            _os.environ.get("SPARK_GRAFT_DSIR_ONEPASS", "1") != "0"
-            and _probe_under_cap(df.select(id_col), cap)
-        ):
+        # have).
+        if _probe_under_cap(df.select(id_col), DSIR_MAT_MAX_DOCS):
             # r14 (r13 verdict item 3 / ADVICE): scoped persist — the NEXT
             # dsir one-pass call releases this call's blocks, so repeated
             # calls no longer accumulate CacheManager entries for the session
@@ -495,10 +482,6 @@ def dsir_select(
             (F.col("sel_key") > F.lit(t_key))
             | ((F.col("sel_key") == F.lit(t_key)) & (F.col(id_col) <= F.lit(t_id)))
         )
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_DSIR_JOBCUT", "1") == "0":  # A/B hatch
-        surv = surv.localCheckpoint()
     return df.join(surv, id_col).select(
         *df.columns, "dsir_logw", "n_features", "sel_key"
     )

@@ -103,8 +103,7 @@ def salted_join(
     replicated right side skips both sort-merge sorts (0.39x measured), but a
     ShuffledHashJoin build side does NOT spill — callers whose replicated
     right slice may exceed executor memory should pass False to restore
-    planner choice per call, rather than mutating the process-global
-    SPARK_GRAFT_SALTED_SHJ env hatch. (For how='right'/'full' Spark would
+    planner choice (sort-merge) per call. (For how='right'/'full' Spark would
     ignore the hint anyway — those forms raise here regardless, see below.)
 
     Left rows get a deterministic pseudo-uniform salt
@@ -153,11 +152,9 @@ def salted_join(
     # and the salt bounds each reducer's build at ~|right|/partitions rows —
     # a strictly weaker assumption than the replication itself. The hint
     # changes the join ALGORITHM only (same keys, same exchanges, identical
-    # rows). SPARK_GRAFT_SALTED_SHJ=0 restores planner choice (sort-merge)
+    # rows). shuffle_hash_hint=False restores planner choice (sort-merge)
     # for a right side too large to hash-build per partition.
-    import os as _os
-
-    if shuffle_hash_hint and _os.environ.get("SPARK_GRAFT_SALTED_SHJ", "1") != "0":
+    if shuffle_hash_hint:
         r2 = r2.hint("SHUFFLE_HASH")
     out = l2.join(r2, on=[on, "__salt"], how=how)
     return out.drop("__salt")

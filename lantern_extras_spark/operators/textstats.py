@@ -1416,6 +1416,12 @@ def tokenizer_fertility(
     )
 
 
+#: Largest seed-keyword dictionary `label_by_keywords` scores with the
+#: literal two-pass path; larger dictionaries take the explode + broadcast
+#: join path.
+KWLBL_LIT_MAX_KW = 64
+
+
 def label_by_keywords(
     df: DataFrame,
     labels: dict[str, tuple[str, ...]],
@@ -1451,7 +1457,7 @@ def label_by_keywords(
 
     # r14 literal fast path (guide §1.2 distributed algorithm / §2.4 remove
     # shuffles): seed-keyword dictionaries are DRIVER-SIZED by nature, so for
-    # small dictionaries (<= _KWLBL_LIT_MAX_KW keywords) the whole pipeline
+    # small dictionaries (<= KWLBL_LIT_MAX_KW keywords) the whole pipeline
     # collapses to TWO shuffle-free passes over the text:
     #   1. ONE single-row aggregation computing n_docs AND every keyword's
     #      document frequency (exists() over the token array) — collected,
@@ -1466,14 +1472,7 @@ def label_by_keywords(
     # hits), same idf literals, same per-(doc,label) rounded score (verified
     # exactly against the join path by test + oracle hash), same
     # smallest-label tie-break, same default for hitless docs.
-    # Hatch: SPARK_GRAFT_KWLBL_LIT=0.
-    import os as _os
-
-    lit_max = int(_os.environ.get("SPARK_GRAFT_KWLBL_LIT_MAX_KW", "64"))
-    if (
-        len(kw_rows) <= lit_max
-        and _os.environ.get("SPARK_GRAFT_KWLBL_LIT", "1") != "0"
-    ):
+    if len(kw_rows) <= KWLBL_LIT_MAX_KW:
         return _label_by_keywords_literal(
             df, labels, text_col, id_col, default_label, round_dp
         )

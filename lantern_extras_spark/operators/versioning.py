@@ -114,9 +114,7 @@ def corpus_diff(
         .when(status == "moved", F.col("c_old_id"))
         .otherwise(F.lit(None).cast(o.schema["o_id"].dataType))
     )
-    import os as _os
-
-    if parallelism and _os.environ.get("SPARK_GRAFT_DIFF_SPLIT", "1") != "0":
+    if parallelism:
         # split the edited sliver out of the single projection so ONLY it
         # (id, both texts) pays a round-robin exchange to `parallelism`
         # partitions — the byte-sized AQE coalescing would otherwise run the

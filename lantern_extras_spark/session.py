@@ -158,11 +158,7 @@ def get_spark(app_name: str = "lantern-extras-spark", shuffle_partitions: int | 
         # while the one real winner (salted_join, 0.39x isolated) gets an
         # explicit SHUFFLE_HASH hint at its call site instead: the join whose
         # build side is bounded BY CONSTRUCTION is hinted; everything else
-        # keeps the planner default. Env hatch kept for future A/B.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
+        # keeps the planner default (preferSortMergeJoin=true).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -175,11 +171,7 @@ def get_spark(app_name: str = "lantern-extras-spark", shuffle_partitions: int | 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None) -> dict:
     """Load the standard parquet tables of a test scale-factor directory.
 
-    `events` carries TIMESTAMP(NANOS), which Spark's parquet reader rejects —
-    it is read as long nanos and truncated to a microsecond timestamp
-    (identical to DuckDB's ns→us cast)."""
-    from pyspark.sql import functions as F
-
+    `events` is read with nanosAsLong and normalized by `events_ts`."""
     names = names or (
         "region",
         "nation",
@@ -195,18 +187,25 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
     out = {}
     for n in names:
         if n == "events":
-            # TIMESTAMP(NANOS) generations need the nanos→long→micros bridge;
-            # plain-micros generations read as timestamp directly.
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-            if dict(ev.dtypes)["ts"] in ("bigint", "long"):
-                ev = ev.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-            else:
-                # plain-micros parquet reads as TIMESTAMP_NTZ; consumers call
-                # unix_micros (TIMESTAMP only). Session tz is UTC → cast is
-                # value-preserving.
-                ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-            out[n] = ev
+            out[n] = events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
         else:
             out[n] = spark.read.parquet(f"{sf_dir}/{n}.parquet")
     return out
+
+
+def events_ts(ev: DataFrame) -> DataFrame:
+    """`ev` (an events parquet scan) with `ts` as a microsecond TIMESTAMP.
+
+    Some testdata generations store events.ts as TIMESTAMP(NANOS), which
+    Spark's vectorized reader rejects — the caller reads it with
+    `spark.sql.legacy.parquet.nanosAsLong=true` and the long nanos are
+    truncated to microseconds here (bit-identical to DuckDB's ns→us cast).
+    Newer generations store plain micros, which read as TIMESTAMP_NTZ;
+    consumers call unix_micros (TIMESTAMP only), and with the session tz at
+    UTC the NTZ→TIMESTAMP cast is value-preserving."""
+    from pyspark.sql import functions as F
+
+    if dict(ev.dtypes)["ts"] in ("bigint", "long"):
+        return ev.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return ev.withColumn("ts", F.col("ts").cast("timestamp"))

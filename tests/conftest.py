@@ -80,3 +80,20 @@ def docs(spark):
 @pytest.fixture(scope="session")
 def emb(spark):
     return spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+
+
+@pytest.fixture
+def force_distributed(monkeypatch):
+    """Set every size cap that picks a driver-side shortcut over a
+    distributed fallback to 0, so the distributed branches run at test scale.
+    `knn.MAX_COLLECTED_QUERIES` is left alone: above it knn raises instead of
+    falling back."""
+    from lantern_extras_spark.operators import bloom, dedup, selection, textstats
+
+    for mod, cap in (
+        (dedup, "DRIVER_CC_MAX_EDGES"),
+        (bloom, "DRIVER_BUILD_MAX_KEYS"),
+        (selection, "DSIR_MAT_MAX_DOCS"),
+        (textstats, "KWLBL_LIT_MAX_KW"),
+    ):
+        monkeypatch.setattr(mod, cap, 0)

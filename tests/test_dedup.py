@@ -1211,35 +1211,27 @@ def test_dedup_keep_best_string_ids(spark):
     assert out == {"a": True, "b": False, "z": True}
 
 
-def test_decontaminate_driver_bloom_matches_distributed(spark):
+def test_decontaminate_driver_bloom_matches_distributed(spark, monkeypatch):
     """r14: the driver-side Bloom build (one collect of the checkpointed
     bench shingles, n passed) must flag the identical (doc, bench,
-    containment) rows as the distributed distinct-frame build."""
-    import os
+    containment) rows as the distributed distinct-frame build, which a key
+    cap of 0 selects."""
+    from lantern_extras_spark.operators import bloom as BL
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     bench = docs.where("doc_id < 10")
     train = docs.where("doc_id >= 10")
-    prev = os.environ.get("SPARK_GRAFT_DECON_DRIVER_BLOOM")
-    try:
-        os.environ["SPARK_GRAFT_DECON_DRIVER_BLOOM"] = "0"
-        dist = sorted(
+
+    def flags():
+        return sorted(
             (r["doc_id"], r["bench_id"], round(r["containment"], 12))
             for r in D.decontaminate(
                 train, bench, threshold=0.1, bloom_prefilter=True
             ).collect()
         )
-        os.environ["SPARK_GRAFT_DECON_DRIVER_BLOOM"] = "1"
-        drv = sorted(
-            (r["doc_id"], r["bench_id"], round(r["containment"], 12))
-            for r in D.decontaminate(
-                train, bench, threshold=0.1, bloom_prefilter=True
-            ).collect()
-        )
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_DECON_DRIVER_BLOOM", None)
-        else:
-            os.environ["SPARK_GRAFT_DECON_DRIVER_BLOOM"] = prev
+
+    drv = flags()
+    monkeypatch.setattr(BL, "DRIVER_BUILD_MAX_KEYS", 0)
+    dist = flags()
     assert drv, "fixture produced no flags — threshold/slice drifted"
     assert drv == dist

@@ -59,3 +59,30 @@ def test_oracle_keys_subset_of_queries():
     import __spark_entry__ as E
 
     assert set(E.oracle_sql()).issubset(set(E.queries()))
+
+
+#: Queries whose operators have a driver shortcut chosen by a size cap.
+FORCED_DISTRIBUTED = [
+    "dedup_clusters",
+    "dedup_clusters_star",
+    "keyword_labels",
+    "dsir_weights",
+    "dsir_select",
+    "dsir_select_big",
+    "decontaminate_bloom",
+    "bloom_semi_join",
+    "bloom_anti_join",
+]
+
+
+def test_forced_distributed_matches_oracle(spark, force_distributed):
+    """With every driver-shortcut cap at 0, the distributed fallbacks (the
+    paths that run at scale) must hash-match the same DuckDB oracle."""
+    res = run_all(spark, SF, only=FORCED_DISTRIBUTED)
+    assert sorted(res) == sorted(FORCED_DISTRIBUTED)
+    bad = {
+        k: v.get("error") or (v["spark"][:2], v["oracle"][:2])
+        for k, v in res.items()
+        if not v.get("hash_match") or not (v["rows_match"] and v["cols_match"])
+    }
+    assert not bad, bad

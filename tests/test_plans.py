@@ -513,14 +513,14 @@ def test_temperature_mixture_group_sized(spark):
     assert "Window" not in s.text, s.text
 
 
-def test_keyword_labels_broadcast_no_window(spark):
+def test_keyword_labels_broadcast_no_window(spark, monkeypatch):
     """r14 default (literal fast path for driver-sized dictionaries): the
     corpus-facing plan is ONE shuffle-free projection — no exchange, no
     joins, no window, the idf literals baked in. The explode->broadcast
-    shape stays pinned behind the hatch for large dictionaries: keyword
+    shape stays pinned for dictionaries above KWLBL_LIT_MAX_KW: keyword
     table and docfreq broadcast, argmax a struct-MIN aggregate, no ranking
     window."""
-    import os
+    from lantern_extras_spark.operators import textstats as TS
 
     df = E.q_keyword_labels(spark, SF)
     s = plan_summary(df)
@@ -531,15 +531,8 @@ def test_keyword_labels_broadcast_no_window(spark):
     assert "Join" not in s.text, s.text
     assert s.n_broadcasts == 0, s.text
 
-    prev = os.environ.get("SPARK_GRAFT_KWLBL_LIT")
-    try:
-        os.environ["SPARK_GRAFT_KWLBL_LIT"] = "0"
-        s2 = plan_summary(E.q_keyword_labels(spark, SF))
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_KWLBL_LIT", None)
-        else:
-            os.environ["SPARK_GRAFT_KWLBL_LIT"] = prev
+    monkeypatch.setattr(TS, "KWLBL_LIT_MAX_KW", 0)
+    s2 = plan_summary(E.q_keyword_labels(spark, SF))
     assert s2.n_broadcasts >= 1, s2.text
     assert "Window" not in s2.text, s2.text
     assert "partial_min" in s2.text or "partial_sum" in s2.text, s2.text

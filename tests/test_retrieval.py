@@ -238,8 +238,7 @@ def test_search_snippets_tie_earliest_start(spark):
 def test_bm25_literal_pass1_matches_weighted(spark, docs_df):
     """r13: the literal pass-1 shape (one stats agg + projection, term-ASC
     summation) must be BIT-identical to the weighted sorted-fold path —
-    same scores, same absent-doc set — and the full PRF ranking must not
-    move under the hatch."""
+    same scores, same absent-doc set."""
     from lantern_extras_spark.functions.text import tokens
 
     staged = docs_df.select("doc_id", tokens(F.col("text")).alias("__toks"))
@@ -257,16 +256,3 @@ def test_bm25_literal_pass1_matches_weighted(spark, docs_df):
         ).collect()
     }
     assert lit == weighted  # exact float equality AND identical doc sets
-
-    def ranked(flag, monkey=None):
-        import os
-        os.environ["SPARK_GRAFT_BM25_LIT_PASS1"] = flag
-        try:
-            return [
-                (r["doc_id"], r["score"], r["rnk"])
-                for r in RET.bm25_prf_topk(docs_df, TERMS, k=10).collect()
-            ]
-        finally:
-            os.environ.pop("SPARK_GRAFT_BM25_LIT_PASS1", None)
-
-    assert ranked("1") == ranked("0")

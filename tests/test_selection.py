@@ -402,15 +402,10 @@ def test_onepass_materialization_matches_recompute(spark, mixed, monkeypatch):
             ).collect()
         )
 
-    monkeypatch.setenv("SPARK_GRAFT_DSIR_ONEPASS", "1")
     one = weights()
-    monkeypatch.setenv("SPARK_GRAFT_DSIR_ONEPASS", "0")
-    two = weights()
-    assert one == two
-    # over-cap: probe forces the recompute shape, values unchanged
-    monkeypatch.setenv("SPARK_GRAFT_DSIR_ONEPASS", "1")
-    monkeypatch.setenv("SPARK_GRAFT_DSIR_MAT_MAX_DOCS", "1")
-    assert weights() == two
+    # over-cap: the probe selects the two-pass recompute shape, values unchanged
+    monkeypatch.setattr(SEL, "DSIR_MAT_MAX_DOCS", 0)
+    assert weights() == one
 
 
 def test_scoped_persist_bounds_cache_growth(spark, mixed):
@@ -430,35 +425,3 @@ def test_scoped_persist_bounds_cache_growth(spark, mixed):
     n1 = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     assert n1 - n0 <= 1, f"dsir one-pass leaked {n1 - n0} cached frames over 3 calls"
     spark.catalog.clearCache()
-
-
-def test_dsir_cutoff_jobcut_matches_checkpoint_path(spark, mixed):
-    """r14: the scoped-persist cutoff (no survivor localCheckpoint, memoized
-    probe) must select the identical rows as the r13 checkpoint shape."""
-    import os
-
-    from lantern_extras_spark.operators import selection as SEL
-
-    prev = os.environ.get("SPARK_GRAFT_DSIR_JOBCUT")
-    try:
-        os.environ["SPARK_GRAFT_DSIR_JOBCUT"] = "0"
-        old = sorted(
-            map(tuple, SEL.dsir_select(
-                mixed, None, n=25, buckets=256, small_n_max=0,
-                target_filter=F.col("doc_id") < 20,
-            ).collect())
-        )
-        os.environ["SPARK_GRAFT_DSIR_JOBCUT"] = "1"
-        new = sorted(
-            map(tuple, SEL.dsir_select(
-                mixed, None, n=25, buckets=256, small_n_max=0,
-                target_filter=F.col("doc_id") < 20,
-            ).collect())
-        )
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_DSIR_JOBCUT", None)
-        else:
-            os.environ["SPARK_GRAFT_DSIR_JOBCUT"] = prev
-    assert len(new) == 25
-    assert new == old

@@ -20,19 +20,8 @@ def test_spread_recovers_parallelism(spark):
     df = E._t(spark, SF, "documents", spread=True)
     size = os.path.getsize(f"{SF}/documents.parquet")
     cores = spark.sparkContext.defaultParallelism
-    expected = max(2, min(cores, size // (32 << 10)))
+    expected = max(2, min(cores, size // E.SPREAD_TARGET_BYTES))
     assert df.rdd.getNumPartitions() == expected
-
-
-def test_spread_bytes_hatch_restores_cores(spark):
-    os.environ["SPARK_GRAFT_SPREAD_BYTES"] = "0"
-    try:
-        df = E._t(spark, SF, "documents", spread=True)
-        assert (
-            df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-        )
-    finally:
-        os.environ.pop("SPARK_GRAFT_SPREAD_BYTES", None)
 
 
 def test_unspread_single_partition(spark):
@@ -53,16 +42,6 @@ def test_spread_is_conditional_on_input_layout(spark):
         assert "Exchange" not in plan, plan
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-
-
-def test_spread_env_hatch(spark):
-    os.environ["SPARK_GRAFT_SPREAD"] = "0"
-    try:
-        df = E._t(spark, SF, "documents", spread=True)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-    finally:
-        os.environ.pop("SPARK_GRAFT_SPREAD", None)
 
 
 def test_spread_preserves_rows_and_pushdown(spark):

@@ -437,12 +437,11 @@ def test_code_stats_starcoder_screen(spark):
     assert got[5]["n_lines"] == 1  # NULL coalesced to ''
 
 
-def test_label_by_keywords_literal_matches_join_path(spark, docs):
+def test_label_by_keywords_literal_matches_join_path(spark, docs, monkeypatch):
     """r14: the literal fast path (one stats agg + one shuffle-free
     projection) must equal the explode->broadcast-join shape EXACTLY —
     same labels, same rounded scores, same default/tie semantics."""
-    import os
-
+    from lantern_extras_spark.operators import textstats as TS
     from lantern_extras_spark.operators.textstats import label_by_keywords
 
     labels = {
@@ -463,21 +462,9 @@ def test_label_by_keywords_literal_matches_join_path(spark, docs):
         "doc_id long, text string",
     )
     base = docs.select("doc_id", "text").unionByName(extra)
-    prev = os.environ.get("SPARK_GRAFT_KWLBL_LIT")
-    try:
-        os.environ["SPARK_GRAFT_KWLBL_LIT"] = "0"
-        join_rows = sorted(
-            map(tuple, label_by_keywords(base, labels).collect())
-        )
-        os.environ["SPARK_GRAFT_KWLBL_LIT"] = "1"
-        lit_rows = sorted(
-            map(tuple, label_by_keywords(base, labels).collect())
-        )
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_KWLBL_LIT", None)
-        else:
-            os.environ["SPARK_GRAFT_KWLBL_LIT"] = prev
+    lit_rows = sorted(map(tuple, label_by_keywords(base, labels).collect()))
+    monkeypatch.setattr(TS, "KWLBL_LIT_MAX_KW", 0)  # the join path
+    join_rows = sorted(map(tuple, label_by_keywords(base, labels).collect()))
     assert lit_rows == join_rows
     got = {r[0]: r for r in lit_rows}
     # default for hitless/empty/null docs, real label for scored docs
@@ -486,11 +473,10 @@ def test_label_by_keywords_literal_matches_join_path(spark, docs):
     assert got[9005][-2] in ("exec", "ml") and got[9005][-1] > 0.0
 
 
-def test_label_by_keywords_literal_respects_dict_size_gate(spark):
-    """Dictionaries above SPARK_GRAFT_KWLBL_LIT_MAX_KW keep the join shape
-    (the literal expression would bloat codegen); outputs stay equal."""
-    import os
-
+def test_label_by_keywords_literal_respects_dict_size_gate(spark, monkeypatch):
+    """Dictionaries above KWLBL_LIT_MAX_KW keep the join shape (the literal
+    expression would bloat codegen); outputs stay equal."""
+    from lantern_extras_spark.operators import textstats as TS
     from lantern_extras_spark.operators.textstats import label_by_keywords
 
     df = spark.createDataFrame(
@@ -498,14 +484,7 @@ def test_label_by_keywords_literal_respects_dict_size_gate(spark):
         "doc_id long, text string",
     )
     labels = {"a": ("alpha", "beta"), "d": ("delta",)}
-    prev = os.environ.get("SPARK_GRAFT_KWLBL_LIT_MAX_KW")
-    try:
-        os.environ["SPARK_GRAFT_KWLBL_LIT_MAX_KW"] = "1"  # force join path
-        gated = sorted(map(tuple, label_by_keywords(df, labels).collect()))
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_KWLBL_LIT_MAX_KW", None)
-        else:
-            os.environ["SPARK_GRAFT_KWLBL_LIT_MAX_KW"] = prev
     lit = sorted(map(tuple, label_by_keywords(df, labels).collect()))
+    monkeypatch.setattr(TS, "KWLBL_LIT_MAX_KW", 1)  # 3 keywords: join path
+    gated = sorted(map(tuple, label_by_keywords(df, labels).collect()))
     assert gated == lit

@@ -166,34 +166,25 @@ def test_ngram_jaccard_join_cross_corpus_only(spark):
 
 
 def test_ngram_jaccard_join_count_path_matches_full_verify(spark):
-    """r14 (ADVICE): the counted-intersection default (SPARK_GRAFT_NGJ_COUNT=1)
-    and the full-set verification hatch path (=0) must produce identical
-    (id_a, id_b, jaccard) multisets — pins both shapes against drift, the
-    way test_onepass_materialization_matches_recompute pins the dsir paths."""
-    import os
-
+    """r14 (ADVICE): the counted-intersection default (max_df=None) and the
+    full-set verification path (taken whenever max_df is set; 10**9 prunes
+    no posting) must produce identical (id_a, id_b, jaccard) multisets —
+    pins both shapes against drift, the way
+    test_onepass_materialization_matches_recompute pins the dsir paths."""
     from lantern_extras_spark.operators.dedup import ngram_jaccard_join
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     a = docs.where("doc_id < 120")
     b = docs.where("doc_id >= 80 and doc_id < 240")
-    prev = os.environ.get("SPARK_GRAFT_NGJ_COUNT")
-    try:
-        os.environ["SPARK_GRAFT_NGJ_COUNT"] = "1"
-        counted = sorted(
+
+    def pairs(max_df):
+        return sorted(
             (r["id_a"], r["id_b"], round(r["jaccard"], 12))
-            for r in ngram_jaccard_join(a, b, threshold=0.2).collect()
+            for r in ngram_jaccard_join(a, b, threshold=0.2, max_df=max_df).collect()
         )
-        os.environ["SPARK_GRAFT_NGJ_COUNT"] = "0"
-        full = sorted(
-            (r["id_a"], r["id_b"], round(r["jaccard"], 12))
-            for r in ngram_jaccard_join(a, b, threshold=0.2).collect()
-        )
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_NGJ_COUNT", None)
-        else:
-            os.environ["SPARK_GRAFT_NGJ_COUNT"] = prev
+
+    counted = pairs(None)
+    full = pairs(10**9)
     assert counted, "fixture produced no pairs — threshold/slice drifted"
     assert counted == full
 

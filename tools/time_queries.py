@@ -26,7 +26,7 @@ def main() -> None:
     spark = get_spark("lantern-time")
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
-    # warm the JVM/python worker pools the same way ab_bench does
+    # warm the JVM/python worker pools
     spark.read.parquet(f"{SF_DIR}/documents.parquet").foreach(lambda r: None)
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     spark.range(32).repartition(32).mapInPandas(lambda it: it, "id long").foreach(lambda r: None)
@@ -36,8 +36,7 @@ def main() -> None:
         for _ in range(N):
             spark.sparkContext.setJobDescription(f"time:{name}")
             # match bench.py's r14 cold-per-iteration contract
-            if os.environ.get("SPARK_GRAFT_BENCH_CLEARCACHE", "1") != "0":
-                spark.catalog.clearCache()
+            spark.catalog.clearCache()
             t0 = time.monotonic()
             qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
             iters.append(time.monotonic() - t0)
