@@ -1315,22 +1315,21 @@ def q_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_knn_chunked(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact large-vs-large kNN (operators/knn.py strategy='chunked'): the
-    query side is hash-split into bounded blocks (chunk_size=8 forces ~4
-    blocks here), each broadcast through the partial kernel, block frames
-    unioned, one finishing window. Removes the 100k driver ceiling that
-    previously routed exact ground truth onto the ANN path (ref
-    lantern_cli/src/index_autotune/mod.rs:196-203 semantics at N3 scale).
-    Must hash-match the plain crossjoin/SQL answer exactly."""
+    """Exact multi-block kNN (operators/knn.py, the partial strategy with
+    query blocks): the query side is split into blocks of at most
+    chunk_size rows (chunk_size=8 gives 4 blocks over 30 queries), each
+    broadcast through the partial kernel, block frames unioned, one
+    finishing window. Above the 100k driver ceiling the same plan is built
+    from hash-split bounded collects, so exact ground truth never has to
+    take the ANN path (ref lantern_cli/src/index_autotune/mod.rs:196-203
+    semantics at N3 scale). Must hash-match the plain crossjoin/SQL answer
+    exactly."""
     emb = _t(spark, sf, "embeddings")
     q = emb.where(F.col("vec_id") < 30).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where(F.col("vec_id") >= 30)
-    out = K.knn_join(
-        data, q, k=10, metric="cos", strategy="chunked", dist_scale=6,
-        chunk_size=8,
-    )
+    out = K.knn_join(data, q, k=10, metric="cos", dist_scale=6, chunk_size=8)
     return out.select(
         "query_id", "vec_id", F.col("distance").alias("cos_distance"),
         F.col("rank").cast("bigint").alias("rnk"),
@@ -2313,11 +2312,11 @@ def q_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_hard_negatives_chunked(spark: SparkSession, sf: str) -> DataFrame:
-    """Hard-negative mining at training-set scale (knn.hard_negatives
-    strategy='chunked', r10): the same bounded-block plan as knn_chunked
-    with query labels traveling in each block's broadcast — the masked
-    per-task top-k must reproduce the declarative crossjoin answer exactly
-    (chunk_size=8 forces ~4 blocks over 30 queries)."""
+    """Hard-negative mining at training-set scale (knn.hard_negatives, the
+    partial strategy with query blocks): the same bounded-block plan as
+    knn_chunked with query labels traveling in each block's broadcast — the
+    masked per-task top-k must reproduce the declarative crossjoin answer
+    exactly (chunk_size=8 gives 4 blocks over 30 queries)."""
     emb = _t(spark, sf, "embeddings")
     q = emb.where(F.col("vec_id") < 30).select(
         F.col("vec_id").alias("query_id"),
@@ -2325,10 +2324,7 @@ def q_hard_negatives_chunked(spark: SparkSession, sf: str) -> DataFrame:
         F.col("label").alias("query_label"),
     )
     data = emb.where(F.col("vec_id") >= 30)
-    out = K.hard_negatives(
-        data, q, k=10, metric="cos", strategy="chunked", dist_scale=6,
-        chunk_size=8,
-    )
+    out = K.hard_negatives(data, q, k=10, metric="cos", dist_scale=6, chunk_size=8)
     return out.select(
         "query_id",
         "vec_id",

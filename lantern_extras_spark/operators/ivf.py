@@ -371,7 +371,8 @@ def ivf_knn_join(
 ) -> DataFrame:
     """Cross-corpus approximate kNN join — BOTH sides large and distributed.
 
-    `knn_join` collects/broadcasts the query side (capped at 100k rows); a
+    `knn_join` broadcasts the query side in driver-collected blocks (every
+    collect bounded at 100k rows) and scans the data side once per block; a
     training pipeline's embedding-level decontamination is corpus-vs-corpus
     (every eval-set vector against every training vector — the vector analog
     of `decontaminate`; the reference's single-query shape is

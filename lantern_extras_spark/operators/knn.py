@@ -9,10 +9,14 @@ Reference surface:
 Spark-first design, sized for 100 TB:
 - The query side is always the small side → **broadcast** it; the data side streams
   through a narrow map stage. There is no shuffle of the data table at all.
-- Strategy "partial": per Arrow batch, a numpy/BLAS kernel computes the distance
-  matrix and keeps only the k best rows per query, so the global top-k step sees
-  ≤ (#batches × q × k) rows instead of n×q. The final exact top-k is a window over
-  that reduced set. Total shuffled bytes are O(q·k·#batches), independent of n·d.
+- Strategy "partial" (the one scale path): the query side is collected in
+  blocks of at most `chunk_size` rows, each block bounded by
+  MAX_COLLECTED_QUERIES (one collect sliced on the driver at or under the cap,
+  a hash split into bounded collects above it). Per Arrow batch a numpy/BLAS
+  kernel computes the distance matrix against one block and keeps only the k
+  best rows per query, so the global top-k step sees ≤ (#tasks × q × k) rows
+  instead of n×q. The block frames are unioned and one window finishes the
+  exact top-k. Total shuffled bytes are O(q·k·#tasks), independent of n·d.
 - Strategy "crossjoin": declarative broadcast-nested-loop + window; Catalyst plan,
   good for small data sides and for the correctness oracle, O(n·q) through the window.
 
@@ -31,7 +35,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
-    IntegerType,
     LongType,
     StructField,
     StructType,
@@ -40,9 +43,10 @@ from pyspark.sql.window import Window
 
 from lantern_extras_spark.functions.portable import pround
 
-# fail-loud ceiling for query frames that the partial strategy materializes on
-# the driver (VERDICT r6 item 2: an unguarded .collect() turns a mistakenly
-# huge query side into a driver OOM instead of an actionable error)
+# ceiling on the query rows any one driver collect holds: at or under it the
+# query side is collected once and sliced into blocks; above it, it is
+# hash-split into bounded per-block collects (an unguarded .collect() would
+# turn a huge query side into a driver OOM)
 MAX_COLLECTED_QUERIES = 100_000
 
 # per-task distance-matrix budget for the partial kernel (doubles): query
@@ -126,43 +130,24 @@ def knn_join(
     """Batch exact kNN: for every query row, the k nearest data rows.
 
     Returns (qid_col, id_col, distance, rank). `strategy`:
-    - "partial" (default, the 100 TB path for BOUNDED query sets): broadcast
-      queries into an Arrow-batched kernel that emits per-batch top-k, then
-      one window over the reduced set. Fail-louds above MAX_COLLECTED_QUERIES.
-    - "chunked": EXACT large-vs-large — the query side is hash-split into
-      ceil(q / chunk_size) disjoint blocks; each block is collected within
-      the driver cap, broadcast, and run through the partial kernel; the
-      per-block frames are unioned and one finishing window ranks per query
-      (blocks partition the queries, so no cross-block merge is needed).
-      The driver never holds more than one block (<= chunk_size rows) at a
-      time, removing the partial strategy's 100k ceiling while keeping the
-      answer exact. Costs: the data side is scanned once per block (exact
-      kNN's O(n*q) distance work is irreducible — persist `data` to
-      amortize IO when it fits), and executors hold ~q*d*8 bytes of query
-      broadcasts across the union's stages. For query sides where that
-      footprint is too large, `ivf.ivf_knn_join` is the (approximate)
+    - "partial" (default): the query side is collected in blocks of at most
+      `chunk_size` rows (`_query_blocks`: sliced on the driver at or under
+      MAX_COLLECTED_QUERIES, hash-split into bounded collects above it);
+      each block is broadcast into an Arrow-batched kernel that emits
+      per-task top-k, the block frames are unioned, and one window ranks
+      per query (blocks partition the queries, so no cross-block merge).
+      The data side is scanned once per block — exact kNN's O(n*q)
+      distance work is irreducible; persist `data` to amortize IO when it
+      fits. For query sides whose broadcasts (~q*d*8 bytes) are too large
+      for executors, `ivf.ivf_knn_join` is the (approximate)
       both-sides-distributed alternative.
     - "crossjoin": pure-DataFrame broadcast join + window (oracle-friendly).
-    - "auto": count the query side once and route — "partial" when it fits
-      the driver cap (one scan of data), "chunked" above it (r10; the
-      pipeline-friendly default for callers whose query volume varies).
 
     `dist_scale` rounds the distance *before* ranking (with (distance, id) tie-break)
     so rankings are reproducible across engines for correctness harnesses.
     """
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
-    if strategy == "auto":
-        strategy = (
-            "partial"
-            if queries.limit(MAX_COLLECTED_QUERIES + 1).count() <= MAX_COLLECTED_QUERIES
-            else "chunked"
-        )
-    if strategy == "chunked":
-        return _knn_join_chunked(
-            data, queries, k, metric, id_col, vec_col, qid_col, qvec_col,
-            dist_scale, chunk_size,
-        )
     if strategy == "crossjoin":
         d = distance_col(metric, F.col(vec_col), F.col(qvec_col))
         if dist_scale is not None:
@@ -170,58 +155,43 @@ def knn_join(
         joined = data.select(id_col, vec_col).crossJoin(
             F.broadcast(queries.select(qid_col, qvec_col))
         )
-        w = Window.partitionBy(qid_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        return (
-            joined.withColumn("distance", d)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, id_col, "distance", "rank")
-        )
-
+        return _rank(joined.withColumn("distance", d), k, qid_col, id_col)
     if strategy != "partial":
         raise ValueError(f"unknown strategy {strategy!r}")
-
-    # query side is small by contract (mirrors the reference's sampled query
-    # sets, index_autotune/mod.rs:202) — but enforce it: limit(N+1) bounds
-    # what the driver materializes, so an accidental 10M-row query frame gets
-    # a clear error instead of a driver OOM
-    qrows = queries.select(qid_col, qvec_col).limit(MAX_COLLECTED_QUERIES + 1).collect()
-    if len(qrows) > MAX_COLLECTED_QUERIES:
-        raise ValueError(
-            f"strategy='partial' collects the query side to the driver and it "
-            f"exceeds {MAX_COLLECTED_QUERIES} rows; for exact large-vs-large "
-            "use strategy='chunked' (bounded query blocks, never more than "
-            "one on the driver), or ivf.ivf_knn_join for the approximate "
-            "both-sides-distributed path"
-        )
-    partial = _partial_frame(
-        data, qrows, k, metric, id_col, vec_col, qid_col, dist_scale
+    cands = _blocked_partial(
+        data, queries.select(qid_col, qvec_col), k, metric, id_col, vec_col,
+        qid_col, dist_scale, chunk_size,
     )
-    w = Window.partitionBy(qid_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid_col, id_col, "distance", "rank")
-    )
+    return _rank(cands, k, qid_col, id_col)
 
 
-def _knn_join_chunked(
-    data: DataFrame,
-    queries: DataFrame,
-    k: int,
-    metric: str,
-    id_col: str,
-    vec_col: str,
-    qid_col: str,
-    qvec_col: str,
-    dist_scale: int | None,
-    chunk_size: int,
+def _rank(
+    cands: DataFrame, k: int, qid_col: str, id_col: str, label_col: str | None = None
 ) -> DataFrame:
-    """strategy='chunked' body: bounded query blocks -> union of partial
-    frames -> one finishing window. See knn_join's docstring for the cost
-    model. The qid hash-split is uniform, and chunk_size is capped at
-    MAX_COLLECTED_QUERIES // 2 so even a 2x hash imbalance stays inside the
-    driver ceiling; an actual breach still fail-louds."""
+    """The finishing window shared by every strategy: the exact top-k per
+    query under the (distance, id) order."""
+    w = Window.partitionBy(qid_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
+    label = [label_col] if label_col is not None else []
+    return (
+        cands.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(qid_col, id_col, *label, "distance", "rank")
+    )
+
+
+def _query_blocks(qsel: DataFrame, qid_col: str, chunk_size: int) -> Iterator[list]:
+    """The query side as driver-held blocks of rows that partition it, each
+    bounded by MAX_COLLECTED_QUERIES.
+
+    One bounded `limit(MAX_COLLECTED_QUERIES + 1).collect()` decides the
+    plan. At or under the cap the collected rows are sliced into blocks of
+    at most `chunk_size` on the driver, with no further job. Above it the
+    driver never holds the whole side: `qsel` is persisted, counted and
+    hash-split on qid into ceil(q / chunk_size) blocks, each collected under
+    the same bound and yielded one at a time, then released. The qid hash is
+    uniform, and chunk_size is capped at MAX_COLLECTED_QUERIES // 2 so even
+    a 2x hash imbalance stays inside the ceiling; an actual breach
+    fail-louds."""
     if chunk_size < 1:
         raise ValueError(f"chunk_size must be >= 1, got {chunk_size}")
     if chunk_size > MAX_COLLECTED_QUERIES // 2:
@@ -231,61 +201,70 @@ def _knn_join_chunked(
             f"({MAX_COLLECTED_QUERIES}) would be gone. Use more, smaller "
             "chunks; the per-chunk cost is one data-side scan."
         )
-    spark = data.sparkSession
-    out_schema = StructType(
-        [
-            StructField(qid_col, LongType()),
-            StructField(id_col, LongType()),
-            StructField("distance", DoubleType()),
-        ]
-    )
-    # the loop filters this frame once per block — persist the narrow
-    # projection for the loop, release it after (the returned plan holds the
-    # query vectors in broadcasts and never references the query frame)
-    qnarrow = queries.select(qid_col, qvec_col).persist()
+    rows = qsel.limit(MAX_COLLECTED_QUERIES + 1).collect()
+    if len(rows) <= MAX_COLLECTED_QUERIES:
+        for s in range(0, len(rows), chunk_size):
+            yield rows[s : s + chunk_size]
+        return
+    del rows  # release the probe before the per-block collects
+    qsel = qsel.persist()
     try:
-        q_count = qnarrow.count()
-        if q_count == 0:
-            empty = out_schema.add(StructField("rank", IntegerType()))
-            return local_frame(spark, [], empty)
-        n_chunks = -(-q_count // chunk_size)  # ceil
-        chunk_key = F.pmod(
-            F.xxhash64(F.col(qid_col), F.lit("knn_chunk")), F.lit(n_chunks)
+        n_blocks = -(-qsel.count() // chunk_size)  # ceil
+        block_key = F.pmod(
+            F.xxhash64(F.col(qid_col), F.lit("knn_chunk")), F.lit(n_blocks)
         )
-        frames = []
-        for c in range(n_chunks):
-            qrows = (
-                qnarrow.where(chunk_key == c)
-                .limit(MAX_COLLECTED_QUERIES + 1)
-                .collect()
-            )
-            if len(qrows) > MAX_COLLECTED_QUERIES:
+        for c in range(n_blocks):
+            rows = qsel.where(block_key == c).limit(MAX_COLLECTED_QUERIES + 1).collect()
+            if len(rows) > MAX_COLLECTED_QUERIES:
                 raise ValueError(
-                    f"strategy='chunked': query block {c}/{n_chunks} holds "
+                    f"knn: query block {c}/{n_blocks} holds "
                     f">{MAX_COLLECTED_QUERIES} rows — the qid hash is "
                     "pathologically imbalanced (are qids constant?). Lower "
                     "chunk_size or repair the query ids."
                 )
-            if not qrows:
-                continue
-            frames.append(
-                _partial_frame(
-                    data, qrows, k, metric, id_col, vec_col, qid_col, dist_scale
-                )
-            )
+            if rows:
+                yield rows
     finally:
-        qnarrow.unpersist()
+        qsel.unpersist()
+
+
+def _blocked_partial(
+    data: DataFrame,
+    qsel: DataFrame,
+    k: int,
+    metric: str,
+    id_col: str,
+    vec_col: str,
+    qid_col: str,
+    dist_scale: int | None,
+    chunk_size: int,
+    label_col: str | None = None,
+) -> DataFrame:
+    """The union of one `_partial_frame` per `_query_blocks` block: the
+    candidate set the finishing `_rank` window reads."""
+    frames = [
+        _partial_frame(
+            data, rows, k, metric, id_col, vec_col, qid_col, dist_scale, label_col
+        )
+        for rows in _query_blocks(qsel, qid_col, chunk_size)
+    ]
+    if not frames:
+        schema = _candidate_schema(data, id_col, qid_col, label_col)
+        return local_frame(data.sparkSession, [], schema)
     union = frames[0]
     for f in frames[1:]:
         union = union.unionByName(f)
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        union.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid_col, id_col, "distance", "rank")
-    )
+    return union
+
+
+def _candidate_schema(
+    data: DataFrame, id_col: str, qid_col: str, label_col: str | None
+) -> StructType:
+    fields = [StructField(qid_col, LongType()), StructField(id_col, LongType())]
+    if label_col is not None:
+        label_type = data.select(label_col).schema.fields[0].dataType
+        fields.append(StructField(label_col, label_type))
+    return StructType(fields + [StructField("distance", DoubleType())])
 
 
 def _partial_frame(
@@ -297,12 +276,16 @@ def _partial_frame(
     vec_col: str,
     qid_col: str,
     dist_scale: int | None,
+    label_col: str | None = None,
 ) -> DataFrame:
     """The partial-top-k mapInPandas frame for one broadcast query block
     (no finishing window): per Arrow batch a BLAS distance kernel keeps the
-    k best rows per query, so downstream sees <= (#batches x q x k) rows.
-    Shared by strategy='partial' (one block) and strategy='chunked' (one
-    frame per bounded block, unioned).
+    k best rows per query, so downstream sees <= (#tasks x q x k) rows.
+
+    With `label_col` (hard_negatives) each query row carries its label as a
+    third field; the label-mismatch mask is applied INSIDE the batch before
+    ranking (same-label pairs score +inf and are dropped at emit), and each
+    candidate carries its data-side label.
 
     Kernel shape (sized for 100k-query blocks, not just autotune samples):
     - queries are processed in slices so the distance matrix never exceeds
@@ -318,25 +301,21 @@ def _partial_frame(
       would inflate the exchange 100x at scale)."""
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     Q = np.array([list(map(float, r[1])) for r in qrows], dtype=np.float64)
-    spark = data.sparkSession
-    bqids = spark.sparkContext.broadcast(qids)
-    bQ = spark.sparkContext.broadcast(Q)
-
-    out_schema = StructType(
-        [
-            StructField(qid_col, LongType()),
-            StructField(id_col, LongType()),
-            StructField("distance", DoubleType()),
-        ]
-    )
+    sc = data.sparkSession.sparkContext
+    bqids = sc.broadcast(qids)
+    bQ = sc.broadcast(Q)
+    labeled = label_col is not None
+    blab = sc.broadcast(np.array([r[2] for r in qrows], dtype=object)) if labeled else None
+    out_schema = _candidate_schema(data, id_col, qid_col, label_col)
 
     def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qi, Qm = bqids.value, bQ.value
+        ql = blab.value if labeled else None
         nq, dim = Qm.shape[0], (Qm.shape[1] if Qm.ndim == 2 else 1)
         # running per-task top-k: unfilled slots carry (+inf, PAD) so they
         # sort last under the (distance, id) order and are dropped at emit
         PAD = np.iinfo(np.int64).max
-        best_d = best_i = None
+        best_d = best_i = best_l = None
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -344,6 +323,8 @@ def _partial_frame(
             if best_d is None:
                 best_d = np.full((k, nq), np.inf)
                 best_i = np.full((k, nq), PAD, dtype=np.int64)
+                if labeled:
+                    best_l = np.full((k, nq), None, dtype=object)
             X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()])
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             # pre-sort rows by id: the stable per-column argsort below then
@@ -351,41 +332,56 @@ def _partial_frame(
             # (distance, id) order the finishing window expects
             perm = np.argsort(ids, kind="stable")
             X, ids = X[perm], ids[perm]
+            if labeled:
+                labs = pdf[label_col].to_numpy()[perm]
             kk = min(k, n)
             # hamming's kernel materializes n*q*dim comparisons; the GEMM
             # metrics only n*q — bound the slice accordingly
             per_pair = dim if metric == "hamming" else 1
             qb = max(1, _Q_BLOCK_ELEMS // max(n * per_pair, 1))
             for s0 in range(0, nq, qb):
-                D = _np_distances(metric, X, Qm[s0 : s0 + qb])
+                sl = slice(s0, s0 + qb)
+                D = _np_distances(metric, X, Qm[sl])
                 if dist_scale is not None:
                     s = float(10**dist_scale)
                     D = np.floor(D * s + 0.5) / s  # portable rounding (matches pround)
+                if labeled:
+                    # mask positives (same label) out of the candidate set
+                    D = np.where(labs[:, None] == ql[None, sl], np.inf, D)
                 top = np.argsort(D, axis=0, kind="stable")[:kk]  # (kk, qb')
                 # merge this batch's top-kk into the running best: stack,
                 # order by id (stable), then by distance (stable) — exact
                 # (distance, id) over both blocks; PAD rows (inf) sink
-                md = np.vstack(
-                    [best_d[:, s0 : s0 + qb], np.take_along_axis(D, top, axis=0)]
-                )
-                mi = np.vstack([best_i[:, s0 : s0 + qb], ids[top]])
+                md = np.vstack([best_d[:, sl], np.take_along_axis(D, top, axis=0)])
+                mi = np.vstack([best_i[:, sl], ids[top]])
                 by_id = np.argsort(mi, axis=0, kind="stable")
                 md = np.take_along_axis(md, by_id, axis=0)
                 mi = np.take_along_axis(mi, by_id, axis=0)
                 by_d = np.argsort(md, axis=0, kind="stable")[:k]
-                best_d[:, s0 : s0 + qb] = np.take_along_axis(md, by_d, axis=0)
-                best_i[:, s0 : s0 + qb] = np.take_along_axis(mi, by_d, axis=0)
+                best_d[:, sl] = np.take_along_axis(md, by_d, axis=0)
+                best_i[:, sl] = np.take_along_axis(mi, by_d, axis=0)
+                if labeled:
+                    ml = np.vstack([best_l[:, sl], labs[top]])
+                    ml = np.take_along_axis(ml, by_id, axis=0)
+                    best_l[:, sl] = np.take_along_axis(ml, by_d, axis=0)
         if best_d is not None:
+            flat_d = best_d.ravel()
             keep = best_i.ravel() != PAD
-            yield pd.DataFrame(
-                {
-                    qid_col: np.broadcast_to(qi[None, :], best_i.shape).ravel()[keep],
-                    id_col: best_i.ravel()[keep],
-                    "distance": best_d.ravel()[keep],
-                }
-            )
+            if labeled:
+                # masked (+inf) survivors too: a task with fewer than k
+                # negatives emits only its real candidates
+                keep &= np.isfinite(flat_d)
+            out = {
+                qid_col: np.broadcast_to(qi[None, :], best_i.shape).ravel()[keep],
+                id_col: best_i.ravel()[keep],
+            }
+            if labeled:
+                out[label_col] = best_l.ravel()[keep]
+            out["distance"] = flat_d[keep]
+            yield pd.DataFrame(out)
 
-    return data.select(id_col, vec_col).mapInPandas(partial_topk, out_schema)
+    cols = [id_col, vec_col] + ([label_col] if labeled else [])
+    return data.select(*cols).mapInPandas(partial_topk, out_schema)
 
 
 def hard_negatives(
@@ -412,28 +408,16 @@ def hard_negatives(
 
     Returns (qid_col, id_col, label_col, distance, rank). Rows with NULL
     labels are excluded from both sides (a null label can neither match nor
-    mismatch). Strategies mirror knn_join: "partial" (bounded query sets —
-    queries+labels broadcast into an Arrow-batched kernel that masks
-    same-label pairs per batch and emits per-task top-k), "chunked" (exact
-    large-vs-large: bounded query blocks through the same kernel, unioned,
-    one finishing window — mining negatives for a full training set, not
-    just a sample), and "crossjoin" (declarative; the oracle-parity path).
+    mismatch). Strategies mirror knn_join: "partial" (query blocks of at
+    most `chunk_size` rows, labels traveling in each block's broadcast,
+    through the kernel that masks same-label pairs per batch — mining
+    negatives for a full training set, not just a sample) and "crossjoin"
+    (declarative; the oracle-parity path).
     """
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
     data = data.where(F.col(label_col).isNotNull())
     queries = queries.where(F.col(qlabel_col).isNotNull())
-    if strategy == "auto":
-        strategy = (
-            "partial"
-            if queries.limit(MAX_COLLECTED_QUERIES + 1).count() <= MAX_COLLECTED_QUERIES
-            else "chunked"
-        )
-    if strategy == "chunked":
-        return _hard_negatives_chunked(
-            data, queries, k, metric, id_col, vec_col, label_col, qid_col,
-            qvec_col, qlabel_col, dist_scale, chunk_size,
-        )
     if strategy == "crossjoin":
         d = distance_col(metric, F.col(vec_col), F.col(qvec_col))
         if dist_scale is not None:
@@ -443,216 +427,14 @@ def hard_negatives(
             .crossJoin(F.broadcast(queries.select(qid_col, qvec_col, qlabel_col)))
             .where(F.col(label_col) != F.col(qlabel_col))
         )
-        w = Window.partitionBy(qid_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        return (
-            joined.withColumn("distance", d)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, id_col, label_col, "distance", "rank")
-        )
+        return _rank(joined.withColumn("distance", d), k, qid_col, id_col, label_col)
     if strategy != "partial":
         raise ValueError(f"unknown strategy {strategy!r}")
-
-    qrows = (
-        queries.select(qid_col, qvec_col, qlabel_col)
-        .limit(MAX_COLLECTED_QUERIES + 1)
-        .collect()
+    cands = _blocked_partial(
+        data, queries.select(qid_col, qvec_col, qlabel_col), k, metric, id_col,
+        vec_col, qid_col, dist_scale, chunk_size, label_col,
     )
-    if len(qrows) > MAX_COLLECTED_QUERIES:
-        raise ValueError(
-            f"strategy='partial' collects the query side to the driver and it "
-            f"exceeds {MAX_COLLECTED_QUERIES} rows; mine negatives for the "
-            "full set with strategy='chunked' (bounded query blocks), or use "
-            "ivf.ivf_knn_join on a label-partitioned corpus for the ANN path"
-        )
-    partial = _partial_neg_frame(
-        data, qrows, k, metric, id_col, vec_col, label_col, qid_col, dist_scale
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid_col, id_col, label_col, "distance", "rank")
-    )
-
-
-def _partial_neg_frame(
-    data: DataFrame,
-    qrows: list,
-    k: int,
-    metric: str,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    qid_col: str,
-    dist_scale: int | None,
-) -> DataFrame:
-    """hard_negatives' per-task partial frame: the `_partial_frame` kernel
-    shape (query slices bounded by _Q_BLOCK_ELEMS, id-presort + stable
-    argsort for exact (distance, id) ties, running per-task top-k emitted
-    once per task) with the label-mismatch mask applied INSIDE the batch
-    before ranking (masked pairs score +inf and are dropped at emit)."""
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(map(float, r[1])) for r in qrows], dtype=np.float64)
-    qlabels = np.array([r[2] for r in qrows], dtype=object)
-    spark = data.sparkSession
-    bqids = spark.sparkContext.broadcast(qids)
-    bQ = spark.sparkContext.broadcast(Q)
-    blab = spark.sparkContext.broadcast(qlabels)
-
-    label_field = data.select(label_col).schema.fields[0]
-    out_schema = StructType(
-        [
-            StructField(qid_col, LongType()),
-            StructField(id_col, LongType()),
-            StructField(label_col, label_field.dataType),
-            StructField("distance", DoubleType()),
-        ]
-    )
-
-    def partial_topk_neg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qi, Qm, ql = bqids.value, bQ.value, blab.value
-        nq, dim = Qm.shape[0], (Qm.shape[1] if Qm.ndim == 2 else 1)
-        PAD = np.iinfo(np.int64).max
-        best_d = best_i = best_l = None
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            if best_d is None:
-                best_d = np.full((k, nq), np.inf)
-                best_i = np.full((k, nq), PAD, dtype=np.int64)
-                best_l = np.full((k, nq), None, dtype=object)
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()])
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            labs = pdf[label_col].to_numpy()
-            perm = np.argsort(ids, kind="stable")
-            X, ids, labs = X[perm], ids[perm], labs[perm]
-            kk = min(k, n)
-            per_pair = dim if metric == "hamming" else 1
-            qb = max(1, _Q_BLOCK_ELEMS // max(n * per_pair, 1))
-            for s0 in range(0, nq, qb):
-                D = _np_distances(metric, X, Qm[s0 : s0 + qb])
-                if dist_scale is not None:
-                    s = float(10**dist_scale)
-                    D = np.floor(D * s + 0.5) / s
-                # mask positives (same label) out of the candidate set
-                D = np.where(labs[:, None] == ql[None, s0 : s0 + qb], np.inf, D)
-                top = np.argsort(D, axis=0, kind="stable")[:kk]
-                md = np.vstack(
-                    [best_d[:, s0 : s0 + qb], np.take_along_axis(D, top, axis=0)]
-                )
-                mi = np.vstack([best_i[:, s0 : s0 + qb], ids[top]])
-                ml = np.vstack([best_l[:, s0 : s0 + qb], labs[top]])
-                by_id = np.argsort(mi, axis=0, kind="stable")
-                md = np.take_along_axis(md, by_id, axis=0)
-                mi = np.take_along_axis(mi, by_id, axis=0)
-                ml = np.take_along_axis(ml, by_id, axis=0)
-                by_d = np.argsort(md, axis=0, kind="stable")[:k]
-                best_d[:, s0 : s0 + qb] = np.take_along_axis(md, by_d, axis=0)
-                best_i[:, s0 : s0 + qb] = np.take_along_axis(mi, by_d, axis=0)
-                best_l[:, s0 : s0 + qb] = np.take_along_axis(ml, by_d, axis=0)
-        if best_d is not None:
-            flat_d = best_d.ravel()
-            # drop PAD slots AND masked (+inf) survivors: a task with fewer
-            # than k negatives emits only its real candidates
-            keep = (best_i.ravel() != PAD) & np.isfinite(flat_d)
-            yield pd.DataFrame(
-                {
-                    qid_col: np.broadcast_to(qi[None, :], best_i.shape).ravel()[keep],
-                    id_col: best_i.ravel()[keep],
-                    label_col: best_l.ravel()[keep],
-                    "distance": flat_d[keep],
-                }
-            )
-
-    return data.select(id_col, vec_col, label_col).mapInPandas(
-        partial_topk_neg, out_schema
-    )
-
-
-def _hard_negatives_chunked(
-    data: DataFrame,
-    queries: DataFrame,
-    k: int,
-    metric: str,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    qid_col: str,
-    qvec_col: str,
-    qlabel_col: str,
-    dist_scale: int | None,
-    chunk_size: int,
-) -> DataFrame:
-    """strategy='chunked' for hard-negative mining: identical block plan to
-    `_knn_join_chunked` (bounded query blocks -> union of per-task partial
-    frames -> one finishing window), with query labels traveling in each
-    block's broadcast."""
-    if chunk_size < 1:
-        raise ValueError(f"chunk_size must be >= 1, got {chunk_size}")
-    if chunk_size > MAX_COLLECTED_QUERIES // 2:
-        raise ValueError(
-            f"chunk_size {chunk_size} > {MAX_COLLECTED_QUERIES // 2} — the "
-            "2x hash-imbalance margin over the driver ceiling "
-            f"({MAX_COLLECTED_QUERIES}) would be gone. Use more, smaller "
-            "chunks; the per-chunk cost is one data-side scan."
-        )
-    spark = data.sparkSession
-    label_field = data.select(label_col).schema.fields[0]
-    qnarrow = queries.select(qid_col, qvec_col, qlabel_col).persist()
-    try:
-        q_count = qnarrow.count()
-        if q_count == 0:
-            empty = StructType(
-                [
-                    StructField(qid_col, LongType()),
-                    StructField(id_col, LongType()),
-                    StructField(label_col, label_field.dataType),
-                    StructField("distance", DoubleType()),
-                    StructField("rank", IntegerType()),
-                ]
-            )
-            return local_frame(spark, [], empty)
-        n_chunks = -(-q_count // chunk_size)
-        chunk_key = F.pmod(
-            F.xxhash64(F.col(qid_col), F.lit("knn_chunk")), F.lit(n_chunks)
-        )
-        frames = []
-        for c in range(n_chunks):
-            qrows = (
-                qnarrow.where(chunk_key == c)
-                .limit(MAX_COLLECTED_QUERIES + 1)
-                .collect()
-            )
-            if len(qrows) > MAX_COLLECTED_QUERIES:
-                raise ValueError(
-                    f"strategy='chunked': query block {c}/{n_chunks} holds "
-                    f">{MAX_COLLECTED_QUERIES} rows — the qid hash is "
-                    "pathologically imbalanced (are qids constant?). Lower "
-                    "chunk_size or repair the query ids."
-                )
-            if not qrows:
-                continue
-            frames.append(
-                _partial_neg_frame(
-                    data, qrows, k, metric, id_col, vec_col, label_col,
-                    qid_col, dist_scale,
-                )
-            )
-    finally:
-        qnarrow.unpersist()
-    union = frames[0]
-    for f in frames[1:]:
-        union = union.unionByName(f)
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        union.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid_col, id_col, label_col, "distance", "rank")
-    )
+    return _rank(cands, k, qid_col, id_col, label_col)
 
 
 def ground_truth(

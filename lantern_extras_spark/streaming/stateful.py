@@ -1013,7 +1013,6 @@ def ingest_ivf_batch(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     cell_col: str = "cell",
-    impl: str = "pandas",
 ) -> None:
     """One micro-batch of the streaming IVF ingest: assign this batch's
     vectors to FIXED coarse centroids (train-once/assign-many — the DSIR
@@ -1028,7 +1027,7 @@ def ingest_ivf_batch(
     from lantern_extras_spark.operators.ivf import assign_cells, load_centroids
 
     cents = load_centroids(bdf.sparkSession, centroids_dir)
-    assigned = assign_cells(bdf, cents, vec_col, cell_col, impl=impl)
+    assigned = assign_cells(bdf, cents, vec_col, cell_col)
     assigned.write.partitionBy(cell_col).mode("overwrite").parquet(
         f"{store_dir}/epoch={int(epoch_id)}"
     )
@@ -1072,7 +1071,6 @@ def start_ivf_ingest_stream(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     cell_col: str = "cell",
-    impl: str = "pandas",
     available_now: bool = True,
     trigger_seconds: int = 10,
 ):
@@ -1086,7 +1084,7 @@ def start_ivf_ingest_stream(
     def write_batch(bdf, epoch_id):
         ingest_ivf_batch(
             bdf, epoch_id, store_dir, centroids_dir,
-            vec_col=vec_col, id_col=id_col, cell_col=cell_col, impl=impl,
+            vec_col=vec_col, id_col=id_col, cell_col=cell_col,
         )
 
     writer = stream.writeStream.foreachBatch(write_batch).option(

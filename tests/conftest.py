@@ -86,8 +86,10 @@ def emb(spark):
 def force_distributed(monkeypatch):
     """Set every size cap that picks a driver-side shortcut over a
     distributed fallback to 0, so the distributed branches run at test scale.
-    `knn.MAX_COLLECTED_QUERIES` is left alone: above it knn raises instead of
-    falling back."""
+    `knn.MAX_COLLECTED_QUERIES` is left alone: knn falls back to a hash split
+    above it, but at 0 no query block fits (chunk_size must stay within half
+    the cap). Its split is covered by the `knn_chunked` oracle query and the
+    shrunken-cap tests in `tests/test_knn.py`."""
     from lantern_extras_spark.operators import bloom, dedup, selection, textstats
 
     for mod, cap in (

@@ -232,15 +232,6 @@ def test_ivf_knn_join_cosine_metric(spark, join_sides):
         IVF.ivf_knn_join(corpus, queries, metric="nope")
 
 
-def test_knn_join_partial_query_cap_fails_loud(spark, join_sides, monkeypatch):
-    from lantern_extras_spark.operators import knn as K
-
-    corpus, queries = join_sides
-    monkeypatch.setattr(K, "MAX_COLLECTED_QUERIES", 5)
-    with pytest.raises(ValueError, match="ivf_knn_join"):
-        K.knn_join(corpus, queries, k=3)  # 20 query rows > patched cap 5
-
-
 def test_ivf_range_join_full_probe_equals_bruteforce(spark, join_sides):
     """nprobe = nlist: the range join returns exactly the brute-force pair set
     within the radius, with no top-k under-reporting."""

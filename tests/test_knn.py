@@ -24,14 +24,14 @@ def test_partial_equals_crossjoin(spark, emb, metric):
 
 @pytest.mark.parametrize("metric", ["l2sq", "cos"])
 def test_chunked_equals_crossjoin_multi_chunk(spark, emb, metric):
-    """chunked must return the exact crossjoin answer while splitting the
-    query side across several blocks (chunk_size forces >= 3 chunks here)."""
+    """The blocked partial plan must return the exact crossjoin answer while
+    splitting the query side across several blocks (chunk_size forces 3
+    blocks here)."""
     q = emb.where("vec_id < 12").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where("vec_id >= 12")
-    a = K.knn_join(data, q, k=7, metric=metric, strategy="chunked",
-                   dist_scale=6, chunk_size=4)
+    a = K.knn_join(data, q, k=7, metric=metric, dist_scale=6, chunk_size=4)
     b = K.knn_join(data, q, k=7, metric=metric, strategy="crossjoin",
                    dist_scale=6)
     ra = [(r["query_id"], r["rank"], r["vec_id"])
@@ -42,19 +42,16 @@ def test_chunked_equals_crossjoin_multi_chunk(spark, emb, metric):
 
 
 def test_chunked_works_above_partial_driver_cap(spark, emb, monkeypatch):
-    """The whole point of 'chunked': a query side over MAX_COLLECTED_QUERIES
-    fail-louds under 'partial' but runs (exactly) under 'chunked' with no
-    single driver collect above the cap. Shrink the cap so the test stays
-    fast while exercising the real guard."""
+    """A query side over MAX_COLLECTED_QUERIES falls back to the hash split
+    (bounded per-block collects, never one above the cap) and stays exact.
+    Shrink the cap so the test stays fast while exercising the real
+    fallback."""
     monkeypatch.setattr(K, "MAX_COLLECTED_QUERIES", 8)
     q = emb.where("vec_id < 20").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where("vec_id >= 20")
-    with pytest.raises(ValueError, match="strategy='chunked'"):
-        K.knn_join(data, q, k=3, metric="cos", strategy="partial")
-    got = K.knn_join(data, q, k=3, metric="cos", strategy="chunked",
-                     dist_scale=6, chunk_size=4)
+    got = K.knn_join(data, q, k=3, metric="cos", dist_scale=6, chunk_size=4)
     want = K.knn_join(data, q, k=3, metric="cos", strategy="crossjoin",
                       dist_scale=6)
     ga = [(r["query_id"], r["rank"], r["vec_id"])
@@ -64,72 +61,67 @@ def test_chunked_works_above_partial_driver_cap(spark, emb, monkeypatch):
     assert ga == wa and len(ga) == 20 * 3
 
 
-def test_auto_strategy_routes_by_query_count(spark, emb, monkeypatch):
-    """'auto' picks partial under the cap and chunked above it — same
-    answer either way."""
-    monkeypatch.setattr(K, "MAX_COLLECTED_QUERIES", 8)
-    data = emb.where("vec_id >= 20")
-    small = emb.where("vec_id < 4").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    big = emb.where("vec_id < 20").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    want_small = K.knn_join(data, small, k=3, metric="cos",
-                            strategy="crossjoin", dist_scale=6)
-    got_small = K.knn_join(data, small, k=3, metric="cos", strategy="auto",
-                           dist_scale=6)
-    key = lambda df: [(r["query_id"], r["rank"], r["vec_id"])
-                      for r in df.orderBy("query_id", "rank").collect()]
-    assert key(got_small) == key(want_small)
-    # above the (shrunken) cap: auto must NOT raise — it routes to chunked
-    got_big = K.knn_join(data, big, k=3, metric="cos", strategy="auto",
-                         dist_scale=6, chunk_size=4)
-    want_big = K.knn_join(data, big, k=3, metric="cos", strategy="crossjoin",
-                          dist_scale=6)
-    assert key(got_big) == key(want_big)
-    # hard_negatives mirrors the routing
-    qb = emb.where("vec_id < 20").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"),
-        F.col("label").alias("query_label"),
-    )
-    hn = K.hard_negatives(data, qb, k=3, metric="cos", strategy="auto",
-                          dist_scale=6, chunk_size=4)
-    hw = K.hard_negatives(data, qb, k=3, metric="cos", strategy="crossjoin",
-                          dist_scale=6)
-    keyl = lambda df: [(r["query_id"], r["rank"], r["vec_id"], r["label"])
-                       for r in df.orderBy("query_id", "rank").collect()]
-    assert keyl(hn) == keyl(hw)
-
-
 def test_chunked_edge_cases(spark, emb):
     q0 = emb.where("vec_id < 0").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = K.knn_join(emb, q0, k=3, strategy="chunked")
+    out = K.knn_join(emb, q0, k=3)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == [
         "query_id", "vec_id", "distance", "rank"
     ]
     with pytest.raises(ValueError, match="chunk_size must be"):
-        K.knn_join(emb, q0, k=3, strategy="chunked", chunk_size=0)
+        K.knn_join(emb, q0, k=3, chunk_size=0)
     with pytest.raises(ValueError, match="hash-imbalance margin"):
-        K.knn_join(emb, q0, k=3, strategy="chunked",
-                   chunk_size=K.MAX_COLLECTED_QUERIES)
+        K.knn_join(emb, q0, k=3, chunk_size=K.MAX_COLLECTED_QUERIES)
+    for gone in ("chunked", "auto"):  # one planner; no strategy fork
+        with pytest.raises(ValueError, match="unknown strategy"):
+            K.knn_join(emb, q0, k=3, strategy=gone)
 
 
-def test_chunked_releases_query_cache(spark, emb):
-    """The loop persists the narrow query projection; the returned plan must
-    not keep it cached (broadcasts carry the vectors)."""
+def test_chunked_releases_query_cache(spark, emb, monkeypatch):
+    """Above the cap the hash-split loop persists the narrow query
+    projection; the returned plan must not keep it cached (broadcasts carry
+    the vectors)."""
+    monkeypatch.setattr(K, "MAX_COLLECTED_QUERIES", 4)
     sc = spark.sparkContext
     n_cached = lambda: sc._jsc.sc().getPersistentRDDs().size()
     before = n_cached()
     q = emb.where("vec_id < 6").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    K.knn_join(emb.where("vec_id >= 6"), q, k=3, strategy="chunked",
-               chunk_size=2).count()
+    K.knn_join(emb.where("vec_id >= 6"), q, k=3, chunk_size=2).count()
     assert n_cached() <= before
+
+
+def test_blocked_plan_builds_with_one_eager_job(spark, emb):
+    """30 queries at chunk_size=8, under the driver cap: building knn_join
+    or hard_negatives runs exactly one eager job (the bounded query
+    collect, sliced into blocks on the driver), the plan unions one
+    MapInPandas kernel per block, and the answer is the crossjoin's."""
+    import uuid
+
+    sc = spark.sparkContext
+    q = emb.where("vec_id < 30").select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+        F.col("label").alias("query_label"),
+    )
+    data = emb.where("vec_id >= 30")
+    key = lambda df: sorted(tuple(r) for r in df.collect())
+    for op in (K.knn_join, K.hard_negatives):
+        group = f"knn-blocks-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, op.__name__)
+        try:
+            got = op(data, q, k=5, metric="cos", dist_scale=6, chunk_size=8)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, op.__name__
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") >= 2, plan
+        want = op(data, q, k=5, metric="cos", strategy="crossjoin", dist_scale=6)
+        assert key(got) == key(want) and len(key(got)) == 30 * 5, op.__name__
 
 
 def test_knn_matches_numpy_bruteforce(spark, emb):
@@ -204,8 +196,8 @@ def test_hard_negatives_partial_equals_crossjoin(spark, emb):
 
 
 def test_hard_negatives_chunked_equals_crossjoin(spark, emb, monkeypatch):
-    """Chunked negative mining (full-training-set scale): multiple blocks
-    AND a query side above the (shrunken) partial cap must reproduce the
+    """Blocked negative mining (full-training-set scale): multiple blocks
+    AND a query side above the (shrunken) driver cap must reproduce the
     declarative answer exactly, labels included."""
     monkeypatch.setattr(K, "MAX_COLLECTED_QUERIES", 8)
     q = emb.where("vec_id < 12").select(
@@ -214,10 +206,7 @@ def test_hard_negatives_chunked_equals_crossjoin(spark, emb, monkeypatch):
         F.col("label").alias("query_label"),
     )
     data = emb.where("vec_id >= 12")
-    with pytest.raises(ValueError, match="strategy='chunked'"):
-        K.hard_negatives(data, q, k=4, metric="cos", strategy="partial")
-    a = K.hard_negatives(data, q, k=4, metric="cos", strategy="chunked",
-                         dist_scale=6, chunk_size=4)
+    a = K.hard_negatives(data, q, k=4, metric="cos", dist_scale=6, chunk_size=4)
     b = K.hard_negatives(data, q, k=4, metric="cos", strategy="crossjoin",
                          dist_scale=6)
     key = lambda df: [
@@ -229,7 +218,7 @@ def test_hard_negatives_chunked_equals_crossjoin(spark, emb, monkeypatch):
     # empty-queries edge keeps the full 5-column schema (chunk_size must
     # respect the monkeypatched cap's margin here too)
     q0 = q.where("query_id < 0")
-    out = K.hard_negatives(data, q0, k=3, strategy="chunked", chunk_size=4)
+    out = K.hard_negatives(data, q0, k=3, chunk_size=4)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == [
         "query_id", "vec_id", "label", "distance", "rank"

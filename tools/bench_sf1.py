@@ -354,10 +354,10 @@ def main() -> None:
         results["hnsw_recall_scaled"] = measure(hnsw_scaled)
         print(json.dumps({"hnsw_recall_scaled": results["hnsw_recall_scaled"]}), flush=True)
 
-    # knn_join strategy='chunked' with a 100k+ query side (r9 verdict #1):
-    # 60 shifted copies of the base 2000 vectors = 120,000 queries at BOTH
-    # scales (above the 100k partial-strategy ceiling — 'partial' refuses
-    # this frame), against the full corpus. Exact brute-force kNN is O(n*q)
+    # knn_join with a 100k+ query side (r9 verdict #1): 60 shifted copies of
+    # the base 2000 vectors = 120,000 queries at BOTH scales (above the 100k
+    # driver-collect ceiling, so the query side is hash-split into bounded
+    # block collects), against the full corpus. Exact brute-force kNN is O(n*q)
     # by definition, so with q fixed the exponent measures the corpus term
     # (~1.0 expected — the irreducible exact-scan cost; ivf_knn_join is the
     # sublinear ANN alternative). What the entry certifies is the SHAPE:
@@ -375,9 +375,7 @@ def main() -> None:
                 F.col("embedding").alias("query_vec"),
             )
             q = part if q is None else q.unionByName(part)
-        KN.knn_join(emb, q, k=10, metric="cos", strategy="chunked").foreach(
-            lambda r: None
-        )
+        KN.knn_join(emb, q, k=10, metric="cos").foreach(lambda r: None)
 
     if want("knn_chunked_scaled"):
         results["knn_chunked_scaled"] = measure(knn_chunked_scaled)

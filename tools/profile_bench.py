@@ -1,5 +1,6 @@
 """Per-query profiler for the optimization rounds: times each registry query
-exactly like bench.py (median of N on the same action), and additionally
+exactly like bench.py (median of N on the same action, SQL cache cleared
+before each iteration), and additionally
 records the Spark job count and output row count per run — the job count is
 the 'how many actions/shuffle-barriers does this query pay' gauge that sf0.1
 wall-clock alone hides.
@@ -53,6 +54,8 @@ def main() -> None:
                 jobs_before = len(sc.statusTracker().getJobIdsForGroup(None)) \
                     if hasattr(sc.statusTracker(), "getJobIdsForGroup") else 0
             sc.setJobDescription(f"profile:{name}")
+            # cold per iteration, as bench.py: no cached relation carries over
+            spark.catalog.clearCache()
             t0 = time.monotonic()
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             runs.append(time.monotonic() - t0)
