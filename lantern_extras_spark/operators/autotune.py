@@ -14,12 +14,18 @@ its approximate-kNN structures with the same sweep/eval/selection/caching
 semantics: PQ (splits × clusters), IVF, IVF∘PQ, and — since the sharded-HNSW
 operator landed (`operators/hnsw.py`) — HNSW itself, over the reference's own
 6-variant (m, efc, ef) grid copied value-for-value from
-`index_autotune/mod.rs:329-360`. Results persist to an
-`autotune_results`-shaped table (experiment_id, params…, recall, latency,
-build_time — FIXTURES.md §3)."""
+`index_autotune/mod.rs:329-360`.
+
+Every sweep, and `compare_compressed`, scores its variants against one
+`knn.EvalSet`: the ground truth (N3) is built once per call, and each variant
+costs one timed recall (N4, `EvalSet.timed_recall`). Results persist through
+one `AutotuneResults` store, one `autotune_results`-shaped table per variant
+dataclass (experiment_id, params…, recall, latency, build_time — FIXTURES.md
+§3)."""
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as _dt
 import os
 import time
@@ -29,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lantern_extras_spark.operators import pq as PQ
-from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+from lantern_extras_spark.operators.knn import EvalSet, knn_join
 from lantern_extras_spark.session import local_frame
 
 # Default PQ variant grid — mirrors the reference's fixed 6-variant grid idea
@@ -103,151 +109,6 @@ class HnswVariant:
     build_time: float
 
 
-class AutotuneResults:
-    """Parquet-backed results cache (N6)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-
-    def load(self) -> DataFrame:
-        p = os.path.join(self.path, "autotune_results")
-        if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            return local_frame(self.spark, [], RESULTS_SCHEMA)
-        return self.spark.read.schema(RESULTS_SCHEMA).parquet(p)
-
-    def lookup(self, experiment_id: str, k: int, n_queries: int) -> list[VariantResult]:
-        """Reference reuse predicate: same experiment, k ≥ requested, n ≥ requested
-        (index_autotune/mod.rs:131-140)."""
-        rows = (
-            self.load()
-            .where(
-                (F.col("experiment_id") == experiment_id)
-                & (F.col("k") >= k)
-                & (F.col("n_queries") >= n_queries)
-            )
-            .collect()
-        )
-        return [VariantResult(r["splits"], r["clusters"], r["recall"], r["latency"], r["build_time"]) for r in rows]
-
-    def append(self, experiment_id: str, k: int, n_queries: int, results: list[VariantResult]) -> None:
-        now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-        rows = [
-            (experiment_id, r.splits, r.clusters, r.recall, r.latency, r.build_time, k, n_queries, now)
-            for r in results
-        ]
-        df = local_frame(self.spark, rows, RESULTS_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(os.path.join(self.path, "autotune_results"))
-
-    # -- IVF-PQ results: 4-parameter variants, own table, same N6 reuse rule --
-
-    def load_ivf_pq(self) -> DataFrame:
-        p = os.path.join(self.path, "autotune_results_ivf_pq")
-        if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            return local_frame(self.spark, [], IVF_PQ_RESULTS_SCHEMA)
-        return self.spark.read.schema(IVF_PQ_RESULTS_SCHEMA).parquet(p)
-
-    def lookup_ivf_pq(self, experiment_id: str, k: int, n_queries: int) -> list[IvfPqVariant]:
-        rows = (
-            self.load_ivf_pq()
-            .where(
-                (F.col("experiment_id") == experiment_id)
-                & (F.col("k") >= k)
-                & (F.col("n_queries") >= n_queries)
-            )
-            .collect()
-        )
-        return [
-            IvfPqVariant(r["nlist"], r["nprobe"], r["splits"], r["clusters"],
-                         r["recall"], r["latency"], r["build_time"])
-            for r in rows
-        ]
-
-    def append_ivf_pq(self, experiment_id: str, k: int, n_queries: int,
-                      results: list[IvfPqVariant]) -> None:
-        now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-        rows = [
-            (experiment_id, r.nlist, r.nprobe, r.splits, r.clusters,
-             r.recall, r.latency, r.build_time, k, n_queries, now)
-            for r in results
-        ]
-        df = local_frame(self.spark, rows, IVF_PQ_RESULTS_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(
-            os.path.join(self.path, "autotune_results_ivf_pq")
-        )
-
-    # -- HNSW results: the reference's own (m, efc, ef) variants, same rule --
-
-    def load_hnsw(self) -> DataFrame:
-        p = os.path.join(self.path, "autotune_results_hnsw")
-        if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            return local_frame(self.spark, [], HNSW_RESULTS_SCHEMA)
-        return self.spark.read.schema(HNSW_RESULTS_SCHEMA).parquet(p)
-
-    def lookup_hnsw(self, experiment_id: str, k: int, n_queries: int) -> list[HnswVariant]:
-        rows = (
-            self.load_hnsw()
-            .where(
-                (F.col("experiment_id") == experiment_id)
-                & (F.col("k") >= k)
-                & (F.col("n_queries") >= n_queries)
-            )
-            .collect()
-        )
-        return [
-            HnswVariant(r["m"], r["ef_construction"], r["ef"],
-                        r["recall"], r["latency"], r["build_time"])
-            for r in rows
-        ]
-
-    def append_hnsw(self, experiment_id: str, k: int, n_queries: int,
-                    results: list[HnswVariant]) -> None:
-        now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-        rows = [
-            (experiment_id, r.m, r.ef_construction, r.ef,
-             r.recall, r.latency, r.build_time, k, n_queries, now)
-            for r in results
-        ]
-        df = local_frame(self.spark, rows, HNSW_RESULTS_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(
-            os.path.join(self.path, "autotune_results_hnsw")
-        )
-
-    def load_bq(self) -> DataFrame:
-        p = os.path.join(self.path, "autotune_results_bq")
-        if not os.path.exists(os.path.join(p, "_SUCCESS")):
-            return local_frame(self.spark, [], BQ_RESULTS_SCHEMA)
-        return self.spark.read.schema(BQ_RESULTS_SCHEMA).parquet(p)
-
-    def lookup_bq(self, experiment_id: str, k: int, n_queries: int) -> list["BqVariant"]:
-        rows = (
-            self.load_bq()
-            .where(
-                (F.col("experiment_id") == experiment_id)
-                & (F.col("k") >= k)
-                & (F.col("n_queries") >= n_queries)
-            )
-            .collect()
-        )
-        return [
-            BqVariant(r["oversample"], r["recall"], r["latency"], r["build_time"])
-            for r in rows
-        ]
-
-    def append_bq(self, experiment_id: str, k: int, n_queries: int,
-                  results: list["BqVariant"]) -> None:
-        now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-        rows = [
-            (experiment_id, r.oversample, r.recall, r.latency, r.build_time, k, n_queries, now)
-            for r in results
-        ]
-        df = local_frame(self.spark, rows, BQ_RESULTS_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(
-            os.path.join(self.path, "autotune_results_bq")
-        )
-
-
 @dataclass
 class BqVariant:
     """One binary-quantization sweep point: the candidate oversample factor
@@ -259,6 +120,57 @@ class BqVariant:
     recall: float
     latency: float
     build_time: float
+
+
+# variant dataclass → (table directory under the store path, table schema);
+# every schema is experiment_id, the dataclass fields in order, k, n_queries,
+# created_at
+_TABLES: dict[type, tuple[str, str]] = {
+    VariantResult: ("autotune_results", RESULTS_SCHEMA),
+    IvfPqVariant: ("autotune_results_ivf_pq", IVF_PQ_RESULTS_SCHEMA),
+    HnswVariant: ("autotune_results_hnsw", HNSW_RESULTS_SCHEMA),
+    BqVariant: ("autotune_results_bq", BQ_RESULTS_SCHEMA),
+}
+
+
+class AutotuneResults:
+    """Parquet-backed results cache (N6): one table per variant dataclass
+    (`VariantResult` for the PQ and IVF sweeps, `IvfPqVariant`, `HnswVariant`,
+    `BqVariant`), all read and written through the same three methods."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self.spark = spark
+        self.path = path
+        os.makedirs(path, exist_ok=True)
+
+    def load(self, kind: type) -> DataFrame:
+        table, schema = _TABLES[kind]
+        p = os.path.join(self.path, table)
+        if not os.path.exists(os.path.join(p, "_SUCCESS")):
+            return local_frame(self.spark, [], schema)
+        return self.spark.read.schema(schema).parquet(p)
+
+    def lookup(self, kind: type, experiment_id: str, k: int, n_queries: int) -> list:
+        """Reference reuse predicate: same experiment, k ≥ requested, n ≥ requested
+        (index_autotune/mod.rs:131-140)."""
+        rows = (
+            self.load(kind)
+            .where(
+                (F.col("experiment_id") == experiment_id)
+                & (F.col("k") >= k)
+                & (F.col("n_queries") >= n_queries)
+            )
+            .collect()
+        )
+        names = [f.name for f in dataclasses.fields(kind)]
+        return [kind(*(r[n] for n in names)) for r in rows]
+
+    def append(self, kind: type, experiment_id: str, k: int, n_queries: int, results: list) -> None:
+        table, schema = _TABLES[kind]
+        now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+        rows = [(experiment_id, *dataclasses.astuple(r), k, n_queries, now) for r in results]
+        df = local_frame(self.spark, rows, schema)
+        df.coalesce(1).write.mode("append").parquet(os.path.join(self.path, table))
 
 
 def select_best(results: list[VariantResult], target_recall: float) -> VariantResult | None:
@@ -291,23 +203,14 @@ def autotune_pq(
     the (k≥, n≥) reuse rule short-circuit the sweep entirely (N6)."""
     exp = experiment_id or f"pq:{vec_col}"
     if results is not None:
-        cached = results.lookup(exp, k, n_queries)
+        cached = results.lookup(VariantResult, exp, k, n_queries)
         if cached:
             return select_best(cached, target_recall), cached
 
-    truth = ground_truth(
-        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
-    ).collect()
-    spark = df.sparkSession
-    truth_df = local_frame(
-        spark,
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    queries = [(r["id"], list(map(float, r["v"]))) for r in truth]
+    ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
     # one count + one dim probe for the WHOLE sweep, not one per variant
     total_rows = df.count()
-    dim = len(queries[0][1])
+    dim = len(ev.queries[0][1])
 
     out: list[VariantResult] = []
     for splits, clusters in variants:
@@ -320,24 +223,16 @@ def autotune_pq(
         coded.count()  # materialize so latency measures the query, not the build
         build_time = time.monotonic() - t0
 
-        t1 = time.monotonic()
         # one batched ADC job for ALL queries (O(1) Spark jobs per variant);
         # latency is the amortized per-query share of that job
-        res_df = collect_neighbors(
-            PQ.adc_topk_batch(coded, cb, queries, k=k, id_col=id_col),
-            qid_col="query_id", id_col=id_col,
-        ).cache()
-        res_df.count()
-        latency = (time.monotonic() - t1) / max(len(queries), 1)
-        rec = recall(truth_df, res_df, k)
-        res_df.unpersist()
+        rec, latency = ev.timed_recall(PQ.adc_topk_batch(coded, cb, ev.queries, k=k, id_col=id_col))
         coded.unpersist()
-        out.append(VariantResult(splits, clusters, rec, round(latency, 4), round(build_time, 4)))
+        out.append(VariantResult(splits, clusters, rec, latency, round(build_time, 4)))
         if rec >= target_recall:  # early stop (mod.rs:476-478)
             break
 
     if results is not None:
-        results.append(exp, k, n_queries, out)
+        results.append(VariantResult, exp, k, n_queries, out)
     return select_best(out, target_recall), out
 
 
@@ -372,20 +267,11 @@ def autotune_ivf(
 
     exp = experiment_id or f"ivf:{vec_col}"
     if results is not None:
-        cached = results.lookup(exp, k, n_queries)
+        cached = results.lookup(VariantResult, exp, k, n_queries)
         if cached:
             return select_best(cached, target_recall), cached
 
-    truth = ground_truth(
-        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
-    ).collect()
-    spark = df.sparkSession
-    truth_df = local_frame(
-        spark,
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    queries = [(r["id"], list(map(float, r["v"]))) for r in truth]
+    ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
     total_rows = df.count()  # one count for the whole sweep
 
     out: list[VariantResult] = []
@@ -402,25 +288,19 @@ def autotune_ivf(
         indexed, cents = built[nlist]
         build_time = time.monotonic() - t0
 
-        t1 = time.monotonic()
         # one batched probe job for ALL queries (O(1) Spark jobs per variant)
-        res_df = collect_neighbors(
-            IVF.ivf_topk_batch(indexed, cents, queries, k=k, nprobe=nprobe,
-                               vec_col=vec_col, id_col=id_col),
-            qid_col="query_id", id_col=id_col,
-        ).cache()
-        res_df.count()
-        latency = (time.monotonic() - t1) / max(len(queries), 1)
-        rec = recall(truth_df, res_df, k)
-        res_df.unpersist()
-        out.append(VariantResult(nlist, nprobe, rec, round(latency, 4), round(build_time, 4)))
+        rec, latency = ev.timed_recall(
+            IVF.ivf_topk_batch(indexed, cents, ev.queries, k=k, nprobe=nprobe,
+                               vec_col=vec_col, id_col=id_col)
+        )
+        out.append(VariantResult(nlist, nprobe, rec, latency, round(build_time, 4)))
         if rec >= target_recall:
             break
 
     for indexed, _ in built.values():
         indexed.unpersist()
     if results is not None:
-        results.append(exp, k, n_queries, out)
+        results.append(VariantResult, exp, k, n_queries, out)
     return select_best(out, target_recall), out
 
 
@@ -461,20 +341,11 @@ def autotune_ivf_pq(
 
     exp = experiment_id or f"ivf_pq:{vec_col}"
     if results is not None:
-        cached = results.lookup_ivf_pq(exp, k, n_queries)
+        cached = results.lookup(IvfPqVariant, exp, k, n_queries)
         if cached:
             return select_best(cached, target_recall), cached
 
-    truth = ground_truth(
-        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
-    ).collect()
-    spark = df.sparkSession
-    truth_df = local_frame(
-        spark,
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    queries = [(r["id"], list(map(float, r["v"]))) for r in truth]
+    ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
     total_rows = df.count()  # one count for the whole sweep
 
     out: list[IvfPqVariant] = []
@@ -493,19 +364,12 @@ def autotune_ivf_pq(
         coded, cents, cb = built[bkey]
         build_time = time.monotonic() - t0
 
-        t1 = time.monotonic()
-        res_df = collect_neighbors(
-            IVF.ivf_pq_topk_batch(coded, cents, cb, queries, k=k, nprobe=nprobe,
-                                  id_col=id_col),
-            qid_col="query_id", id_col=id_col,
-        ).cache()
-        res_df.count()
-        latency = (time.monotonic() - t1) / max(len(queries), 1)
-        rec = recall(truth_df, res_df, k)
-        res_df.unpersist()
+        rec, latency = ev.timed_recall(
+            IVF.ivf_pq_topk_batch(coded, cents, cb, ev.queries, k=k, nprobe=nprobe,
+                                  id_col=id_col)
+        )
         out.append(
-            IvfPqVariant(nlist, nprobe, splits, clusters, rec,
-                         round(latency, 4), round(build_time, 4))
+            IvfPqVariant(nlist, nprobe, splits, clusters, rec, latency, round(build_time, 4))
         )
         if rec >= target_recall:  # early stop (mod.rs:476-478)
             break
@@ -513,7 +377,7 @@ def autotune_ivf_pq(
     for coded, _, _ in built.values():
         coded.unpersist()
     if results is not None:
-        results.append_ivf_pq(exp, k, n_queries, out)
+        results.append(IvfPqVariant, exp, k, n_queries, out)
     return select_best(out, target_recall), out
 
 
@@ -551,20 +415,11 @@ def autotune_hnsw(
 
     exp = experiment_id or f"hnsw:{vec_col}"
     if results is not None:
-        cached = results.lookup_hnsw(exp, k, n_queries)
+        cached = results.lookup(HnswVariant, exp, k, n_queries)
         if cached:
             return select_best(cached, target_recall), cached
 
-    truth = ground_truth(
-        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
-    ).collect()
-    spark = df.sparkSession
-    truth_df = local_frame(
-        spark,
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    queries = [(r["id"], list(map(float, r["v"]))) for r in truth]
+    ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
 
     out: list[HnswVariant] = []
     for m, efc, ef in variants:
@@ -576,22 +431,16 @@ def autotune_hnsw(
         shards.count()  # materialize: latency measures the search, not the build
         build_time = time.monotonic() - t0
 
-        t1 = time.monotonic()
-        res_df = collect_neighbors(
-            HNSW.hnsw_topk_batch(shards, queries, k=k, ef=ef, id_col=id_col),
-            qid_col="query_id", id_col=id_col,
-        ).cache()
-        res_df.count()
-        latency = (time.monotonic() - t1) / max(len(queries), 1)
-        rec = recall(truth_df, res_df, k)
-        res_df.unpersist()
+        rec, latency = ev.timed_recall(
+            HNSW.hnsw_topk_batch(shards, ev.queries, k=k, ef=ef, id_col=id_col)
+        )
         shards.unpersist()
-        out.append(HnswVariant(m, efc, ef, rec, round(latency, 4), round(build_time, 4)))
+        out.append(HnswVariant(m, efc, ef, rec, latency, round(build_time, 4)))
         if rec >= target_recall:  # early stop (mod.rs:476-478)
             break
 
     if results is not None:
-        results.append_hnsw(exp, k, n_queries, out)
+        results.append(HnswVariant, exp, k, n_queries, out)
     return select_best(out, target_recall), out
 
 
@@ -621,24 +470,11 @@ def autotune_bq(
 
     exp = experiment_id or f"bq:{vec_col}"
     if results is not None:
-        cached = results.lookup_bq(exp, k, n_queries)
+        cached = results.lookup(BqVariant, exp, k, n_queries)
         if cached:
             return select_best(cached, target_recall), cached
 
-    truth = ground_truth(
-        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
-    ).collect()
-    spark = df.sparkSession
-    truth_df = local_frame(
-        spark,
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    queries = local_frame(
-        spark,
-        [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
-        "query_id long, query_vec array<double>",
-    )
+    ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
 
     t0 = time.monotonic()
     mids = BQ.bq_train(df, vec_col)
@@ -648,24 +484,18 @@ def autotune_bq(
 
     out: list[BqVariant] = []
     for ov in oversamples:
-        t1 = time.monotonic()
-        res_df = collect_neighbors(
-            BQ.bq_knn_join(coded, queries, mids, k=k, oversample=ov,
+        rec, latency = ev.timed_recall(
+            BQ.bq_knn_join(coded, ev.queries_df, mids, k=k, oversample=ov,
                            id_col=id_col, vec_col=vec_col)
-            .withColumnRenamed("rnk", "rank"),
-            qid_col="query_id", id_col=id_col,
-        ).cache()
-        res_df.count()
-        latency = (time.monotonic() - t1) / max(n_queries, 1)
-        rec = recall(truth_df, res_df, k)
-        res_df.unpersist()
-        out.append(BqVariant(ov, rec, round(latency, 4), build_time))
+            .withColumnRenamed("rnk", "rank")
+        )
+        out.append(BqVariant(ov, rec, latency, build_time))
         if rec >= target_recall:  # early stop (mod.rs:476-478)
             break
     coded.unpersist()
 
     if results is not None:
-        results.append_bq(exp, k, n_queries, out)
+        results.append(BqVariant, exp, k, n_queries, out)
     return select_best(out, target_recall), out
 
 
@@ -691,40 +521,15 @@ def compare_compressed(
     from lantern_extras_spark.operators import bq as BQ
     from lantern_extras_spark.operators import sq as SQ8
 
-    truth = ground_truth(
-        df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
-    ).collect()
-    spark = df.sparkSession
-    truth_df = local_frame(
-        spark,
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    queries_df = local_frame(
-        spark,
-        [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
-        "query_id long, query_vec array<double>",
-    )
-    queries = [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth]
-    dim = len(queries[0][1])
+    ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
+    dim = len(ev.queries[0][1])
     total_rows = df.count()
     rows = []
 
-    def _measure(res_df):
-        t1 = time.monotonic()
-        r = collect_neighbors(res_df, qid_col="query_id", id_col=id_col).cache()
-        r.count()
-        lat = (time.monotonic() - t1) / max(n_queries, 1)
-        rec = recall(truth_df, r, k)
-        r.unpersist()
-        return rec, round(lat, 4)
-
     # exact float baseline
-    from lantern_extras_spark.operators.knn import knn_join
-
-    rec, lat = _measure(
+    rec, lat = ev.timed_recall(
         knn_join(df.select(F.col(id_col), F.col(vec_col).alias("embedding")),
-                 queries_df, k=k, metric="l2sq")
+                 ev.queries_df, k=k, metric="l2sq")
     )
     rows.append(("float32", "exact scan", rec, lat, 0.0, 4 * dim))
 
@@ -734,10 +539,7 @@ def compare_compressed(
     sq_coded = SQ8.sq8_encode(df, mins, maxs, vec_col=vec_col, drop_vec=False).cache()
     sq_coded.count()
     sq_build = round(time.monotonic() - t0, 4)
-    rec, lat = _measure(
-        SQ8.sq8_knn_join(sq_coded, queries_df, mins, maxs, k=k, id_col=id_col)
-        .withColumnRenamed("rank", "rank")
-    )
+    rec, lat = ev.timed_recall(SQ8.sq8_knn_join(sq_coded, ev.queries_df, mins, maxs, k=k, id_col=id_col))
     sq_coded.unpersist()
     rows.append(("sq8", "dequantized scan", rec, lat, sq_build, dim))
 
@@ -747,8 +549,8 @@ def compare_compressed(
     bq_coded = BQ.bq_encode(df, mids, vec_col=vec_col, out_col="bq").cache()
     bq_coded.count()
     bq_build = round(time.monotonic() - t0, 4)
-    rec, lat = _measure(
-        BQ.bq_knn_join(bq_coded, queries_df, mids, k=k, oversample=bq_oversample,
+    rec, lat = ev.timed_recall(
+        BQ.bq_knn_join(bq_coded, ev.queries_df, mids, k=k, oversample=bq_oversample,
                        id_col=id_col, vec_col=vec_col)
         .withColumnRenamed("rnk", "rank")
     )
@@ -763,12 +565,12 @@ def compare_compressed(
     pq_coded = PQ.quantize(df, cb, vec_col=vec_col, dim=dim).cache()
     pq_coded.count()
     pq_build = round(time.monotonic() - t0, 4)
-    rec, lat = _measure(PQ.adc_topk_batch(pq_coded, cb, queries, k=k, id_col=id_col))
+    rec, lat = ev.timed_recall(PQ.adc_topk_batch(pq_coded, cb, ev.queries, k=k, id_col=id_col))
     pq_coded.unpersist()
     rows.append(("pq", f"adc {splits}x{clusters}", rec, lat, pq_build, splits))
 
     return local_frame(
-        spark,
+        df.sparkSession,
         rows,
         "family string, config string, recall double, latency_s double, "
         "build_s double, bytes_per_vec int",

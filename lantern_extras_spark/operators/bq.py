@@ -30,7 +30,6 @@ from pyspark.sql.window import Window
 
 from lantern_extras_spark.functions.portable import pround
 from lantern_extras_spark.functions.vector import l2sq_dist
-from lantern_extras_spark.session import local_frame
 
 WORD_BITS = 32  # 32 bits per bigint word: values < 2^32 never touch the sign
 
@@ -223,30 +222,16 @@ def bq_recall_vs_exact(
 ) -> float:
     """Recall of BQ two-stage top-k against exact float kNN over sampled
     queries — the honesty dial every approximate path here carries."""
-    from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+    from lantern_extras_spark.operators.knn import EvalSet
 
     mids = bq_train(df, vec_col)
     coded = bq_encode(df, mids, vec_col=vec_col, out_col="bq").cache()
     coded.count()
-    truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
-                         id_col=id_col, vec_col=vec_col, seed=seed).collect()
-    spark = df.sparkSession
-    queries = local_frame(
-        spark,
-        [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
-        "query_id long, query_vec array<double>",
-    )
-    res = collect_neighbors(
-        bq_knn_join(coded, queries, mids, k=k, oversample=oversample,
+    ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
+    rec = ev.recall(
+        bq_knn_join(coded, ev.queries_df, mids, k=k, oversample=oversample,
                     id_col=id_col, vec_col=vec_col)
-        .withColumnRenamed("rnk", "rank"),
-        qid_col="query_id", id_col=id_col,
+        .withColumnRenamed("rnk", "rank")
     )
-    truth_df = local_frame(
-        spark,
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    rec = recall(truth_df, res, k)
     coded.unpersist()
     return rec

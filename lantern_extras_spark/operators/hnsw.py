@@ -43,7 +43,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from lantern_extras_spark.session import local_frame
 
 _METRICS = ("cos", "l2sq", "dot", "hamming")
 
@@ -566,26 +565,14 @@ def hnsw_recall_vs_exact(
 ) -> float:
     """Recall of sharded-HNSW top-k vs exact kNN (N4-style eval, one batched
     search job for all queries)."""
-    from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+    from lantern_extras_spark.operators.knn import EvalSet
 
     shards = build_hnsw_shards(
         df, vec_col=vec_col, id_col=id_col, n_shards=n_shards, m=m,
         ef_construction=ef_construction, metric="l2sq", seed=seed,
     ).cache()
     shards.count()
-    truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
-                         id_col=id_col, vec_col=vec_col, seed=seed).collect()
-    spark = df.sparkSession
-    queries = [(int(r["id"]), list(map(float, r["v"]))) for r in truth]
-    res_df = collect_neighbors(
-        hnsw_topk_batch(shards, queries, k=k, ef=ef, id_col=id_col),
-        qid_col="query_id", id_col=id_col,
-    )
-    truth_df = local_frame(
-        spark,
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    rec = recall(truth_df, res_df, k)
+    ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
+    rec = ev.recall(hnsw_topk_batch(shards, ev.queries, k=k, ef=ef, id_col=id_col))
     shards.unpersist()
     return rec

@@ -611,25 +611,14 @@ def ivf_recall_vs_exact(
 ) -> float:
     """Recall of IVF top-k vs exact kNN over sampled queries (N4-style eval).
     All queries run through one batched probe job (`ivf_topk_batch`)."""
-    from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+    from lantern_extras_spark.operators.knn import EvalSet
 
     indexed, centroids = build_ivf(df, vec_col=vec_col, nlist=nlist, seed=seed)
     indexed = indexed.cache()
     indexed.count()
-    truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
-                         id_col=id_col, vec_col=vec_col, seed=seed).collect()
-    spark = df.sparkSession
-    queries = [(int(r["id"]), list(map(float, r["v"]))) for r in truth]
-    res_df = collect_neighbors(
-        ivf_topk_batch(indexed, centroids, queries, k=k, nprobe=nprobe,
-                       vec_col=vec_col, id_col=id_col),
-        qid_col="query_id", id_col=id_col,
-    )
-    truth_df = local_frame(
-        spark,
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth], "id long, neighbors array<long>"
-    )
-    rec = recall(truth_df, res_df, k)
+    ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
+    rec = ev.recall(ivf_topk_batch(indexed, centroids, ev.queries, k=k, nprobe=nprobe,
+                                   vec_col=vec_col, id_col=id_col))
     indexed.unpersist()
     return rec
 
@@ -699,62 +688,18 @@ def ivf_pq_topk(
     cell_col: str = "cell",
     code_col: str = "pqvec",
 ) -> DataFrame:
-    """ADC search over IVF-PQ: one distance lookup table per probed cell
-    (query residual vs that cell's centroid), then each candidate row costs
-    `splits` table lookups. The scan is partition-pruned to probed cells and
-    reads only (id, cell, codes)."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    from lantern_extras_spark.operators.pq import _codebook_tensor, split_bounds
-
-    mats, splits = _codebook_tensor(codebook)
-    q = np.asarray(query_vec, dtype=np.float64)
-    dim = q.shape[0]
-    bounds = split_bounds(dim, splits)
-    cells = probe_cells(centroids, query_vec, nprobe)
-    C = np.asarray(centroids, dtype=np.float64)
-    # per probed cell: LUT[s][code] = || (q - centroid)[s] - codeword ||^2
-    luts = {}
-    for cell in cells:
-        rq = q - C[cell]
-        luts[cell] = [((mats[s] - rq[lo:hi]) ** 2).sum(axis=1) for s, (lo, hi) in enumerate(bounds)]
-    spark = indexed_df.sparkSession
-    b_luts = spark.sparkContext.broadcast(luts)
-
-    out_schema = StructType(
-        [StructField(id_col, LongType()), StructField("adc_distance", DoubleType())]
+    """ADC search over IVF-PQ for one query: a one-query `ivf_pq_topk_batch`
+    (per probed cell, one distance lookup table of the query residual vs that
+    cell's centroid; the scan is partition-pruned to probed cells and reads
+    only (id, cell, codes)), then a global orderBy+limit. Returns
+    (id_col, adc_distance)."""
+    cand = ivf_pq_topk_batch(indexed_df, centroids, codebook, [(0, list(query_vec))], k=k,
+                             nprobe=nprobe, id_col=id_col, cell_col=cell_col, code_col=code_col)
+    return (
+        cand.select(id_col, "adc_distance")
+        .orderBy(F.col("adc_distance").asc(), F.col(id_col).asc())
+        .limit(k)
     )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        L = b_luts.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.asarray(
-                [np.frombuffer(c, dtype=np.uint8) if isinstance(c, (bytes, bytearray)) else np.asarray(c)
-                 for c in pdf[code_col].to_numpy()],
-                dtype=np.int64,
-            )
-            cells_v = pdf[cell_col].to_numpy()
-            dist = np.zeros(len(pdf))
-            for cell, lut in L.items():
-                mask = cells_v == cell
-                if not mask.any():
-                    continue
-                d = np.zeros(mask.sum())
-                for s in range(splits):
-                    d += lut[s][codes[mask, s]]
-                dist[mask] = d
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "adc_distance": dist})
-
-    pruned = indexed_df.where(F.col(cell_col).isin([int(c) for c in cells])).select(
-        id_col, cell_col, code_col
-    )
-    scanned = pruned.mapInPandas(scan, out_schema)
-    return scanned.orderBy(F.col("adc_distance").asc(), F.col(id_col).asc()).limit(k)
 
 
 def ivf_pq_topk_batch(

@@ -27,6 +27,7 @@ hash-comparable across engines.
 from __future__ import annotations
 
 import math
+import time
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -504,3 +505,58 @@ def recall(truth: DataFrame, result: DataFrame, k: int) -> float:
         .first()[0]
     )
     return math.floor(mean * 100.0) / 100.0
+
+
+class EvalSet:
+    """One exact ground-truth set (reference N3, index_autotune/mod.rs:189-219)
+    that any number of approximate top-k results are scored against (N4,
+    mod.rs:221-255). Constructing it is the one eager step: `ground_truth`
+    over `n_queries` seeded samples, collected to the driver.
+
+    `queries` is the (id, vector) list the list-input batch searches take,
+    `queries_df` the same rows as (query_id long, query_vec array<double>) for
+    the frame-input joins, `truth` the (id long, neighbors array<long>) frame
+    `recall` compares against. A result is any (query_id, `id_col`, rank)
+    top-k frame."""
+
+    def __init__(
+        self,
+        df: DataFrame,
+        n_queries: int = 10,
+        k: int = 10,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        seed: int = 42,
+    ):
+        rows = ground_truth(
+            df, n_queries=n_queries, k=k, metric="l2sq", id_col=id_col, vec_col=vec_col, seed=seed
+        ).collect()
+        spark = df.sparkSession
+        self.k = k
+        self.id_col = id_col
+        self.queries = [(int(r["id"]), [float(x) for x in r["v"]]) for r in rows]
+        self.queries_df = local_frame(spark, self.queries, "query_id long, query_vec array<double>")
+        self.truth = local_frame(
+            spark,
+            [(int(r["id"]), [int(x) for x in r["neighbors"]]) for r in rows],
+            "id long, neighbors array<long>",
+        )
+
+    def _neighbors(self, result: DataFrame) -> DataFrame:
+        return collect_neighbors(result, qid_col="query_id", id_col=self.id_col)
+
+    def recall(self, result: DataFrame) -> float:
+        """N4 recall of `result` against the truth set, untimed."""
+        return recall(self.truth, self._neighbors(result), self.k)
+
+    def timed_recall(self, result: DataFrame) -> tuple[float, float]:
+        """(recall, per-query latency in s, 4 dp). The latency is the time to
+        materialize `result`'s neighbor lists once, divided by the number of
+        queries actually sampled; the recall then reads the cached lists."""
+        t0 = time.monotonic()
+        res = self._neighbors(result).cache()
+        res.count()
+        latency = (time.monotonic() - t0) / max(len(self.queries), 1)
+        rec = recall(self.truth, res, self.k)
+        res.unpersist()
+        return rec, round(latency, 4)

@@ -27,7 +27,6 @@ from pyspark.sql.window import Window
 
 from lantern_extras_spark.functions.portable import pround
 from lantern_extras_spark.functions.vector import l2sq_dist
-from lantern_extras_spark.session import local_frame
 
 
 def mrl_search(
@@ -128,25 +127,11 @@ def mrl_recall_vs_exact(
     queries — the honesty dial every approximate path here carries. On
     MRL-trained embeddings the prefix preserves neighborhoods; on arbitrary
     embeddings this measures how much signal the leading dims carry."""
-    from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+    from lantern_extras_spark.operators.knn import EvalSet
 
-    truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
-                         id_col=id_col, vec_col=vec_col, seed=seed).collect()
-    spark = df.sparkSession
-    queries = local_frame(
-        spark,
-        [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
-        "query_id long, query_vec array<double>",
-    )
-    res = collect_neighbors(
-        mrl_knn_join(df, queries, d_prefix, k=k, oversample=oversample,
+    ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
+    return ev.recall(
+        mrl_knn_join(df, ev.queries_df, d_prefix, k=k, oversample=oversample,
                      id_col=id_col, vec_col=vec_col)
-        .withColumnRenamed("rnk", "rank"),
-        qid_col="query_id", id_col=id_col,
+        .withColumnRenamed("rnk", "rank")
     )
-    truth_df = local_frame(
-        spark,
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    return recall(truth_df, res, k)

@@ -398,17 +398,8 @@ def pq_recall_vs_exact(
     """Recall of ADC top-k vs exact l2 top-k over sampled queries — the
     autotune-style evaluation (reference N4/N5) specialized to PQ. All queries
     run through one batched ADC job (`adc_topk_batch`), not a per-query loop."""
-    from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+    from lantern_extras_spark.operators.knn import EvalSet
 
-    truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
-                         id_col=id_col, vec_col=vec_col, seed=seed)
     coded = quantize(df, codebook, vec_col=vec_col)
-    tr = truth.collect()
-    queries = [(int(r["id"]), list(map(float, r["v"]))) for r in tr]
-    res_df = collect_neighbors(adc_topk_batch(coded, codebook, queries, k=k, id_col=id_col),
-                               qid_col="query_id", id_col=id_col)
-    truth_df = local_frame(
-        df.sparkSession,
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in tr], "id long, neighbors array<long>"
-    )
-    return recall(truth_df, res_df, k)
+    ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
+    return ev.recall(adc_topk_batch(coded, codebook, ev.queries, k=k, id_col=id_col))

@@ -30,7 +30,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from lantern_extras_spark.session import local_frame
 
 
 def sq8_train(df: DataFrame, vec_col: str = "embedding") -> tuple[list[float], list[float]]:
@@ -189,29 +188,13 @@ def sq8_recall_vs_exact(
     """Recall of SQ8 top-k against exact float kNN over sampled queries —
     the honesty dial every approximate path here carries (N4-style eval,
     same harness as `ivf_recall_vs_exact`)."""
-    from lantern_extras_spark.operators.knn import collect_neighbors, ground_truth, recall
+    from lantern_extras_spark.operators.knn import EvalSet
 
     mins, maxs = sq8_train(df, vec_col)
     coded = sq8_encode(df, mins, maxs, vec_col=vec_col, drop_vec=False).cache()
     coded.count()
-    truth = ground_truth(df, n_queries=n_queries, k=k, metric="l2sq",
-                         id_col=id_col, vec_col=vec_col, seed=seed).collect()
-    spark = df.sparkSession
-    queries = local_frame(
-        spark,
-        [(int(r["id"]), [float(x) for x in r["v"]]) for r in truth],
-        "query_id long, query_vec array<double>",
-    )
-    res = collect_neighbors(
-        sq8_knn_join(coded, queries, mins, maxs, k=k, id_col=id_col),
-        qid_col="query_id", id_col=id_col,
-    )
-    truth_df = local_frame(
-        spark,
-        [(r["id"], [int(x) for x in r["neighbors"]]) for r in truth],
-        "id long, neighbors array<long>",
-    )
-    rec = recall(truth_df, res, k)
+    ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
+    rec = ev.recall(sq8_knn_join(coded, ev.queries_df, mins, maxs, k=k, id_col=id_col))
     coded.unpersist()
     return rec
 

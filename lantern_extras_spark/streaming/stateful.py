@@ -45,12 +45,7 @@ def _read_store_or_none(sess, store_dir: str, columns: list[str] | None = None):
             store.select(*columns)  # schema check up-front, not at action time
         return store
     except AnalysisException as e:
-        cond = ""
-        try:
-            cond = e.getErrorClass() or ""
-        except Exception:  # noqa: BLE001 — older pyspark without error classes
-            pass
-        msg = f"{cond} {e}"
+        msg = f"{e.getCondition() or ''} {e}"
         if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
             return None
         raise

@@ -1,8 +1,11 @@
 """Autotune sweep semantics: eval loop, early stop, best-variant selection
 (W2), result caching (N6); plus the model speed harness (N7)."""
 
+import dataclasses
+
 import numpy as np
 import pytest
+from pyspark.sql.types import StructType
 
 from lantern_extras_spark.operators import autotune as AT
 
@@ -34,13 +37,38 @@ def test_sweep_and_early_stop(spark, clustered, tmp_path):
         assert len(results) == met[0] + 1
 
     # N6: a second call with same (k, n) is served from cache — no new rows
-    n_rows = store.load().count()
+    n_rows = store.load(AT.VariantResult).count()
     best2, results2 = AT.autotune_pq(
         clustered, k=5, n_queries=4, target_recall=50.0,
         variants=((4, 8),), results=store, max_train_rows=300,
     )
-    assert store.load().count() == n_rows
+    assert store.load(AT.VariantResult).count() == n_rows
     assert best2 is not None
+
+
+def test_results_store_tables_and_reuse_rule(spark, tmp_path):
+    """One load/lookup/append for every variant kind (N6). Each kind keeps its
+    own table directory and schema, pinned so stores written before still
+    read; a lookup hits for stored k ≥ asked and n ≥ asked, and misses for a
+    larger k."""
+    store = AT.AutotuneResults(spark, str(tmp_path / "store"))
+    cases = [
+        (AT.VariantResult(4, 16, 90.0, 0.5, 1.5), "autotune_results", AT.RESULTS_SCHEMA),
+        (AT.IvfPqVariant(16, 4, 8, 32, 80.0, 0.25, 2.0), "autotune_results_ivf_pq",
+         AT.IVF_PQ_RESULTS_SCHEMA),
+        (AT.HnswVariant(16, 64, 40, 99.0, 0.125, 3.0), "autotune_results_hnsw",
+         AT.HNSW_RESULTS_SCHEMA),
+        (AT.BqVariant(8, 70.0, 0.0625, 0.75), "autotune_results_bq", AT.BQ_RESULTS_SCHEMA),
+    ]
+    for row, table, schema in cases:
+        kind = type(row)
+        want = StructType.fromDDL(schema)
+        fields = [f.name for f in dataclasses.fields(kind)]
+        assert want.names == ["experiment_id", *fields, "k", "n_queries", "created_at"]
+        store.append(kind, "exp", 10, 20, [row])
+        assert spark.read.parquet(str(tmp_path / "store" / table)).schema == want
+        assert store.lookup(kind, "exp", 5, 10) == [row]
+        assert store.lookup(kind, "exp", 11, 20) == []
 
 
 def test_select_best_prefers_cheapest_meeting_target():
@@ -116,19 +144,19 @@ def test_autotune_ivf_pq_sweep_and_cache(spark, clustered, tmp_path):
     assert len(stopped) == 1 and stopped[0].recall >= 1.0
 
     # N6 reuse: same (k, n) served from the store, no new rows appended
-    n_rows = store.load_ivf_pq().count()
+    n_rows = store.load(AT.IvfPqVariant).count()
     best2, results2 = AT.autotune_ivf_pq(
         clustered, k=5, n_queries=3, target_recall=101.0,
         variants=((5, 1, 4, 16),), results=store, max_train_rows=300,
     )
-    assert store.load_ivf_pq().count() == n_rows
+    assert store.load(AT.IvfPqVariant).count() == n_rows
     assert len(results2) == 2  # the cached 2-variant sweep, not the 1-variant grid
     # a STRICTER ask (larger k) must miss the cache and re-sweep
     best3, _ = AT.autotune_ivf_pq(
         clustered, k=8, n_queries=3, target_recall=101.0,
         variants=((5, 2, 4, 16),), results=store, max_train_rows=300,
     )
-    assert store.load_ivf_pq().count() > n_rows
+    assert store.load(AT.IvfPqVariant).count() > n_rows
 
 
 def test_ivf_pq_topk_batch_matches_single(spark, clustered):

@@ -151,3 +151,19 @@ def test_codebook_save_load_roundtrip(spark, tmp_path):
     a = {r["vec_id"]: list(r["pqvec"]) for r in PQ.quantize(df, cb, dim=16).collect()}
     b = {r["vec_id"]: list(r["pqvec"]) for r in PQ.quantize(df, cb2, dim=16).collect()}
     assert a == b
+
+
+def test_pq_recall_vs_exact_grows_with_codebook(spark):
+    """ADC recall against exact l2 top-k: a codebook with one codeword per
+    row can only resolve neighbours better than a 2-codeword one."""
+    rng = np.random.RandomState(0)
+    centers = rng.randn(5, 16) * 10
+    rows = [(i, (centers[i % 5] + rng.randn(16) * 0.05).astype("float32").tolist())
+            for i in range(100)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    recs = []
+    for clusters in (2, 100):
+        cb = PQ.build_codebook(df, splits=4, k=clusters, max_train_rows=100)
+        recs.append(PQ.pq_recall_vs_exact(df, cb, n_queries=4, k=5))
+    assert all(0.0 <= r <= 100.0 for r in recs), recs
+    assert recs[1] >= recs[0], recs

@@ -276,6 +276,19 @@ def test_store_read_failure_routing(spark, tmp_path):
     assert _read_store_or_none(spark, good, ["doc_id", "sig"]).count() == 3
 
 
+def test_store_read_routing_uses_no_deprecated_api(spark, tmp_path):
+    """The missing-store routing reads the error condition through the
+    current API: no FutureWarning (getErrorClass is deprecated) is raised."""
+    import warnings
+
+    from lantern_extras_spark.streaming.stateful import _read_store_or_none
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert _read_store_or_none(spark, str(tmp_path / "nope")) is None
+    assert not [w for w in caught if issubclass(w.category, FutureWarning)]
+
+
 def test_semantic_store_refresh_restores_recall(spark, tmp_path):
     """r7 verdict item 6: the ingest loop pins centroids forever; under
     embedding drift, near-dup pairs straddle cell boundaries fitted to the
