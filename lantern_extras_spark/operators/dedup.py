@@ -15,13 +15,14 @@ construction:
   (hash % stride) as the shuffle-volume lever.
 - **MinHash + LSH (near-dup)**: shingle → one portable 32-bit hash per
   distinct shingle → `n_hashes` universal-hash permutations (one md5 per
-  shingle, not per (shingle × perm)) → banded LSH. Candidate generation is a
-  self-join on (band_index, band_hash) — the only shuffle is on the tiny band
-  keys, and at 1000 executors it stays balanced because band hashes are
-  uniform. Verification recomputes exact Jaccard only for candidate pairs (or
-  the Broder signature estimate). `minhash_dedup_incremental` matches an
-  arriving batch against a persisted (id, sig) store without re-reading the
-  corpus.
+  shingle, not per (shingle × perm)) → banded LSH. Candidate generation is
+  one grouped shuffle on (band_index, band_hash) that collects each bucket's
+  ids and emits its pairs with array functions — the only shuffle is on the
+  tiny band keys, and at 1000 executors it stays balanced because band
+  hashes are uniform. Verification recomputes exact Jaccard only for
+  candidate pairs (or the Broder signature estimate).
+  `minhash_dedup_incremental` matches an arriving batch against a persisted
+  (id, sig) store without re-reading the corpus.
 - **SimHash**: signature via per-bit majority vote of token hashes; near-dup
   candidates join on any matching band, verified with `bit_count(xor)`.
   bits=32/band_bits=8 is the oracle config; bits=60/band_bits=15 the scale
@@ -204,10 +205,13 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Candidate pairs (id_a < id_b) sharing at least one LSH band bucket.
 
-    Explode signatures into (band_idx, band_key) rows, self-join on the band key.
-    Buckets larger than `max_bucket` are dropped (skew guard — they are almost
-    always degenerate content and would otherwise create O(b²) pair explosions
-    on a single executor).
+    One grouped shuffle: group the (band_idx, band_key) rows into buckets,
+    each carrying its sorted id list, and emit every i<j pair of a bucket's
+    list with array functions — no window, no self-join. Buckets larger than
+    `max_bucket` are dropped (skew guard — they are almost always degenerate
+    content and would otherwise create O(b²) pair explosions on a single
+    executor); the size counts every row, null ids included, while null ids
+    themselves never pair.
 
     Pass `n_hashes` (the signature length) to avoid a driver-side `first()`
     probe — the probe costs one extra Spark job and is kept only as a fallback
@@ -215,16 +219,21 @@ def lsh_candidate_pairs(
     """
     if n_hashes is None:
         n_hashes = len(sigs.select("sig").first()[0])
-    exploded = band_keys(sigs, bands, id_col, n_hashes)
-    counted = exploded.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("band_idx", "band_key"))
-    ).where(F.col("bucket_n") <= max_bucket)
-    a = counted.select(F.col("band_idx"), F.col("band_key"), F.col(id_col).alias("id_a"))
-    b = counted.select(F.col("band_idx"), F.col("band_key"), F.col(id_col).alias("id_b"))
+    buckets = (
+        band_keys(sigs, bands, id_col, n_hashes)
+        .groupBy("band_idx", "band_key")
+        .agg(F.count("*").alias("n"), F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .where((F.col("n") <= max_bucket) & (F.size("ids") >= 2))
+    )
+    # ids[i] paired with every later element ids[i+1:] (slice is 1-based)
+    pairs = F.flatten(F.transform("ids", lambda a, i: F.transform(
+        F.slice("ids", i + 2, F.size("ids") - i - 1),
+        lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
+    )))
     return (
-        a.join(b, ["band_idx", "band_key"])
+        buckets.select(F.explode(pairs).alias("p"))
+        .select("p.id_a", "p.id_b")
         .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
         .distinct()
     )
 

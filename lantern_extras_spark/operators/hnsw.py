@@ -29,6 +29,7 @@ from __future__ import annotations
 import heapq
 import io
 import math
+from array import array
 from typing import Iterator
 
 import numpy as np
@@ -54,7 +55,14 @@ class HnswIndex:
     (vectors normalized once at insert); dot = -inner-product; hamming =
     count of differing elements over 0/1 (or small-int) vectors — the
     reference's usearch metric kinds (`external_index/server.rs` header
-    `metric`, hamming from cli.rs:56-69 for bit elements)."""
+    `metric`, hamming from cli.rs:56-69 for bit elements).
+
+    Every link list keeps its distances beside it (`_link_dists`, one
+    `array('d')` per list, 8 bytes a link): a new link's distance is the one
+    the beam search already returned, so pruning a full list is a sort of
+    cached values, never a recomputation. A `from_bytes` index starts with
+    no cached distances and fills a node's entry the first time an insert
+    links to it, so an index that only serves searches pays nothing."""
 
     def __init__(
         self,
@@ -77,8 +85,10 @@ class HnswIndex:
         self._vecs = np.empty((0, dim), dtype=np.float32)
         self._ids: list[int] = []
         self._levels: list[int] = []
-        # links[level] = {node: [neighbor nodes]}; level 0 has every node
+        # links[level] = {node: [neighbor nodes]}; level 0 has every node.
+        # link_dists[level][node][i] = distance(node, links[level][node][i])
         self._links: list[dict[int, list[int]]] = [{}]
+        self._link_dists: list[dict[int, array]] = [{}]
         self._entry = -1
         self._max_level = 0
 
@@ -113,11 +123,11 @@ class HnswIndex:
         sorted ascending. Classic Algorithm 2 of the HNSW paper."""
         links = self._links[level]
         visited = set(entries)
-        dists = self._dists(q, entries)
+        dists = self._dists(q, entries).tolist()
         # candidates: min-heap by dist; results: max-heap (negated) capped at ef
-        cand = [(float(d), n) for d, n in zip(dists, entries)]
+        cand = list(zip(dists, entries))
         heapq.heapify(cand)
-        res = [(-float(d), n) for d, n in zip(dists, entries)]
+        res = [(-d, n) for d, n in cand]
         heapq.heapify(res)
         while len(res) > ef:
             heapq.heappop(res)
@@ -129,8 +139,7 @@ class HnswIndex:
             if not nbrs:
                 continue
             visited.update(nbrs)
-            for nd, n in zip(self._dists(q, nbrs), nbrs):
-                nd = float(nd)
+            for nd, n in zip(self._dists(q, nbrs).tolist(), nbrs):
                 if len(res) < ef or nd < -res[0][0]:
                     heapq.heappush(cand, (nd, n))
                     heapq.heappush(res, (-nd, n))
@@ -156,16 +165,21 @@ class HnswIndex:
                     improved = True
         return node
 
-    def _shrink(self, node: int, level: int) -> None:
-        """Prune a node's link list to m_max by distance (select-simple)."""
-        cap = self.m0 if level == 0 else self.m
-        links = self._links[level]
+    def _add_link(self, node: int, new: int, dist: float, level: int, cap: int) -> None:
+        """Append `new` to `node`'s link list and prune it back to `cap` by
+        distance (select-simple). The stable sort of the cached distances
+        keeps the order `argsort(kind="stable")` of recomputed ones gave."""
+        links, link_dists = self._links[level], self._link_dists[level]
         lst = links[node]
-        if len(lst) <= cap:
-            return
-        d = self._dists(self._vecs[node], lst)
-        order = np.argsort(d, kind="stable")[:cap]
-        links[node] = [lst[i] for i in order]
+        ds = link_dists.get(node)
+        if ds is None:  # a node loaded by from_bytes: fill its cache once
+            ds = link_dists[node] = array("d", self._dists(self._vecs[node], lst).tolist())
+        lst.append(new)
+        ds.append(dist)
+        if len(lst) > cap:
+            order = sorted(range(len(lst)), key=ds.__getitem__)[:cap]
+            links[node] = [lst[i] for i in order]
+            link_dists[node] = array("d", [ds[i] for i in order])
 
     def add_batch(self, ids, vectors) -> None:
         """Insert rows in order. `ids` are external int64 labels (the
@@ -189,8 +203,10 @@ class HnswIndex:
         self._levels.append(level)
         while len(self._links) <= level:
             self._links.append({})
+            self._link_dists.append({})
         for lev in range(level + 1):
             self._links[lev][idx] = []
+            self._link_dists[lev][idx] = array("d")
         if self._entry < 0:
             self._entry = idx
             self._max_level = level
@@ -201,12 +217,11 @@ class HnswIndex:
         for lev in range(min(level, self._max_level), -1, -1):
             cand = self._search_layer(q, [cur], self.ef_construction, lev)
             cap = self.m0 if lev == 0 else self.m
-            nbrs = [n for _, n in cand[:cap]]
-            links = self._links[lev]
-            links[idx] = list(nbrs)
-            for n in nbrs:
-                links[n].append(idx)
-                self._shrink(n, lev)
+            top = cand[:cap]
+            self._links[lev][idx] = [n for _, n in top]
+            self._link_dists[lev][idx] = array("d", [d for d, _ in top])
+            for d, n in top:
+                self._add_link(n, idx, d, lev, cap)
             cur = cand[0][1]
         if level > self._max_level:
             self._entry = idx
@@ -281,6 +296,7 @@ class HnswIndex:
         offsets = z["link_offsets"]
         flat = z["link_flat"]
         idx._links = []
+        idx._link_dists = [{} for _ in range(n_levels)]
         pos = 0
         edge = 0
         for lev in range(n_levels):
@@ -323,7 +339,8 @@ def build_hnsw_shards(
     engine-portable, so a rebuild lands every row in the same shard. Each
     group's rows are sorted by id before insert so the graph itself is
     deterministic. Size `n_shards` so one shard's vectors + graph fit executor
-    memory (~(dim·4 + m·16) bytes/row); at 100 TB that's thousands of shards,
+    memory (~(dim·4 + m·32) bytes/row: the 2m-long level-0 link list and its
+    cached distances take 8 bytes a link each); at 100 TB that's thousands of shards,
     each still building independently. Returns (shard, n, dim, m, index)."""
 
     base = df.select(

@@ -400,6 +400,8 @@ def pq_recall_vs_exact(
     run through one batched ADC job (`adc_topk_batch`), not a per-query loop."""
     from lantern_extras_spark.operators.knn import EvalSet
 
-    coded = quantize(df, codebook, vec_col=vec_col)
     ev = EvalSet(df, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, seed=seed)
+    # the sampled queries carry the vector length: no quantize `first()` probe
+    dim = len(ev.queries[0][1]) if ev.queries else None
+    coded = quantize(df, codebook, vec_col=vec_col, dim=dim)
     return ev.recall(adc_topk_batch(coded, codebook, ev.queries, k=k, id_col=id_col))

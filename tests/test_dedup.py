@@ -850,6 +850,60 @@ def test_decontaminate_embeddings_flag_and_drop(spark):
         D.decontaminate_embeddings(corpus, bench, mode="nope")
 
 
+def test_lsh_candidate_pairs_matches_brute_force(spark):
+    """Hand-built signatures (2 bands × 2 rows, max_bucket=3) against a
+    brute-force bucket enumeration: a bucket of exactly max_bucket rows pairs,
+    one of max_bucket+1 is dropped, a duplicated id pairs once and never with
+    itself, a null id counts toward its bucket's size but never pairs, and
+    null signatures (empty-shingle docs) all share the "" key in every band."""
+    from itertools import combinations
+
+    rows = [
+        # band 0 "1_1": exactly max_bucket members
+        (10, [1, 1, 100, 100]), (11, [1, 1, 101, 101]), (12, [1, 1, 102, 102]),
+        # band 0 "2_2": max_bucket + 1 members, dropped
+        (20, [2, 2, 200, 200]), (21, [2, 2, 201, 201]),
+        (22, [2, 2, 202, 202]), (23, [2, 2, 203, 203]),
+        # duplicated id 30 (two rows) sharing band 1 "7_7" with 31
+        (30, [3, 3, 7, 7]), (30, [4, 4, 7, 7]), (31, [5, 5, 7, 7]),
+        # a null id in band 1 "8_8": three rows, two ids pair
+        (None, [6, 6, 8, 8]), (40, [9, 9, 8, 8]), (41, [10, 10, 8, 8]),
+        # a null id in band 1 "9_9": four rows (one null) — over the cap
+        (None, [11, 11, 9, 9]), (50, [12, 12, 9, 9]),
+        (51, [13, 13, 9, 9]), (52, [14, 14, 9, 9]),
+        # null signatures: key "" in both bands
+        (60, None), (61, None), (62, None),
+        # identical signatures: share both bands, still one pair
+        (70, [15, 15, 16, 16]), (71, [15, 15, 16, 16]),
+    ]
+    bands, per_band, max_bucket = 2, 2, 3
+    sigs = spark.createDataFrame(rows, "doc_id long, sig array<bigint>")
+    out = [
+        (r["id_a"], r["id_b"])
+        for r in D.lsh_candidate_pairs(
+            sigs, bands=bands, max_bucket=max_bucket, n_hashes=bands * per_band
+        ).collect()
+    ]
+    got = set(out)
+    assert len(out) == len(got)
+
+    buckets: dict = {}
+    for doc_id, sig in rows:
+        for b in range(bands):
+            key = "" if sig is None else "_".join(
+                str(v) for v in sig[b * per_band:(b + 1) * per_band])
+            buckets.setdefault((b, key), []).append(doc_id)
+    want = set()
+    for ids in buckets.values():
+        if len(ids) <= max_bucket:
+            want |= {(a, b) for a, b in combinations(sorted(i for i in ids if i is not None), 2)
+                     if a < b}
+    assert got == want
+    # the fixture reaches every case it names
+    assert {(10, 11), (10, 12), (11, 12), (30, 31), (40, 41), (60, 61), (70, 71)} <= got
+    assert (20, 21) not in got and (50, 51) not in got and (30, 30) not in got
+
+
 def test_band_store_join_is_shuffle_free_on_store_side(spark, corpus, tmp_path):
     """The 100 TB incremental-dedup claim made concrete: a band join against
     the BUCKETED signature store plans NO Exchange above the store's scan —

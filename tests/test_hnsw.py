@@ -2,6 +2,8 @@
 exhaustive-ef exactness (the property the oracle query relies on), and the
 reference-grid autotune sweep."""
 
+import hashlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -70,6 +72,48 @@ def test_exhaustive_ef_is_exact():
         got = [i for i, _ in idx.search(q, k=10, ef=n)]
         true = np.argsort(((X - q) ** 2).sum(1))[:10].tolist()
         assert got == true
+
+
+# SHA-256 of `to_bytes()` for the graphs built in `test_graph_golden_digests`.
+# The artifact is an npz with fixed zip entry timestamps, so the bytes are a
+# pure function of the graph: any change to levels, link order or pruning
+# shows up here. Recorded before the link-distance cache was introduced.
+_GOLDEN = {
+    "l2sq": "e19fb11029e7309082f94d86a85c688dffb60f43fbec8d03818385aad0ebd4d0",
+    "cos": "839ecfc1fff615eedcb6cbcc8fa86037d74a74e0685712066bde0f9f2ceea0a8",
+    "dot": "892b37cc578d39423cb0c0b6b7bdc8f733d72b09899167c190385960de0bd065",
+    "hamming": "fa16c1b4c5d3b76f27b610c948fecf889436802d2fc848a15e26197932d416f2",
+    "l2sq_reload": "7fab2e22dd906d65ec7059444a4596e4dce2ed0057e2a7838a780eabd22433b0",
+}
+
+
+def _golden_data(metric):
+    rng = np.random.RandomState(2024)
+    if metric == "hamming":
+        return (rng.rand(240, 12) > 0.5).astype(np.float32)
+    return rng.randn(240, 12).astype(np.float32)
+
+
+@pytest.mark.parametrize("metric", ["l2sq", "cos", "dot", "hamming"])
+def test_graph_golden_digests(metric):
+    """Two add_batch calls (m=6 keeps link lists at their caps, so nearly
+    every insert prunes) give a byte-identical artifact for every metric."""
+    X = _golden_data(metric)
+    idx = H.HnswIndex(12, m=6, ef_construction=24, metric=metric, seed=5)
+    idx.add_batch(np.arange(150) * 3, X[:150])
+    idx.add_batch(np.arange(150, 240) * 3, X[150:])
+    assert hashlib.sha256(idx.to_bytes()).hexdigest() == _GOLDEN[metric]
+
+
+def test_graph_golden_digest_after_reload():
+    """Inserting into a `from_bytes` index links new rows to loaded nodes
+    whose lists are already full; the result is still the recorded graph."""
+    X = _golden_data("l2sq")
+    idx = H.HnswIndex(12, m=6, ef_construction=24, metric="l2sq", seed=5)
+    idx.add_batch(np.arange(150), X[:150])
+    idx = H.HnswIndex.from_bytes(idx.to_bytes())
+    idx.add_batch(np.arange(150, 240), X[150:])
+    assert hashlib.sha256(idx.to_bytes()).hexdigest() == _GOLDEN["l2sq_reload"]
 
 
 # -- Spark layer --------------------------------------------------------------

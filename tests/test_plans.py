@@ -2,6 +2,8 @@
 A regression that drops filter pushdown, reads extra columns, or turns a
 broadcast join into a shuffle join fails here — before it costs cluster time."""
 
+import re
+
 import pytest
 
 import __spark_entry__ as E
@@ -130,6 +132,16 @@ def test_dedup_spans_no_nested_loop_join(spark):
     df = E.q_dedup_spans(spark, SF)
     s = plan_summary(df)
     assert "NestedLoop" not in s.text and "Cartesian" not in s.text, s.text
+
+
+def test_minhash_lsh_pairs_grouped_buckets_no_window(spark):
+    """LSH candidates come from one grouped shuffle per band bucket: no
+    bucket-size Window and no band-key self-join, so the only joins left in
+    the plan are the two verify joins (candidate ids to their shingle sets)."""
+    s = plan_summary(E.q_minhash_lsh_pairs(spark, SF))
+    assert "Window" not in s.text, s.text
+    joins = re.findall(r"\b(\w+Join|CartesianProduct)\b", s.text)
+    assert len(joins) == 2, joins
 
 
 def test_minhash_incremental_equi_band_join(spark):

@@ -167,3 +167,28 @@ def test_pq_recall_vs_exact_grows_with_codebook(spark):
         recs.append(PQ.pq_recall_vs_exact(df, cb, n_queries=4, k=5))
     assert all(0.0 <= r <= 100.0 for r in recs), recs
     assert recs[1] >= recs[0], recs
+
+
+def test_pq_recall_vs_exact_runs_no_dim_probe(spark):
+    """The vector length comes from the sampled queries, so `quantize` runs
+    no `first()` probe: 11 jobs in all, one fewer than with the probe."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = f"pq-recall-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "pq_recall_vs_exact")
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    rng = np.random.RandomState(1)
+    rows = [(i, rng.randn(16).astype("float32").tolist()) for i in range(100)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cb = PQ.build_codebook(df, splits=4, k=4, max_train_rows=100)
+    assert jobs(lambda: PQ.quantize(df, cb)) == jobs(lambda: PQ.quantize(df, cb, dim=16)) + 1
+    assert jobs(lambda: PQ.pq_recall_vs_exact(df, cb, n_queries=4, k=5)) == 11
