@@ -9,10 +9,11 @@ plays for the reference online; reference's index surface N1 is out of Spark
 scope per BASELINE.json).
 
 Spark design:
-- `build_ivf` fits coarse centroids on a bounded sample (same seeded k-means as
-  PQ) and attaches a `cell` column. Persisting the result **partitioned by
-  cell** turns every probe into partition pruning: a query reads nprobe/nlist
-  of the data — the scan itself shrinks, not just the compute.
+- `build_ivf` fits coarse centroids on a bounded sample (PQ's seeded k-means
+  with one split, inside one Spark task) and attaches a `cell` column.
+  Persisting the result **partitioned by cell** turns every probe into
+  partition pruning: a query reads nprobe/nlist of the data — the scan itself
+  shrinks, not just the compute.
 - `ivf_topk` ranks centroids driver-side (nlist is small), filters to probed
   cells (`cell IN (...)` pushes to parquet when the table is partitioned), and
   runs exact distance top-k inside the probed subset.
@@ -28,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from lantern_extras_spark.operators.knn import distance_col
-from lantern_extras_spark.operators.pq import _kmeans_fit
+from lantern_extras_spark.operators.pq import _train
 from lantern_extras_spark.session import local_frame
 
 
@@ -45,19 +46,11 @@ def build_ivf(
     nearest-centroid cell id. Returns (df+cell, centroids).
 
     Write the result with `.write.partitionBy(cell_col)` so probes prune
-    partitions at the storage layer. Pass `total_rows` to skip the count job."""
-    total = total_rows if total_rows is not None else df.count()
-    frac = min(1.0, max_train_rows / max(total, 1) * 1.2)
-    sample = df.select(vec_col).sample(fraction=frac, seed=seed).limit(max_train_rows).collect()
-    X = np.array([list(map(float, r[0])) for r in sample], dtype=np.float64)
-    # canonical row order before the fit: collect() order follows parquet
-    # FILE-ENUMERATION order, which varies with written-file UUIDs — without
-    # this sort the seeded k-means init picks different rows per rebuild and
-    # "same data, same seed" fits drift between runs (r10 root-cause of a
-    # flaky refresh-recall test)
-    if len(X):
-        X = X[np.lexsort(X.T[::-1])]
-    centroids = _kmeans_fit(X, nlist, seed=seed)
+    partitions at the storage layer. Pass `total_rows` to skip the count job.
+    The fit is PQ's with one split (`pq._train`): it runs in one Spark task
+    and only the centroids reach the driver. Raises ValueError when the
+    sample is empty."""
+    (centroids,) = _train(df, vec_col, 1, nlist, max_train_rows, seed, total_rows=total_rows)
     assigned = assign_cells(df, centroids.tolist(), vec_col, cell_col)
     return assigned, [list(map(float, c)) for c in centroids]
 
@@ -661,9 +654,10 @@ def build_ivf_pq(
     the sampling count job (autotune sweeps probe the count once)."""
     from lantern_extras_spark.operators import pq as PQ
 
+    total = total_rows if total_rows is not None else df.count()
     indexed, centroids = build_ivf(df, vec_col=vec_col, nlist=nlist,
                                    max_train_rows=max_train_rows, seed=seed,
-                                   total_rows=total_rows)
+                                   total_rows=total)
     cents_arr = F.array(*[F.lit([float(x) for x in c]).cast("array<double>") for c in centroids])
     residual = F.zip_with(
         F.col(vec_col).cast("array<double>"),
@@ -671,9 +665,11 @@ def build_ivf_pq(
         lambda a, b: (a - b).cast("float"),
     )
     with_res = indexed.withColumn("__residual", residual)
+    # with_res has df's rows: the one count serves both samples
     codebook = PQ.build_codebook(with_res, vec_col="__residual", splits=splits, k=k,
-                                 max_train_rows=max_train_rows, seed=seed)
-    coded = PQ.quantize(with_res, codebook, vec_col="__residual").drop("__residual")
+                                 max_train_rows=max_train_rows, seed=seed, total_rows=total)
+    coded = PQ.quantize(with_res, codebook, vec_col="__residual",
+                        dim=len(centroids[0])).drop("__residual")
     return coded, centroids, codebook
 
 

@@ -12,13 +12,18 @@ Reference surface (SURVEY.md §2.9):
   entirely into Spark partitioning — nothing to port.
 
 Scale design:
-- Codebook fit runs on a bounded sample (`max_train_rows`) pulled to the driver as
-  numpy — identical to the reference's `--dataset-limit` practice and standard for
-  PQ (codebooks converge on ~100k samples regardless of corpus size). The fit is
-  seeded Lloyd's with kmeans++-style deterministic init → bit-reproducible.
-- Quantization of the full table is an Arrow-batched pandas UDF with the codebook
-  broadcast as one (splits × k × subdim) numpy tensor: per batch one BLAS GEMM per
-  subvector, no shuffle, scales linearly with the scan.
+- Codebook fit runs on a bounded sample (`max_train_rows`) — identical to the
+  reference's `--dataset-limit` practice and standard for PQ (codebooks
+  converge on ~100k samples regardless of corpus size). The fit is seeded
+  Lloyd's with kmeans++-style deterministic init → bit-reproducible. The
+  sample, its canonical sort and every subvector fit run inside ONE Spark
+  task (an Arrow kernel over the limit's single partition); the driver
+  receives only the k×splits centroids, and the codebook frame it builds
+  keeps its float64 tensor so `quantize` does not collect it back.
+- Quantization of the full table is an Arrow kernel (`mapInArrow`) with the
+  codebook broadcast as one (splits × k × subdim) numpy tensor: per batch one
+  reshape of the vector column and one BLAS GEMM per subvector, every other
+  column passed through as Arrow, no shuffle; scales linearly with the scan.
 - Codes are `array<smallint>` by default (oracle/array-function friendly);
   `as_binary=True` packs to BinaryType (1 byte/code — the PQVEC layout) for
   storage-bound corpora.
@@ -26,10 +31,12 @@ Scale design:
 
 from __future__ import annotations
 
+import weakref
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -45,7 +52,6 @@ from pyspark.sql.types import (
 )
 
 from lantern_extras_spark.session import local_frame
-from lantern_extras_spark.worker import prepare as prepare_worker
 
 
 def split_bounds(dim: int, splits: int) -> list[tuple[int, int]]:
@@ -87,6 +93,103 @@ def _kmeans_fit(X: np.ndarray, k: int, max_iter: int = 20, tol: float = 0.1, see
     return centroids
 
 
+# float64 tensor of each codebook frame `build_codebook` returned in this
+# process, so `quantize`, `decode` and the ADC scans do not collect it back.
+# Weak keys: a frame that is garbage-collected drops its entry.
+_TENSORS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+_FIT_SCHEMA = StructType(
+    [
+        StructField("subvector_id", IntegerType(), False),
+        StructField("centroid_id", IntegerType(), False),
+        StructField("c", ArrayType(DoubleType(), False), False),
+    ]
+)
+
+
+def _vectors(arr: pa.Array) -> np.ndarray:
+    """(n, dim) float64 matrix of an Arrow list column of equal-length
+    vectors: one reshape of the flattened values, no per-row objects."""
+    if arr.null_count:
+        raise ValueError("null vector")
+    lens = np.diff(arr.offsets.to_numpy())
+    if len(lens) and (lens != lens[0]).any():
+        raise ValueError("vectors differ in length")
+    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return flat.reshape(len(arr), int(lens[0]) if len(lens) else 0)
+
+
+def _train(
+    df: DataFrame,
+    vec_col: str,
+    splits: int,
+    k: int,
+    max_train_rows: int,
+    seed: int,
+    max_iter: int = 20,
+    tol: float = 0.1,
+    total_rows: int | None = None,
+) -> list[np.ndarray]:
+    """Fit `k` centroids per subvector on a seeded `df.sample` capped at
+    `max_train_rows` (Q6 semantics); returns one float64 (k, subdim) matrix
+    per split. The limit leaves the sample in one partition, and one Arrow
+    kernel over it sorts it and runs every fit: the driver receives only the
+    k×splits centroids."""
+    total = total_rows if total_rows is not None else df.count()
+    frac = min(1.0, max_train_rows / max(total, 1) * 1.2)
+    # the limit keeps the first `max_train_rows` sampled rows in (partition,
+    # row) order — the rows a driver-side `limit().collect()` takes — however
+    # the exchange into the one partition orders them; Spark plans it as a
+    # bounded top-k (TakeOrderedAndProject)
+    sample = (
+        df.select(vec_col)
+        .sample(fraction=frac, seed=seed)
+        .withColumn("__pos", F.monotonically_increasing_id())
+        .orderBy("__pos")
+        .limit(max_train_rows)
+        .select(vec_col)
+    )
+
+    def fit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from concurrent.futures import ThreadPoolExecutor
+
+        cols = [b.column(0) for b in batches if b.num_rows]
+        if not cols:
+            return
+        X = _vectors(pa.concat_arrays(cols))
+        # canonical row order before the fit: the sample's row order follows
+        # parquet file-enumeration order, which varies with written-file
+        # UUIDs; without this sort the seeded init picks different rows per
+        # rebuild and "same data, same seed" fits drift between runs
+        X = X[np.lexsort(X.T[::-1])]
+        bounds = split_bounds(X.shape[1], splits)
+
+        def one(s: int) -> np.ndarray:
+            lo, hi = bounds[s]
+            return _kmeans_fit(X[:, lo:hi], k, max_iter=max_iter, tol=tol, seed=seed + s)
+
+        # the subvector fits are independent and numpy's GEMMs run outside
+        # the GIL, so threads overlap them (the reference uses rayon here,
+        # codebook.rs:248); the task's BLAS is single-threaded (Spark sets
+        # OMP_NUM_THREADS to spark.task.cpus)
+        with ThreadPoolExecutor(max_workers=min(splits, 16)) as pool:
+            cents = list(pool.map(one, range(splits)))
+        sizes = [len(m) for m in cents]
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.repeat(np.arange(splits, dtype=np.int32), sizes)),
+                pa.array(np.concatenate([np.arange(n, dtype=np.int32) for n in sizes])),
+                pa.array([c for m in cents for c in m], pa.list_(pa.float64())),
+            ],
+            names=_FIT_SCHEMA.fieldNames(),
+        )
+
+    rows = sorted(sample.mapInArrow(fit, _FIT_SCHEMA).collect(), key=lambda r: (r[0], r[1]))
+    if not rows:
+        raise ValueError(f"no training rows in {vec_col!r}")
+    return [np.array([r[2] for r in rows if r[0] == s], dtype=np.float64) for s in range(splits)]
+
+
 def build_codebook(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -102,33 +205,16 @@ def build_codebook(
     — the reference codebook table shape (pq/setup.rs:27).
 
     Training sample is seeded `df.sample` capped at `max_train_rows` (Q6
-    semantics); each subvector is fit independently. Pass `total_rows` to skip
-    the count job (sweeps rebuild codebooks per variant — one count suffices).
+    semantics); each subvector is fit independently, all of them inside one
+    Spark task (see `_train`). Pass `total_rows` to skip the count job (sweeps
+    rebuild codebooks per variant — one count suffices). Raises ValueError
+    when the sample is empty. `quantize`, `decode` and the ADC scans given the
+    returned frame reuse its tensor instead of collecting it.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    spark = df.sparkSession
-    total = total_rows if total_rows is not None else df.count()
-    frac = min(1.0, max_train_rows / max(total, 1) * 1.2)
-    sample = df.select(vec_col).sample(fraction=frac, seed=seed).limit(max_train_rows).collect()
-    X = np.array([list(map(float, r[0])) for r in sample], dtype=np.float64)
-    # canonical row order before the fit (same rationale as build_ivf):
-    # collect() follows parquet file-enumeration order, which varies with
-    # written-file UUIDs — sort so seeded fits are layout-independent
-    if len(X):
-        X = X[np.lexsort(X.T[::-1])]
-    dim = X.shape[1]
-    bounds = split_bounds(dim, splits)
-
-    def fit(sub_id: int) -> list:
-        lo, hi = bounds[sub_id]
-        cents = _kmeans_fit(X[:, lo:hi], k, max_iter=max_iter, tol=tol, seed=seed + sub_id)
-        return [(sub_id, cid, [float(x) for x in c]) for cid, c in enumerate(cents)]
-
-    # subvector fits are independent; BLAS releases the GIL, so a thread pool
-    # gives near-linear speedup (the reference uses rayon here, codebook.rs:248)
-    with ThreadPoolExecutor(max_workers=min(splits, 16)) as pool:
-        rows = [r for chunk in pool.map(fit, range(splits)) for r in chunk]
+    mats = _train(df, vec_col, splits, k, max_train_rows, seed, max_iter, tol, total_rows)
+    # the table stores float32; encode with exactly the values it holds
+    mats = [m.astype(np.float32).astype(np.float64) for m in mats]
+    rows = [(s, cid, c.tolist()) for s, m in enumerate(mats) for cid, c in enumerate(m)]
     schema = StructType(
         [
             StructField("subvector_id", IntegerType(), False),
@@ -136,7 +222,9 @@ def build_codebook(
             StructField("c", ArrayType(FloatType(), False), False),
         ]
     )
-    return local_frame(spark, rows, schema)
+    frame = local_frame(df.sparkSession, rows, schema)
+    _TENSORS[frame] = mats
+    return frame
 
 
 CODEBOOK_SCHEMA = "subvector_id int, centroid_id int, c array<float>"
@@ -156,8 +244,12 @@ def load_codebook(spark, path: str) -> DataFrame:
 
 
 def _codebook_tensor(codebook: DataFrame) -> tuple[list[np.ndarray], int]:
-    """Collect the codebook into per-subvector centroid matrices (subdims may differ
-    on the last split)."""
+    """Per-subvector centroid matrices of the codebook (subdims may differ on
+    the last split): the recorded tensor of a frame `build_codebook` returned,
+    else collected (e.g. a `load_codebook` frame)."""
+    mats = _TENSORS.get(codebook)
+    if mats is not None:
+        return mats, len(mats)
     rows = codebook.select("subvector_id", "centroid_id", "c").collect()
     splits = max(r[0] for r in rows) + 1
     mats: list[np.ndarray] = []
@@ -203,20 +295,20 @@ def quantize(
         dim = len(df.select(vec_col).first()[0])
     bounds = split_bounds(dim, splits)
 
-    fields = df.schema.fields + [
-        StructField(out_col, BinaryType() if as_binary else ArrayType(ShortType(), False))
-    ]
-    out_schema = StructType(fields)
-    cols = [f.name for f in df.schema.fields]
+    out_schema = StructType(
+        df.schema.fields
+        + [StructField(out_col, BinaryType() if as_binary else ArrayType(ShortType(), False))]
+    )
+    names = out_schema.fieldNames()
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_worker()  # the closure reaches no other package code
+    def assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         cb = b_mats.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()])
-            codes = np.empty((len(pdf), splits), dtype=np.int16)
+            X = _vectors(batch.column(vec_col))
+            codes = np.empty((n, splits), dtype=np.int16)
             for s, (lo, hi) in enumerate(bounds):
                 C = cb[s]
                 Xs = X[:, lo:hi]
@@ -231,13 +323,20 @@ def quantize(
                         # oracle's sequential list_sum(Σ(x−c)²) association
                         d[:, j] = np.cumsum(sq, axis=1)[:, -1]
                 codes[:, s] = d.argmin(axis=1)
+            # every other column passes through as Arrow; the codes are one
+            # fixed-stride list (or binary) array over the flat code buffer
+            offsets = pa.py_buffer(np.arange(0, n * splits + 1, splits, dtype=np.int32))
             if as_binary:
-                pdf[out_col] = [bytes(row.astype(np.uint8)) for row in codes]
+                flat = pa.py_buffer(codes.astype(np.uint8).tobytes())
+                out = pa.Array.from_buffers(pa.binary(), n, [None, offsets, flat])
             else:
-                pdf[out_col] = [row.tolist() for row in codes]
-            yield pdf[cols + [out_col]]
+                out = pa.Array.from_buffers(
+                    pa.list_(pa.field("element", pa.int16(), False)), n, [None, offsets],
+                    children=[pa.array(codes.ravel())],
+                )
+            yield pa.RecordBatch.from_arrays(batch.columns + [out], names=names)
 
-    return df.mapInPandas(assign, out_schema)
+    return df.mapInArrow(assign, out_schema)
 
 
 def decode(

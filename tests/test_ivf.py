@@ -356,3 +356,62 @@ def test_build_ivf_centroids_layout_independent(spark, tmp_path):
         _, c = build_ivf(back, nlist=4, seed=7)
         cents.append(np.array(sorted(tuple(v) for v in c)))
     assert np.array_equal(cents[0], cents[1])
+
+
+def test_build_ivf_golden_digest(spark):
+    """Centroids and cells of a seeded fit stay byte-identical. The sample
+    keeps every row, so the digest does not depend on the partition layout."""
+    import hashlib
+
+    rng = np.random.RandomState(77)
+    centers = rng.randn(5, 12) * 4
+    rows = [(i, (centers[i % 5] + rng.randn(12)).astype("float32").tolist()) for i in range(300)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    assigned, cents = IVF.build_ivf(df, nlist=6, max_train_rows=300, seed=3)
+    cells = [r["cell"] for r in sorted(assigned.collect(), key=lambda r: r["vec_id"])]
+    assert hashlib.sha256(np.asarray(cents, dtype=np.float64).tobytes()).hexdigest() == (
+        "41427c59512f14ef66cd35012f821ad2c87a12d6b7ad7e2f73bca0091409daf9")
+    assert hashlib.sha256(np.asarray(cells, dtype=np.int32).tobytes()).hexdigest() == (
+        "4d39124d4952a01959f938c3fa8dd6ee751b1e47005b9d5eeb1a7825d0433fbc")
+
+
+def test_build_ivf_empty_sample_raises(spark):
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="no training rows"):
+        IVF.build_ivf(empty, nlist=4)
+
+
+def test_build_ivf_pq_counts_input_once(spark, clustered, monkeypatch):
+    """Without `total_rows` the input is counted once, and that count serves
+    both the coarse and the residual sample; with it nothing is counted. The
+    residual count ran the cell-assignment kernel over the whole table."""
+    import uuid
+
+    sc = spark.sparkContext
+    counted = []
+    frame_cls = type(clustered)
+    real_count = frame_cls.count
+
+    def count(self):
+        counted.append(self)
+        return real_count(self)
+
+    def jobs(fn):
+        group = f"ivf-pq-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "build_ivf_pq")
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def build(**kw):
+        return lambda: IVF.build_ivf_pq(clustered, nlist=4, splits=4, k=8, max_train_rows=200, **kw)
+
+    one_count = jobs(clustered.count)
+    monkeypatch.setattr(frame_cls, "count", count)
+    with_total = jobs(build(total_rows=200))
+    assert counted == []
+    assert jobs(build()) == with_total + one_count
+    assert counted == [clustered]

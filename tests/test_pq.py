@@ -171,7 +171,8 @@ def test_pq_recall_vs_exact_grows_with_codebook(spark):
 
 def test_pq_recall_vs_exact_runs_no_dim_probe(spark):
     """The vector length comes from the sampled queries, so `quantize` runs
-    no `first()` probe: 11 jobs in all, one fewer than with the probe."""
+    no `first()` probe. A codebook built in this process is not collected
+    back by `quantize` or `adc_topk_batch`: 9 jobs in all."""
     import uuid
 
     sc = spark.sparkContext
@@ -191,4 +192,111 @@ def test_pq_recall_vs_exact_runs_no_dim_probe(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cb = PQ.build_codebook(df, splits=4, k=4, max_train_rows=100)
     assert jobs(lambda: PQ.quantize(df, cb)) == jobs(lambda: PQ.quantize(df, cb, dim=16)) + 1
-    assert jobs(lambda: PQ.pq_recall_vs_exact(df, cb, n_queries=4, k=5)) == 11
+    assert jobs(lambda: PQ.pq_recall_vs_exact(df, cb, n_queries=4, k=5)) == 9
+
+
+# ---------------------------------------------------------------------------
+# Golden digests: the codebook fit and the encode must stay byte-identical
+# whatever runs them. `max_train_rows` covers every row, so the sample keeps
+# all of them and the digests do not depend on the partition layout.
+# ---------------------------------------------------------------------------
+
+CODEBOOK_GOLDEN = {
+    16: "e474f37ca3e80c19f58165c8e4c422a613b7f8eca45319f6f569dfc887573af8",
+    18: "99d33e1b9a496fda87eefc39f84bf59fee318eef5842385fd5bbdbd596859a3c",
+}
+CODES_GOLDEN = "57b4c737cb12f386156374cccec0a4bb937038f701f044eccea85962f663adf9"
+
+
+def _sha(parts) -> str:
+    import hashlib
+
+    h = hashlib.sha256()
+    for p in parts:
+        h.update(p)
+    return h.hexdigest()
+
+
+def _golden_frame(spark, dim: int):
+    rng = np.random.RandomState(2024 + dim)
+    rows = [(i, rng.randn(dim).astype("float32").tolist()) for i in range(400)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _codebook_digest(cb) -> str:
+    import struct
+
+    rows = sorted((r["subvector_id"], r["centroid_id"], r["c"]) for r in cb.collect())
+    return _sha(struct.pack("<ii", s, c) + np.asarray(v, dtype=np.float32).tobytes()
+                for s, c, v in rows)
+
+
+@pytest.mark.parametrize("dim", [16, 18])
+def test_codebook_golden_digest(spark, dim):
+    """splits=4 over dim 16 (even splits) and dim 18 (last split of 6)."""
+    cb = PQ.build_codebook(_golden_frame(spark, dim), splits=4, k=8, max_train_rows=400, seed=5)
+    assert _codebook_digest(cb) == CODEBOOK_GOLDEN[dim]
+
+
+@pytest.mark.parametrize("formulation", ["gemm", "direct"])
+@pytest.mark.parametrize("as_binary", [False, True])
+def test_quantize_golden_digest(spark, formulation, as_binary):
+    df = _golden_frame(spark, 18)
+    cb = PQ.build_codebook(df, splits=4, k=8, max_train_rows=400, seed=5)
+    coded = PQ.quantize(df, cb, as_binary=as_binary, dim=18, formulation=formulation)
+    rows = sorted((r["vec_id"], r["pqvec"]) for r in coded.collect())
+    assert coded.columns == ["vec_id", "embedding", "pqvec"]
+    assert _sha(bytes(np.asarray(list(c), dtype=np.uint8)) for _, c in rows) == CODES_GOLDEN
+
+
+def test_fit_sees_the_rows_collect_limit_returns(spark):
+    """When the sample holds more than `max_train_rows` rows, the fit sees
+    those a driver-side `limit().collect()` returns (the first ones in
+    partition order), not the first ones to reach the fitting task."""
+    df = _golden_frame(spark, 16)
+    frac = min(1.0, 100 / 400 * 1.2)
+    assert df.sample(fraction=frac, seed=5).count() > 100
+    rows = df.select("embedding").sample(fraction=frac, seed=5).limit(100).collect()
+    X = np.array([r[0] for r in rows], dtype=np.float64)
+    X = X[np.lexsort(X.T[::-1])]
+    want = [PQ._kmeans_fit(X[:, lo:hi], 8, seed=5 + s) for s, (lo, hi) in enumerate(PQ.split_bounds(16, 4))]
+    got = PQ._train(df, "embedding", 4, 8, 100, 5, total_rows=400)
+    assert len(got) == 4 and all(np.array_equal(a, b) for a, b in zip(got, want))
+
+def test_codebook_tensor_dropped_with_frame(spark):
+    """`build_codebook` records its frame's tensor for `quantize`; the entry
+    goes once the frame is garbage-collected."""
+    import gc
+    import weakref
+
+    cb = PQ.build_codebook(_golden_frame(spark, 16), splits=4, k=8, max_train_rows=400, seed=5)
+    assert cb in PQ._TENSORS
+    mats, splits = PQ._codebook_tensor(cb)
+    assert splits == 4 and [m.shape for m in mats] == [(8, 4)] * 4
+    ref = weakref.ref(cb)
+    before = len(PQ._TENSORS)
+    del cb, mats
+    gc.collect()
+    assert ref() is None
+    assert len(PQ._TENSORS) == before - 1
+
+
+def test_quantize_loaded_codebook_same_codes(spark, tmp_path):
+    """A `load_codebook` frame has no recorded tensor: `quantize` collects it
+    and encodes exactly as with the in-process frame."""
+    df = _golden_frame(spark, 18)
+    cb = PQ.build_codebook(df, splits=4, k=8, max_train_rows=400, seed=5)
+    PQ.save_codebook(cb, str(tmp_path / "cb"))
+    loaded = PQ.load_codebook(spark, str(tmp_path / "cb"))
+    assert loaded not in PQ._TENSORS
+    a, b = (
+        sorted((r["vec_id"], bytes(r["pqvec"])) for r in PQ.quantize(df, c, as_binary=True, dim=18).collect())
+        for c in (cb, loaded)
+    )
+    assert a == b
+
+
+def test_build_codebook_empty_sample_raises(spark):
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="no training rows"):
+        PQ.build_codebook(empty, splits=4, k=8)
