@@ -1222,9 +1222,10 @@ def q_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
     bench-friendly at sf0.1), within-cell cosine prune with the first-wins winner
     rule. Hash-checked end to end: the oracle replays cell assignment
     (argmin-l2sq, min-struct tie-break), the within-cell pair join, the
-    cosine, and the min-id winner pick. impl="native" is the replay config;
-    the k-means + GEMM pandas impl is the scale path (parity pinned in
-    tests/test_dedup.py)."""
+    cosine, and the min-id winner pick. The native impl's Column pair join
+    is the replay config (its cells come from the same exact assignment
+    kernel as the pandas impl); the k-means + GEMM pandas impl is the scale
+    path (parity pinned in tests/test_dedup.py)."""
     emb = _t(spark, sf, "embeddings")
     cents_rows = emb.where(F.col("vec_id") < 32).orderBy("vec_id").collect()
     centroids = [list(map(float, r["embedding"])) for r in cents_rows]
@@ -1503,7 +1504,7 @@ EMB_DIM = 64
 
 def q_ivf_search(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-style ANN with a deterministic coarse codebook (centroids = vectors
-    of vec_id<4): assign cells natively, probe the 2 cells nearest the query,
+    of vec_id<4): assign cells, probe the 2 cells nearest the query,
     exact top-5 inside the probed subset. The same structure backed by k-means
     centroids + cell-partitioned storage is the 100 TB scale path
     (operators/ivf.py; partition pruning does the reading)."""
@@ -1512,8 +1513,9 @@ def q_ivf_search(spark: SparkSession, sf: str) -> DataFrame:
     centroids = [list(map(float, r["embedding"])) for r in cents_rows]
     dim = len(centroids[0])
     qv = _hash_embed_py(IVF_QUERY_TEXT, dim=dim)
-    # native expression: same (a-b)^2 summation order as the SQL oracle
-    indexed = IVF.assign_cells(emb, centroids, vec_col="embedding", impl="native")
+    # the assignment kernel's cells are the exact (a-b)^2 fold argmin, the
+    # SQL oracle's summation order
+    indexed = IVF.assign_cells(emb, centroids, vec_col="embedding")
     out = IVF.ivf_topk(indexed, centroids, qv, k=5, nprobe=2, metric="l2sq",
                        vec_col="embedding", id_col="vec_id")
     return out.select(
@@ -1524,8 +1526,8 @@ def q_ivf_search(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_ivf_pq_search(spark: SparkSession, sf: str) -> DataFrame:
     """IVF∘PQ residual composition (the classic IVF-PQ layout, ivf.py:191-288):
-    deterministic coarse codebook (centroids = vectors of vec_id<4, native-
-    expression cell assignment), residual = v − centroid[cell], deterministic
+    deterministic coarse codebook (centroids = vectors of vec_id<4, exact
+    fold cell assignment), residual = v − centroid[cell], deterministic
     residual PQ codebook (residuals of vec_id<8 sliced into 4 subvectors — the
     q_pq_assign trick), ADC top-10 over the 2 probed cells. Exercises the full
     cell-pruned ADC path (probe → per-cell LUT → code lookups → top-k) with a
@@ -1536,7 +1538,7 @@ def q_ivf_pq_search(spark: SparkSession, sf: str) -> DataFrame:
     # previous two jobs (coarse collect + a second collect that re-ran the
     # assign/residual plan for vec_id<8). The codebook rows' cells and
     # residuals are replayed driver-side with the IDENTICAL arithmetic as
-    # the native fold: sequential left-to-right double sums, strict-<
+    # assign_cells' exact fold: sequential left-to-right double sums, strict-<
     # first-wins argmin, elementwise double subtraction — Python floats ARE
     # IEEE doubles, so the values are bit-identical (pinned by
     # tests/test_plans.py::test_ivf_pq_codebook_driver_replay).
@@ -1547,7 +1549,7 @@ def q_ivf_pq_search(spark: SparkSession, sf: str) -> DataFrame:
         .collect()
     )
     coarse = [list(map(float, r["embedding"])) for r in rows8 if r["vec_id"] < 4]
-    indexed = IVF.assign_cells(emb, coarse, vec_col="embedding", impl="native")
+    indexed = IVF.assign_cells(emb, coarse, vec_col="embedding")
     cents_arr = F.array(*[F.lit(c).cast("array<double>") for c in coarse])
     with_res = indexed.withColumn(
         "rv",
@@ -1657,12 +1659,11 @@ def q_ivf_knn_join(spark: SparkSession, sf: str) -> DataFrame:
     (eval vectors vs training corpus; the vector analog of `decontaminate`).
     Deterministic coarse codebook (centroids = vectors of vec_id<4, the
     q_ivf_search trick), queries = vec_id<10, corpus = vec_id≥10; every query
-    explodes into its 2 nearest cells, corpus rows assign natively, one
-    equi-join on cell + exact distances inside probed cells, top-5 per query.
-    The DuckDB oracle replays every stage (assign → probe → join → rank).
-    impl='native' here for bit-identical fold arithmetic; the pandas cogroup
-    kernel is pinned equal in tests/test_ivf.py and benched as the scale
-    path."""
+    explodes into its 2 nearest cells, corpus rows assign to theirs, one
+    cogroup on cell + exact distances inside probed cells, top-5 per query.
+    The DuckDB oracle replays every stage (assign → probe → join → rank);
+    the Arrow kernels' fold distances are bit-identical to its arithmetic,
+    so the oracle certifies the scale path itself."""
     emb = _t(spark, sf, "embeddings")
     cents_rows = emb.where(F.col("vec_id") < 4).orderBy("vec_id").collect()
     centroids = [list(map(float, r["embedding"])) for r in cents_rows]
@@ -1672,7 +1673,7 @@ def q_ivf_knn_join(spark: SparkSession, sf: str) -> DataFrame:
     corpus = emb.where(F.col("vec_id") >= 10)
     out = IVF.ivf_knn_join(
         corpus, queries, k=5, nprobe=2, metric="l2sq", centroids=centroids,
-        id_col="vec_id", vec_col="embedding", impl="native", dist_scale=5,
+        id_col="vec_id", vec_col="embedding", dist_scale=5,
     )
     return out.select(
         "query_id", "vec_id", F.col("distance").alias("l2sq_distance"),
@@ -1946,7 +1947,7 @@ def q_embedding_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     corpus = emb.where(F.col("vec_id") >= 10)
     out = D.decontaminate_embeddings(
         corpus, bench, max_distance=0.85, metric="cos", mode="flag",
-        nprobe=2, centroids=centroids, impl="native", dist_scale=6,
+        nprobe=2, centroids=centroids, dist_scale=6,
     )
     return out.select(
         "vec_id", "bench_id", F.col("distance").alias("cos_distance")

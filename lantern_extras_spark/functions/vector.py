@@ -7,8 +7,9 @@ Everything here is pure `pyspark.sql.functions` — higher-order functions over
 `array<float|double>` columns. That keeps the hot path inside JVM whole-stage codegen:
 no Python round-trip, vectorized parquet scan straight into the expression. For a
 100 TB scan with a distance in the predicate or projection this is the difference
-between a bandwidth-bound job and a Python-bound one. A numpy pandas-UDF variant
-exists in operators/knn.py for the top-k kernel where batch BLAS wins.
+between a bandwidth-bound job and a Python-bound one. The numpy mirror for the
+Arrow kernels is operators/_distance.py: `fold` evaluates these same folds bit
+for bit, and `gemm` is the batch-BLAS ranking they are re-scored from.
 
 All functions cast inputs to double before arithmetic so results are deterministic
 and match the DuckDB oracle (which computes list functions in double after a

@@ -96,22 +96,16 @@ def minhash_signatures(
     id_col: str = "doc_id",
     n_hashes: int = 32,
     shingle_n: int = 3,
-    impl: str = "pandas",
 ) -> DataFrame:
     """(id, shingles, sig) — MinHash signature as array<bigint> of length n_hashes.
 
     One md5-based hash per *distinct* shingle; the n_hashes permutations are
-    integer affine maps over that value (Broder's universal-hash MinHash).
-    Values are identical between both impls (and to the DuckDB oracle):
-
-    - impl="pandas" (default): Arrow-batched kernel — hashlib md5 once per
-      shingle, then an (n_shingles × n_hashes) numpy min-reduce. Spark's
-      higher-order-function lambdas re-evaluate their inner expression per
-      outer element, so the native form costs n_hashes× the md5 work; the
-      kernel computes each hash exactly once. At 100 TB this stage is a pure
-      narrow map either way — no shuffle.
-    - impl="native": pure Column expressions (no Python workers); right choice
-      for small n_hashes or environments without Arrow.
+    integer affine maps over that value (Broder's universal-hash MinHash),
+    so values equal the DuckDB oracle's `hash32` replay. An Arrow-batched
+    kernel: hashlib md5 once per shingle, then an (n_shingles × n_hashes)
+    numpy min-reduce (a Column form would re-evaluate the md5 in every
+    higher-order lambda, n_hashes× the work). At 100 TB this stage is a pure
+    narrow map — no shuffle.
     """
     # project tokens into a real column first: a multi-use alias survives
     # CollapseProject, so the split runs once per row instead of once per
@@ -120,19 +114,6 @@ def minhash_signatures(
         F.col(id_col),
         F.array_distinct(word_ngrams_of(F.col("__toks"), shingle_n)).alias("shingles"),
     )
-
-    if impl == "native":
-        hs = F.transform(F.col("shingles"), lambda s: hash32(s))
-
-        def perm(i: int):
-            a, b = perm_coeffs(i)
-            return lambda h: (h * a + b) % MINHASH_PRIME
-
-        sig = F.array(*[F.array_min(F.transform(hs, perm(i))) for i in range(n_hashes)])
-        return base.select(F.col(id_col), F.col("shingles"), sig.alias("sig"))
-
-    if impl != "pandas":
-        raise ValueError(f"unknown impl {impl!r}")
 
     import hashlib
 
@@ -840,7 +821,7 @@ def simhash_col(c: Column | str, bits: int = 32) -> Column:
     """SimHash as a pure Column expression (usable on streams — no Python
     workers, no shuffle). HOF re-evaluation makes it `bits`× the md5 work of
     the Arrow kernel; right for live feeds, wrong for backfills (use
-    `simhash(impl='pandas')` there). bits > 32 draws token hashes from the
+    `simhash` there). bits > 32 draws token hashes from the
     60-bit portable hash (same md5, more digits)."""
     if not 1 <= bits <= 60:
         raise ValueError("bits must be in [1, 60]")
@@ -870,17 +851,16 @@ def simhash(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 32,
-    impl: str = "pandas",
 ) -> DataFrame:
     """(id, simhash) — classic SimHash: bit b of the signature is 1 iff the
     count-weighted majority of token hashes has bit b set. Hashes are the
-    portable md5-based hash32, so both impls (and the DuckDB oracle) agree
-    bit-for-bit.
+    portable md5-based hash32, so the signature equals `simhash_col` and the
+    DuckDB oracle bit-for-bit.
 
-    impl="pandas" (default): Arrow kernel — one md5 per token occurrence, the
-    per-bit majority as a numpy popcount matrix. The native Column form
+    An Arrow kernel: one md5 per token occurrence, the per-bit majority as a
+    numpy popcount matrix. `simhash_col` is the Column form for streams; it
     re-evaluates the token-hash array once per bit (HOF lambda semantics:
-    `bits`× the md5 work), so it's kept for Arrow-less environments only.
+    `bits`× the md5 work).
 
     bits=32 (default) is the oracle-replayed config; **bits=60 is the scale
     config** — with `simhash_pairs(band_bits=15)` the band-key space grows
@@ -890,11 +870,6 @@ def simhash(
     """
     if not 1 <= bits <= 60:
         raise ValueError("bits must be in [1, 60]")
-    if impl == "native":
-        return df.select(F.col(id_col), simhash_col(F.col(text_col), bits).alias("simhash"))
-
-    if impl != "pandas":
-        raise ValueError(f"unknown impl {impl!r}")
 
     import hashlib
 
@@ -1595,7 +1570,6 @@ def decontaminate_embeddings(
     bench_id_col: str = "vec_id",
     bench_vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
-    impl: str = "pandas",
     dist_scale: int | None = None,
 ) -> DataFrame:
     """Embedding-level benchmark decontamination — the vector analog of
@@ -1635,7 +1609,6 @@ def decontaminate_embeddings(
         vec_col=vec_col,
         qid_col="__bench_id",
         qvec_col="__bench_vec",
-        impl=impl,
         dist_scale=dist_scale,
     ).select(F.col(id_col), F.col("__bench_id").alias("bench_id"), "distance")
     if mode == "flag":
@@ -1919,10 +1892,7 @@ def semantic_dedup(
     if cell_col in df.columns:
         assigned = df
     elif centroids is not None:
-        assigned = IVF.assign_cells(
-            df, centroids, vec_col=vec_col, cell_col=cell_col,
-            impl="native" if impl == "native" else "pandas",
-        )
+        assigned = IVF.assign_cells(df, centroids, vec_col=vec_col, cell_col=cell_col)
     else:
         total = df.count()
         if nlist is None:
@@ -1993,9 +1963,9 @@ def semantic_dedup(
             .applyInPandas(kernel, "dup_id long, cell long, dup_of long, cosine double")
         )
     elif impl == "native":
-        # the self-join duplicates the assign_cells fold, and Spark's
-        # conflicting-attribute rewrite loses higher-order-function lambda
-        # bindings (ATTRIBUTE_NOT_FOUND at bind time; localCheckpoint's
+        # the self-join duplicates the assignment kernel and the norm fold,
+        # and Spark's conflicting-attribute rewrite loses higher-order-
+        # function lambda bindings (ATTRIBUTE_NOT_FOUND at bind time; localCheckpoint's
         # LogicalRDD dedup is unreliable too) — cache the assignment so both
         # sides read one InMemoryRelation, whose self-join dedup is sound.
         # Stays cached for the life of the returned plan (assignment is
@@ -2147,7 +2117,7 @@ def semantic_dedup_recall(
     sample = df.where(h.cast("double") < F.lit(thresh)).select(
         F.col(id_col), F.col(vec_col)
     )
-    base = IVF.assign_cells(sample, centroids, vec_col=vec_col, impl="native")
+    base = IVF.assign_cells(sample, centroids, vec_col=vec_col)
     base = base.withColumn("__nrm", vector_norm(F.col(vec_col)))
     base = base.cache()  # sound self-join dedup (see semantic_dedup)
     n_sample = base.count()
@@ -2220,10 +2190,7 @@ def semantic_dedup_incremental(
     def side(df: DataFrame, rank: int) -> DataFrame:
         s = df
         if cell_col not in s.columns:
-            s = IVF.assign_cells(
-                s, centroids, vec_col=vec_col, cell_col=cell_col,
-                impl="native" if impl == "native" else "pandas",
-            )
+            s = IVF.assign_cells(s, centroids, vec_col=vec_col, cell_col=cell_col)
         return s.select(
             F.col(id_col), F.col(vec_col), F.col(cell_col),
             F.lit(rank).alias("__rank"),

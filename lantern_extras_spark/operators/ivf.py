@@ -17,18 +17,30 @@ Spark design:
 - `ivf_topk` ranks centroids driver-side (nlist is small), filters to probed
   cells (`cell IN (...)` pushes to parquet when the table is partitioned), and
   runs exact distance top-k inside the probed subset.
-- Composes with PQ: quantize each cell's residuals for IVF-PQ (future work;
-  ADC scan in pq.py already covers the decode side).
+- `ivf_knn_join` / `ivf_range_join` keep both sides distributed: cells are
+  assigned and probed by Arrow kernels, then each cell is joined by a
+  cogrouped kernel.
+- Every numpy distance goes through `_distance`: GEMM ranks, the exact fold
+  scores, so cells, distances and order equal the Column fold's
+  (`functions/vector.py`) bit for bit.
+- `build_ivf_pq` composes IVF with PQ: each cell's residuals (v − centroid)
+  are product-quantized, and `ivf_pq_topk[_batch]` scans them with
+  per-(query, cell) ADC lookup tables.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
-from lantern_extras_spark.operators.knn import distance_col
+from lantern_extras_spark.operators._distance import topk, vectors, within
+from lantern_extras_spark.operators.knn import METRICS, distance_col
 from lantern_extras_spark.operators.pq import _train
 from lantern_extras_spark.session import local_frame
 
@@ -60,79 +72,29 @@ def assign_cells(
     centroids: list[list[float]],
     vec_col: str = "embedding",
     cell_col: str = "cell",
-    impl: str = "pandas",
 ) -> DataFrame:
     """Nearest-centroid assignment: argmin-l2sq over the centroid array with
     first-wins tie-break (same kernel contract as PQ Q3).
 
-    impl="pandas" (default): Arrow kernel, one GEMM per batch — the fold
-    expression evaluates O(nlist·dim) interpreted ops per row and goes
-    superlinear at millions of rows (measured 4× slower at 5M×64 cells).
-    impl="native" keeps the pure Column expression (no Python workers); both
-    produce identical assignments.
-    """
-    if impl == "native":
-        # r13 construction fast path: one F.expr for the whole centroid
-        # literal instead of nlist py4j array conversions (repr round-trips
-        # doubles exactly; Spark's double-literal parse is correctly rounded,
-        # so the literal values are bit-identical to the F.lit form)
-        arr_sql = "array(" + ",".join(
-            "array(" + ",".join(f"{float(x)!r}D" for x in c) + ")" for c in centroids
-        ) + ")"
-        cents = F.expr(arr_sql)
-        v = F.col(vec_col).cast("array<double>")
-        # stage 1: distances array (each l2sq evaluated once per centroid);
-        # stage 2: scalar argmin fold over (index, distance), first-wins
-        # ties. Identical values/assignments to folding the distance
-        # expression directly (same summation order); measured equal cost —
-        # the conditional in the direct fold short-circuits its second
-        # distance evaluation — kept for the plainer two-stage shape.
-        dists = F.transform(
-            cents,
-            lambda c: F.aggregate(
-                F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda s, e: s + e,
-            ),
-        )
-        indexed = F.arrays_zip(
-            F.sequence(F.lit(0), F.lit(len(centroids) - 1)).alias("i"),
-            dists.alias("d"),
-        )
-        best = F.aggregate(
-            indexed,
-            F.struct(F.lit(float("inf")).alias("d"), F.lit(-1).alias("i")),
-            lambda acc, x: F.when(
-                x["d"] < acc["d"], F.struct(x["d"].alias("d"), x["i"].alias("i"))
-            ).otherwise(acc),
-        )
-        return df.withColumn(cell_col, best["i"])
-
-    if impl != "pandas":
-        raise ValueError(f"unknown impl {impl!r}")
-
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
+    An Arrow kernel: per batch one GEMM ranks the centroids and the exact
+    fold (`_distance.topk`) settles near-ties, so the cell is the argmin of
+    `l2sq_dist` as Spark (and the DuckDB oracle) evaluate it. Every other
+    column passes through as Arrow."""
     C = np.asarray(centroids, dtype=np.float64)
-    spark = df.sparkSession
-    bC = spark.sparkContext.broadcast(C)
+    bC = df.sparkSession.sparkContext.broadcast(C)
     out_schema = StructType(df.schema.fields + [StructField(cell_col, IntegerType())])
-    cols = [f.name for f in df.schema.fields]
+    names = out_schema.fieldNames()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         Cm = bC.value
-        c2 = (Cm * Cm).sum(axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()])
-            d = (X * X).sum(1)[:, None] + c2[None, :] - 2.0 * X @ Cm.T
-            pdf[cell_col] = d.argmin(axis=1).astype(np.int32)
-            yield pdf[cols + [cell_col]]
+            near, _ = topk("l2sq", Cm, vectors(batch.column(vec_col)), 1)
+            cells = pa.array(near[:, 0].astype(np.int32))
+            yield pa.RecordBatch.from_arrays(batch.columns + [cells], names=names)
 
-    return df.mapInPandas(kernel, out_schema)
+    return df.mapInArrow(kernel, out_schema)
 
 
 def _auto_nlist(total: int, rows_per_cell: int = 2000) -> int:
@@ -144,35 +106,36 @@ def _auto_nlist(total: int, rows_per_cell: int = 2000) -> int:
     return max(16, math.ceil(max(total, 1) / rows_per_cell))
 
 
-def _check_max_cell(
-    cells_df: DataFrame, cell_col: str, max_cell: int, op: str, side: str
-) -> None:
+def _check_max_cell(ccells: DataFrame, qprobes: DataFrame, max_cell: int, op: str) -> None:
     """Fail-loud hot-cell guard (mirrors `semantic_dedup`'s max_cell,
-    dedup.py): the cogrouped per-cell GEMM materializes one whole cell — plus
-    everything probing it — in a single worker's memory, so a cell that
+    dedup.py): the cogrouped per-cell kernel materializes one whole cell —
+    plus everything probing it — in a single worker's memory, so a cell that
     outgrew `max_cell` must raise with the remedy spelled out rather than
-    OOM an executor mid-join at scale. Collects only violators (tiny by
-    definition)."""
-    oversized = (
-        cells_df.groupBy(cell_col).count().where(F.col("count") > max_cell).collect()
+    OOM an executor mid-join at scale. One aggregation counts both sides'
+    cells (a side-tagged union, one shuffle) and collects only violators
+    (tiny by definition)."""
+    tagged = ccells.select("cell", F.lit("corpus").alias("side")).unionByName(
+        qprobes.select("cell", F.lit("query-probe").alias("side"))
     )
-    if oversized:
-        worst = ", ".join(f"cell {r[cell_col]}={r['count']}" for r in oversized[:5])
-        raise ValueError(
-            f"{op}: {len(oversized)} {side} cell(s) exceed max_cell="
-            f"{max_cell} ({worst}). Raise nlist (finer clustering; cells "
-            f"shrink ~linearly) or max_cell — a cell this hot would OOM the "
-            f"per-cell kernel on a real executor."
-        )
+    rows = tagged.groupBy("side", "cell").count().where(F.col("count") > max_cell).collect()
+    for side in ("corpus", "query-probe"):
+        hot = [r for r in rows if r["side"] == side]
+        if hot:
+            worst = ", ".join(f"cell {r['cell']}={r['count']}" for r in hot[:5])
+            raise ValueError(
+                f"{op}: {len(hot)} {side} cell(s) exceed max_cell="
+                f"{max_cell} ({worst}). Raise nlist (finer clustering; cells "
+                f"shrink ~linearly) or max_cell — a cell this hot would OOM the "
+                f"per-cell kernel on a real executor."
+            )
 
 
 def probe_cells(centroids: list[list[float]], query_vec: list[float], nprobe: int) -> list[int]:
-    """Driver-side centroid ranking (nlist is tiny)."""
+    """Driver-side centroid ranking (nlist is tiny): the `nprobe` nearest
+    cells under the exact (l2sq fold, cell id) order."""
     C = np.asarray(centroids, dtype=np.float64)
-    q = np.asarray(query_vec, dtype=np.float64)
-    d = ((C - q) ** 2).sum(axis=1)
-    order = np.lexsort((np.arange(len(C)), d))
-    return [int(i) for i in order[:nprobe]]
+    near, _ = topk("l2sq", C, np.asarray([query_vec], dtype=np.float64), nprobe)
+    return [int(i) for i in near[0]]
 
 
 def ivf_topk(
@@ -199,6 +162,25 @@ def ivf_topk(
     )
 
 
+def _pair_schema(qid_col: str, id_col: str) -> StructType:
+    return StructType(
+        [
+            StructField(qid_col, LongType()),
+            StructField(id_col, LongType()),
+            StructField("distance", DoubleType()),
+        ]
+    )
+
+
+def _pairs(schema: StructType, qids, ids, dist) -> pa.Table:
+    """One (qid, id, distance) Arrow table of `schema`'s three columns."""
+    return pa.table(
+        [pa.array(np.asarray(qids, dtype=np.int64)), pa.array(np.asarray(ids, dtype=np.int64)),
+         pa.array(np.asarray(dist, dtype=np.float64))],
+        names=schema.fieldNames(),
+    )
+
+
 def ivf_topk_batch(
     indexed_df: DataFrame,
     centroids: list[list[float]],
@@ -213,59 +195,39 @@ def ivf_topk_batch(
     """Batched IVF top-k: ALL queries in ONE Spark job. The scan is pruned to
     the UNION of every query's probed cells (still partition pruning on a
     cell-partitioned table); inside the Arrow kernel each query ranks only the
-    rows whose cell it probed, emitting a per-batch partial top-k per query;
-    one window finishes the ranking. Per-sweep job count is O(1) in n_queries.
+    rows whose cell it probed (`_distance.topk`, exact fold distances),
+    emitting a per-batch partial top-k per query; one window finishes the
+    ranking. Per-sweep job count is O(1) in n_queries.
     Returns (query_id, id_col, distance, rank≤k)."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-    from pyspark.sql.window import Window
-
-    from lantern_extras_spark.operators.knn import _np_distances
-
     qids = np.array([q[0] for q in queries], dtype=np.int64)
     Q = np.asarray([list(map(float, q[1])) for q in queries], dtype=np.float64)
     qcells = [probe_cells(centroids, list(map(float, q[1])), nprobe) for q in queries]
     union_cells = sorted({c for cs in qcells for c in cs})
     spark = indexed_df.sparkSession
-    b = spark.sparkContext.broadcast((qids, Q, [set(cs) for cs in qcells]))
+    b = spark.sparkContext.broadcast((qids, Q, qcells))
+    out_schema = _pair_schema("query_id", id_col)
 
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField(id_col, LongType()),
-            StructField("distance", DoubleType()),
-        ]
-    )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         qi, Qm, cellsets = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()])
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cells = pdf[cell_col].to_numpy()
-            D = _np_distances(metric, X, Qm)
-            for j in range(Qm.shape[0]):
-                mask = np.isin(cells, list(cellsets[j]))
-                idx = np.nonzero(mask)[0]
+            X = vectors(batch.column(vec_col))
+            ids = batch.column(id_col).to_numpy().astype(np.int64)
+            cells = batch.column(cell_col).to_numpy()
+            for j in range(len(qi)):
+                idx = np.nonzero(np.isin(cells, cellsets[j]))[0]
                 if len(idx) == 0:
                     continue
-                order = idx[np.lexsort((ids[idx], D[idx, j]))][: min(k, len(idx))]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.full(len(order), qi[j], dtype=np.int64),
-                        id_col: ids[order],
-                        "distance": D[order, j],
-                    }
-                )
+                rows, dist = topk(metric, X[idx], Qm[j : j + 1], k, ids=ids[idx])
+                yield from _pairs(
+                    out_schema, np.full(rows.shape[1], qi[j]), ids[idx][rows[0]], dist[0]
+                ).to_batches()
 
     pruned = indexed_df.where(F.col(cell_col).isin([int(c) for c in union_cells])).select(
         id_col, cell_col, vec_col
     )
-    partial = pruned.mapInPandas(scan, out_schema)
+    partial = pruned.mapInArrow(scan, out_schema)
     w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col(id_col).asc())
     return (
         partial.withColumn("rank", F.row_number().over(w))
@@ -280,68 +242,76 @@ def probe_cells_df(
     nprobe: int,
     qvec_col: str = "query_vec",
     cell_col: str = "cell",
-    impl: str = "pandas",
 ) -> DataFrame:
     """Distributed multi-probe assignment: each query row explodes into its
     `nprobe` nearest cells (ties broken by cell id — same contract as
     `probe_cells`). This is the query-side half of `ivf_knn_join`: queries
     never touch the driver, so the query frame can be as large as the corpus.
 
-    impl="pandas": one GEMM per Arrow batch. impl="native": pure Column
-    expressions with the exact left-fold (a−b)² summation the DuckDB oracles
-    replay — bit-identical cell choices across engines."""
-    if impl == "native":
-        v = F.col(qvec_col).cast("array<double>")
-        cents = F.array(*[F.lit([float(x) for x in c]).cast("array<double>") for c in centroids])
-        indexed = F.arrays_zip(
-            F.sequence(F.lit(0), F.lit(len(centroids) - 1)).alias("i"), cents.alias("c")
-        )
-        scored = F.transform(
-            indexed,
-            lambda x: F.struct(
-                F.aggregate(
-                    F.zip_with(v, x["c"], lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0), lambda s, e: s + e,
-                ).alias("d"),
-                x["i"].alias("i"),
-            ),
-        )
-        # struct array_sort orders by (d, i) — the (distance, cell) tie-break
-        probes = F.slice(F.array_sort(scored), 1, nprobe)
-        return queries.withColumn("__p", F.explode(probes)).withColumn(
-            cell_col, F.col("__p")["i"]
-        ).drop("__p")
-
-    if impl != "pandas":
-        raise ValueError(f"unknown impl {impl!r}")
-
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
+    An Arrow kernel: one GEMM per batch ranks the centroids, the exact fold
+    (`_distance.topk`) settles near-ties, and each row repeats `nprobe`
+    times with every other column passed through as Arrow."""
     C = np.asarray(centroids, dtype=np.float64)
     nprobe = min(nprobe, len(centroids))
-    spark = queries.sparkSession
-    bC = spark.sparkContext.broadcast(C)
+    bC = queries.sparkSession.sparkContext.broadcast(C)
     out_schema = StructType(queries.schema.fields + [StructField(cell_col, IntegerType())])
-    cols = [f.name for f in queries.schema.fields]
+    names = out_schema.fieldNames()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         Cm = bC.value
-        c2 = (Cm * Cm).sum(axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            X = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf[qvec_col].to_numpy()])
-            d = (X * X).sum(1)[:, None] + c2[None, :] - 2.0 * X @ Cm.T
-            # stable argsort on (distance, cell-id): cell-id IS the column order
-            near = np.argsort(d, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-            rep = pdf.loc[pdf.index.repeat(nprobe)].reset_index(drop=True)
-            rep[cell_col] = near.reshape(-1)
-            yield rep[cols + [cell_col]]
+            near, _ = topk("l2sq", Cm, vectors(batch.column(qvec_col)), nprobe)
+            rep = batch.take(pa.array(np.repeat(np.arange(n), nprobe)))
+            cells = pa.array(near.reshape(-1).astype(np.int32))
+            yield pa.RecordBatch.from_arrays(rep.columns + [cells], names=names)
 
-    return queries.mapInPandas(kernel, out_schema)
+    return queries.mapInArrow(kernel, out_schema)
+
+
+def _cogroup_cells(
+    op: str,
+    corpus: DataFrame,
+    queries: DataFrame,
+    nprobe: int,
+    nlist: int | None,
+    metric: str,
+    centroids: list[list[float]] | None,
+    id_col: str,
+    vec_col: str,
+    qid_col: str,
+    qvec_col: str,
+    max_train_rows: int,
+    seed: int,
+    max_cell: int,
+):
+    """The shared front half of the IVF joins: fit `nlist` centroids unless
+    given, assign the corpus to cells (a `cell` column already present is
+    honored), explode the queries into their `nprobe` cells, run the
+    hot-cell guard, and cogroup both sides on `cell`."""
+    if metric not in METRICS:
+        raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
+    if centroids is None:
+        total = corpus.count()
+        if nlist is None:
+            nlist = _auto_nlist(total)
+        _, centroids = build_ivf(corpus, vec_col=vec_col, nlist=nlist,
+                                 max_train_rows=max_train_rows, seed=seed,
+                                 total_rows=total)
+    nprobe = min(nprobe, len(centroids))
+    if "cell" in corpus.columns:
+        # pre-assigned corpus (e.g. read from a cell-partitioned table):
+        # skip the assignment kernel entirely — with partitioned storage the
+        # downstream cell filter/shuffle starts from pruned scans
+        ccells = corpus.select(id_col, vec_col, "cell")
+    else:
+        ccells = assign_cells(corpus.select(id_col, vec_col), centroids, vec_col=vec_col)
+    qprobes = probe_cells_df(queries.select(qid_col, qvec_col), centroids,
+                             nprobe, qvec_col=qvec_col)
+    _check_max_cell(ccells, qprobes, max_cell, op)
+    return ccells.groupBy("cell").cogroup(qprobes.groupBy("cell"))
 
 
 def ivf_knn_join(
@@ -356,7 +326,6 @@ def ivf_knn_join(
     vec_col: str = "embedding",
     qid_col: str = "query_id",
     qvec_col: str = "query_vec",
-    impl: str = "pandas",
     max_train_rows: int = 100_000,
     seed: int = 42,
     dist_scale: int | None = None,
@@ -375,9 +344,9 @@ def ivf_knn_join(
        `centroids` is passed — reuse a persisted codebook),
     2. assign every corpus row to its cell (narrow, no shuffle),
     3. explode every query row into its `nprobe` nearest cells (narrow),
-    4. ONE shuffle of each side on `cell`, then a cogrouped per-cell GEMM
-       computes exact distances inside probed cells only and emits a
-       per-(cell, query) partial top-k — output ≤ |queries|·nprobe·k rows,
+    4. ONE shuffle of each side on `cell`, then a cogrouped per-cell Arrow
+       kernel (`_distance.topk`: GEMM ranking, exact fold distances) emits
+       a per-(cell, query) partial top-k — output ≤ |queries|·nprobe·k rows,
     5. one window finishes the global per-query top-k.
 
     No side is ever collected; skew is bounded by cell granularity (raise
@@ -387,97 +356,35 @@ def ivf_knn_join(
 
     `nlist=None` auto-scales to ~2000 corpus rows/cell (ignored when
     `centroids` is passed). `max_cell` is the fail-loud hot-cell guard for
-    the cogrouped kernel (impl="pandas"): a skewed corpus — one dense
-    cluster holding most rows — would otherwise OOM the executor that
-    receives that cell; instead the join refuses up-front with the remedy
-    (raise nlist) spelled out. Both the corpus side and the query-probe
-    side are checked. The native path streams through an equi-join and
-    never materializes a cell, so it skips the guard.
+    the cogrouped kernel: a skewed corpus — one dense cluster holding most
+    rows — would otherwise OOM the executor that receives that cell;
+    instead the join refuses up-front with the remedy (raise nlist) spelled
+    out. Both the corpus side and the query-probe side are checked, in one
+    job. `dist_scale` rounds distances (`portable.pround`) before ranking.
 
-    impl="native" (steps 2-4 as pure Column expressions + an equi-join on
-    cell) exists for engine-parity harnesses; identical results, no Python
-    workers. Returns (qid_col, id_col, distance, rank ≤ k).
+    Distances, cells and order equal the Column fold's (`distance_col`) bit
+    for bit, which is what the DuckDB oracle replays.
+    Returns (qid_col, id_col, distance, rank ≤ k).
     """
-    from lantern_extras_spark.operators.knn import METRICS, _np_distances, distance_col
-
-    if metric not in METRICS:
-        raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
-    if centroids is None:
-        total = corpus.count()
-        if nlist is None:
-            nlist = _auto_nlist(total)
-        _, centroids = build_ivf(corpus, vec_col=vec_col, nlist=nlist,
-                                 max_train_rows=max_train_rows, seed=seed,
-                                 total_rows=total)
-    nprobe = min(nprobe, len(centroids))
-
-    if "cell" in corpus.columns:
-        # pre-assigned corpus (e.g. read from a cell-partitioned table):
-        # skip the assignment kernel entirely — with partitioned storage the
-        # downstream cell filter/shuffle starts from pruned scans
-        ccells = corpus.select(id_col, vec_col, "cell")
-    else:
-        ccells = assign_cells(corpus.select(id_col, vec_col), centroids,
-                              vec_col=vec_col, impl=impl)
-    qprobes = probe_cells_df(queries.select(qid_col, qvec_col), centroids,
-                             nprobe, qvec_col=qvec_col, impl=impl)
-    w = Window.partitionBy(qid_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-
-    if impl == "native":
-        d = distance_col(metric, F.col(vec_col), F.col(qvec_col))
-        if dist_scale is not None:
-            from lantern_extras_spark.functions.portable import pround
-
-            d = pround(d, dist_scale)
-        joined = ccells.join(qprobes, "cell").withColumn("distance", d)
-        return (
-            joined.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, id_col, "distance", "rank")
-        )
-
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField(qid_col, LongType()),
-            StructField(id_col, LongType()),
-            StructField("distance", DoubleType()),
-        ]
+    grouped = _cogroup_cells(
+        "ivf_knn_join", corpus, queries, nprobe, nlist, metric, centroids, id_col,
+        vec_col, qid_col, qvec_col, max_train_rows, seed, max_cell,
     )
+    out_schema = _pair_schema(qid_col, id_col)
 
-    def per_cell(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def per_cell(left: pa.Table, right: pa.Table) -> pa.Table:
         # left = one cell's corpus rows, right = the queries probing it
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({qid_col: [], id_col: [], "distance": []}).astype(
-                {qid_col: "int64", id_col: "int64", "distance": "float64"}
-            )
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in left[vec_col].to_numpy()])
-        ids = left[id_col].to_numpy(dtype=np.int64)
-        Q = np.asarray([np.asarray(v, dtype=np.float64) for v in right[qvec_col].to_numpy()])
-        qids = right[qid_col].to_numpy(dtype=np.int64)
-        D = _np_distances(metric, X, Q)
-        if dist_scale is not None:
-            s = float(10**dist_scale)
-            D = np.floor(D * s + 0.5) / s  # portable rounding (matches pround)
-        kk = min(k, len(ids))
-        parts = []
-        for j in range(len(qids)):
-            order = np.lexsort((ids, D[:, j]))[:kk]
-            parts.append(pd.DataFrame(
-                {qid_col: np.full(kk, qids[j], dtype=np.int64),
-                 id_col: ids[order], "distance": D[order, j]}
-            ))
-        return pd.concat(parts, ignore_index=True)
+        if left.num_rows == 0 or right.num_rows == 0:
+            return _pairs(out_schema, [], [], [])
+        ids = left.column(id_col).to_numpy().astype(np.int64)
+        qids = right.column(qid_col).to_numpy().astype(np.int64)
+        rows, dist = topk(metric, vectors(left.column(vec_col)),
+                          vectors(right.column(qvec_col)), k, ids=ids,
+                          dist_scale=dist_scale)
+        return _pairs(out_schema, np.repeat(qids, rows.shape[1]), ids[rows].ravel(), dist.ravel())
 
-    _check_max_cell(ccells, "cell", max_cell, "ivf_knn_join", "corpus")
-    _check_max_cell(qprobes, "cell", max_cell, "ivf_knn_join", "query-probe")
-    partial = (
-        ccells.groupBy("cell")
-        .cogroup(qprobes.groupBy("cell"))
-        .applyInPandas(per_cell, out_schema)
-    )
+    partial = grouped.applyInArrow(per_cell, out_schema)
+    w = Window.partitionBy(qid_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
     return (
         partial.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
@@ -497,7 +404,6 @@ def ivf_range_join(
     vec_col: str = "embedding",
     qid_col: str = "query_id",
     qvec_col: str = "query_vec",
-    impl: str = "pandas",
     max_train_rows: int = 100_000,
     seed: int = 42,
     dist_scale: int | None = None,
@@ -509,87 +415,32 @@ def ivf_range_join(
     than k corpus rows sit inside the radius of one query (exactly the
     failure mode embedding-level decontamination cannot afford), so this
     variant emits ALL qualifying pairs inside probed cells and needs no
-    finishing window at all: cell-route, per-cell GEMM, filter — one shuffle
-    per side, output bounded by the true pair count.
+    finishing window at all: cell-route, per-cell kernel
+    (`_distance.within`), filter — one shuffle per side, output bounded by
+    the true pair count. A corpus row lives in exactly one cell and a query
+    probes each cell at most once, so a pair materializes at most once.
 
-    Returns (qid_col, id_col, distance). Same cell/probe machinery, the same
-    impl="native" engine-parity path, and the same `nlist=None` auto-scale +
-    fail-loud `max_cell` hot-cell guard as `ivf_knn_join`.
+    Returns (qid_col, id_col, distance). Same cell/probe machinery, exact
+    fold distances, `nlist=None` auto-scale and fail-loud `max_cell`
+    hot-cell guard as `ivf_knn_join`.
     """
-    from lantern_extras_spark.operators.knn import METRICS, _np_distances, distance_col
-
-    if metric not in METRICS:
-        raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
-    if centroids is None:
-        total = corpus.count()
-        if nlist is None:
-            nlist = _auto_nlist(total)
-        _, centroids = build_ivf(corpus, vec_col=vec_col, nlist=nlist,
-                                 max_train_rows=max_train_rows, seed=seed,
-                                 total_rows=total)
-    nprobe = min(nprobe, len(centroids))
-    if "cell" in corpus.columns:
-        # pre-assigned corpus (e.g. read from a cell-partitioned table):
-        # skip the assignment kernel entirely — with partitioned storage the
-        # downstream cell filter/shuffle starts from pruned scans
-        ccells = corpus.select(id_col, vec_col, "cell")
-    else:
-        ccells = assign_cells(corpus.select(id_col, vec_col), centroids,
-                              vec_col=vec_col, impl=impl)
-    qprobes = probe_cells_df(queries.select(qid_col, qvec_col), centroids,
-                             nprobe, qvec_col=qvec_col, impl=impl)
-
-    if impl == "native":
-        d = distance_col(metric, F.col(vec_col), F.col(qvec_col))
-        if dist_scale is not None:
-            from lantern_extras_spark.functions.portable import pround
-
-            d = pround(d, dist_scale)
-        # no dedup needed: a corpus row lives in exactly one cell and a query
-        # probes each cell at most once, so a pair materializes at most once
-        return (
-            ccells.join(qprobes, "cell")
-            .withColumn("distance", d)
-            .where(F.col("distance") <= radius)
-            .select(qid_col, id_col, "distance")
-        )
-
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField(qid_col, LongType()),
-            StructField(id_col, LongType()),
-            StructField("distance", DoubleType()),
-        ]
+    grouped = _cogroup_cells(
+        "ivf_range_join", corpus, queries, nprobe, nlist, metric, centroids, id_col,
+        vec_col, qid_col, qvec_col, max_train_rows, seed, max_cell,
     )
+    out_schema = _pair_schema(qid_col, id_col)
 
-    def per_cell(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({qid_col: [], id_col: [], "distance": []}).astype(
-                {qid_col: "int64", id_col: "int64", "distance": "float64"}
-            )
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in left[vec_col].to_numpy()])
-        ids = left[id_col].to_numpy(dtype=np.int64)
-        Q = np.asarray([np.asarray(v, dtype=np.float64) for v in right[qvec_col].to_numpy()])
-        qids = right[qid_col].to_numpy(dtype=np.int64)
-        D = _np_distances(metric, X, Q)
-        if dist_scale is not None:
-            s = float(10**dist_scale)
-            D = np.floor(D * s + 0.5) / s
-        rows, cols = np.nonzero(D <= radius)
-        return pd.DataFrame(
-            {qid_col: qids[cols], id_col: ids[rows], "distance": D[rows, cols]}
-        )
+    def per_cell(left: pa.Table, right: pa.Table) -> pa.Table:
+        if left.num_rows == 0 or right.num_rows == 0:
+            return _pairs(out_schema, [], [], [])
+        ids = left.column(id_col).to_numpy().astype(np.int64)
+        qids = right.column(qid_col).to_numpy().astype(np.int64)
+        rows, cols, dist = within(metric, vectors(left.column(vec_col)),
+                                  vectors(right.column(qvec_col)), radius,
+                                  dist_scale=dist_scale)
+        return _pairs(out_schema, qids[cols], ids[rows], dist)
 
-    _check_max_cell(ccells, "cell", max_cell, "ivf_range_join", "corpus")
-    _check_max_cell(qprobes, "cell", max_cell, "ivf_range_join", "query-probe")
-    return (
-        ccells.groupBy("cell")
-        .cogroup(qprobes.groupBy("cell"))
-        .applyInPandas(per_cell, out_schema)
-    )
+    return grouped.applyInArrow(per_cell, out_schema)
 
 
 def ivf_recall_vs_exact(
@@ -717,11 +568,7 @@ def ivf_pq_topk_batch(
     LUT, so a candidate row costs `splits` lookups per probing query. Partial
     per-batch top-k per query, one window to finish.
     Returns (query_id, id_col, adc_distance, rank ≤ k)."""
-    from typing import Iterator
-
     import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-    from pyspark.sql.window import Window
 
     from lantern_extras_spark.operators.pq import _codebook_tensor, split_bounds
 

@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from lantern_extras_spark.functions.portable import pround
+from lantern_extras_spark.operators._distance import gemm
 
 # ceiling on the query rows any one driver collect holds: at or under it the
 # query side is collected once and sliced into blocks; above it, it is
@@ -73,25 +74,6 @@ def distance_col(metric: str, a: Column | str, b: Column | str) -> Column:
     if metric == "dot":
         return -inner_product(a, b)
     raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
-
-
-def _np_distances(metric: str, X: np.ndarray, Q: np.ndarray) -> np.ndarray:
-    """Distance matrix |X| × |Q| in float64 (BLAS path for the partial strategy)."""
-    if metric == "l2sq":
-        # ||x||^2 + ||q||^2 - 2 x·q  — one GEMM instead of a python loop
-        xq = X @ Q.T
-        return (X * X).sum(axis=1)[:, None] + (Q * Q).sum(axis=1)[None, :] - 2.0 * xq
-    if metric == "cos":
-        xn = np.linalg.norm(X, axis=1)
-        qn = np.linalg.norm(Q, axis=1)
-        denom = xn[:, None] * qn[None, :]
-        sim = np.divide(X @ Q.T, denom, out=np.zeros((X.shape[0], Q.shape[0])), where=denom != 0)
-        return 1.0 - sim
-    if metric == "dot":
-        return -(X @ Q.T)
-    if metric == "hamming":
-        return (X[:, None, :] != Q[None, :, :]).sum(axis=2).astype(np.float64)
-    raise ValueError(metric)
 
 
 def topk(
@@ -342,7 +324,7 @@ def _partial_frame(
             qb = max(1, _Q_BLOCK_ELEMS // max(n * per_pair, 1))
             for s0 in range(0, nq, qb):
                 sl = slice(s0, s0 + qb)
-                D = _np_distances(metric, X, Qm[sl])
+                D = gemm(metric, X, Qm[sl])
                 if dist_scale is not None:
                     s = float(10**dist_scale)
                     D = np.floor(D * s + 0.5) / s  # portable rounding (matches pround)

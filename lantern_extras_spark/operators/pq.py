@@ -51,6 +51,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from lantern_extras_spark.operators._distance import vectors
 from lantern_extras_spark.session import local_frame
 
 
@@ -107,18 +108,6 @@ _FIT_SCHEMA = StructType(
 )
 
 
-def _vectors(arr: pa.Array) -> np.ndarray:
-    """(n, dim) float64 matrix of an Arrow list column of equal-length
-    vectors: one reshape of the flattened values, no per-row objects."""
-    if arr.null_count:
-        raise ValueError("null vector")
-    lens = np.diff(arr.offsets.to_numpy())
-    if len(lens) and (lens != lens[0]).any():
-        raise ValueError("vectors differ in length")
-    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-    return flat.reshape(len(arr), int(lens[0]) if len(lens) else 0)
-
-
 def _train(
     df: DataFrame,
     vec_col: str,
@@ -156,7 +145,7 @@ def _train(
         cols = [b.column(0) for b in batches if b.num_rows]
         if not cols:
             return
-        X = _vectors(pa.concat_arrays(cols))
+        X = vectors(pa.concat_arrays(cols))
         # canonical row order before the fit: the sample's row order follows
         # parquet file-enumeration order, which varies with written-file
         # UUIDs; without this sort the seeded init picks different rows per
@@ -307,7 +296,7 @@ def quantize(
             n = batch.num_rows
             if n == 0:
                 continue
-            X = _vectors(batch.column(vec_col))
+            X = vectors(batch.column(vec_col))
             codes = np.empty((n, splits), dtype=np.int16)
             for s, (lo, hi) in enumerate(bounds):
                 C = cb[s]

@@ -85,17 +85,9 @@ def emb(spark):
 @pytest.fixture
 def force_distributed(monkeypatch):
     """Set every size cap that picks a driver-side shortcut over a
-    distributed fallback to 0, so the distributed branches run at test scale.
-    `knn.MAX_COLLECTED_QUERIES` is left alone: knn falls back to a hash split
-    above it, but at 0 no query block fits (chunk_size must stay within half
-    the cap). Its split is covered by the `knn_chunked` oracle query and the
-    shrunken-cap tests in `tests/test_knn.py`."""
-    from lantern_extras_spark.operators import bloom, dedup, selection, textstats
+    distributed fallback to 0 (`oracle_check.driver_caps`), so the
+    distributed branches run at test scale."""
+    from oracle_check import driver_caps
 
-    for mod, cap in (
-        (dedup, "DRIVER_CC_MAX_EDGES"),
-        (bloom, "DRIVER_BUILD_MAX_KEYS"),
-        (selection, "DSIR_MAT_MAX_DOCS"),
-        (textstats, "KWLBL_LIT_MAX_KW"),
-    ):
+    for mod, cap in driver_caps():
         monkeypatch.setattr(mod, cap, 0)

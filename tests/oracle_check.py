@@ -71,6 +71,24 @@ def compare(spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> dict:
     }
 
 
+def driver_caps() -> tuple:
+    """(module, name) of every size cap that picks a driver-side shortcut
+    over a distributed fallback. Setting them all to 0 runs the distributed
+    branches at test scale. `knn.MAX_COLLECTED_QUERIES` is left out: knn
+    falls back to a hash split above it, but at 0 no query block fits
+    (chunk_size must stay within half the cap). Its split is covered by the
+    `knn_chunked` oracle query and the shrunken-cap tests in
+    `tests/test_knn.py`."""
+    from lantern_extras_spark.operators import bloom, dedup, selection, textstats
+
+    return (
+        (dedup, "DRIVER_CC_MAX_EDGES"),
+        (bloom, "DRIVER_BUILD_MAX_KEYS"),
+        (selection, "DSIR_MAT_MAX_DOCS"),
+        (textstats, "KWLBL_LIT_MAX_KW"),
+    )
+
+
 def run_all(spark, sf_dir: str, only: list[str] | None = None) -> dict[str, dict]:
     import __spark_entry__ as E
 

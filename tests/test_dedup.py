@@ -46,10 +46,20 @@ def test_minhash_identical_docs_have_identical_sigs(corpus):
     assert sigs[1] != sigs[4]
 
 
-def test_minhash_native_equals_pandas(corpus):
-    a = {r["doc_id"]: r["sig"] for r in D.minhash_signatures(corpus, n_hashes=8, impl="pandas").collect()}
-    b = {r["doc_id"]: r["sig"] for r in D.minhash_signatures(corpus, n_hashes=8, impl="native").collect()}
-    assert a == b
+def test_minhash_signatures_match_hashlib(corpus):
+    """Each signature value is min over the row's shingles of the affine
+    permutation of md5's first 8 hex digits — recomputed with hashlib."""
+    import hashlib
+
+    rows = D.minhash_signatures(corpus, n_hashes=8).collect()
+    assert len(rows) == 5
+    for r in rows:
+        hs = [int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in r["shingles"]]
+        want = [
+            min((h * a + b) % D.MINHASH_PRIME for h in hs)
+            for a, b in (D.perm_coeffs(i) for i in range(8))
+        ]
+        assert r["sig"] == want, r["doc_id"]
 
 
 def test_minhash_signature_verify_parity(spark, corpus):
@@ -567,9 +577,16 @@ def test_simhash_60bit_scale_config(spark):
     vals = {r["doc_id"]: r["simhash"] for r in sims.collect()}
     assert all(0 <= v < 2**60 for v in vals.values())
     assert vals[1] == vals[4]                       # exact dup -> identical sig
-    # native column form agrees bit-for-bit with the Arrow kernel
-    nat = {r["doc_id"]: r["simhash"] for r in D.simhash(docs, bits=60, impl="native").collect()}
-    assert nat == vals
+    # bit-for-bit the 60-bit majority vote over hashlib md5 token hashes
+    import hashlib
+
+    from lantern_extras_spark.functions.text import tokens
+
+    toks = {r["doc_id"]: r["t"] for r in docs.select("doc_id", tokens(F.col("text")).alias("t")).collect()}
+    for doc_id, ts in toks.items():
+        hs = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in ts]
+        want = sum(1 << b for b in range(60) if 2 * sum((h >> b) & 1 for h in hs) > len(hs))
+        assert vals[doc_id] == want, doc_id
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in D.simhash_pairs(sims, band_bits=15, bits=60, max_hamming=10).collect()

@@ -1,10 +1,32 @@
 """IVF approximate search: cell assignment, probe ranking, recall behavior."""
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from lantern_extras_spark.operators import ivf as IVF
+
+
+def _fold_l2sq(a, b) -> float:
+    """Reference l2sq: the left-to-right double fold `l2sq_dist` evaluates
+    in Spark (Python floats are IEEE doubles)."""
+    s = 0.0
+    for x, y in zip(a, b):
+        d = float(x) - float(y)
+        s += d * d
+    return s
+
+
+def _fold_probes(cents, v, nprobe) -> list[int]:
+    """Reference probe order: (fold distance, cell id) ascending."""
+    return sorted(range(len(cents)), key=lambda i: (_fold_l2sq(v, cents[i]), i))[:nprobe]
+
+
+def _pround(d: float, scale: int) -> float:
+    s = float(10**scale)
+    return math.floor(d * s + 0.5) / s
 
 
 @pytest.fixture(scope="module")
@@ -169,11 +191,8 @@ def test_probe_cells_df_matches_driver_side(spark, clustered, join_sides):
     for r in queries.collect():
         want = IVF.probe_cells(cents, [float(x) for x in r["query_vec"]], 2)
         assert sorted(got[r["query_id"]]) == sorted(want), r["query_id"]
-    # native impl picks the same cells
-    nat = {}
-    for r in IVF.probe_cells_df(queries, cents, nprobe=2, impl="native").collect():
-        nat.setdefault(r["query_id"], []).append(r["cell"])
-    assert {k: sorted(v) for k, v in nat.items()} == {k: sorted(v) for k, v in got.items()}
+        # and both rank the cells in the fold's (distance, cell) order
+        assert got[r["query_id"]] == want == _fold_probes(cents, r["query_vec"], 2)
 
 
 def test_ivf_knn_join_full_probe_equals_exact(spark, join_sides):
@@ -192,17 +211,25 @@ def test_ivf_knn_join_full_probe_equals_exact(spark, join_sides):
     assert approx == exact and len(exact) == 20 * 5
 
 
-def test_ivf_knn_join_native_equals_pandas(spark, join_sides):
+def test_ivf_knn_join_matches_fold_reference(spark, join_sides):
+    """Cells, probes, distances and ranks all equal a pure-Python replay of
+    the Column fold (what the DuckDB oracle evaluates)."""
     corpus, queries = join_sides
     cents = [[float(x) for x in r["embedding"]]
              for r in corpus.orderBy("vec_id").limit(4).collect()]
     a = {(r["query_id"], r["rank"]): (r["vec_id"], r["distance"]) for r in
          IVF.ivf_knn_join(corpus, queries, k=5, nprobe=2, centroids=cents,
                           dist_scale=5).collect()}
-    b = {(r["query_id"], r["rank"]): (r["vec_id"], r["distance"]) for r in
-         IVF.ivf_knn_join(corpus, queries, k=5, nprobe=2, centroids=cents,
-                          dist_scale=5, impl="native").collect()}
-    assert a == b and len(a) == 20 * 5
+    crows = [(r["vec_id"], r["embedding"], _fold_probes(cents, r["embedding"], 1)[0])
+             for r in corpus.collect()]
+    want = {}
+    for q in queries.collect():
+        cells = set(_fold_probes(cents, q["query_vec"], 2))
+        cand = sorted((_pround(_fold_l2sq(v, q["query_vec"]), 5), i)
+                      for i, v, c in crows if c in cells)
+        for rank, (d, i) in enumerate(cand[:5], 1):
+            want[(q["query_id"], rank)] = (i, d)
+    assert a == want and len(a) == 20 * 5
 
 
 def test_ivf_knn_join_partial_probe_recall(spark, join_sides):
@@ -250,34 +277,32 @@ def test_ivf_range_join_full_probe_equals_bruteforce(spark, join_sides):
                                   nlist=4, max_train_rows=200).collect()
     got = {(r["query_id"], r["vec_id"]) for r in got_rows}
     assert got == want and len(got_rows) == len(got)  # no duplicate pairs
-    # native impl agrees
+    # with fixed centroids, pairs and distances equal the fold replay
     cents = [[float(x) for x in r["embedding"]]
              for r in corpus.orderBy("vec_id").limit(4).collect()]
-    nat = {(r["query_id"], r["vec_id"]) for r in
-           IVF.ivf_range_join(corpus, queries, radius=radius, nprobe=4,
-                              centroids=cents).collect()}
-    pnd = {(r["query_id"], r["vec_id"]) for r in
-           IVF.ivf_range_join(corpus, queries, radius=radius, nprobe=4,
-                              centroids=cents, impl="pandas").collect()}
-    assert nat == pnd
+    fixed = {(r["query_id"], r["vec_id"]): r["distance"] for r in
+             IVF.ivf_range_join(corpus, queries, radius=radius, nprobe=4,
+                                centroids=cents).collect()}
+    ref = {}
+    for q in qrows:
+        for c in crows:
+            d = _fold_l2sq(c["embedding"], q["query_vec"])
+            if d <= radius:
+                ref[(q["query_id"], c["vec_id"])] = d
+    assert fixed == ref
 
 
 def test_ivf_knn_join_plan_shape(spark, join_sides):
     """100 TB guardrail: the cross-corpus join is never a cartesian product —
-    the pandas path cogroups on cell (one shuffle per side + the finishing
-    window), the native path equi-joins on cell."""
+    it cogroups on cell (one shuffle per side + the finishing window)."""
     from lantern_extras_spark.plans.inspect import plan_summary
 
     corpus, queries = join_sides
     cents = [[float(x) for x in r["embedding"]]
              for r in corpus.orderBy("vec_id").limit(4).collect()]
-    for impl in ("pandas", "native"):
-        out = IVF.ivf_knn_join(corpus, queries, k=5, nprobe=2,
-                               centroids=cents, impl=impl)
-        s = plan_summary(out)
-        assert "CartesianProduct" not in s.text and "BroadcastNestedLoop" not in s.text, impl
-        if impl == "native":
-            assert "cell" in s.text  # equi-join keyed on the cell id
+    s = plan_summary(IVF.ivf_knn_join(corpus, queries, k=5, nprobe=2, centroids=cents))
+    assert "CartesianProduct" not in s.text and "BroadcastNestedLoop" not in s.text
+    assert "hashpartitioning(cell" in s.text  # both sides shuffled on the cell id
     rng = plan_summary(IVF.ivf_range_join(corpus, queries, radius=1.0,
                                           nprobe=2, centroids=cents))
     assert "CartesianProduct" not in rng.text
@@ -320,10 +345,41 @@ def test_ivf_knn_join_hot_cell_fails_loud(spark, join_sides):
     with pytest.raises(ValueError, match="ivf_range_join.*max_cell"):
         IVF.ivf_range_join(corpus, queries, radius=9.0, nprobe=2,
                            centroids=cents, max_cell=5).count()
-    # the native path streams an equi-join (no per-cell materialization):
-    # it must NOT trip the guard
-    IVF.ivf_knn_join(corpus, queries, k=3, nprobe=2, centroids=cents,
-                     impl="native", max_cell=5).count()
+    # a hot query-probe side alone trips it too: 45 corpus rows per cell
+    # fit, but 180 queries x 2 probes average 90 per cell
+    many = corpus.select(F.col("vec_id").alias("query_id"),
+                         F.col("embedding").alias("query_vec"))
+    with pytest.raises(ValueError, match="query-probe cell"):
+        IVF.ivf_knn_join(corpus, many, k=3, nprobe=2, centroids=cents,
+                         max_cell=50).count()
+
+
+def test_ivf_joins_check_both_sides_in_one_job(spark, join_sides):
+    """The hot-cell guard counts the corpus and query-probe cells in ONE
+    aggregation (a side-tagged union): construction runs the jobs of a
+    single one-shuffle aggregate, not one aggregate per side."""
+    import uuid
+
+    corpus, queries = join_sides
+    cents = [[float(x) for x in r["embedding"]]
+             for r in corpus.orderBy("vec_id").limit(4).collect()]
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = f"ivf-guard-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "ivf join construction")
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one_aggregate = jobs(lambda: corpus.groupBy("vec_id").count().collect())
+    assert jobs(lambda: IVF.ivf_knn_join(corpus, queries, k=3, nprobe=2,
+                                         centroids=cents)) == one_aggregate
+    assert jobs(lambda: IVF.ivf_range_join(corpus, queries, radius=1.0, nprobe=2,
+                                           centroids=cents)) == one_aggregate
 
 
 def test_ivf_knn_join_auto_nlist(spark, join_sides):
@@ -415,3 +471,83 @@ def test_build_ivf_pq_counts_input_once(spark, clustered, monkeypatch):
     assert counted == []
     assert jobs(build()) == with_total + one_count
     assert counted == [clustered]
+
+
+# ---------------------------------------------------------------------------
+# Near-ties: the GEMM expansion and the fold round differently; every
+# kernel must follow the fold (the arithmetic the DuckDB oracle replays)
+# ---------------------------------------------------------------------------
+
+def _tie_fixture():
+    """Centroids c0 and c0 with coordinate pairs swapped (plus a far third),
+    and rows whose coordinate pairs are equal: each row is exactly
+    equidistant from c0 and c1 in real arithmetic, so rounding alone
+    decides the argmin — and the GEMM expansion decides it differently from
+    the fold on many rows."""
+    from lantern_extras_spark.operators._distance import gemm
+
+    rng = np.random.RandomState(7)
+    dim = 16
+    swap = np.arange(dim).reshape(-1, 2)[:, ::-1].ravel()
+    c0 = rng.randn(dim)
+    cents = np.stack([c0, c0[swap], c0 + 5.0])
+    X = np.repeat(rng.randn(200, dim // 2), 2, axis=1)
+    ref = [_fold_probes(cents.tolist(), x.tolist(), 3) for x in X]
+    # the fixture must actually separate the two formulas
+    gemm_first = gemm("l2sq", X, cents).argmin(axis=1)
+    assert sum(int(g) != r[0] for g, r in zip(gemm_first, ref)) >= 20
+    return cents.tolist(), X, ref
+
+
+def test_assign_cells_near_ties_follow_fold(spark):
+    cents, X, ref = _tie_fixture()
+    df = spark.createDataFrame([(i, x.tolist()) for i, x in enumerate(X)],
+                               "vec_id long, embedding array<double>")
+    got = {r["vec_id"]: r["cell"] for r in IVF.assign_cells(df, cents).collect()}
+    assert got == {i: r[0] for i, r in enumerate(ref)}
+    assert [IVF.probe_cells(cents, x.tolist(), 1)[0] for x in X] == [r[0] for r in ref]
+
+
+def test_probe_cells_df_near_ties_follow_fold(spark):
+    cents, X, ref = _tie_fixture()
+    q = spark.createDataFrame([(i, x.tolist()) for i, x in enumerate(X)],
+                              "query_id long, query_vec array<double>")
+    got = {}
+    for r in IVF.probe_cells_df(q, cents, nprobe=2).collect():
+        got.setdefault(r["query_id"], []).append(r["cell"])
+    # emitted in rank order: the tie decides which cell comes first
+    assert got == {i: r[:2] for i, r in enumerate(ref)}
+
+
+def _boundary_sides(spark, n=60):
+    """Query q and corpus row q + (1.5, 0, 0, 0): the fold distance is exactly
+    2.25 — on the dist_scale=1 rounding boundary — while the GEMM expansion
+    of these ~1e6-norm vectors lands a few ulps to either side."""
+    rng = np.random.RandomState(3)
+    Q = 512.0 + 511.0 * rng.rand(n, 4)
+    X = Q + np.array([1.5, 0.0, 0.0, 0.0])
+    assert all(_fold_l2sq(x, q) == 2.25 for x, q in zip(X, Q))
+    corpus = spark.createDataFrame([(i, x.tolist()) for i, x in enumerate(X)],
+                                   "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame([(i, q.tolist()) for i, q in enumerate(Q)],
+                                    "query_id long, query_vec array<double>")
+    return corpus, queries, [[0.0] * 4]
+
+
+def test_ivf_knn_join_rounding_boundary_follows_fold(spark):
+    corpus, queries, cents = _boundary_sides(spark)
+    got = {(r["query_id"], r["vec_id"]): r["distance"] for r in
+           IVF.ivf_knn_join(corpus, queries, k=1, nprobe=1, centroids=cents,
+                            dist_scale=1).collect()}
+    assert got == {(i, i): 2.3 for i in range(60)}  # pround(2.25, 1)
+
+
+def test_ivf_range_join_boundary_membership_follows_fold(spark):
+    corpus, queries, cents = _boundary_sides(spark)
+    at = {(r["query_id"], r["vec_id"]): r["distance"] for r in
+          IVF.ivf_range_join(corpus, queries, radius=2.25, nprobe=1,
+                             centroids=cents).collect()}
+    assert at == {(i, i): 2.25 for i in range(60)}
+    # rounded up to 2.3, no pair is within 2.2
+    assert IVF.ivf_range_join(corpus, queries, radius=2.2, nprobe=1, centroids=cents,
+                              dist_scale=1).count() == 0

@@ -645,7 +645,7 @@ def test_ivf_pq_codebook_driver_replay(spark):
     """q_ivf_pq_search (r13 pass-5) replays the 8 codebook rows' cell
     assignment + residual on the DRIVER instead of a second Spark collect.
     Pin bit-identity against the engine-computed plan it replaced:
-    assign_cells(native) + zip_with residual for vec_id<8."""
+    assign_cells (exact fold argmin) + zip_with residual for vec_id<8."""
     from pyspark.sql import functions as F
 
     from lantern_extras_spark.operators import ivf as IVF
@@ -662,8 +662,8 @@ def test_ivf_pq_codebook_driver_replay(spark):
     dim = len(coarse[0])
     bounds = PQ.split_bounds(dim, 4)
 
-    # engine side: the pre-pass-5 plan (native fold assign + zip_with residual)
-    indexed = IVF.assign_cells(emb, coarse, vec_col="embedding", impl="native")
+    # engine side: the pre-pass-5 plan (kernel assign + zip_with residual)
+    indexed = IVF.assign_cells(emb, coarse, vec_col="embedding")
     cents_arr = F.array(*[F.lit(c).cast("array<double>") for c in coarse])
     with_res = indexed.withColumn(
         "rv",
