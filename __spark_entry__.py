@@ -410,15 +410,14 @@ def q_vector_distances(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_knn_cos(spark: SparkSession, sf: str) -> DataFrame:
     """Batch exact kNN join (J2/N3): queries = vec_id<5, corpus = rest, k=10 by
-    cosine distance; declarative crossjoin+window strategy (oracle-parity path —
-    the partial-topk mapInPandas strategy is benchmarked and equivalence-tested
-    in tests/)."""
+    cosine distance; the blocked partial top-k plan (knn.py's one plan: Arrow
+    kernel with fold distances, one finishing window)."""
     emb = _t(spark, sf, "embeddings")
     q = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where(F.col("vec_id") >= 5)
-    out = K.knn_join(data, q, k=10, metric="cos", strategy="crossjoin", dist_scale=6)
+    out = K.knn_join(data, q, k=10, metric="cos", dist_scale=6)
     return out.select("query_id", "vec_id", F.col("distance").alias("cos_distance"), F.col("rank").cast("bigint").alias("rnk"))
 
 
@@ -429,7 +428,7 @@ def q_knn_l2(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where(F.col("vec_id") >= 5)
-    out = K.knn_join(data, q, k=10, metric="l2sq", strategy="crossjoin", dist_scale=5)
+    out = K.knn_join(data, q, k=10, metric="l2sq", dist_scale=5)
     return out.select("query_id", "vec_id", F.col("distance").alias("l2sq_distance"), F.col("rank").cast("bigint").alias("rnk"))
 
 
@@ -442,7 +441,7 @@ def q_knn_dot(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where(F.col("vec_id") >= 5)
-    out = K.knn_join(data, q, k=10, metric="dot", strategy="crossjoin", dist_scale=5)
+    out = K.knn_join(data, q, k=10, metric="dot", dist_scale=5)
     return out.select("query_id", "vec_id", F.col("distance").alias("dot_distance"),
                       F.col("rank").cast("bigint").alias("rnk"))
 
@@ -457,7 +456,7 @@ def q_knn_filtered(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where((F.col("vec_id") >= 5) & (F.col("label") == 3))
-    out = K.knn_join(data, q, k=10, metric="cos", strategy="crossjoin", dist_scale=6)
+    out = K.knn_join(data, q, k=10, metric="cos", dist_scale=6)
     return out.select("query_id", "vec_id", F.col("distance").alias("cos_distance"),
                       F.col("rank").cast("bigint").alias("rnk"))
 
@@ -1151,8 +1150,7 @@ def q_pq_assign(spark: SparkSession, sf: str) -> DataFrame:
         for s, (lo, hi) in enumerate(bounds):
             rows.append((s, int(r["vec_id"]), v[lo:hi]))
     cb = local_frame(spark, rows, "subvector_id int, centroid_id int, c array<float>")
-    coded = PQ.quantize(emb, cb, vec_col="embedding", out_col="pqvec", dim=dim,
-                        formulation="direct")
+    coded = PQ.quantize(emb, cb, vec_col="embedding", out_col="pqvec", dim=dim)
     return coded.select(
         "vec_id",
         F.element_at("pqvec", 1).cast("bigint").alias("c0"),
@@ -1209,7 +1207,9 @@ def q_embedding_neardup(spark: SparkSession, sf: str) -> DataFrame:
     """Random-hyperplane LSH cosine near-dup pairs. Hash-checked: the seeded
     hyperplanes are inlined as literals in the DuckDB oracle, which replays the
     bucket → pair → cosine-verify pipeline exactly (threshold applied on the
-    unrounded cosine, output rounded for the cross-engine hash)."""
+    unrounded cosine, output rounded for the cross-engine hash). The Arrow
+    kernels settle every projection sign and cosine near a decision value
+    with the fold, so the oracle certifies the scale path."""
     emb = _t(spark, sf, "embeddings")
     pairs = D.embedding_neardup_pairs(emb, threshold=0.4, n_planes=6, dim=EMB_DIM)
     return pairs.select("id_a", "id_b", pround("cosine", 6).alias("cosine"))
@@ -1222,16 +1222,13 @@ def q_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
     bench-friendly at sf0.1), within-cell cosine prune with the first-wins winner
     rule. Hash-checked end to end: the oracle replays cell assignment
     (argmin-l2sq, min-struct tie-break), the within-cell pair join, the
-    cosine, and the min-id winner pick. The native impl's Column pair join
-    is the replay config (its cells come from the same exact assignment
-    kernel as the pandas impl); the k-means + GEMM pandas impl is the scale
-    path (parity pinned in tests/test_dedup.py)."""
+    cosine, and the min-id winner pick. The query runs the one per-cell
+    Arrow kernel (GEMM similarities, fold re-score near the threshold), so
+    the oracle certifies the scale path itself."""
     emb = _t(spark, sf, "embeddings")
     cents_rows = emb.where(F.col("vec_id") < 32).orderBy("vec_id").collect()
     centroids = [list(map(float, r["embedding"])) for r in cents_rows]
-    out = D.semantic_dedup(
-        emb, threshold=0.3, centroids=centroids, impl="native"
-    )
+    out = D.semantic_dedup(emb, threshold=0.3, centroids=centroids)
     return out.select(
         "dup_id", "cell", "dup_of", pround("cosine", 6).alias("cosine")
     )
@@ -1275,7 +1272,9 @@ def q_semantic_incremental(spark: SparkSession, sf: str) -> DataFrame:
     vec_id<32 cells; corpus matches outrank batch matches, then smallest id
     (corpus ids are LARGER here, so a hash mismatch would expose any
     id-before-rank ordering bug). Oracle replays cells, the batch-only pair
-    restriction, the cosine, and the (rank, id) winner pick."""
+    restriction, the cosine, and the (rank, id) winner pick — against the
+    one per-cell Arrow kernel (GEMM similarities, fold re-score near the
+    threshold)."""
     emb = _t(spark, sf, "embeddings")
     cents_rows = emb.where(F.col("vec_id") < 32).orderBy("vec_id").collect()
     centroids = [list(map(float, r["embedding"])) for r in cents_rows]
@@ -1284,7 +1283,6 @@ def q_semantic_incremental(spark: SparkSession, sf: str) -> DataFrame:
         emb.where(F.col("vec_id") >= 100),
         centroids=centroids,
         threshold=0.3,
-        impl="native",
     )
     return out.select(
         "dup_id", "cell", "dup_of", pround("cosine", 6).alias("cosine"), "vs"
@@ -1307,7 +1305,7 @@ def q_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
         for s, (lo, hi) in enumerate(bounds):
             rows.append((s, int(r["vec_id"]), v[lo:hi]))
     cb = local_frame(spark, rows, "subvector_id int, centroid_id int, c array<float>")
-    coded = PQ.quantize(emb, cb, vec_col="embedding", dim=dim, formulation="direct")
+    coded = PQ.quantize(emb, cb, vec_col="embedding", dim=dim)
     qv = _hash_embed_py(IVF_QUERY_TEXT, dim=dim)
     out = PQ.adc_topk(coded, cb, qv, k=10)
     return out.select(
@@ -1316,15 +1314,14 @@ def q_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_knn_chunked(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact multi-block kNN (operators/knn.py, the partial strategy with
-    query blocks): the query side is split into blocks of at most
+    """Exact multi-block kNN (operators/knn.py, knn_join's one plan with
+    several query blocks): the query side is split into blocks of at most
     chunk_size rows (chunk_size=8 gives 4 blocks over 30 queries), each
     broadcast through the partial kernel, block frames unioned, one
     finishing window. Above the 100k driver ceiling the same plan is built
     from hash-split bounded collects, so exact ground truth never has to
     take the ANN path (ref lantern_cli/src/index_autotune/mod.rs:196-203
-    semantics at N3 scale). Must hash-match the plain crossjoin/SQL answer
-    exactly."""
+    semantics at N3 scale). Must hash-match the SQL answer exactly."""
     emb = _t(spark, sf, "embeddings")
     q = emb.where(F.col("vec_id") < 30).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -1338,16 +1335,16 @@ def q_knn_chunked(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_knn_partial_strategy(spark: SparkSession, sf: str) -> DataFrame:
-    """The scale-path kNN strategy (mapInPandas partial top-k). Output columns
-    mirror q_knn_cos so the same DuckDB oracle hash-checks both strategies —
-    the partial kernel must agree with the declarative crossjoin plan
-    bit-for-bit after portable rounding."""
+    """The same call as q_knn_cos, kept under its own name so the registry
+    stays at 137 queries: knn_join has one plan (the partial top-k Arrow
+    kernel), so there is no second strategy left to compare. Shares
+    knn_cos's oracle."""
     emb = _t(spark, sf, "embeddings")
     q = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where(F.col("vec_id") >= 5)
-    out = K.knn_join(data, q, k=10, metric="cos", strategy="partial", dist_scale=6)
+    out = K.knn_join(data, q, k=10, metric="cos", dist_scale=6)
     return out.select(
         "query_id", "vec_id", F.col("distance").alias("cos_distance"),
         F.col("rank").cast("bigint").alias("rnk"),
@@ -1576,7 +1573,7 @@ def q_ivf_pq_search(spark: SparkSession, sf: str) -> DataFrame:
         for s_i, (lo, hi) in enumerate(bounds):
             rows.append((s_i, int(r["vec_id"]), rv[lo:hi]))
     cb = local_frame(spark, rows, "subvector_id int, centroid_id int, c array<double>")
-    coded = PQ.quantize(with_res, cb, vec_col="rv", dim=dim, formulation="direct")
+    coded = PQ.quantize(with_res, cb, vec_col="rv", dim=dim)
     qv = _hash_embed_py(IVF_QUERY_TEXT, dim=dim)
     out = IVF.ivf_pq_topk(coded, coarse, cb, qv, k=10, nprobe=2, id_col="vec_id")
     return out.select("vec_id", pround("adc_distance", 4).alias("adc_distance"))
@@ -1584,10 +1581,11 @@ def q_ivf_pq_search(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_hnsw_recall(spark: SparkSession, sf: str) -> DataFrame:
     """Sharded-HNSW eval with a SQL oracle (N1/N4, hnsw.py): the returned rows
-    ARE the exact l2sq top-10 ground truth (fully SQL-replayable, same shape as
-    knn_l2), plus a `recall_ok` flag the oracle pins to TRUE. The flag comes
-    from building seeded HNSW shards over the same corpus, batch-searching the
-    same 5 queries, and intersecting with the truth — graph traversal isn't
+    ARE the exact l2sq top-10 ground truth (knn_join's partial top-k plan,
+    fully SQL-replayable, same shape as knn_l2), plus a `recall_ok` flag the
+    oracle pins to TRUE. The flag comes from building seeded HNSW shards over
+    the same corpus, batch-searching the same 5 queries, and intersecting
+    with the truth — graph traversal isn't
     SQL-expressible, but its pass criteria are literals the oracle asserts:
     `recall_ok` (aggregate ≥ 0.9) AND per-query `recall`, which the seeded
     build measures at exactly 1.0 for every sf0.01 query — so an HNSW
@@ -1600,12 +1598,12 @@ def q_hnsw_recall(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where(F.col("vec_id") >= 5)
-    exact = K.knn_join(data, q, k=10, metric="l2sq", strategy="crossjoin", dist_scale=5)
+    exact = K.knn_join(data, q, k=10, metric="l2sq", dist_scale=5)
 
     # r13 pass-5 (guide §2.6 overlap-independent-jobs): the exact-truth
     # collect and the HNSW build+search job are independent driver-side
     # actions — the exact collect now runs from a worker thread so the shard
-    # build's tasks back-fill executors freed by the crossjoin's tail.
+    # build's tasks back-fill executors freed by the exact kNN's tail.
     # Results are the identical row sets; only the scheduling overlaps.
     from concurrent.futures import ThreadPoolExecutor
 
@@ -2151,8 +2149,7 @@ def q_compressed_tradeoff(spark: SparkSession, sf: str) -> DataFrame:
     emb = _t(spark, sf, "embeddings")
     qv = _hash_embed_py(IVF_QUERY_TEXT, dim=EMB_DIM)
     qdf = local_frame(spark, [(0, qv)], "query_id long, query_vec array<double>")
-    exact_pq = K.knn_join(emb, qdf, k=10, metric="l2sq", strategy="crossjoin",
-                          dist_scale=5).select("vec_id")
+    exact_pq = K.knn_join(emb, qdf, k=10, metric="l2sq", dist_scale=5).select("vec_id")
     # r14 REJECTED experiment: submitting the exact5-independent pq branch
     # BEFORE the exact5 materialization count (guide §2.6) measured 1.03x
     # median / 1.03x min in a clean 4-pair A/B — the serial count is too
@@ -2291,8 +2288,9 @@ def q_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     """Contrastive hard-negative mining (knn.hard_negatives): for each query
     embedding, the 10 cosine-nearest corpus vectors with a DIFFERENT label —
     the filter runs before ranking so these are the true top-k negatives.
-    Declarative crossjoin config for oracle parity; the masked partial-topk
-    mapInPandas strategy is equivalence-tested in tests/."""
+    The masked partial top-k kernel (same-label pairs never become
+    candidates) with fold distances, hash-checked against the SQL
+    replay."""
     emb = _t(spark, sf, "embeddings")
     q = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
@@ -2300,9 +2298,7 @@ def q_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
         F.col("label").alias("query_label"),
     )
     data = emb.where(F.col("vec_id") >= 5)
-    out = K.hard_negatives(
-        data, q, k=10, metric="cos", strategy="crossjoin", dist_scale=6
-    )
+    out = K.hard_negatives(data, q, k=10, metric="cos", dist_scale=6)
     return out.select(
         "query_id",
         "vec_id",
@@ -2313,11 +2309,11 @@ def q_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_hard_negatives_chunked(spark: SparkSession, sf: str) -> DataFrame:
-    """Hard-negative mining at training-set scale (knn.hard_negatives, the
-    partial strategy with query blocks): the same bounded-block plan as
+    """Hard-negative mining at training-set scale (knn.hard_negatives with
+    several query blocks): the same bounded-block plan as
     knn_chunked with query labels traveling in each block's broadcast — the
-    masked per-task top-k must reproduce the declarative crossjoin answer
-    exactly (chunk_size=8 gives 4 blocks over 30 queries)."""
+    masked per-task top-k must reproduce the SQL answer exactly
+    (chunk_size=8 gives 4 blocks over 30 queries)."""
     emb = _t(spark, sf, "embeddings")
     q = emb.where(F.col("vec_id") < 30).select(
         F.col("vec_id").alias("query_id"),
@@ -3751,8 +3747,8 @@ def _oracle_sql_raw() -> dict[str, str]:
         """,
     }
     # Promoted from rows-only to hash-checked (VERDICT r1 #3):
-    # the partial-topk kNN strategy must reproduce the crossjoin plan's answer,
-    # so it shares knn_cos's oracle verbatim.
+    # knn_partial_strategy is the same call as knn_cos, so it shares
+    # knn_cos's oracle verbatim.
     sql["knn_partial_strategy"] = sql["knn_cos"]
     # chunked kNN must also be exact: same oracle shape as knn_cos, with the
     # wider 30-query split that forces multiple chunk blocks.

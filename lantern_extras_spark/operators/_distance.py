@@ -9,13 +9,16 @@ replays the fold). This module closes that gap:
 
 - `vectors`: (n, dim) float64 matrix of an Arrow list column;
 - `gemm`: the BLAS distance matrix (approximate in the last bits);
-- `fold`: the exact per-pair fold, bit-identical to Spark's evaluation of
+- `fold`, `cos_sim`: the exact per-pair folds (distance, and the cosine
+  similarity inside `fold("cos")`), bit-identical to Spark's evaluation of
   `functions/vector.py` (same operations in the same order, IEEE doubles);
-- `topk`, `within`: exact selections. GEMM ranks every pair; the fold then
-  re-scores each pair whose GEMM value lies within the expansion's rounding
-  bound (`_slack`) of the decision value (the k-th value, or the radius).
-  Every distance and order they return comes from the fold, so results
-  equal the Column fold's bit for bit at close to GEMM cost.
+- `topk`, `within`, `similar`: exact selections. GEMM ranks every pair;
+  the fold then re-scores each pair whose GEMM value lies within the
+  expansion's rounding bound (`_slack`) of the decision value (the k-th
+  value, the radius, or the similarity threshold). Every distance,
+  similarity and order they return comes from the fold, so results equal
+  the Column fold's bit for bit at close to GEMM cost;
+- `signs`: the sign of every projection x·p, as the fold decides it.
 """
 
 from __future__ import annotations
@@ -48,16 +51,20 @@ def gemm(metric: str, X: np.ndarray, Q: np.ndarray) -> np.ndarray:
         xq = X @ Q.T
         return (X * X).sum(axis=1)[:, None] + (Q * Q).sum(axis=1)[None, :] - 2.0 * xq
     if metric == "cos":
-        xn = np.linalg.norm(X, axis=1)
-        qn = np.linalg.norm(Q, axis=1)
-        denom = xn[:, None] * qn[None, :]
-        sim = np.divide(X @ Q.T, denom, out=np.zeros((X.shape[0], Q.shape[0])), where=denom != 0)
-        return 1.0 - sim
+        return 1.0 - _gemm_sim(X, Q)
     if metric == "dot":
         return -(X @ Q.T)
     if metric == "hamming":
         return (X[:, None, :] != Q[None, :, :]).sum(axis=2).astype(np.float64)
     raise ValueError(metric)
+
+
+def _gemm_sim(X: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """Cosine similarity matrix |X| × |Q| by GEMM, 0 on a zero norm."""
+    xn = np.linalg.norm(X, axis=1)
+    qn = np.linalg.norm(Q, axis=1)
+    denom = xn[:, None] * qn[None, :]
+    return np.divide(X @ Q.T, denom, out=np.zeros((X.shape[0], Q.shape[0])), where=denom != 0)
 
 
 def _sum(terms: np.ndarray) -> np.ndarray:
@@ -80,13 +87,18 @@ def fold(metric: str, A: np.ndarray, B: np.ndarray) -> np.ndarray:
     if metric == "dot":
         return -_sum(A * B)
     if metric == "cos":
-        denom = np.sqrt(_sum(A * A)) * np.sqrt(_sum(B * B))
-        zero = denom == 0.0
-        sim = _sum(A * B) / np.where(zero, 1.0, denom)
-        return 1.0 - np.where(zero, 0.0, sim)
+        return 1.0 - cos_sim(A, B)
     if metric == "hamming":
         return (A != B).sum(axis=1).astype(np.float64)
     raise ValueError(metric)
+
+
+def cos_sim(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Cosine similarity of each row pair as Spark's `cos_sim` evaluates it:
+    a·b/(‖a‖‖b‖), 0 on a zero norm. `fold("cos")` is 1 − this."""
+    denom = np.sqrt(_sum(A * A)) * np.sqrt(_sum(B * B))
+    zero = denom == 0.0
+    return np.where(zero, 0.0, _sum(A * B) / np.where(zero, 1.0, denom))
 
 
 def _slack(metric: str, X: np.ndarray, Q: np.ndarray) -> np.ndarray | float:
@@ -125,12 +137,15 @@ def topk(
     k: int,
     ids: np.ndarray | None = None,
     dist_scale: int | None = None,
+    mask: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """For each row of Q, its min(k, |X|) nearest rows of X under the
     (distance, id) order; `ids` defaults to the row index (first-wins ties).
     Distances are fold values, rounded by `dist_scale` before ranking.
     Returns (rows, dist), each (|Q|, min(k, |X|)), rows indexing X in rank
-    order.
+    order. `mask` (|X| × |Q| bool) excludes the pairs where it is False:
+    they never set the bound and score +inf, so they rank after every
+    allowed pair.
 
     A row whose GEMM value is more than the slack above the k-th smallest
     upper bound (GEMM + slack) cannot reach the top k: at least k rows have
@@ -141,12 +156,16 @@ def topk(
     if kk == 0 or len(Q) == 0:
         return np.empty((len(Q), kk), dtype=np.int64), np.empty((len(Q), kk))
     G = gemm(metric, X, Q)
+    if mask is not None:
+        G[~mask] = np.inf
     e = _slack(metric, X, Q)
     bound = np.partition(G + e, kk - 1, axis=0)[kk - 1] + _step(dist_scale)
     G -= e
     # negated so NaN scores stay candidates (the fold then ranks them last)
     cols, rows = np.nonzero(~(G > bound[None, :]).T)
     d = _round(fold(metric, X[rows], Q[cols]), dist_scale)
+    if mask is not None:
+        d[~mask[rows, cols]] = np.inf
     order = np.lexsort((ids[rows], d, cols))
     starts = np.concatenate(([0], np.cumsum(np.bincount(cols, minlength=len(Q)))[:-1]))
     take = order[starts[:, None] + np.arange(kk)[None, :]]
@@ -169,3 +188,30 @@ def within(
     d = _round(fold(metric, X[rows], Q[cols]), dist_scale)
     keep = d <= radius
     return rows[keep], cols[keep], d[keep]
+
+
+def similar(
+    X: np.ndarray, Q: np.ndarray, threshold: float, mask: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every pair (X[r], Q[c]) whose fold cosine similarity (`cos_sim`) is
+    at least `threshold`, restricted to the pairs where `mask` (|X| × |Q|
+    bool) is True. Returns (rows, cols, sim) in row-major order. A pair
+    whose GEMM similarity lies more than the slack under the threshold
+    cannot reach it; every other pair is re-scored by the fold."""
+    cand = ~(_gemm_sim(X, Q) < threshold - _slack("cos", X, Q))
+    if mask is not None:
+        cand &= mask
+    rows, cols = np.nonzero(cand)
+    sim = cos_sim(X[rows], Q[cols])
+    keep = sim >= threshold
+    return rows[keep], cols[keep], sim[keep]
+
+
+def signs(X: np.ndarray, P: np.ndarray) -> np.ndarray:
+    """|X| × |P| bool: x·p >= 0 for every pair, with x·p summed as
+    `inner_product` folds it. GEMM settles every projection farther than the
+    dot slack from 0; the fold recomputes the rest."""
+    G = X @ P.T
+    rows, cols = np.nonzero(np.abs(G) <= _slack("dot", X, P))
+    G[rows, cols] = -fold("dot", X[rows], P[cols])
+    return G >= 0.0

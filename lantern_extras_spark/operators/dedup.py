@@ -33,6 +33,10 @@ construction:
   Σ|cell|² work, never all-pairs; incremental twin matches batches against a
   cell-partitioned store; `semantic_dedup_recall` audits the cell-split
   recall trade-off on a deterministic sample.
+- The embedding operators' bucket bits, cells and cosines come from the
+  exact numpy kernel (`operators/_distance.py`: GEMM ranking, fold-settled
+  near-ties), so they equal `functions/vector.py`'s Column folds bit for
+  bit.
 - **cross-corpus n-gram join**: `ngram_jaccard_join` — exact shingle Jaccard
   BETWEEN two corpora (posting-list equi-join, length prune, full-set
   verify); powers snapshot near-move recovery (operators/versioning.py).
@@ -1625,12 +1629,12 @@ def embedding_neardup_pairs(
     seed: int = 42,
     max_bucket: int = 2000,
     dim: int | None = None,
-    impl: str = "native",
     n_tables: int = 1,
 ) -> DataFrame:
     """Cosine near-duplicate pairs over an embedding column via random-hyperplane
     LSH: bucket key = sign bits of `n_planes` seeded hyperplane projections; cosine
-    verified exactly within buckets.
+    verified exactly within buckets. Returns (id_a, id_b, cosine) with
+    id_a < id_b, in the id column's own type.
 
     sim(bucket collision) ≈ (1 - θ/π)^n_planes, so n_planes trades recall for
     bucket size; `n_tables > 1` runs that many independent hash tables
@@ -1643,32 +1647,26 @@ def embedding_neardup_pairs(
     O(n²/2^planes) as the corpus grows past a fixed plane count (measured: a
     fixed 6 planes went superlinear at 10× sf0.1 — SCALE_SF1.json history).
 
-    impl="native" (default): pure Column expressions — sequential fold per
-    plane, bit-replayable by the DuckDB oracle; the parity path.
-    impl="pandas": Arrow kernels end to end — one (batch × dim)·(dim ×
-    n_planes) GEMM for all projections, then per-bucket verification as a
-    normalized X·Xᵀ similarity matrix inside `applyInPandas` (one group = one
-    bucket; oversized groups drop exactly like the native `max_bucket`
-    filter). The 100 TB path: the native fold evaluates O(n_planes·dim)
-    interpreted ops per row and the native verify join evaluates an
-    interpreted cosine per candidate pair, both ~100× the BLAS kernels.
-    Buckets can differ from "native" only when a projection sits within
-    float-summation-order noise of 0 (measure-zero for real data);
-    downstream pairs are cosine-verified either way.
-
-    The pandas impl emits ids as longs (integer id columns required — the
-    engine's pk convention; a non-integral id raises TypeError up front);
-    native preserves any id dtype.
+    Arrow kernels end to end: one (batch × dim)·(dim × n_planes) GEMM gives
+    every projection, and `_distance.signs` recomputes by the fold any
+    projection within rounding noise of 0, so the bits are those of the
+    `inner_product` fold (what the DuckDB oracle replays). Buckets over
+    `max_bucket` rows are dropped; each remaining bucket is one group of an
+    `applyInArrow` kernel whose similarity selection (`_distance.similar`)
+    emits fold cosines. Ids pass through as Arrow, so any orderable id type
+    works.
 
     Pass `dim` to avoid the driver-side `first()` probe (one extra Spark job);
     the probe is kept as a fallback for ad-hoc use. Either way `dim` is
     enforced per row in the plan: a mismatched vector raises instead of
-    silently hashing to garbage (zip_with would null-pad the shorter side,
-    collapsing every row into bucket 0 and degrading recall with no signal).
+    silently hashing to garbage.
     """
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    from lantern_extras_spark.functions.vector import cos_sim
+    from lantern_extras_spark.operators._distance import signs, similar, vectors
 
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
@@ -1683,7 +1681,7 @@ def embedding_neardup_pairs(
             part = embedding_neardup_pairs(
                 df, vec_col=vec_col, id_col=id_col, threshold=threshold,
                 n_planes=n_planes, seed=seed + t, max_bucket=max_bucket,
-                dim=dim, impl=impl, n_tables=1,
+                dim=dim, n_tables=1,
             )
             out = part if out is None else out.unionByName(part)
         return out.distinct()
@@ -1698,136 +1696,58 @@ def embedding_neardup_pairs(
             )
         )
     )
-    df = df.withColumn(vec_col, dim_guard)
+    base = df.select(F.col(id_col), dim_guard.alias(vec_col))
     rng = np.random.RandomState(seed)
-    planes = rng.randn(n_planes, dim)
+    bP = df.sparkSession.sparkContext.broadcast(rng.randn(n_planes, dim))
+    weights = np.array([1 << i for i in range(n_planes)], dtype=np.int64)
+    bucket_schema = StructType(base.schema.fields + [StructField("bucket", LongType())])
 
-    if impl == "pandas":
-        import pandas as pd
-        from pyspark.sql.types import (
-            ByteType,
-            IntegerType,
-            LongType,
-            ShortType,
-            StructField,
-            StructType,
-        )
-
-        # fail loud at the API, not deep inside numpy: the pandas kernels emit
-        # ids as int64 ("id_a long, id_b long"), so non-integral id columns are
-        # a documented limitation of this impl (native preserves any dtype)
-        id_type = df.schema[id_col].dataType
-        if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
-            raise TypeError(
-                f"embedding_neardup_pairs(impl='pandas') requires an integral "
-                f"id column; {id_col!r} is {id_type.simpleString()}. Use "
-                f"impl='native' (preserves any id dtype) or cast/surrogate the id."
+    def bucket(batches):
+        P = bP.value
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            bits = signs(vectors(batch.column(vec_col)), P)
+            keys = pa.array((bits * weights[None, :]).sum(axis=1))
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [keys], names=bucket_schema.fieldNames()
             )
 
-        spark = df.sparkSession
-        bP = spark.sparkContext.broadcast(planes)
-        weights = np.array([1 << i for i in range(n_planes)], dtype=np.int64)
-        base = df.select(F.col(id_col), F.col(vec_col))
-        out_schema = StructType(base.schema.fields + [StructField("bucket", LongType())])
+    buckets = base.mapInArrow(bucket, bucket_schema)
+    id_type = df.schema[id_col].dataType
+    out_schema = StructType([
+        StructField("id_a", id_type), StructField("id_b", id_type),
+        StructField("cosine", DoubleType()),
+    ])
 
-        def kernel(batches):
-            P = bP.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()])
-                if X.ndim != 2 or X.shape[1] != P.shape[1]:
-                    raise ValueError(
-                        f"embedding_neardup_pairs: expected dim={P.shape[1]}, "
-                        f"got batch shape {X.shape}"
-                    )
-                bits = (X @ P.T) >= 0.0
-                pdf["bucket"] = (bits * weights[None, :]).sum(axis=1)
-                yield pdf[[id_col, vec_col, "bucket"]]
-
-        buckets = base.mapInPandas(kernel, out_schema)
-
-        def verify(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            empty = pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                                  "id_b": pd.Series(dtype="int64"),
-                                  "cosine": pd.Series(dtype="float64")})
-            n = len(pdf)
-            if n < 2 or n > max_bucket:  # oversize: same drop as the window filter
-                return empty
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()])
-            ids = pdf[id_col].to_numpy()
-            norms = np.linalg.norm(X, axis=1)
-            denom = norms[:, None] * norms[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = np.where(denom == 0.0, 0.0, (X @ X.T) / np.where(denom == 0.0, 1.0, denom))
-            iu, ju = np.triu_indices(n, k=1)
-            keep = S[iu, ju] >= threshold
-            ia, ib = ids[iu[keep]], ids[ju[keep]]
-            lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-            return pd.DataFrame({"id_a": lo, "id_b": hi, "cosine": S[iu, ju][keep]})
-
-        # drop oversized buckets BEFORE grouping: applyInPandas materializes a
-        # whole group in the worker, so a degenerate bucket (e.g. all-zero
-        # vectors) must never reach the kernel. Buckets over max_bucket are few
-        # by definition (each holds > max_bucket rows) — broadcast anti-join.
-        oversized = (
-            buckets.groupBy("bucket").count()
-            .where(F.col("count") > max_bucket).select("bucket")
+    def verify(tbl: pa.Table) -> pa.Table:
+        ids = tbl.column(id_col).combine_chunks()
+        # id_a < id_b in the id type's own order; null ids pair with nothing
+        rank = pc.rank(ids, tiebreaker="dense").to_numpy().astype(np.int64)
+        rank[np.asarray(ids.is_null())] = -1
+        X = vectors(tbl.column(vec_col))
+        rows, cols, sim = similar(
+            X, X, threshold, (rank[:, None] < rank[None, :]) & (rank[:, None] >= 0)
         )
-        pruned = buckets.join(F.broadcast(oversized), "bucket", "left_anti")
-        # no distinct: each id lives in exactly ONE bucket (the key is a
-        # function of the vector), so every unordered pair is emitted at most
-        # once; the n_tables>1 union does its own distinct for cross-table
-        # collisions (r13 pass-5 — dropped a full exchange+aggregate pair)
-        return pruned.groupBy("bucket").applyInPandas(
-            verify, "id_a long, id_b long, cosine double"
+        return pa.table(
+            [ids.take(rows), ids.take(cols), pa.array(sim, pa.float64())],
+            names=out_schema.fieldNames(),
         )
-    elif impl == "native":
-        # r14 REJECTED experiment (guide §4.1): unrolling each plane fold into
-        # a flat 64-term element_at product chain (bit-identical sums, proven
-        # exact-equal at all three SFs) measured **1.76x SLOWER** in a paired
-        # A/B — the 6x64-term expression tree blows up codegen/analysis and
-        # loses to the interpreted-but-compact aggregate(zip_with) fold at
-        # this dim. The fold stays.
-        key = None
-        for i in range(n_planes):
-            proj = F.aggregate(
-                F.zip_with(
-                    F.col(vec_col).cast("array<double>"),
-                    F.lit([float(x) for x in planes[i]]).cast("array<double>"),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bit = F.when(proj >= 0, F.lit(2**i)).otherwise(F.lit(0))
-            key = bit if key is None else key + bit
-        buckets = df.select(F.col(id_col), F.col(vec_col), key.alias("bucket"))
-    else:
-        raise ValueError(f"unknown impl {impl!r}")
-    # NOTE (r13 pass-5, measured): do NOT persist the filtered bucket frame
-    # here. Both join sides re-execute the scan + plane folds + window, but a
-    # persist's materialization barrier measured 1.63x SLOWER (paired A/B)
-    # than the recompute — the same lost-pipelining effect as the reverted
-    # dsir profile caches. The distinct() removal below is where the win was.
-    buckets = (
-        buckets.withColumn(
-            "bucket_n", F.count("*").over(Window.partitionBy("bucket"))
-        )
-        .where(F.col("bucket_n") <= max_bucket)
-        .select("bucket", id_col, vec_col)
+
+    # drop oversized buckets BEFORE grouping: applyInArrow materializes a
+    # whole group in the worker, so a degenerate bucket (e.g. all-zero
+    # vectors) must never reach the kernel. Buckets over max_bucket are few
+    # by definition (each holds > max_bucket rows) — broadcast anti-join.
+    oversized = (
+        buckets.groupBy("bucket").count()
+        .where(F.col("count") > max_bucket).select("bucket")
     )
-    a = buckets.select("bucket", F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-    b = buckets.select("bucket", F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-    # no distinct: one bucket per id → each unordered pair joins exactly once
-    # (the n_tables>1 union distincts cross-table collisions itself)
-    return (
-        a.join(b, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cos_sim(F.col("v_a"), F.col("v_b")))
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    pruned = buckets.join(F.broadcast(oversized), "bucket", "left_anti")
+    # no distinct: each id lives in exactly ONE bucket (the key is a
+    # function of the vector), so every unordered pair is emitted at most
+    # once; the n_tables>1 union does its own distinct for cross-table
+    # collisions
+    return pruned.groupBy("bucket").applyInArrow(verify, out_schema)
 
 
 def semantic_dedup(
@@ -1839,7 +1759,6 @@ def semantic_dedup(
     cell_col: str = "cell",
     centroids: list[list[float]] | None = None,
     mode: str = "flag",
-    impl: str = "pandas",
     max_cell: int = 100_000,
     seed: int = 42,
 ) -> DataFrame:
@@ -1871,21 +1790,22 @@ def semantic_dedup(
     similarity (struct-min tie-break, fully deterministic provenance).
     mode="drop": `df` minus every flagged row (left_anti on id).
 
-    impl="native": pure Column expressions (cell self-join + interpreted
-    cosine) — what the DuckDB oracle replays bit-for-bit.
-    impl="pandas": one normalized X·Xᵀ GEMM per cell inside `applyInPandas` —
-    the 100 TB path (the interpreted cosine costs O(dim) per candidate pair;
-    BLAS is ~100× that throughput). Assignments are identical; both impls
-    share the same winner rule.
+    Each cell is one group of an `applyInArrow` kernel: one normalized X·Xᵀ
+    GEMM ranks the pairs and `_distance.similar` re-scores by the fold every
+    pair near the threshold, so membership and the emitted cosine are
+    `cos_sim`'s bit for bit (what the DuckDB oracle replays) at close to
+    BLAS cost.
 
-    `max_cell` is a fail-loud guard, not a silent drop: applyInPandas
+    `max_cell` is a fail-loud guard, not a silent drop: the kernel
     materializes one whole cell per worker, and a dedup that silently skips
     an oversized cell ACCEPTS duplicates — so oversized cells raise with the
     fix spelled out (raise `nlist`; cells shrink ~linearly with it).
     """
     import numpy as np
+    import pyarrow as pa
 
     from lantern_extras_spark.operators import ivf as IVF
+    from lantern_extras_spark.operators._distance import vectors
 
     if mode not in ("flag", "drop"):
         raise ValueError(f"unknown mode {mode!r} (flag/drop)")
@@ -1907,113 +1827,24 @@ def semantic_dedup(
         )
     base = assigned.select(F.col(id_col), F.col(vec_col), F.col(cell_col))
 
-    def _guard(frame: DataFrame) -> None:
-        # fail-loud oversize guard (collects only violators — tiny by definition)
-        oversized = (
-            frame.groupBy(cell_col).count().where(F.col("count") > max_cell).collect()
+    _guard_cells(base, cell_col, max_cell, "semantic_dedup", "Raise nlist (finer clustering)")
+
+    def kernel(tbl: pa.Table) -> pa.Table:
+        ids = tbl.column(id_col).to_numpy().astype(np.int64)
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        X = vectors(tbl.column(vec_col))[order]
+        # row j is flagged by its smallest-id partner i with id_i < id_j
+        j, i, sim = _first_matches(X, X, threshold, ids[None, :] < ids[:, None])
+        cells = tbl.column(cell_col).to_numpy().astype(np.int64)[order]
+        return pa.table(
+            [pa.array(ids[j]), pa.array(cells[j]), pa.array(ids[i]), pa.array(sim)],
+            names=["dup_id", "cell", "dup_of", "cosine"],
         )
-        if oversized:
-            worst = ", ".join(f"cell {r[cell_col]}={r['count']}" for r in oversized[:5])
-            raise ValueError(
-                f"semantic_dedup: {len(oversized)} cell(s) exceed max_cell="
-                f"{max_cell} ({worst}). Raise nlist (finer clustering) or "
-                f"max_cell; a silently skipped cell would accept duplicates."
-            )
 
-    if impl == "pandas":
-        _guard(base)
-        import pandas as pd
-
-        def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            empty = pd.DataFrame({
-                "dup_id": pd.Series(dtype="int64"),
-                "cell": pd.Series(dtype="int64"),
-                "dup_of": pd.Series(dtype="int64"),
-                "cosine": pd.Series(dtype="float64"),
-            })
-            n = len(pdf)
-            if n < 2:
-                return empty
-            pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()]
-            )
-            ids = pdf[id_col].to_numpy()
-            norms = np.linalg.norm(X, axis=1)
-            denom = norms[:, None] * norms[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = np.where(denom == 0.0, 0.0,
-                             (X @ X.T) / np.where(denom == 0.0, 1.0, denom))
-            hit = np.tril(S >= threshold, k=-1)  # row j vs earlier rows i<j
-            dup_rows = hit.any(axis=1)
-            if not dup_rows.any():
-                return empty
-            first_i = hit.argmax(axis=1)  # smallest i with hit (ids sorted asc)
-            j = np.nonzero(dup_rows)[0]
-            i = first_i[j]
-            return pd.DataFrame({
-                "dup_id": ids[j].astype("int64"),
-                "cell": pdf[cell_col].to_numpy()[j].astype("int64"),
-                "dup_of": ids[i].astype("int64"),
-                "cosine": S[j, i],
-            })
-
-        flagged = (
-            base.groupBy(cell_col)
-            .applyInPandas(kernel, "dup_id long, cell long, dup_of long, cosine double")
-        )
-    elif impl == "native":
-        # the self-join duplicates the assignment kernel and the norm fold,
-        # and Spark's conflicting-attribute rewrite loses higher-order-
-        # function lambda bindings (ATTRIBUTE_NOT_FOUND at bind time; localCheckpoint's
-        # LogicalRDD dedup is unreliable too) — cache the assignment so both
-        # sides read one InMemoryRelation, whose self-join dedup is sound.
-        # Stays cached for the life of the returned plan (assignment is
-        # id+vec+cell, far smaller than the pair join it feeds).
-        from lantern_extras_spark.functions.vector import inner_product, vector_norm
-
-        # precompute per-row norms once (cached): each pair then evaluates
-        # only the dot-product fold — same expressions on the same data, so
-        # the cosine stays bit-identical to the inline cos_sim / SQL replay.
-        # (cache unconditionally: __nrm itself is a fold the self-join would
-        # otherwise duplicate, resurrecting the bind bug on the honored-cell
-        # path)
-        base = base.withColumn("__nrm", vector_norm(F.col(vec_col)))
-        # r14: scoped — next call releases this call's blocks (verdict item 3)
-        from lantern_extras_spark.operators._cachescope import scoped_persist
-
-        (base,) = scoped_persist("semantic_dedup_base", base)
-        # r13: the oversize guard doubles as the cache materializer — one job
-        # computes the assignment (guard previously re-ran the whole
-        # assignment fold BEFORE the cache, then count() ran it again)
-        _guard(base)
-        a, b = base.alias("sd_a"), base.alias("sd_b")
-        denom = F.col("sd_a.__nrm") * F.col("sd_b.__nrm")
-        pair_cos = F.when(denom == 0.0, F.lit(0.0)).otherwise(
-            inner_product(F.col(f"sd_a.{vec_col}"), F.col(f"sd_b.{vec_col}")) / denom
-        )
-        flagged = (
-            a.join(b, F.col(f"sd_a.{cell_col}") == F.col(f"sd_b.{cell_col}"))
-            .where(F.col(f"sd_a.{id_col}") < F.col(f"sd_b.{id_col}"))
-            .select(
-                F.col(f"sd_a.{id_col}").alias("id_a"),
-                F.col(f"sd_b.{id_col}").alias("dup_id"),
-                F.col(f"sd_a.{cell_col}").alias("__cell"),
-                pair_cos.alias("cosine"),
-            )
-            .where(F.col("cosine") >= threshold)
-            .groupBy("dup_id")
-            .agg(
-                F.min(F.struct(F.col("id_a"), F.col("cosine"))).alias("w"),
-                F.first(F.col("__cell")).alias("cell"),
-            )
-            .select(
-                "dup_id", F.col("cell").cast("bigint").alias("cell"),
-                F.col("w.id_a").alias("dup_of"), F.col("w.cosine").alias("cosine"),
-            )
-        )
-    else:
-        raise ValueError(f"unknown impl {impl!r}")
+    flagged = base.groupBy(cell_col).applyInArrow(
+        kernel, "dup_id long, cell long, dup_of long, cosine double"
+    )
 
     if mode == "flag":
         return flagged
@@ -2119,7 +1950,9 @@ def semantic_dedup_recall(
     )
     base = IVF.assign_cells(sample, centroids, vec_col=vec_col)
     base = base.withColumn("__nrm", vector_norm(F.col(vec_col)))
-    base = base.cache()  # sound self-join dedup (see semantic_dedup)
+    # one InMemoryRelation for both sides: Spark's conflicting-attribute
+    # rewrite of a self-join loses higher-order-function lambda bindings
+    base = base.cache()
     n_sample = base.count()
     a, b = base.alias("sr_a"), base.alias("sr_b")
     denom = F.col("sr_a.__nrm") * F.col("sr_b.__nrm")
@@ -2156,7 +1989,6 @@ def semantic_dedup_incremental(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cell_col: str = "cell",
-    impl: str = "pandas",
     max_cell: int = 100_000,
 ) -> DataFrame:
     """Incremental SemDeDup: match a NEW batch of embeddings against an
@@ -2180,12 +2012,16 @@ def semantic_dedup_incremental(
     the store provenance (the ingest decision that matters: "this was
     already in the corpus").
 
-    impl="native" is the DuckDB-replay config; impl="pandas" runs one GEMM
-    per cell over (store rows in cell + batch rows in cell). `max_cell`
-    fail-louds exactly like `semantic_dedup`.
+    Per cell one `applyInArrow` kernel runs the batch rows against (store
+    rows in cell + batch rows in cell) through `_distance.similar`, so
+    membership and cosine are `cos_sim`'s bit for bit, as in
+    `semantic_dedup`. `max_cell` fail-louds exactly like `semantic_dedup`.
     """
-    from lantern_extras_spark.functions.vector import inner_product, vector_norm
+    import numpy as np
+    import pyarrow as pa
+
     from lantern_extras_spark.operators import ivf as IVF
+    from lantern_extras_spark.operators._distance import vectors
 
     def side(df: DataFrame, rank: int) -> DataFrame:
         s = df
@@ -2198,104 +2034,55 @@ def semantic_dedup_incremental(
 
     tagged = side(corpus, 0).unionByName(side(new_df, 1))
 
-    def _guard(frame: DataFrame) -> None:
-        oversized = (
-            frame.groupBy(cell_col).count().where(F.col("count") > max_cell).collect()
-        )
-        if oversized:
-            worst = ", ".join(f"cell {r[cell_col]}={r['count']}" for r in oversized[:5])
-            raise ValueError(
-                f"semantic_dedup_incremental: {len(oversized)} cell(s) exceed "
-                f"max_cell={max_cell} ({worst}). Use finer centroids or raise "
-                f"max_cell; a silently skipped cell would accept duplicates."
-            )
+    _guard_cells(tagged, cell_col, max_cell, "semantic_dedup_incremental", "Use finer centroids")
+    schema = "dup_id long, cell long, dup_of long, cosine double, vs string"
 
-    if impl == "pandas":
-        _guard(tagged)
-        import numpy as np
-        import pandas as pd
+    def kernel(tbl: pa.Table) -> pa.Table:
+        ids = tbl.column(id_col).to_numpy().astype(np.int64)
+        batch = tbl.column("__rank").to_numpy() == 1
+        # rows ordered (corpus by id, then batch by id): for batch row j,
+        # the first matching partner IS the min(rank, id) winner
+        order = np.lexsort((ids, batch))
+        ids, batch = ids[order], batch[order]
+        X = vectors(tbl.column(vec_col))[order]
+        b = np.nonzero(batch)[0]
+        j, i, sim = _first_matches(
+            X[b], X, threshold, ~batch[None, :] | (ids[None, :] < ids[b][:, None])
+        )
+        j = b[j]
+        cells = tbl.column(cell_col).to_numpy().astype(np.int64)[order]
+        return pa.table(
+            [pa.array(ids[j]), pa.array(cells[j]), pa.array(ids[i]), pa.array(sim),
+             pa.array(np.where(batch[i], "batch", "corpus"), pa.string())],
+            names=["dup_id", "cell", "dup_of", "cosine", "vs"],
+        )
 
-        def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            empty = pd.DataFrame({
-                "dup_id": pd.Series(dtype="int64"),
-                "cell": pd.Series(dtype="int64"),
-                "dup_of": pd.Series(dtype="int64"),
-                "cosine": pd.Series(dtype="float64"),
-                "vs": pd.Series(dtype="object"),
-            })
-            if len(pdf) < 2 or not (pdf["__rank"] == 1).any():
-                return empty
-            # rows ordered (corpus by id, then batch by id): for batch row j,
-            # the first earlier hit IS the min(rank, id) winner
-            pdf = pdf.sort_values(["__rank", id_col], kind="mergesort").reset_index(drop=True)
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()]
-            )
-            norms = np.linalg.norm(X, axis=1)
-            denom = norms[:, None] * norms[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = np.where(denom == 0.0, 0.0,
-                             (X @ X.T) / np.where(denom == 0.0, 1.0, denom))
-            is_batch = (pdf["__rank"] == 1).to_numpy()
-            hit = np.tril(S >= threshold, k=-1)
-            hit[~is_batch] = False  # only batch rows can be flagged
-            dup_rows = hit.any(axis=1)
-            if not dup_rows.any():
-                return empty
-            first_i = hit.argmax(axis=1)
-            j = np.nonzero(dup_rows)[0]
-            i = first_i[j]
-            ids = pdf[id_col].to_numpy()
-            return pd.DataFrame({
-                "dup_id": ids[j].astype("int64"),
-                "cell": pdf[cell_col].to_numpy()[j].astype("int64"),
-                "dup_of": ids[i].astype("int64"),
-                "cosine": S[j, i],
-                "vs": np.where(is_batch[i], "batch", "corpus"),
-            })
+    return tagged.groupBy(cell_col).applyInArrow(kernel, schema)
 
-        return tagged.groupBy(cell_col).applyInPandas(
-            kernel, "dup_id long, cell long, dup_of long, cosine double, vs string"
-        )
-    if impl != "native":
-        raise ValueError(f"unknown impl {impl!r}")
 
-    tagged = tagged.withColumn("__nrm", vector_norm(F.col(vec_col)))
-    tagged = tagged.cache()  # one InMemoryRelation for the self-join (see semantic_dedup)
-    # r13: the guard job doubles as the cache materializer (was: guard ran the
-    # whole assignment fold uncached, then count() ran it a second time)
-    _guard(tagged)
-    a, b = tagged.alias("si_a"), tagged.alias("si_b")
-    denom = F.col("si_a.__nrm") * F.col("si_b.__nrm")
-    pair_cos = F.when(denom == 0.0, F.lit(0.0)).otherwise(
-        inner_product(F.col(f"si_a.{vec_col}"), F.col(f"si_b.{vec_col}")) / denom
-    )
-    earlier = (F.col("si_a.__rank") == 0) | (
-        F.col(f"si_a.{id_col}") < F.col(f"si_b.{id_col}")
-    )
-    return (
-        a.join(b, F.col(f"si_a.{cell_col}") == F.col(f"si_b.{cell_col}"))
-        .where((F.col("si_b.__rank") == 1) & earlier)
-        .select(
-            F.col("si_a.__rank").alias("rank_a"),
-            F.col(f"si_a.{id_col}").alias("id_a"),
-            F.col(f"si_b.{id_col}").alias("dup_id"),
-            F.col(f"si_a.{cell_col}").alias("__cell"),
-            pair_cos.alias("cosine"),
+def _guard_cells(frame: DataFrame, cell_col: str, max_cell: int, op: str, remedy: str) -> None:
+    """Fail-loud oversize guard of the per-cell kernels (collects only
+    violators — tiny by definition)."""
+    oversized = frame.groupBy(cell_col).count().where(F.col("count") > max_cell).collect()
+    if oversized:
+        worst = ", ".join(f"cell {r[cell_col]}={r['count']}" for r in oversized[:5])
+        raise ValueError(
+            f"{op}: {len(oversized)} cell(s) exceed max_cell={max_cell} ({worst}). "
+            f"{remedy} or raise max_cell; a silently skipped cell would accept duplicates."
         )
-        .where(F.col("cosine") >= threshold)
-        .groupBy("dup_id")
-        .agg(
-            F.min(F.struct(F.col("rank_a"), F.col("id_a"), F.col("cosine"))).alias("w"),
-            F.first(F.col("__cell")).alias("cell"),
-        )
-        .select(
-            "dup_id", F.col("cell").cast("bigint").alias("cell"),
-            F.col("w.id_a").alias("dup_of"), F.col("w.cosine").alias("cosine"),
-            F.when(F.col("w.rank_a") == 0, F.lit("corpus"))
-            .otherwise(F.lit("batch")).alias("vs"),
-        )
-    )
+
+
+def _first_matches(Y, X, threshold: float, mask) -> tuple:
+    """For each row j of Y with an allowed partner (mask[j, i]) of fold
+    cosine >= threshold in X, the first such i and their fold similarity
+    (`_distance.similar`, row-major, so i is the smallest column)."""
+    import numpy as np
+
+    from lantern_extras_spark.operators._distance import similar
+
+    rows, cols, sim = similar(Y, X, threshold, mask)
+    first = np.unique(rows, return_index=True)[1]
+    return rows[first], cols[first], sim[first]
 
 
 def dedup_paragraphs(

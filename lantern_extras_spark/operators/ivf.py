@@ -568,9 +568,7 @@ def ivf_pq_topk_batch(
     LUT, so a candidate row costs `splits` lookups per probing query. Partial
     per-batch top-k per query, one window to finish.
     Returns (query_id, id_col, adc_distance, rank ≤ k)."""
-    import pandas as pd
-
-    from lantern_extras_spark.operators.pq import _codebook_tensor, split_bounds
+    from lantern_extras_spark.operators.pq import _codebook_tensor, _codes, _partial_schema, split_bounds
 
     mats, splits = _codebook_tensor(codebook)
     qids = np.array([q[0] for q in queries], dtype=np.int64)
@@ -592,30 +590,20 @@ def ivf_pq_topk_batch(
     spark = indexed_df.sparkSession
     b = spark.sparkContext.broadcast((qids, luts))
 
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField(id_col, LongType()),
-            StructField("adc_distance", DoubleType()),
-        ]
-    )
+    out_schema = _partial_schema(id_col)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         qi, L = b.value
         nq = len(qi)
         per_query: dict[int, list[tuple[int, int]]] = {}
         for (j, cell), _ in L.items():
             per_query.setdefault(j, []).append(cell)
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            codes = np.asarray(
-                [np.frombuffer(c, dtype=np.uint8) if isinstance(c, (bytes, bytearray)) else np.asarray(c)
-                 for c in pdf[code_col].to_numpy()],
-                dtype=np.int64,
-            )
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cells_v = pdf[cell_col].to_numpy()
+            codes = _codes(batch.column(code_col))
+            ids = batch.column(id_col).to_numpy().astype(np.int64)
+            cells_v = batch.column(cell_col).to_numpy()
             cell_rows = {c: np.nonzero(cells_v == c)[0] for c in np.unique(cells_v)}
             for j in range(nq):
                 d_parts, i_parts = [], []
@@ -634,18 +622,14 @@ def ivf_pq_topk_batch(
                 dist = np.concatenate(d_parts)
                 rid = np.concatenate(i_parts)
                 order = np.lexsort((rid, dist))[: min(k, len(dist))]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.full(len(order), qi[j], dtype=np.int64),
-                        id_col: rid[order],
-                        "adc_distance": dist[order],
-                    }
-                )
+                yield from _pairs(
+                    out_schema, np.full(len(order), qi[j]), rid[order], dist[order]
+                ).to_batches()
 
     pruned = indexed_df.where(F.col(cell_col).isin([int(c) for c in union_cells])).select(
         id_col, cell_col, code_col
     )
-    partial = pruned.mapInPandas(scan, out_schema)
+    partial = pruned.mapInArrow(scan, out_schema)
     w = Window.partitionBy("query_id").orderBy(F.col("adc_distance").asc(), F.col(id_col).asc())
     return (
         partial.withColumn("rank", F.row_number().over(w))

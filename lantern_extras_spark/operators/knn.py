@@ -9,16 +9,16 @@ Reference surface:
 Spark-first design, sized for 100 TB:
 - The query side is always the small side → **broadcast** it; the data side streams
   through a narrow map stage. There is no shuffle of the data table at all.
-- Strategy "partial" (the one scale path): the query side is collected in
-  blocks of at most `chunk_size` rows, each block bounded by
-  MAX_COLLECTED_QUERIES (one collect sliced on the driver at or under the cap,
-  a hash split into bounded collects above it). Per Arrow batch a numpy/BLAS
-  kernel computes the distance matrix against one block and keeps only the k
-  best rows per query, so the global top-k step sees ≤ (#tasks × q × k) rows
-  instead of n×q. The block frames are unioned and one window finishes the
-  exact top-k. Total shuffled bytes are O(q·k·#tasks), independent of n·d.
-- Strategy "crossjoin": declarative broadcast-nested-loop + window; Catalyst plan,
-  good for small data sides and for the correctness oracle, O(n·q) through the window.
+- One plan: the query side is collected in blocks of at most `chunk_size`
+  rows, each block bounded by MAX_COLLECTED_QUERIES (one collect sliced on
+  the driver at or under the cap, a hash split into bounded collects above
+  it). Per Arrow batch the exact kernel (`_distance.topk`: GEMM ranking,
+  fold distances) keeps the k best rows per query, so the global top-k step
+  sees ≤ (#tasks × q × k) rows instead of n×q. The block frames are unioned
+  and one window finishes the exact top-k. Total shuffled bytes are
+  O(q·k·#tasks), independent of n·d.
+- Every distance it emits is the Column fold's (`distance_col`) bit for bit,
+  which is what the DuckDB oracle replays.
 
 Ties are broken deterministically by (distance, id) so results are reproducible and
 hash-comparable across engines.
@@ -31,7 +31,7 @@ import time
 from typing import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -42,8 +42,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from lantern_extras_spark.functions.portable import pround
-from lantern_extras_spark.operators._distance import gemm
+from lantern_extras_spark.operators import _distance
 
 # ceiling on the query rows any one driver collect holds: at or under it the
 # query side is collected once and sliced into blocks; above it, it is
@@ -106,41 +105,29 @@ def knn_join(
     vec_col: str = "embedding",
     qid_col: str = "query_id",
     qvec_col: str = "query_vec",
-    strategy: str = "partial",
     dist_scale: int | None = None,
     chunk_size: int = 50_000,
 ) -> DataFrame:
     """Batch exact kNN: for every query row, the k nearest data rows.
 
-    Returns (qid_col, id_col, distance, rank). `strategy`:
-    - "partial" (default): the query side is collected in blocks of at most
-      `chunk_size` rows (`_query_blocks`: sliced on the driver at or under
-      MAX_COLLECTED_QUERIES, hash-split into bounded collects above it);
-      each block is broadcast into an Arrow-batched kernel that emits
-      per-task top-k, the block frames are unioned, and one window ranks
-      per query (blocks partition the queries, so no cross-block merge).
-      The data side is scanned once per block — exact kNN's O(n*q)
-      distance work is irreducible; persist `data` to amortize IO when it
-      fits. For query sides whose broadcasts (~q*d*8 bytes) are too large
-      for executors, `ivf.ivf_knn_join` is the (approximate)
-      both-sides-distributed alternative.
-    - "crossjoin": pure-DataFrame broadcast join + window (oracle-friendly).
+    Returns (qid_col, id_col, distance, rank). The query side is collected
+    in blocks of at most `chunk_size` rows (`_query_blocks`: sliced on the
+    driver at or under MAX_COLLECTED_QUERIES, hash-split into bounded
+    collects above it); each block is broadcast into an Arrow-batched kernel
+    that emits per-task top-k, the block frames are unioned, and one window
+    ranks per query (blocks partition the queries, so no cross-block merge).
+    The data side is scanned once per block — exact kNN's O(n*q) distance
+    work is irreducible; persist `data` to amortize IO when it fits. For
+    query sides whose broadcasts (~q*d*8 bytes) are too large for executors,
+    `ivf.ivf_knn_join` is the (approximate) both-sides-distributed
+    alternative.
 
-    `dist_scale` rounds the distance *before* ranking (with (distance, id) tie-break)
-    so rankings are reproducible across engines for correctness harnesses.
+    Distances are the Column fold's (`distance_col`) bit for bit.
+    `dist_scale` rounds the distance (`portable.pround`) *before* ranking
+    (with (distance, id) tie-break), the rounding the oracle replays.
     """
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
-    if strategy == "crossjoin":
-        d = distance_col(metric, F.col(vec_col), F.col(qvec_col))
-        if dist_scale is not None:
-            d = pround(d, dist_scale)
-        joined = data.select(id_col, vec_col).crossJoin(
-            F.broadcast(queries.select(qid_col, qvec_col))
-        )
-        return _rank(joined.withColumn("distance", d), k, qid_col, id_col)
-    if strategy != "partial":
-        raise ValueError(f"unknown strategy {strategy!r}")
     cands = _blocked_partial(
         data, queries.select(qid_col, qvec_col), k, metric, id_col, vec_col,
         qid_col, dist_scale, chunk_size,
@@ -151,8 +138,8 @@ def knn_join(
 def _rank(
     cands: DataFrame, k: int, qid_col: str, id_col: str, label_col: str | None = None
 ) -> DataFrame:
-    """The finishing window shared by every strategy: the exact top-k per
-    query under the (distance, id) order."""
+    """The finishing window of knn_join and hard_negatives: the exact top-k
+    per query under the (distance, id) order."""
     w = Window.partitionBy(qid_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
     label = [label_col] if label_col is not None else []
     return (
@@ -166,15 +153,17 @@ def _query_blocks(qsel: DataFrame, qid_col: str, chunk_size: int) -> Iterator[li
     """The query side as driver-held blocks of rows that partition it, each
     bounded by MAX_COLLECTED_QUERIES.
 
-    One bounded `limit(MAX_COLLECTED_QUERIES + 1).collect()` decides the
-    plan. At or under the cap the collected rows are sliced into blocks of
-    at most `chunk_size` on the driver, with no further job. Above it the
-    driver never holds the whole side: `qsel` is persisted, counted and
-    hash-split on qid into ceil(q / chunk_size) blocks, each collected under
-    the same bound and yielded one at a time, then released. The qid hash is
-    uniform, and chunk_size is capped at MAX_COLLECTED_QUERIES // 2 so even
-    a 2x hash imbalance stays inside the ceiling; an actual breach
-    fail-louds."""
+    `qsel` is persisted, then one bounded
+    `limit(MAX_COLLECTED_QUERIES + 1).collect()` decides the plan. At or
+    under the cap the collected rows are sliced into blocks of at most
+    `chunk_size` on the driver, with no further job. Above it the driver
+    never holds the whole side: `qsel` is counted and hash-split on qid into
+    ceil(q / chunk_size) blocks, each collected under the same bound and
+    yielded one at a time, then released. The persist lets the count and
+    the block collects read the partitions the probe already computed. The
+    qid hash is uniform, and chunk_size is capped at MAX_COLLECTED_QUERIES
+    // 2 so even a 2x hash imbalance stays inside the ceiling; an actual
+    breach fail-louds."""
     if chunk_size < 1:
         raise ValueError(f"chunk_size must be >= 1, got {chunk_size}")
     if chunk_size > MAX_COLLECTED_QUERIES // 2:
@@ -184,14 +173,14 @@ def _query_blocks(qsel: DataFrame, qid_col: str, chunk_size: int) -> Iterator[li
             f"({MAX_COLLECTED_QUERIES}) would be gone. Use more, smaller "
             "chunks; the per-chunk cost is one data-side scan."
         )
-    rows = qsel.limit(MAX_COLLECTED_QUERIES + 1).collect()
-    if len(rows) <= MAX_COLLECTED_QUERIES:
-        for s in range(0, len(rows), chunk_size):
-            yield rows[s : s + chunk_size]
-        return
-    del rows  # release the probe before the per-block collects
     qsel = qsel.persist()
     try:
+        rows = qsel.limit(MAX_COLLECTED_QUERIES + 1).collect()
+        if len(rows) <= MAX_COLLECTED_QUERIES:
+            for s in range(0, len(rows), chunk_size):
+                yield rows[s : s + chunk_size]
+            return
+        del rows  # release the probe before the per-block collects
         n_blocks = -(-qsel.count() // chunk_size)  # ceil
         block_key = F.pmod(
             F.xxhash64(F.col(qid_col), F.lit("knn_chunk")), F.lit(n_blocks)
@@ -261,110 +250,87 @@ def _partial_frame(
     dist_scale: int | None,
     label_col: str | None = None,
 ) -> DataFrame:
-    """The partial-top-k mapInPandas frame for one broadcast query block
-    (no finishing window): per Arrow batch a BLAS distance kernel keeps the
-    k best rows per query, so downstream sees <= (#tasks x q x k) rows.
+    """The partial-top-k mapInArrow frame for one broadcast query block
+    (no finishing window): per Arrow batch the exact kernel
+    (`_distance.topk`) keeps the k best rows per query, so downstream sees
+    <= (#tasks x q x k) rows.
 
     With `label_col` (hard_negatives) each query row carries its label as a
-    third field; the label-mismatch mask is applied INSIDE the batch before
-    ranking (same-label pairs score +inf and are dropped at emit), and each
+    third field; same-label pairs are masked out of the kernel (they never
+    set its bound and score +inf, so they are dropped at emit), and each
     candidate carries its data-side label.
 
     Kernel shape (sized for 100k-query blocks, not just autotune samples):
     - queries are processed in slices so the distance matrix never exceeds
       ~_Q_BLOCK_ELEMS doubles regardless of block size;
-    - the exact (distance, id) top-k is fully vectorized — batch rows are
-      pre-sorted by id once, then a per-column STABLE argsort resolves
-      distance ties to the smaller id (identical ordering to
-      np.lexsort((ids, D[:, j])) per query, without a q-iteration Python
-      loop);
-    - a running (k x q) best-so-far buffer merges across Arrow batches and
-      the task emits ONCE at the end — shuffle volume is tasks*q*k, not
-      batches*q*k (a 128 MB task holds ~100 batches; emitting per batch
-      would inflate the exchange 100x at scale)."""
+    - a running (k x q) best-so-far buffer merges across Arrow batches under
+      the (distance, id) order and the task emits ONCE at the end — shuffle
+      volume is tasks*q*k, not batches*q*k (a 128 MB task holds ~100
+      batches; emitting per batch would inflate the exchange 100x at
+      scale)."""
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     Q = np.array([list(map(float, r[1])) for r in qrows], dtype=np.float64)
-    sc = data.sparkSession.sparkContext
-    bqids = sc.broadcast(qids)
-    bQ = sc.broadcast(Q)
     labeled = label_col is not None
-    blab = sc.broadcast(np.array([r[2] for r in qrows], dtype=object)) if labeled else None
+    qlabs = np.array([r[2] for r in qrows], dtype=object) if labeled else None
+    bq = data.sparkSession.sparkContext.broadcast((qids, Q, qlabs))
     out_schema = _candidate_schema(data, id_col, qid_col, label_col)
+    names = out_schema.fieldNames()
 
-    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qi, Qm = bqids.value, bQ.value
-        ql = blab.value if labeled else None
-        nq, dim = Qm.shape[0], (Qm.shape[1] if Qm.ndim == 2 else 1)
+    def partial_topk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        qi, Qm, ql = bq.value
+        nq = len(qi)
         # running per-task top-k: unfilled slots carry (+inf, PAD) so they
         # sort last under the (distance, id) order and are dropped at emit
         PAD = np.iinfo(np.int64).max
-        best_d = best_i = best_l = None
-        for pdf in batches:
-            n = len(pdf)
+        best_d = np.full((k, nq), np.inf)
+        best_i = np.full((k, nq), PAD, dtype=np.int64)
+        best_l = np.full((k, nq), None, dtype=object) if labeled else None
+        label_type = None
+        for batch in batches:
+            n = batch.num_rows
             if n == 0:
                 continue
-            if best_d is None:
-                best_d = np.full((k, nq), np.inf)
-                best_i = np.full((k, nq), PAD, dtype=np.int64)
-                if labeled:
-                    best_l = np.full((k, nq), None, dtype=object)
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()])
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            # pre-sort rows by id: the stable per-column argsort below then
-            # breaks equal distances toward the smaller id — the exact
-            # (distance, id) order the finishing window expects
-            perm = np.argsort(ids, kind="stable")
-            X, ids = X[perm], ids[perm]
+            X = _distance.vectors(batch.column(vec_col))
+            ids = batch.column(id_col).to_numpy().astype(np.int64)
             if labeled:
-                labs = pdf[label_col].to_numpy()[perm]
-            kk = min(k, n)
+                labs = batch.column(label_col).to_numpy(zero_copy_only=False)
+                label_type = batch.schema.field(label_col).type
             # hamming's kernel materializes n*q*dim comparisons; the GEMM
             # metrics only n*q — bound the slice accordingly
-            per_pair = dim if metric == "hamming" else 1
+            per_pair = X.shape[1] if metric == "hamming" else 1
             qb = max(1, _Q_BLOCK_ELEMS // max(n * per_pair, 1))
             for s0 in range(0, nq, qb):
                 sl = slice(s0, s0 + qb)
-                D = gemm(metric, X, Qm[sl])
-                if dist_scale is not None:
-                    s = float(10**dist_scale)
-                    D = np.floor(D * s + 0.5) / s  # portable rounding (matches pround)
+                mask = labs[:, None] != ql[None, sl] if labeled else None
+                rows, d = _distance.topk(metric, X, Qm[sl], k, ids, dist_scale, mask)
+                # merge this batch's top-k into the running best under the
+                # (distance, id) order; PAD rows (inf) sink
+                md = np.vstack([best_d[:, sl], d.T])
+                mi = np.vstack([best_i[:, sl], ids[rows].T])
+                order = np.lexsort((mi, md), axis=0)[:k]
+                best_d[:, sl] = np.take_along_axis(md, order, axis=0)
+                best_i[:, sl] = np.take_along_axis(mi, order, axis=0)
                 if labeled:
-                    # mask positives (same label) out of the candidate set
-                    D = np.where(labs[:, None] == ql[None, sl], np.inf, D)
-                top = np.argsort(D, axis=0, kind="stable")[:kk]  # (kk, qb')
-                # merge this batch's top-kk into the running best: stack,
-                # order by id (stable), then by distance (stable) — exact
-                # (distance, id) over both blocks; PAD rows (inf) sink
-                md = np.vstack([best_d[:, sl], np.take_along_axis(D, top, axis=0)])
-                mi = np.vstack([best_i[:, sl], ids[top]])
-                by_id = np.argsort(mi, axis=0, kind="stable")
-                md = np.take_along_axis(md, by_id, axis=0)
-                mi = np.take_along_axis(mi, by_id, axis=0)
-                by_d = np.argsort(md, axis=0, kind="stable")[:k]
-                best_d[:, sl] = np.take_along_axis(md, by_d, axis=0)
-                best_i[:, sl] = np.take_along_axis(mi, by_d, axis=0)
-                if labeled:
-                    ml = np.vstack([best_l[:, sl], labs[top]])
-                    ml = np.take_along_axis(ml, by_id, axis=0)
-                    best_l[:, sl] = np.take_along_axis(ml, by_d, axis=0)
-        if best_d is not None:
-            flat_d = best_d.ravel()
-            keep = best_i.ravel() != PAD
-            if labeled:
-                # masked (+inf) survivors too: a task with fewer than k
-                # negatives emits only its real candidates
-                keep &= np.isfinite(flat_d)
-            out = {
-                qid_col: np.broadcast_to(qi[None, :], best_i.shape).ravel()[keep],
-                id_col: best_i.ravel()[keep],
-            }
-            if labeled:
-                out[label_col] = best_l.ravel()[keep]
-            out["distance"] = flat_d[keep]
-            yield pd.DataFrame(out)
+                    ml = np.vstack([best_l[:, sl], labs[rows].T])
+                    best_l[:, sl] = np.take_along_axis(ml, order, axis=0)
+        keep = best_i.ravel() != PAD
+        if labeled:
+            # masked (+inf) survivors too: a task with fewer than k
+            # negatives emits only its real candidates
+            keep &= np.isfinite(best_d.ravel())
+        if not keep.any():
+            return
+        cols = [
+            pa.array(np.broadcast_to(qi[None, :], best_i.shape).ravel()[keep]),
+            pa.array(best_i.ravel()[keep]),
+        ]
+        if labeled:
+            cols.append(pa.array(best_l.ravel()[keep], type=label_type))
+        cols.append(pa.array(best_d.ravel()[keep]))
+        yield pa.RecordBatch.from_arrays(cols, names=names)
 
     cols = [id_col, vec_col] + ([label_col] if labeled else [])
-    return data.select(*cols).mapInPandas(partial_topk, out_schema)
+    return data.select(*cols).mapInArrow(partial_topk, out_schema)
 
 
 def hard_negatives(
@@ -378,41 +344,27 @@ def hard_negatives(
     qid_col: str = "query_id",
     qvec_col: str = "query_vec",
     qlabel_col: str = "query_label",
-    strategy: str = "partial",
     dist_scale: int | None = None,
     chunk_size: int = 50_000,
 ) -> DataFrame:
     """Contrastive hard-negative mining: for each query vector, the k nearest
     data vectors whose label DIFFERS from the query's — the pairs that teach
     an embedding model the most (closest in space, known to be different).
-    The training-pair counterpart of the exact-kNN join (J2): same execution
-    strategies, with the label-mismatch constraint applied BEFORE ranking so
-    the result is the true top-k among negatives, not a post-filtered top-k.
+    The training-pair counterpart of the exact-kNN join (J2): the same plan,
+    with the label-mismatch constraint applied BEFORE ranking so the result
+    is the true top-k among negatives, not a post-filtered top-k.
 
     Returns (qid_col, id_col, label_col, distance, rank). Rows with NULL
     labels are excluded from both sides (a null label can neither match nor
-    mismatch). Strategies mirror knn_join: "partial" (query blocks of at
-    most `chunk_size` rows, labels traveling in each block's broadcast,
-    through the kernel that masks same-label pairs per batch — mining
-    negatives for a full training set, not just a sample) and "crossjoin"
-    (declarative; the oracle-parity path).
+    mismatch). Query blocks of at most `chunk_size` rows carry their labels
+    in each block's broadcast, and the kernel masks same-label pairs out of
+    each batch's ranking — mining negatives for a full training set, not
+    just a sample. Distances and `dist_scale` are as in knn_join.
     """
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
     data = data.where(F.col(label_col).isNotNull())
     queries = queries.where(F.col(qlabel_col).isNotNull())
-    if strategy == "crossjoin":
-        d = distance_col(metric, F.col(vec_col), F.col(qvec_col))
-        if dist_scale is not None:
-            d = pround(d, dist_scale)
-        joined = (
-            data.select(id_col, vec_col, label_col)
-            .crossJoin(F.broadcast(queries.select(qid_col, qvec_col, qlabel_col)))
-            .where(F.col(label_col) != F.col(qlabel_col))
-        )
-        return _rank(joined.withColumn("distance", d), k, qid_col, id_col, label_col)
-    if strategy != "partial":
-        raise ValueError(f"unknown strategy {strategy!r}")
     cands = _blocked_partial(
         data, queries.select(qid_col, qvec_col, qlabel_col), k, metric, id_col,
         vec_col, qid_col, dist_scale, chunk_size, label_col,

@@ -22,8 +22,11 @@ Scale design:
   keeps its float64 tensor so `quantize` does not collect it back.
 - Quantization of the full table is an Arrow kernel (`mapInArrow`) with the
   codebook broadcast as one (splits × k × subdim) numpy tensor: per batch one
-  reshape of the vector column and one BLAS GEMM per subvector, every other
+  reshape of the vector column and one exact selection per subvector
+  (`_distance.topk`: GEMM ranking, fold-settled near-ties), every other
   column passed through as Arrow, no shuffle; scales linearly with the scan.
+- Decode and the ADC scans read the code column as one flat Arrow buffer
+  (`_codes`), never row by row.
 - Codes are `array<smallint>` by default (oracle/array-function friendly);
   `as_binary=True` packs to BinaryType (1 byte/code — the PQVEC layout) for
   storage-bound corpora.
@@ -35,7 +38,6 @@ import weakref
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -51,7 +53,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from lantern_extras_spark.operators._distance import vectors
+from lantern_extras_spark.operators._distance import topk, vectors
 from lantern_extras_spark.session import local_frame
 
 
@@ -255,28 +257,18 @@ def quantize(
     out_col: str = "pqvec",
     as_binary: bool = False,
     dim: int | None = None,
-    formulation: str = "gemm",
 ) -> DataFrame:
     """Attach the PQ code column: per subvector the argmin-l2sq centroid id
     (reference Q3, pq/quantization.rs:17-79). Ties break toward the lower
     centroid id (argmin first-wins), matching the reference's strict `<` scan.
 
-    formulation="gemm" (default, the scale path): one BLAS call per subvector
-    via the ||x||²+||c||²−2x·c expansion — fastest, but catastrophic
-    cancellation makes distances differ from a direct Σ(x−c)² at ~1e-10
-    scale, so exact centroid near-ties can argmin differently than a SQL
-    oracle. formulation="direct" (the parity path): per-centroid (x−c)²
-    summed LEFT-TO-RIGHT over the slice (cumsum, matching DuckDB's
-    sequential list_sum association order) — near-tie flips against the
-    Σ(x−c)² oracle become impossible rather than improbable, at k× the
-    kernel cost (k is small; fine for oracle-checked fixtures, wrong for
-    100 TB scans — keep gemm there).
+    Each subvector's argmin is `_distance.topk(…, 1)`: one GEMM ranks the
+    centroids and the left-to-right Σ(x−c)² fold settles near-ties, so the
+    code is the argmin of the fold a SQL oracle replays, bit for bit.
 
     Pass `dim` (the vector length) to avoid the driver-side `first()` probe;
     the probe is kept as a fallback for ad-hoc use.
     """
-    if formulation not in ("gemm", "direct"):
-        raise ValueError(f"unknown formulation {formulation!r}")
     mats, splits = _codebook_tensor(codebook)
     spark = df.sparkSession
     b_mats = spark.sparkContext.broadcast(mats)
@@ -299,19 +291,7 @@ def quantize(
             X = vectors(batch.column(vec_col))
             codes = np.empty((n, splits), dtype=np.int16)
             for s, (lo, hi) in enumerate(bounds):
-                C = cb[s]
-                Xs = X[:, lo:hi]
-                if formulation == "gemm":
-                    d = (Xs * Xs).sum(1)[:, None] + (C * C).sum(1)[None, :] - 2.0 * Xs @ C.T
-                else:
-                    d = np.empty((len(Xs), len(C)))
-                    for j in range(len(C)):
-                        sq = Xs - C[j][None, :]
-                        sq *= sq
-                        # cumsum accumulates left-to-right: bit-matches the
-                        # oracle's sequential list_sum(Σ(x−c)²) association
-                        d[:, j] = np.cumsum(sq, axis=1)[:, -1]
-                codes[:, s] = d.argmin(axis=1)
+                codes[:, s] = topk("l2sq", cb[s], X[:, lo:hi], 1)[0][:, 0]
             # every other column passes through as Arrow; the codes are one
             # fixed-stride list (or binary) array over the flat code buffer
             offsets = pa.py_buffer(np.arange(0, n * splits + 1, splits, dtype=np.int32))
@@ -328,6 +308,19 @@ def quantize(
     return df.mapInArrow(assign, out_schema)
 
 
+def _codes(arr: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """(n, splits) int64 code matrix of a non-empty code column, read flat:
+    `array<smallint>` through `vectors`, binary (one byte per code) straight
+    from its data buffer."""
+    if not pa.types.is_binary(arr.type):
+        return vectors(arr).astype(np.int64)
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[arr.offset : arr.offset + len(arr) + 1]
+    flat = np.frombuffer(arr.buffers()[2], dtype=np.uint8)[offs[0] : offs[-1]]
+    return flat.astype(np.int64).reshape(len(arr), -1)
+
+
 def decode(
     df: DataFrame,
     codebook: DataFrame,
@@ -338,25 +331,25 @@ def decode(
     mats, splits = _codebook_tensor(codebook)
     spark = df.sparkSession
     b_mats = spark.sparkContext.broadcast(mats)
-    fields = df.schema.fields + [StructField(out_col, ArrayType(FloatType(), False))]
-    out_schema = StructType(fields)
-    cols = [f.name for f in df.schema.fields]
+    out_schema = StructType(df.schema.fields + [StructField(out_col, ArrayType(FloatType(), False))])
+    names = out_schema.fieldNames()
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def dec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         cb = b_mats.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            out = []
-            for codes in pdf[code_col]:
-                codes = list(codes) if not isinstance(codes, (bytes, bytearray)) else list(codes)
-                out.append(
-                    [float(x) for s in range(splits) for x in cb[s][codes[s]]]
-                )
-            pdf[out_col] = out
-            yield pdf[cols + [out_col]]
+            codes = _codes(batch.column(code_col))
+            V = np.hstack([cb[s][codes[:, s]] for s in range(splits)]).astype(np.float32)
+            offsets = pa.py_buffer(np.arange(0, V.size + 1, V.shape[1], dtype=np.int32))
+            out = pa.Array.from_buffers(
+                pa.list_(pa.field("element", pa.float32(), False)), n, [None, offsets],
+                children=[pa.array(V.ravel())],
+            )
+            yield pa.RecordBatch.from_arrays(batch.columns + [out], names=names)
 
-    return df.mapInPandas(dec, out_schema)
+    return df.mapInArrow(dec, out_schema)
 
 
 def adc_topk(
@@ -383,23 +376,35 @@ def adc_topk(
         [StructField(id_col, LongType()), StructField("adc_distance", FloatType())]
     )
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         L = b_lut.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            codes = np.asarray(
-                [np.frombuffer(c, dtype=np.uint8) if isinstance(c, (bytes, bytearray)) else np.asarray(c)
-                 for c in pdf[code_col].to_numpy()],
-                dtype=np.int64,
-            )
-            dist = np.zeros(len(pdf))
+            codes = _codes(batch.column(code_col))
+            dist = np.zeros(batch.num_rows)
             for s in range(splits):
                 dist += L[s][codes[:, s]]
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "adc_distance": dist.astype(np.float32)})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(batch.column(id_col).to_numpy().astype(np.int64)),
+                 pa.array(dist.astype(np.float32))],
+                names=out_schema.fieldNames(),
+            )
 
-    scanned = df.select(id_col, code_col).mapInPandas(scan, out_schema)
+    scanned = df.select(id_col, code_col).mapInArrow(scan, out_schema)
     return scanned.orderBy(F.col("adc_distance").asc(), F.col(id_col).asc()).limit(k)
+
+
+def _partial_schema(id_col: str) -> StructType:
+    """(query_id, id_col, adc_distance): the per-batch candidates of the
+    batched ADC scans, before their finishing window."""
+    return StructType(
+        [
+            StructField("query_id", LongType()),
+            StructField(id_col, LongType()),
+            StructField("adc_distance", DoubleType()),
+        ]
+    )
 
 
 def adc_topk_batch(
@@ -427,45 +432,31 @@ def adc_topk_batch(
             for s, (lo, hi) in enumerate(bounds)]
     spark = df.sparkSession
     b = spark.sparkContext.broadcast((qids, luts))
+    out_schema = _partial_schema(id_col)
 
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField(id_col, LongType()),
-            StructField("adc_distance", DoubleType()),
-        ]
-    )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         qi, L = b.value
         nq = len(qi)
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            codes = np.asarray(
-                [np.frombuffer(c, dtype=np.uint8) if isinstance(c, (bytes, bytearray)) else np.asarray(c)
-                 for c in pdf[code_col].to_numpy()],
-                dtype=np.int64,
-            )
-            n = len(pdf)
+            codes = _codes(batch.column(code_col))
             D = np.zeros((n, nq))
             for s in range(splits):
                 D += L[s][:, codes[:, s]].T
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            ids = batch.column(id_col).to_numpy().astype(np.int64)
             kk = min(k, n)
-            for j in range(nq):
-                order = np.lexsort((ids, D[:, j]))[:kk]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.full(kk, qi[j], dtype=np.int64),
-                        id_col: ids[order],
-                        "adc_distance": D[order, j],
-                    }
-                )
+            order = np.lexsort((np.broadcast_to(ids[:, None], D.shape), D), axis=0)[:kk]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.repeat(qi, kk)), pa.array(ids[order.T.ravel()]),
+                 pa.array(np.take_along_axis(D, order, axis=0).T.ravel())],
+                names=out_schema.fieldNames(),
+            )
 
     from pyspark.sql.window import Window
 
-    partial = df.select(id_col, code_col).mapInPandas(scan, out_schema)
+    partial = df.select(id_col, code_col).mapInArrow(scan, out_schema)
     w = Window.partitionBy("query_id").orderBy(F.col("adc_distance").asc(), F.col(id_col).asc())
     return (
         partial.withColumn("rank", F.row_number().over(w))

@@ -173,9 +173,9 @@ def test_embedding_neardup_multi_table_recall(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     one = {(r["id_a"], r["id_b"])
            for r in D.embedding_neardup_pairs(df, threshold=0.5, n_planes=8,
-                                              dim=16, impl="pandas").collect()}
+                                              dim=16).collect()}
     multi_rows = D.embedding_neardup_pairs(df, threshold=0.5, n_planes=8, dim=16,
-                                           impl="pandas", n_tables=4).collect()
+                                           n_tables=4).collect()
     multi = {(r["id_a"], r["id_b"]) for r in multi_rows}
     assert one <= multi and len(multi) > len(one)
     assert len(multi_rows) == len(multi)  # distinct output
@@ -183,17 +183,39 @@ def test_embedding_neardup_multi_table_recall(spark):
         D.embedding_neardup_pairs(df, n_tables=0)
 
 
-def test_embedding_neardup_pandas_rejects_non_integral_ids(spark):
-    """impl='pandas' hard-codes long ids in its output schema — a string-id
-    corpus must fail at the API with a clear message, not deep inside numpy
-    (native impl keeps working and preserves the dtype)."""
-    rows = [("a", [1.0, 0.0]), ("b", [1.0, 0.001]), ("c", [0.0, 1.0])]
+def test_embedding_neardup_string_ids(spark):
+    """Ids pass through as Arrow: a string-id corpus pairs in the strings'
+    own order and keeps its dtype."""
+    rows = [("b", [1.0, 0.001]), ("a", [1.0, 0.0]), ("c", [0.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
-    with pytest.raises(TypeError, match="integral id column.*'vec_id' is string"):
-        D.embedding_neardup_pairs(df, n_planes=2, dim=2, impl="pandas")
-    native = D.embedding_neardup_pairs(df, threshold=0.99, n_planes=2, dim=2,
-                                       impl="native").collect()
-    assert {(r["id_a"], r["id_b"]) for r in native} == {("a", "b")}
+    out = D.embedding_neardup_pairs(df, threshold=0.99, n_planes=2, dim=2)
+    assert out.schema["id_a"].dataType.simpleString() == "string"
+    assert {(r["id_a"], r["id_b"]) for r in out.collect()} == {("a", "b")}
+
+
+def test_embedding_neardup_sign_near_zero_follows_fold(spark):
+    """Row x is orthogonal to the seeded hyperplane in real arithmetic: the
+    fold sums x·p to exactly 0.0 (bit 1, like its near-duplicate y) while the
+    GEMM rounds it below 0 — the GEMM bits alone split the pair."""
+    import numpy as np
+
+    p = np.random.RandomState(42).randn(1, 8)[0]  # the seed-42 plane
+    rng = np.random.RandomState(1)
+    for _ in range(200):
+        x = rng.randn(8)
+        x[-1] = -(x[:-1] @ p[:-1]) / p[-1]
+        y = x + 0.01 * p / np.linalg.norm(p)
+        fold = 0.0
+        for xi, pi in zip(x, p):
+            fold += xi * pi
+        if fold == 0.0 and (np.stack([x, y]) @ p[:, None])[0, 0] < 0.0:
+            break
+    else:
+        pytest.fail("no sign split found")
+    df = spark.createDataFrame([(1, x.tolist()), (2, y.tolist())],
+                               "vec_id long, embedding array<double>")
+    got = D.embedding_neardup_pairs(df, threshold=0.9, n_planes=1, seed=42, dim=8).collect()
+    assert [(r["id_a"], r["id_b"]) for r in got] == [(1, 2)]
 
 
 def test_decontaminate_flags_embedded_eval_item(spark):
@@ -274,22 +296,19 @@ def test_decontaminate_normalizes_case_and_punctuation(spark):
 
 
 def test_embedding_neardup_oversized_bucket_dropped(spark):
-    """Both impls drop buckets over max_bucket (the skew guard) — and the
-    pandas impl prunes them before the group ever reaches a worker."""
+    """Buckets over max_bucket are dropped (the skew guard) before the group
+    ever reaches a worker."""
     rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(10)]  # one shared bucket
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for impl in ("native", "pandas"):
-        got = D.embedding_neardup_pairs(
-            df, threshold=0.5, n_planes=4, dim=4, max_bucket=5, impl=impl
-        ).count()
-        assert got == 0, impl
+    got = D.embedding_neardup_pairs(df, threshold=0.5, n_planes=4, dim=4, max_bucket=5)
+    assert got.count() == 0
 
 
 def test_embedding_neardup_auto_planes(emb):
     """n_planes=None auto-scales to ~64 rows/bucket — at 500 rows that floors
     at 8 planes, so auto and explicit-8 produce identical pairs."""
-    auto = D.embedding_neardup_pairs(emb, threshold=0.8, n_planes=None, impl="pandas")
-    explicit = D.embedding_neardup_pairs(emb, threshold=0.8, n_planes=8, impl="pandas")
+    auto = D.embedding_neardup_pairs(emb, threshold=0.8, n_planes=None)
+    explicit = D.embedding_neardup_pairs(emb, threshold=0.8, n_planes=8)
     key = lambda df: sorted((r["id_a"], r["id_b"]) for r in df.collect())  # noqa: E731
     assert key(auto) == key(explicit)
 
@@ -315,17 +334,40 @@ def test_ngram_containment_subset_detection(spark):
         D.ngram_jaccard_pairs(df, metric="containment", on_oversize="route")
 
 
-def test_embedding_neardup_pandas_impl_matches_native(spark):
+def _fold_cos(a, b) -> float:
+    """Reference cosine: `cos_sim`'s left-to-right double folds."""
+    import math
+
+    ab = aa = bb = 0.0
+    for x, y in zip(a, b):
+        ab += float(x) * float(y)
+        aa += float(x) * float(x)
+        bb += float(y) * float(y)
+    d = math.sqrt(aa) * math.sqrt(bb)
+    return 0.0 if d == 0.0 else ab / d
+
+
+def test_embedding_neardup_matches_fold_reference(spark):
+    """Buckets from the fold signs of the seeded projections, pairs and
+    cosines from the fold: a pure-Python replay of what the oracle runs."""
     import numpy as np
 
     rng = np.random.RandomState(5)
     rows = [(i, rng.randn(16).astype("float32").tolist()) for i in range(200)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    a = {(r["id_a"], r["id_b"]): round(r["cosine"], 9)
-         for r in D.embedding_neardup_pairs(df, threshold=0.6, n_planes=6, dim=16).collect()}
-    b = {(r["id_a"], r["id_b"]): round(r["cosine"], 9)
-         for r in D.embedding_neardup_pairs(df, threshold=0.6, n_planes=6, dim=16, impl="pandas").collect()}
-    assert a == b and a
+    got = {(r["id_a"], r["id_b"]): r["cosine"]
+           for r in D.embedding_neardup_pairs(df, threshold=0.6, n_planes=6, dim=16).collect()}
+    planes = np.random.RandomState(42).randn(6, 16)
+    key = {}
+    for i, v in rows:
+        key[i] = sum(1 << b for b, p in enumerate(planes)
+                     if sum((float(x) * float(y) for x, y in zip(v, p)), 0.0) >= 0.0)
+    want = {}
+    for i, a in rows:
+        for j, b in rows:
+            if i < j and key[i] == key[j] and _fold_cos(a, b) >= 0.6:
+                want[(i, j)] = _fold_cos(a, b)
+    assert got == want and got
 
 
 def test_dedup_clusters_chain_transitivity(spark):
@@ -481,8 +523,6 @@ def test_embedding_neardup_dim_mismatch_fails_loudly(spark):
     )
     with pytest.raises((SparkRuntimeException, Exception), match="expected dim=8"):
         D.embedding_neardup_pairs(df, threshold=0.5, dim=8).collect()
-    with pytest.raises(Exception, match="expected dim=8"):
-        D.embedding_neardup_pairs(df, threshold=0.5, dim=8, impl="pandas").collect()
 
 
 def test_dedup_clusters_warns_when_max_iter_exhausted(spark):
@@ -1039,19 +1079,74 @@ def _sd_fixture(spark, n=120, dim=32, seed=11):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_semantic_dedup_pandas_impl_matches_native(spark):
+def _fold_semantic(rows, cents, threshold, batch_ids=None) -> dict:
+    """Reference SemDeDup: cell = fold-argmin centroid (first wins); row j
+    is flagged by the first partner i in its cell, in (corpus first, id)
+    order, with i earlier than j (any corpus row, or a smaller id) and fold
+    cosine >= threshold. {dup_id: (cell, dup_of, cosine[, vs])}."""
+    def cell(v):
+        d = [sum(((float(x) - float(c)) ** 2 for x, c in zip(v, cv)), 0.0) for cv in cents]
+        return min(range(len(cents)), key=lambda k: (d[k], k))
+
+    inc = batch_ids is not None
+    tagged = sorted(((inc and i in batch_ids), i, v, cell(v)) for i, v in rows)
+    out = {}
+    for bj, j, vj, cj in tagged:
+        if inc and not bj:
+            continue
+        for bi, i, vi, ci in tagged:
+            earlier = (inc and not bi) or i < j
+            if ci == cj and earlier and _fold_cos(vi, vj) >= threshold:
+                out[j] = (cj, i, _fold_cos(vi, vj)) + (("batch" if bi else "corpus",) if inc else ())
+                break
+    return out
+
+
+def test_semantic_dedup_matches_fold_reference(spark):
     df = _sd_fixture(spark)
     cents = [r["embedding"] for r in df.where("vec_id < 4").orderBy("vec_id").collect()]
-    a = {r["dup_id"]: (r["cell"], r["dup_of"], round(r["cosine"], 9))
-         for r in D.semantic_dedup(df, threshold=0.9, centroids=cents,
-                                   impl="native").collect()}
-    b = {r["dup_id"]: (r["cell"], r["dup_of"], round(r["cosine"], 9))
-         for r in D.semantic_dedup(df, threshold=0.9, centroids=cents,
-                                   impl="pandas").collect()}
-    assert a == b and a
+    a = {r["dup_id"]: (r["cell"], r["dup_of"], r["cosine"])
+         for r in D.semantic_dedup(df, threshold=0.9, centroids=cents).collect()}
+    rows = [(r["vec_id"], r["embedding"]) for r in df.collect()]
+    assert a == _fold_semantic(rows, cents, 0.9) and a
     # planted near-identicals are flagged with min-id winners
     assert a[101][1] == 100
     assert a[103][1] == 102 and a[104][1] == 102
+
+
+def _threshold_pair():
+    """Two near-identical 8-d rows whose fold cosine is the threshold
+    itself while the GEMM similarity of the 2-row cell falls below it."""
+    import numpy as np
+
+    rng = np.random.RandomState(0)
+    for _ in range(200):
+        a = rng.randn(8)
+        b = a + 0.05 * rng.randn(8)
+        X = np.stack([a, b])
+        n = np.linalg.norm(X, axis=1)
+        if ((X @ X.T) / (n[:, None] * n[None, :]))[1, 0] < _fold_cos(a, b):
+            return a.tolist(), b.tolist(), _fold_cos(a, b)
+    pytest.fail("no GEMM/fold split found")
+
+
+def test_semantic_dedup_threshold_tie_follows_fold(spark):
+    a, b, t = _threshold_pair()
+    df = spark.createDataFrame([(1, a), (2, b)], "vec_id long, embedding array<double>")
+    got = D.semantic_dedup(df, threshold=t, centroids=[[0.0] * 8]).collect()
+    assert [(r["dup_id"], r["dup_of"], r["cosine"]) for r in got] == [(2, 1, t)]
+
+
+def test_semantic_incremental_threshold_tie_follows_fold(spark):
+    a, b, t = _threshold_pair()
+    schema = "vec_id long, embedding array<double>"
+    got = D.semantic_dedup_incremental(
+        spark.createDataFrame([(2, b)], schema), spark.createDataFrame([(1, a)], schema),
+        centroids=[[0.0] * 8], threshold=t,
+    ).collect()
+    assert [(r["dup_id"], r["dup_of"], r["cosine"], r["vs"]) for r in got] == [
+        (2, 1, t, "corpus")
+    ]
 
 
 def test_semantic_dedup_drop_mode_and_kmeans_path(spark):
@@ -1069,7 +1164,7 @@ def test_semantic_dedup_drop_mode_and_kmeans_path(spark):
 def test_semantic_dedup_honors_preassigned_cells_and_guard(spark):
     df = _sd_fixture(spark)
     with_cell = df.withColumn("cell", (F.col("vec_id") % 2).cast("int"))
-    out = D.semantic_dedup(with_cell, threshold=0.9, impl="native")
+    out = D.semantic_dedup(with_cell, threshold=0.9)
     # 102/104 share cell 0; 103 is alone in cell 1 ⇒ only 104 flagged there
     got = {r["dup_id"]: r["dup_of"] for r in out.collect()}
     assert got.get(104) == 102 and 103 not in got and 101 not in got
@@ -1081,8 +1176,8 @@ def test_semantic_dedup_honors_preassigned_cells_and_guard(spark):
 
 def test_semantic_incremental_corpus_priority_and_parity(spark):
     """Batch rows near BOTH a store vector and a batch sibling report the
-    store provenance (corpus outranks batch even at larger ids); both impls
-    agree; store rows are never flagged."""
+    store provenance (corpus outranks batch even at larger ids); the answer
+    equals the fold reference; store rows are never flagged."""
     import numpy as np
 
     rng = np.random.RandomState(23)
@@ -1102,15 +1197,11 @@ def test_semantic_incremental_corpus_priority_and_parity(spark):
         "vec_id long, embedding array<double>",
     )
     cents = [[float(v) for v in X_corpus[i]] for i in range(4)]
-    res = {}
-    for impl in ("native", "pandas"):
-        rows = D.semantic_dedup_incremental(
-            batch, corpus, centroids=cents, threshold=0.9, impl=impl
-        ).collect()
-        res[impl] = {r["dup_id"]: (r["cell"], r["dup_of"], round(r["cosine"], 9), r["vs"])
-                     for r in rows}
-    assert res["native"] == res["pandas"] and res["native"]
-    got = res["native"]
+    got = {r["dup_id"]: (r["cell"], r["dup_of"], r["cosine"], r["vs"])
+           for r in D.semantic_dedup_incremental(
+               batch, corpus, centroids=cents, threshold=0.9).collect()}
+    rows = [(r["vec_id"], r["embedding"]) for r in batch.union(corpus).collect()]
+    assert got == _fold_semantic(rows, cents, 0.9, batch_ids=set(range(50))) and got
     assert got[10][1] == 105 and got[10][3] == "corpus"
     assert got[11][1] == 105 and got[11][3] == "corpus"   # corpus beats batch 10
     assert got[21][1] == 20 and got[21][3] == "batch"     # within-batch min-id
@@ -1118,8 +1209,8 @@ def test_semantic_incremental_corpus_priority_and_parity(spark):
 
     with pytest.raises(ValueError, match="max_cell"):
         D.semantic_dedup_incremental(batch, corpus, centroids=cents, max_cell=5)
-    with pytest.raises(ValueError, match="unknown impl"):
-        D.semantic_dedup_incremental(batch, corpus, centroids=cents, impl="x")
+    with pytest.raises(TypeError, match="impl"):  # one kernel; no impl fork
+        D.semantic_dedup_incremental(batch, corpus, centroids=cents, impl="native")
 
 
 def test_semantic_dedup_recall_detects_cell_split(spark):

@@ -93,6 +93,49 @@ def test_within_equals_full_fold_scan(metric):
     assert (d == full[want_r, want_c]).all()
 
 
+def test_topk_mask_excludes_pairs():
+    """Masked pairs never set the bound: each query gets its nearest allowed
+    rows first, and masked rows only fill the tail at +inf."""
+    rng = np.random.RandomState(3)
+    X = rng.randn(40, 5)
+    Q = X[:6] + 1e-12
+    mask = rng.rand(40, 6) < 0.3
+    mask[:, 0] = False  # a query with no allowed row at all
+    rows, dist = K.topk("l2sq", X, Q, 4, mask=mask)
+    for j in range(6):
+        d = K.fold("l2sq", X, np.repeat(Q[j][None, :], 40, 0))
+        d[~mask[:, j]] = np.inf
+        order = np.lexsort((np.arange(40), d))[:4]
+        assert rows[j].tolist() == order.tolist() and dist[j].tolist() == d[order].tolist()
+    assert np.isinf(dist[0]).all()
+
+
+def test_similar_equals_full_fold_scan():
+    rng = np.random.RandomState(4)
+    X = rng.randn(60, 6)
+    X[30:] = X[:30] + 1e-3 * rng.randn(30, 6)
+    X[7] = 0.0
+    sims = np.array([K.cos_sim(X, np.repeat(x[None, :], 60, 0)) for x in X])
+    assert (1.0 - sims == np.array([K.fold("cos", X, np.repeat(x[None, :], 60, 0))
+                                    for x in X])).all()
+    threshold = float(np.sort(sims.ravel())[-100])  # lies exactly on a fold value
+    mask = np.tri(60, k=-1, dtype=bool)
+    r, c, s = K.similar(X, X, threshold, mask)
+    want_r, want_c = np.nonzero((sims >= threshold) & mask)
+    assert r.tolist() == want_r.tolist() and c.tolist() == want_c.tolist()
+    assert (s == sims[want_r, want_c]).all()
+
+
+def test_signs_follow_the_fold():
+    rng = np.random.RandomState(6)
+    P = rng.randn(1, 8)  # one plane: numpy's matrix-vector product rounds apart from the fold
+    X = rng.randn(300, 8)
+    X[:, -1] = -(X[:, :-1] @ P[0, :-1]) / P[0, -1]  # ~orthogonal to the plane
+    want = np.array([[K.fold("dot", x[None, :], p[None, :])[0] <= 0.0 for p in P] for x in X])
+    assert (K.signs(X, P) == want).all()
+    assert ((X @ P.T >= 0.0) != want).any()  # GEMM alone gets some wrong
+
+
 def test_vectors_decodes_chunked_and_rejects_ragged():
     import pyarrow as pa
 

@@ -195,20 +195,33 @@ def test_probe_cells_df_matches_driver_side(spark, clustered, join_sides):
         assert got[r["query_id"]] == want == _fold_probes(cents, r["query_vec"], 2)
 
 
+def _fold_exact(corpus, queries, k, scale=None) -> dict:
+    """Brute-force l2sq kNN by the pure-Python fold:
+    {(query_id, rank): vec_id} under the (distance, id) order."""
+    crows = [(r["vec_id"], r["embedding"]) for r in corpus.collect()]
+    out = {}
+    for q in queries.collect():
+        d = lambda v: _fold_l2sq(v, q["query_vec"])  # noqa: E731
+        cand = sorted(((_pround(d(v), scale) if scale else d(v)), i) for i, v in crows)
+        for rank, (_, i) in enumerate(cand[:k], 1):
+            out[(q["query_id"], rank)] = i
+    return out
+
+
 def test_ivf_knn_join_full_probe_equals_exact(spark, join_sides):
     """nprobe = nlist probes every cell, so the approximate join must return
-    exactly the brute-force kNN join."""
+    exactly the brute-force kNN answer, as knn_join does."""
     from lantern_extras_spark.operators import knn as K
 
     corpus, queries = join_sides
-    exact = {(r["query_id"], r["rank"]): r["vec_id"] for r in
-             K.knn_join(corpus, queries, k=5, metric="l2sq",
-                        strategy="crossjoin", dist_scale=6).collect()}
+    exact = _fold_exact(corpus, queries, 5, scale=6)
+    knn = {(r["query_id"], r["rank"]): r["vec_id"] for r in
+           K.knn_join(corpus, queries, k=5, metric="l2sq", dist_scale=6).collect()}
     approx = {(r["query_id"], r["rank"]): r["vec_id"] for r in
               IVF.ivf_knn_join(corpus, queries, k=5, nprobe=4, nlist=4,
                                metric="l2sq", dist_scale=6,
                                max_train_rows=200).collect()}
-    assert approx == exact and len(exact) == 20 * 5
+    assert approx == knn == exact and len(exact) == 20 * 5
 
 
 def test_ivf_knn_join_matches_fold_reference(spark, join_sides):
@@ -235,13 +248,10 @@ def test_ivf_knn_join_matches_fold_reference(spark, join_sides):
 def test_ivf_knn_join_partial_probe_recall(spark, join_sides):
     """Clustered fixture, nprobe=1: neighbors share the query's cell, so
     recall vs exact stays high while scanning 1/4 of the corpus."""
-    from lantern_extras_spark.operators import knn as K
-
     corpus, queries = join_sides
     exact, approx = {}, {}
-    for r in K.knn_join(corpus, queries, k=5, metric="l2sq",
-                        strategy="crossjoin").collect():
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
+    for (qid, _), i in _fold_exact(corpus, queries, 5).items():
+        exact.setdefault(qid, set()).add(i)
     for r in IVF.ivf_knn_join(corpus, queries, k=5, nprobe=1, nlist=4,
                               max_train_rows=200).collect():
         approx.setdefault(r["query_id"], set()).add(r["vec_id"])
@@ -506,6 +516,20 @@ def test_assign_cells_near_ties_follow_fold(spark):
     got = {r["vec_id"]: r["cell"] for r in IVF.assign_cells(df, cents).collect()}
     assert got == {i: r[0] for i, r in enumerate(ref)}
     assert [IVF.probe_cells(cents, x.tolist(), 1)[0] for x in X] == [r[0] for r in ref]
+
+
+def test_quantize_near_ties_follow_fold(spark):
+    """PQ codes on the near-tie rows: one split whose codewords are the tie
+    fixture's centroids, so each code is the fold's argmin (first-wins)."""
+    from lantern_extras_spark.operators import pq as PQ
+
+    cents, X, ref = _tie_fixture()
+    df = spark.createDataFrame([(i, x.tolist()) for i, x in enumerate(X)],
+                               "vec_id long, embedding array<double>")
+    cb = spark.createDataFrame([(0, i, c) for i, c in enumerate(cents)],
+                               "subvector_id int, centroid_id int, c array<double>")
+    got = {r["vec_id"]: r["pqvec"][0] for r in PQ.quantize(df, cb, dim=16).collect()}
+    assert got == {i: r[0] for i, r in enumerate(ref)}
 
 
 def test_probe_cells_df_near_ties_follow_fold(spark):

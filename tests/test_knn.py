@@ -1,4 +1,5 @@
-"""kNN operators: strategy equivalence, ground truth, recall semantics."""
+"""kNN operators: exactness against a fold reference, ground truth, recall
+semantics."""
 
 import math
 
@@ -7,6 +8,35 @@ import pytest
 from pyspark.sql import functions as F
 
 from lantern_extras_spark.operators import knn as K
+from lantern_extras_spark.operators._distance import fold
+
+
+def _fold_knn(data, queries, k, metric, dist_scale=None, labeled=False):
+    """The crossjoin answer {(query_id, rank): (vec_id, distance[, label])}:
+    every (query, row) pair scored by the numpy fold (bit-identical to the
+    Column folds, tests/test_distance.py), rounded as `portable.pround`,
+    same-label pairs dropped when `labeled`, ranked by (distance, id)."""
+    rows = data.collect()
+    ids = np.array([r["vec_id"] for r in rows])
+    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    out = {}
+    for qr in queries.collect():
+        qv = np.array(qr["query_vec"], dtype=np.float64)
+        d = fold(metric, X, np.repeat(qv[None, :], len(X), axis=0))
+        if dist_scale is not None:
+            s = float(10**dist_scale)
+            d = np.floor(d * s + 0.5) / s
+        order = [i for i in np.lexsort((ids, d))
+                 if not labeled or rows[i]["label"] != qr["query_label"]]
+        for rank, i in enumerate(order[:k], 1):
+            hit = (int(ids[i]), float(d[i]))
+            out[(qr["query_id"], rank)] = hit + ((rows[i]["label"],) if labeled else ())
+    return out
+
+
+def _got(df, labeled=False):
+    return {(r["query_id"], r["rank"]): (r["vec_id"], r["distance"])
+            + ((r["label"],) if labeled else ()) for r in df.collect()}
 
 
 @pytest.mark.parametrize("metric", ["l2sq", "cos", "dot"])
@@ -15,30 +45,57 @@ def test_partial_equals_crossjoin(spark, emb, metric):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where("vec_id >= 4")
-    a = K.knn_join(data, q, k=7, metric=metric, strategy="partial", dist_scale=6)
-    b = K.knn_join(data, q, k=7, metric=metric, strategy="crossjoin", dist_scale=6)
-    ra = [(r["query_id"], r["rank"], r["vec_id"]) for r in a.orderBy("query_id", "rank").collect()]
-    rb = [(r["query_id"], r["rank"], r["vec_id"]) for r in b.orderBy("query_id", "rank").collect()]
-    assert ra == rb and len(ra) == 4 * 7
+    got = _got(K.knn_join(data, q, k=7, metric=metric, dist_scale=6))
+    assert got == _fold_knn(data, q, 7, metric, 6) and len(got) == 4 * 7
 
 
 @pytest.mark.parametrize("metric", ["l2sq", "cos"])
 def test_chunked_equals_crossjoin_multi_chunk(spark, emb, metric):
-    """The blocked partial plan must return the exact crossjoin answer while
+    """The blocked plan must return the exact crossjoin answer while
     splitting the query side across several blocks (chunk_size forces 3
     blocks here)."""
     q = emb.where("vec_id < 12").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where("vec_id >= 12")
-    a = K.knn_join(data, q, k=7, metric=metric, dist_scale=6, chunk_size=4)
-    b = K.knn_join(data, q, k=7, metric=metric, strategy="crossjoin",
-                   dist_scale=6)
-    ra = [(r["query_id"], r["rank"], r["vec_id"])
-          for r in a.orderBy("query_id", "rank").collect()]
-    rb = [(r["query_id"], r["rank"], r["vec_id"])
-          for r in b.orderBy("query_id", "rank").collect()]
-    assert ra == rb and len(ra) == 12 * 7
+    got = _got(K.knn_join(data, q, k=7, metric=metric, dist_scale=6, chunk_size=4))
+    assert got == _fold_knn(data, q, 7, metric, 6) and len(got) == 12 * 7
+
+
+def _boundary_sides(spark, n=60):
+    """Query q and data row q + (1.5, 0, 0, 0) with a distinct label: the
+    fold distance is exactly 2.25, on the dist_scale=1 rounding boundary,
+    while the GEMM expansion of these ~1e6-norm vectors lands a few ulps to
+    either side. A same-label row at distance 0 must never be a negative."""
+    rng = np.random.RandomState(3)
+    Q = 512.0 + 511.0 * rng.rand(n, 4)
+    X = Q + np.array([1.5, 0.0, 0.0, 0.0])
+    data = spark.createDataFrame(
+        [(i, x.tolist(), 1) for i, x in enumerate(X)]
+        + [(1000 + i, q.tolist(), 0) for i, q in enumerate(Q)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    queries = spark.createDataFrame([(i, q.tolist(), 0) for i, q in enumerate(Q)],
+                                    "query_id long, query_vec array<double>, query_label int")
+    return data, queries
+
+
+def test_knn_join_rounding_boundary_follows_fold(spark):
+    data, queries = _boundary_sides(spark)
+    got = K.knn_join(data.where("label = 1"), queries.drop("query_label"), k=1,
+                     metric="l2sq", dist_scale=1).collect()
+    # pround(2.25, 1) = 2.3 for every query; GEMM alone rounds some to 2.2
+    assert {(r["query_id"], r["vec_id"]): r["distance"] for r in got} == {
+        (i, i): 2.3 for i in range(60)
+    }
+
+
+def test_hard_negatives_rounding_boundary_follows_fold(spark):
+    data, queries = _boundary_sides(spark)
+    got = K.hard_negatives(data, queries, k=1, metric="l2sq", dist_scale=1).collect()
+    assert {(r["query_id"], r["vec_id"], r["label"]): r["distance"] for r in got} == {
+        (i, i, 1): 2.3 for i in range(60)
+    }
 
 
 def test_chunked_works_above_partial_driver_cap(spark, emb, monkeypatch):
@@ -51,14 +108,8 @@ def test_chunked_works_above_partial_driver_cap(spark, emb, monkeypatch):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     data = emb.where("vec_id >= 20")
-    got = K.knn_join(data, q, k=3, metric="cos", dist_scale=6, chunk_size=4)
-    want = K.knn_join(data, q, k=3, metric="cos", strategy="crossjoin",
-                      dist_scale=6)
-    ga = [(r["query_id"], r["rank"], r["vec_id"])
-          for r in got.orderBy("query_id", "rank").collect()]
-    wa = [(r["query_id"], r["rank"], r["vec_id"])
-          for r in want.orderBy("query_id", "rank").collect()]
-    assert ga == wa and len(ga) == 20 * 3
+    got = _got(K.knn_join(data, q, k=3, metric="cos", dist_scale=6, chunk_size=4))
+    assert got == _fold_knn(data, q, 3, "cos", 6) and len(got) == 20 * 3
 
 
 def test_chunked_edge_cases(spark, emb):
@@ -74,9 +125,8 @@ def test_chunked_edge_cases(spark, emb):
         K.knn_join(emb, q0, k=3, chunk_size=0)
     with pytest.raises(ValueError, match="hash-imbalance margin"):
         K.knn_join(emb, q0, k=3, chunk_size=K.MAX_COLLECTED_QUERIES)
-    for gone in ("chunked", "auto"):  # one planner; no strategy fork
-        with pytest.raises(ValueError, match="unknown strategy"):
-            K.knn_join(emb, q0, k=3, strategy=gone)
+    with pytest.raises(TypeError, match="strategy"):  # one plan; no strategy fork
+        K.knn_join(emb, q0, k=3, strategy="crossjoin")
 
 
 def test_chunked_releases_query_cache(spark, emb, monkeypatch):
@@ -98,7 +148,7 @@ def test_blocked_plan_builds_with_one_eager_job(spark, emb):
     """30 queries at chunk_size=8, under the driver cap: building knn_join
     or hard_negatives runs exactly one eager job (the bounded query
     collect, sliced into blocks on the driver), the plan unions one
-    MapInPandas kernel per block, and the answer is the crossjoin's."""
+    MapInArrow kernel per block, and the answer is the crossjoin's."""
     import uuid
 
     sc = spark.sparkContext
@@ -108,7 +158,6 @@ def test_blocked_plan_builds_with_one_eager_job(spark, emb):
         F.col("label").alias("query_label"),
     )
     data = emb.where("vec_id >= 30")
-    key = lambda df: sorted(tuple(r) for r in df.collect())
     for op in (K.knn_join, K.hard_negatives):
         group = f"knn-blocks-{uuid.uuid4().hex}"
         sc.setJobGroup(group, op.__name__)
@@ -119,9 +168,10 @@ def test_blocked_plan_builds_with_one_eager_job(spark, emb):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, op.__name__
         plan = got._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInPandas") >= 2, plan
-        want = op(data, q, k=5, metric="cos", strategy="crossjoin", dist_scale=6)
-        assert key(got) == key(want) and len(key(got)) == 30 * 5, op.__name__
+        assert plan.count("MapInArrow") >= 2, plan
+        labeled = op is K.hard_negatives
+        want = _fold_knn(data, q, 5, "cos", 6, labeled)
+        assert _got(got, labeled) == want and len(want) == 30 * 5, op.__name__
 
 
 def test_knn_matches_numpy_bruteforce(spark, emb):
@@ -185,20 +235,14 @@ def _hn_queries(emb):
 def test_hard_negatives_partial_equals_crossjoin(spark, emb):
     q = _hn_queries(emb)
     data = emb.where("vec_id >= 4")
-    a = K.hard_negatives(data, q, k=7, metric="cos", strategy="partial", dist_scale=6)
-    b = K.hard_negatives(data, q, k=7, metric="cos", strategy="crossjoin", dist_scale=6)
-    key = lambda df: [
-        (r["query_id"], r["rank"], r["vec_id"], r["label"])
-        for r in df.orderBy("query_id", "rank").collect()
-    ]
-    ra, rb = key(a), key(b)
-    assert ra == rb and len(ra) == 4 * 7
+    got = _got(K.hard_negatives(data, q, k=7, metric="cos", dist_scale=6), labeled=True)
+    assert got == _fold_knn(data, q, 7, "cos", 6, labeled=True) and len(got) == 4 * 7
 
 
 def test_hard_negatives_chunked_equals_crossjoin(spark, emb, monkeypatch):
     """Blocked negative mining (full-training-set scale): multiple blocks
     AND a query side above the (shrunken) driver cap must reproduce the
-    declarative answer exactly, labels included."""
+    crossjoin answer exactly, labels included."""
     monkeypatch.setattr(K, "MAX_COLLECTED_QUERIES", 8)
     q = emb.where("vec_id < 12").select(
         F.col("vec_id").alias("query_id"),
@@ -206,15 +250,9 @@ def test_hard_negatives_chunked_equals_crossjoin(spark, emb, monkeypatch):
         F.col("label").alias("query_label"),
     )
     data = emb.where("vec_id >= 12")
-    a = K.hard_negatives(data, q, k=4, metric="cos", dist_scale=6, chunk_size=4)
-    b = K.hard_negatives(data, q, k=4, metric="cos", strategy="crossjoin",
-                         dist_scale=6)
-    key = lambda df: [
-        (r["query_id"], r["rank"], r["vec_id"], r["label"])
-        for r in df.orderBy("query_id", "rank").collect()
-    ]
-    ra, rb = key(a), key(b)
-    assert ra == rb and len(ra) > 0
+    got = _got(K.hard_negatives(data, q, k=4, metric="cos", dist_scale=6, chunk_size=4),
+               labeled=True)
+    assert got == _fold_knn(data, q, 4, "cos", 6, labeled=True) and len(got) == 12 * 4
     # empty-queries edge keeps the full 5-column schema (chunk_size must
     # respect the monkeypatched cap's margin here too)
     q0 = q.where("query_id < 0")
@@ -229,7 +267,7 @@ def test_hard_negatives_excludes_query_label_and_beats_postfilter(spark, emb):
     q = _hn_queries(emb)
     data = emb.where("vec_id >= 4")
     qlab = {r["query_id"]: r["query_label"] for r in q.collect()}
-    out = K.hard_negatives(data, q, k=5, metric="cos", strategy="partial").collect()
+    out = K.hard_negatives(data, q, k=5, metric="cos").collect()
     assert all(r["label"] != qlab[r["query_id"]] for r in out)
     # filter-before-rank: every returned set equals the top-5 of the
     # label-filtered brute force (a post-filtered plain kNN can return fewer)
@@ -255,7 +293,6 @@ def test_hard_negatives_null_labels_dropped(spark):
     q = spark.createDataFrame(
         [(0, [1.0, 0.0], 7)], "query_id long, query_vec array<double>, query_label int"
     )
-    for strat in ("partial", "crossjoin"):
-        got = K.hard_negatives(data, q, k=5, metric="cos", strategy=strat).collect()
-        # vec 1 shares the label, vec 2 has none -> only vec 3 qualifies
-        assert [r["vec_id"] for r in got] == [3], strat
+    got = K.hard_negatives(data, q, k=5, metric="cos").collect()
+    # vec 1 shares the label, vec 2 has none -> only vec 3 qualifies
+    assert [r["vec_id"] for r in got] == [3]

@@ -39,12 +39,20 @@ def test_region_revenue_broadcasts_all_dims(spark):
     assert_broadcast_join(df, at_least=4)
 
 
-def test_knn_pushes_query_side_filter(spark):
+def test_knn_pushes_query_side_filter(spark, monkeypatch):
+    """Both sides' filters reach their scans: the query side in the bounded
+    collect that builds the broadcast blocks, the data side in the plan that
+    streams through the kernel; neither side reads the label column."""
+    from lantern_extras_spark.operators import knn as K
+
+    seen, blocks = [], K._query_blocks
+    monkeypatch.setattr(K, "_query_blocks", lambda qsel, *a: seen.append(qsel) or blocks(qsel, *a))
     df = E.q_knn_cos(spark, SF)
+    assert_filter_pushed(seen[0], "LessThan(vec_id,5)")
     assert_filter_pushed(df, "GreaterThanOrEqual(vec_id,5)")
-    assert_filter_pushed(df, "LessThan(vec_id,5)")
-    assert_broadcast_join(df, at_least=1)  # query side broadcast, data side streams
+    assert "MapInArrow" in plan_summary(df).text  # data side streams, no join
     assert_column_pruned(df, "label")
+    assert_column_pruned(seen[0], "label")
 
 
 def test_embed_documents_is_narrow(spark):
@@ -343,7 +351,7 @@ def test_cms_sketch_broadcast_and_partial_agg(spark):
 
 def test_hard_negatives_partial_no_corpus_shuffle(spark):
     """The masked partial-topk path: the corpus flows through one narrow
-    mapInPandas; the only exchange carries the per-batch top-k survivors
+    mapInArrow; the only exchange carries the per-batch top-k survivors
     (O(q*k*batches) rows), then one window."""
     from lantern_extras_spark.operators import knn as K
     from pyspark.sql import functions as F
@@ -354,9 +362,9 @@ def test_hard_negatives_partial_no_corpus_shuffle(spark):
         F.col("embedding").alias("query_vec"),
         F.col("label").alias("query_label"),
     )
-    df = K.hard_negatives(emb.where("vec_id >= 4"), q, k=5, strategy="partial")
+    df = K.hard_negatives(emb.where("vec_id >= 4"), q, k=5)
     s = plan_summary(df)
-    assert "MapInPandas" in s.text, s.text
+    assert "MapInArrow" in s.text, s.text
     # one exchange feeding the window over the reduced candidate set
     assert s.n_shuffles <= 1, s.text
 
@@ -421,14 +429,14 @@ def test_dsir_select_big_pure_filter_no_driver_merge(spark):
 
 def test_knn_chunked_union_of_partial_kernels_no_nested_loop(spark):
     """Exact large-vs-large kNN: the plan must be a UNION of per-chunk
-    MapInPandas partial kernels over the corpus scan — no
+    MapInArrow partial kernels over the corpus scan — no
     BroadcastNestedLoopJoin/CartesianProduct (the O(n*q) rows-through-window
     shape 'chunked' exists to avoid), and exactly one finishing window over
     the reduced candidate set. Driver collects are bounded per chunk in the
     builder (pinned by test_knn.py's shrunken-cap test)."""
     df = E.q_knn_chunked(spark, SF)
     s = plan_summary(df)
-    assert s.text.count("MapInPandas") >= 2, s.text  # multiple chunk kernels
+    assert s.text.count("MapInArrow") >= 2, s.text  # multiple chunk kernels
     assert "Union" in s.text, s.text
     assert "BroadcastNestedLoopJoin" not in s.text, s.text
     assert "CartesianProduct" not in s.text, s.text

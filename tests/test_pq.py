@@ -52,23 +52,42 @@ def test_quantize_deterministic(vecs, codebook):
 
 
 def test_quantize_direct_formulation_matches_gemm(vecs, codebook):
-    """The parity path (sequential Σ(x−c)², oracle association order) and the
-    scale path (GEMM expansion) must agree away from exact near-ties — this
-    fixture's k-means centroids are well-separated."""
-    g = {r["id"]: r["pqvec"] for r in PQ.quantize(vecs, codebook, vec_col="v").collect()}
-    d = {
-        r["id"]: r["pqvec"]
-        for r in PQ.quantize(vecs, codebook, vec_col="v", formulation="direct").collect()
-    }
-    assert g == d
-    with pytest.raises(ValueError, match="formulation"):
-        PQ.quantize(vecs, codebook, vec_col="v", formulation="nope")
+    """Every code is the argmin of the direct left-to-right Σ(x−c)² fold (the
+    sum a SQL oracle replays), lower centroid id first on ties, for list and
+    binary codes alike; on this fixture's well-separated k-means centroids
+    that is also the GEMM expansion's argmin."""
+    mats, splits = PQ._codebook_tensor(codebook)
+    bounds = PQ.split_bounds(128, splits)
+
+    def fold_code(x, s):
+        lo, hi = bounds[s]
+        best = None
+        for cid, c in enumerate(mats[s]):
+            d = 0.0
+            for xi, ci in zip(x[lo:hi], c):
+                d += (float(xi) - float(ci)) * (float(xi) - float(ci))
+            if best is None or d < best[0]:
+                best = (d, cid)
+        return best[1]
+
+    rows = vecs.limit(200).collect()
+    want = {r["id"]: [fold_code(r["v"], s) for s in range(splits)] for r in rows}
+    X = np.array([r["v"] for r in rows], dtype=np.float64)
+    for s, (lo, hi) in enumerate(bounds):
+        Xs, C = X[:, lo:hi], mats[s]
+        g = ((Xs * Xs).sum(1)[:, None] + (C * C).sum(1)[None, :] - 2.0 * Xs @ C.T).argmin(1)
+        assert g.tolist() == [want[r["id"]][s] for r in rows]
+    for as_binary in (False, True):
+        coded = PQ.quantize(vecs.limit(200), codebook, vec_col="v", as_binary=as_binary)
+        assert {r["id"]: list(r["pqvec"]) for r in coded.collect()} == want
 
 
 def test_quantize_direct_is_sequential_sum():
-    """The direct kernel's accumulation order is left-to-right (cumsum), i.e.
-    bit-identical to a python running sum — the property the DuckDB list_sum
-    oracle relies on for tie-impossibility."""
+    """quantize's distances are `_distance.fold`'s: accumulated left to
+    right, i.e. bit-identical to a python running sum — the property the
+    DuckDB list_sum oracle relies on for tie-impossibility."""
+    from lantern_extras_spark.operators._distance import fold
+
     rng = np.random.RandomState(7)
     X = rng.rand(5, 16)
     C = rng.rand(3, 16)
@@ -77,9 +96,19 @@ def test_quantize_direct_is_sequential_sum():
             seq = 0.0
             for xi, ci in zip(x, c):
                 seq += (xi - ci) * (xi - ci)
-            sq = x - c
-            sq = sq * sq
-            assert np.cumsum(sq)[-1] == seq
+            assert fold("l2sq", x[None, :], c[None, :])[0] == seq
+
+
+def test_decode_is_centroid_concatenation(vecs, codebook):
+    """decode reads list and binary codes alike and emits the float32 of the
+    concatenated centroids."""
+    mats, splits = PQ._codebook_tensor(codebook)
+    for as_binary in (False, True):
+        coded = PQ.quantize(vecs.limit(20), codebook, vec_col="v", as_binary=as_binary)
+        for r in PQ.decode(coded, codebook).collect():
+            want = np.concatenate([mats[s][c] for s, c in enumerate(r["pqvec"])])
+            assert np.array_equal(np.asarray(r["decoded"], dtype=np.float32),
+                                  want.astype(np.float32))
 
 
 def test_decode_dimensions(vecs, codebook):
@@ -238,12 +267,11 @@ def test_codebook_golden_digest(spark, dim):
     assert _codebook_digest(cb) == CODEBOOK_GOLDEN[dim]
 
 
-@pytest.mark.parametrize("formulation", ["gemm", "direct"])
 @pytest.mark.parametrize("as_binary", [False, True])
-def test_quantize_golden_digest(spark, formulation, as_binary):
+def test_quantize_golden_digest(spark, as_binary):
     df = _golden_frame(spark, 18)
     cb = PQ.build_codebook(df, splits=4, k=8, max_train_rows=400, seed=5)
-    coded = PQ.quantize(df, cb, as_binary=as_binary, dim=18, formulation=formulation)
+    coded = PQ.quantize(df, cb, as_binary=as_binary, dim=18)
     rows = sorted((r["vec_id"], r["pqvec"]) for r in coded.collect())
     assert coded.columns == ["vec_id", "embedding", "pqvec"]
     assert _sha(bytes(np.asarray(list(c), dtype=np.uint8)) for _, c in rows) == CODES_GOLDEN

@@ -195,16 +195,9 @@ def main() -> None:
         exponent = round(math.log10(max(per_sf["sf1"], 1e-9) / max(per_sf["sf0.1"], 1e-9)), 3)
         return {**per_sf, "exponent": exponent}
 
-    # semantic_dedup's driver config (4 cells, native interpreted cosine —
-    # the DuckDB bit-replay path) is O(n²/4) interpreted ops: ~625M pairs at
-    # sf1, hours on local[32]. The dense-config scaling is measured below
-    # with the GEMM kernel instead (identical assignments/pairs); the
-    # replay config exists only so the oracle can replay it at sf0.01.
-    MAIN_LOOP_SKIP = {"semantic_dedup"}
-
     results: dict[str, dict] = {}
     for name in names:
-        if name not in qs or name in MAIN_LOOP_SKIP:
+        if name not in qs:
             continue  # an extra-section name (e.g. dedup_spans_scaled)
         results[name] = measure(
             lambda sf, n=name: qs[n](spark, sf).foreach(lambda r: None)
@@ -222,33 +215,19 @@ def main() -> None:
     def neardup_scaled(sf):
         emb = spark.read.parquet(f"{sf}/embeddings.parquet")
         D.embedding_neardup_pairs(
-            emb, threshold=0.9, n_planes=None, dim=64, impl="pandas"
+            emb, threshold=0.9, n_planes=None, dim=64
         ).foreach(lambda r: None)
 
     if want("embedding_neardup_scaled"):
         results["embedding_neardup_scaled"] = measure(neardup_scaled)
         print(json.dumps({"embedding_neardup_scaled": results["embedding_neardup_scaled"]}), flush=True)
 
-    # semantic_dedup: (a) the driver's dense config (4 fixed cells) with the
-    # GEMM kernel — scaling here is dominated by cell density growing with n
-    # (a config artifact, like embedding_neardup's fixed 6 planes); (b) the
-    # scale config — nlist=None auto-scales cells to ~2000 rows, bounding
-    # per-cell pairwise work as the corpus grows.
-    def semantic_dense(sf):
-        emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-        cents = [list(map(float, r["embedding"]))
-                 for r in emb.where("vec_id < 32").orderBy("vec_id").collect()]
-        D.semantic_dedup(emb, threshold=0.3, centroids=cents,
-                         impl="pandas").foreach(lambda r: None)
-
-    if want("semantic_dedup"):
-        results["semantic_dedup"] = measure(semantic_dense)
-        print(json.dumps({"semantic_dedup": results["semantic_dedup"]}), flush=True)
-
+    # semantic_dedup's scale config (the registry query, measured in the main
+    # loop, is the dense config): nlist=None auto-scales cells to ~2000 rows,
+    # bounding per-cell pairwise work as the corpus grows.
     def semantic_scaled(sf):
         emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-        D.semantic_dedup(emb, threshold=0.9, nlist=None,
-                         impl="pandas").foreach(lambda r: None)
+        D.semantic_dedup(emb, threshold=0.9, nlist=None).foreach(lambda r: None)
 
     if want("semantic_dedup_scaled"):
         results["semantic_dedup_scaled"] = measure(semantic_scaled)
@@ -496,10 +475,9 @@ def main() -> None:
                 "threshold=0.9) - the 100 TB path"
             ),
             "semantic_dedup": (
-                "driver-oracle config (32 fixed cells, t=0.3) measured with "
-                "the GEMM kernel (assignments/pairs identical; the native "
-                "interpreted-cosine replay path exists for DuckDB bit-parity "
-                "only and is O(n^2/cells) interpreted ops). Exponent tracks "
+                "driver-oracle config (32 fixed cells, t=0.3), the registry "
+                "query itself: GEMM similarities with fold-settled ties, the "
+                "one kernel the DuckDB oracle certifies. Exponent tracks "
                 "cell density growing with n - a config artifact"
             ),
             "near_moves": (

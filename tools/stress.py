@@ -98,8 +98,7 @@ def main() -> None:
     )
     data = vecs.where("vec_id >= 10")
 
-    timed("knn_partial_10q", lambda: K.knn_join(data, q, k=10, metric="cos", strategy="partial").foreach(lambda r: None))
-    timed("knn_crossjoin_10q", lambda: K.knn_join(data, q, k=10, metric="cos", strategy="crossjoin").foreach(lambda r: None))
+    timed("knn_10q", lambda: K.knn_join(data, q, k=10, metric="cos").foreach(lambda r: None))
 
     def pq_flow():
         cb = PQ.build_codebook(vecs, vec_col="embedding", splits=8, k=256, max_train_rows=50_000)
@@ -142,14 +141,12 @@ def main() -> None:
     timed("dedup_clusters_pairs_to_components", clusters_flow)
 
     # embedding cosine near-dup over the full vector table: hyperplane-LSH
-    # bucketing (GEMM impl — the scale path) + bucketed self-join with the
-    # max_bucket skew guard; rand() vectors are near-orthogonal so candidate
-    # pairs are sparse — the cost measured is the bucketing scan + join
+    # GEMM bucketing + per-bucket verify with the max_bucket skew guard;
+    # rand() vectors are near-orthogonal so candidate pairs are sparse — the
+    # cost measured is the bucketing scan + grouped verify
     timed(
         "embedding_neardup_1M",
-        lambda: D.embedding_neardup_pairs(
-            vecs, threshold=0.9, n_planes=12, dim=64, impl="pandas"
-        ).count(),
+        lambda: D.embedding_neardup_pairs(vecs, threshold=0.9, n_planes=12, dim=64).count(),
     )
 
     # exact ngram Jaccard via the inverted-index strategy on discriminative-
