@@ -1825,7 +1825,10 @@ def semantic_dedup(
             df, vec_col=vec_col, nlist=nlist, seed=seed, cell_col=cell_col,
             total_rows=total,
         )
-    base = assigned.select(F.col(id_col), F.col(vec_col), F.col(cell_col))
+    # a null id is never a dup nor a winner (id_a < id_b is null for it)
+    base = assigned.select(F.col(id_col), F.col(vec_col), F.col(cell_col)).where(
+        F.col(id_col).isNotNull()
+    )
 
     _guard_cells(base, cell_col, max_cell, "semantic_dedup", "Raise nlist (finer clustering)")
 
@@ -2030,7 +2033,7 @@ def semantic_dedup_incremental(
         return s.select(
             F.col(id_col), F.col(vec_col), F.col(cell_col),
             F.lit(rank).alias("__rank"),
-        )
+        ).where(F.col(id_col).isNotNull())  # as in semantic_dedup
 
     tagged = side(corpus, 0).unionByName(side(new_df, 1))
 

@@ -1149,6 +1149,22 @@ def test_semantic_incremental_threshold_tie_follows_fold(spark):
     ]
 
 
+def test_semantic_dedup_null_ids_never_match(spark):
+    """A null id is neither flagged nor a winner: it never becomes a
+    fabricated `dup_of` for its cell-mates."""
+    schema = "vec_id long, embedding array<double>"
+    v = [1.0, 2.0, 3.0]
+    df = spark.createDataFrame([(None, v), (5, v), (7, v)], schema)
+    got = D.semantic_dedup(df, threshold=0.9, centroids=[v]).collect()
+    assert [(r["dup_id"], r["dup_of"]) for r in got] == [(7, 5)]
+    inc = D.semantic_dedup_incremental(
+        spark.createDataFrame([(None, v), (9, v)], schema),
+        spark.createDataFrame([(None, v), (3, v)], schema),
+        centroids=[v], threshold=0.9,
+    ).collect()
+    assert [(r["dup_id"], r["dup_of"], r["vs"]) for r in inc] == [(9, 3, "corpus")]
+
+
 def test_semantic_dedup_drop_mode_and_kmeans_path(spark):
     df = _sd_fixture(spark)
     flagged = D.semantic_dedup(df, threshold=0.9, nlist=4)  # k-means path

@@ -8,7 +8,6 @@ expression-level bugs the curated fixtures miss."""
 import hashlib
 import re as pyre
 
-import pytest
 from hypothesis import given, settings, strategies as st
 
 from lantern_extras_spark.operators import dedup as D
@@ -237,33 +236,49 @@ def test_kmv_distinct_differential(spark, values, k):
     assert abs(row["distinct_est"] - want) < 1e-6, (row, want)
 
 
-def ref_semantic_dedup(vecs, centroids, threshold):
-    """Spec: nearest-centroid cell (l2sq argmin, first-wins tie); row b is a
-    dup iff some same-cell a with id_a < id_b has cos(a,b) >= threshold;
-    winner = smallest such id_a."""
-    import numpy as np
+def _fold_l2sq(a, b):
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += (float(x) - float(y)) ** 2
+    return acc
 
-    X = np.asarray(vecs, dtype=np.float64)
-    C = np.asarray(centroids, dtype=np.float64)
-    cells = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1).argmin(1)
-    norms = np.linalg.norm(X, axis=1)
+
+def _fold_cos(a, b):
+    """`cos_sim`'s left-to-right double folds."""
+    import math
+
+    ab = aa = bb = 0.0
+    for x, y in zip(a, b):
+        ab += float(x) * float(y)
+        aa += float(x) * float(x)
+        bb += float(y) * float(y)
+    d = math.sqrt(aa) * math.sqrt(bb)
+    return 0.0 if d == 0.0 else ab / d
+
+
+def ref_semantic_dedup(vecs, centroids, threshold):
+    """Spec: nearest-centroid cell (fold l2sq argmin, first-wins tie); row b
+    is a dup iff some same-cell a with id_a < id_b has fold cos(a,b) >=
+    threshold; winner = smallest such id_a."""
+    cells = []
+    for v in vecs:
+        d = [_fold_l2sq(v, c) for c in centroids]
+        cells.append(d.index(min(d)))
     out = {}
-    for j in range(len(X)):
+    for j in range(len(vecs)):
         for i in range(j):
             if cells[i] != cells[j]:
                 continue
-            d = norms[i] * norms[j]
-            cs = 0.0 if d == 0 else float(X[i] @ X[j]) / d
+            cs = _fold_cos(vecs[i], vecs[j])
             if cs >= threshold:
-                out[j] = (int(cells[j]), i, cs)
+                out[j] = (cells[j], i, cs)
                 break  # smallest i wins
     return out
 
 
-@pytest.mark.parametrize("impl", ["native", "pandas"])
 @given(data=st.data())
 @settings(max_examples=5, deadline=None)
-def test_semantic_dedup_matches_bruteforce(spark, impl, data):
+def test_semantic_dedup_matches_bruteforce(spark, data):
     import numpy as np
 
     n = data.draw(st.integers(min_value=6, max_value=40))
@@ -275,16 +290,15 @@ def test_semantic_dedup_matches_bruteforce(spark, impl, data):
     if n >= 4:
         X[n - 1] = X[0] + 1e-4 * rng.randn(dim)
         X[n - 2] = X[1] + 1e-4 * rng.randn(dim)
-    cents = [[float(v) for v in X[i]] for i in range(min(3, n))]
+    rows = [[float(v) for v in X[i]] for i in range(n)]
+    cents = rows[: min(3, n)]
     thr = data.draw(st.sampled_from([0.3, 0.6, 0.9]))
 
     df = spark.createDataFrame(
-        [(i, [float(v) for v in X[i]]) for i in range(n)],
+        [(i, rows[i]) for i in range(n)],
         "vec_id long, embedding array<double>",
     )
-    got = {r["dup_id"]: (r["cell"], r["dup_of"], round(r["cosine"], 8))
-           for r in D.semantic_dedup(df, threshold=thr, centroids=cents,
-                                     impl=impl).collect()}
-    ref = {j: (c, i, round(cs, 8))
-           for j, (c, i, cs) in ref_semantic_dedup(X, cents, thr).items()}
-    assert got == ref
+    got = {r["dup_id"]: (r["cell"], r["dup_of"], r["cosine"])
+           for r in D.semantic_dedup(df, threshold=thr,
+                                     centroids=cents).collect()}
+    assert got == ref_semantic_dedup(rows, cents, thr)

@@ -54,8 +54,8 @@ def test_quantize_deterministic(vecs, codebook):
 def test_quantize_direct_formulation_matches_gemm(vecs, codebook):
     """Every code is the argmin of the direct left-to-right Σ(x−c)² fold (the
     sum a SQL oracle replays), lower centroid id first on ties, for list and
-    binary codes alike; on this fixture's well-separated k-means centroids
-    that is also the GEMM expansion's argmin."""
+    binary codes alike. The name predates the one code path: there is no
+    GEMM formulation left to compare, so only the fold argmin is checked."""
     mats, splits = PQ._codebook_tensor(codebook)
     bounds = PQ.split_bounds(128, splits)
 
@@ -72,11 +72,6 @@ def test_quantize_direct_formulation_matches_gemm(vecs, codebook):
 
     rows = vecs.limit(200).collect()
     want = {r["id"]: [fold_code(r["v"], s) for s in range(splits)] for r in rows}
-    X = np.array([r["v"] for r in rows], dtype=np.float64)
-    for s, (lo, hi) in enumerate(bounds):
-        Xs, C = X[:, lo:hi], mats[s]
-        g = ((Xs * Xs).sum(1)[:, None] + (C * C).sum(1)[None, :] - 2.0 * Xs @ C.T).argmin(1)
-        assert g.tolist() == [want[r["id"]][s] for r in rows]
     for as_binary in (False, True):
         coded = PQ.quantize(vecs.limit(200), codebook, vec_col="v", as_binary=as_binary)
         assert {r["id"]: list(r["pqvec"]) for r in coded.collect()} == want
